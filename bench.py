@@ -14,8 +14,9 @@ this the hard way: a 131-entry per-query map made the line ~4 KB, the head
 of the line fell off the window, and the round's bench artifact recorded
 ``parsed: null``). So the printed line is SIZE-CAPPED: it always carries
 metric/value/unit/sf plus the slowest queries that fit in the budget, and
-the COMPLETE per-query map is written to BENCH_FULL.json next to this file
-(path echoed in the line under "full").
+the COMPLETE per-query map, stamped with the CPU count, is written next to
+this file as BENCH_FULL_c{cpus}.json and as BENCH_FULL.json (the alias the
+line echoes under "full").
 """
 
 from __future__ import annotations
@@ -61,87 +62,58 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    # Shared-infrastructure build timed as its OWN line: three dedup
-    # queries (ngram_jaccard + both connected-components entries) consume
-    # the memoized verified-pair checkpoint, and whichever the sort order
-    # ran first used to absorb the whole similarity-join cost (round 1:
-    # dedup_cc_star showed 54 s of which ~51 s was this build). One build,
-    # explicit attribution; the suite total still includes it.
+    # Shared-infrastructure builds timed as their OWN lines. Each substrate
+    # is memoized (functions/memo.py) and read by several registry
+    # entries; without its own line, whichever consumer the sort order
+    # ran first absorbed the whole build (round 1: dedup_cc_star showed
+    # 54 s of which ~51 s was the Jaccard pair build), and the best-of-2
+    # retry then recorded the memo hit so the cost vanished from the
+    # total. One line per memoized variant; the consumer entries honestly
+    # measure their incremental work, and the suite total includes all.
     from nzwirelessmap_fetch_spark.operators.dedup import (
         JACCARD_MAX_DF,
+        _containment_pairs,
         _verified_jaccard_pairs,
+        _verified_simhash_pairs,
     )
-
-    start = time.perf_counter()
-    _verified_jaccard_pairs(spark, sf_dir)
-    timings["shared_jaccard_pair_build"] = round(time.perf_counter() - start, 3)
-    # The df-capped twin memoizes separately; without its own line the
-    # best-of-2 retry records the cache hit and the build cost vanishes
-    # from the suite total.
-    start = time.perf_counter()
-    _verified_jaccard_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
-    timings["shared_jaccard_pair_build_capped"] = round(
-        time.perf_counter() - start, 3
-    )
-    # r6: the containment pair builds are memoized too (exact + capped
-    # feed corpus_containment, its twin AND the cap-eval — the eval alone
-    # used to rebuild both). Explicit attribution lines, same rationale.
-    from nzwirelessmap_fetch_spark.operators.dedup import _containment_pairs
-
-    start = time.perf_counter()
-    _containment_pairs(spark, sf_dir, max_df=None)
-    timings["shared_containment_build"] = round(time.perf_counter() - start, 3)
-    start = time.perf_counter()
-    _containment_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
-    timings["shared_containment_build_capped"] = round(
-        time.perf_counter() - start, 3
-    )
-    # Same attribution for the embedding-family PCA substrate: four
-    # queries (principal component, ABTT, PCA top-2, whitening) consume
-    # the memoized Gram accumulation + both power-iteration
-    # trajectories — one corpus pass + two dim²-grain iterate chains,
-    # one line.
     from nzwirelessmap_fetch_spark.operators.sketches import _top2_components
-
-    start = time.perf_counter()
-    for frame in _top2_components(spark, sf_dir):
-        frame.count()
-    timings["shared_pc_build"] = round(time.perf_counter() - start, 3)
-    # r8 verdict directive #5: the winnowing exact/capped pair frames are
-    # memoized like the Jaccard/containment substrates, but had no
-    # attribution line — corpus_winnowing's best-of-2 recorded the cache
-    # hit (0.02 s) and ~12 s of real build cost vanished from per-line
-    # regression tracking. Same pattern as shared_jaccard_pair_build:
-    # one explicit line per memoized variant; the consumer entries then
-    # honestly measure their incremental work.
     from nzwirelessmap_fetch_spark.operators.text import (
         WINNOW_ADAPTIVE,
         ExactMeasureBoundError,
         _winnow_pairs,
     )
 
-    start = time.perf_counter()
-    try:
-        _winnow_pairs(spark, sf_dir, max_df=None)
-    except ExactMeasureBoundError:
-        pass  # over-budget SF: the consumer entry records the refusal
-    timings["shared_winnow_build"] = round(time.perf_counter() - start, 3)
-    start = time.perf_counter()
-    _winnow_pairs(spark, sf_dir, max_df=WINNOW_ADAPTIVE)
-    timings["shared_winnow_build_capped"] = round(
-        time.perf_counter() - start, 3
-    )
-    # r10 verdict directive #1: the verified SimHash Hamming-≤3 pair
-    # stream is memoized like the Jaccard/containment substrates (three
-    # consumers: the pair entry, its content-hash adjudicator, the
-    # quality eval). Explicit attribution line so the ~78.8 M-pair build
-    # cost at sf1-Zipf stays visible instead of landing inside whichever
-    # consumer the sort order runs first.
-    from nzwirelessmap_fetch_spark.operators.dedup import _verified_simhash_pairs
-
-    start = time.perf_counter()
-    _verified_simhash_pairs(spark, sf_dir)
-    timings["shared_simhash_pair_build"] = round(time.perf_counter() - start, 3)
+    shared = [
+        ("shared_jaccard_pair_build", lambda: _verified_jaccard_pairs(spark, sf_dir)),
+        (
+            "shared_jaccard_pair_build_capped",
+            lambda: _verified_jaccard_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF),
+        ),
+        ("shared_containment_build", lambda: _containment_pairs(spark, sf_dir)),
+        (
+            "shared_containment_build_capped",
+            lambda: _containment_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF),
+        ),
+        # Gram accumulation + both power-iteration trajectories: one corpus
+        # pass + two dim²-grain iterate chains, four consumers
+        (
+            "shared_pc_build",
+            lambda: [frame.count() for frame in _top2_components(spark, sf_dir)],
+        ),
+        ("shared_winnow_build", lambda: _winnow_pairs(spark, sf_dir, max_df=None)),
+        (
+            "shared_winnow_build_capped",
+            lambda: _winnow_pairs(spark, sf_dir, max_df=WINNOW_ADAPTIVE),
+        ),
+        ("shared_simhash_pair_build", lambda: _verified_simhash_pairs(spark, sf_dir)),
+    ]
+    for line, build in shared:
+        start = time.perf_counter()
+        try:
+            build()
+        except ExactMeasureBoundError:
+            pass  # over-budget SF: the consumer entry records the refusal
+        timings[line] = round(time.perf_counter() - start, 3)
 
     def run_one(name: str, fn) -> float:
         start = time.perf_counter()
@@ -170,7 +142,7 @@ def main() -> None:
             timings[name] = min(timings[name], run_one(name, fn))
 
     total = round(sum(timings.values()), 3)
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
+    cpus = spark.sparkContext.defaultParallelism
     full_payload = {
         "metric": "suite_wall_clock",
         "value": total,
@@ -181,9 +153,13 @@ def main() -> None:
         "retried": retried,
         "n_queries": len(timings),
     }
-    with open(full_path, "w") as fh:
-        json.dump(full_payload, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    # The per-CPU file keeps each core count's map (an 8-core run never
+    # overwrites the 32-core one); the plain name aliases the latest run.
+    here = os.path.dirname(os.path.abspath(__file__))
+    for fname in (f"BENCH_FULL_c{cpus}.json", "BENCH_FULL.json"):
+        with open(os.path.join(here, fname), "w") as fh:
+            json.dump({**full_payload, "cpus": cpus}, fh, indent=1, sort_keys=True)
+            fh.write("\n")
 
     # Size-capped stdout line (see module docstring): headline numbers plus
     # as many of the SLOWEST queries as fit. Slowest-first is the right

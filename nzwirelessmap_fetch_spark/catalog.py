@@ -251,9 +251,10 @@ _BYTE_SUFFIXES = {
 def parse_byte_string(value: object, default: int) -> int:
     """Byte-size conf value -> int bytes, accepting Spark's suffixed
     renderings ('134217728b', '128m', '1g'), mirroring
-    ``JavaUtils.byteStringAsBytes``. An unset/unparseable value falls
-    back to ``default`` instead of raising — conf parsing must never
-    take a query down on a session the repo didn't configure."""
+    ``JavaUtils.byteStringAsBytes``. An unset/unparseable value — and a
+    size of zero, which callers divide by — falls back to ``default``
+    instead of raising: conf parsing must never take a query down on a
+    session the repo didn't configure."""
     import re
 
     if value is None:
@@ -262,7 +263,7 @@ def parse_byte_string(value: object, default: int) -> int:
     if not m:
         return default
     mult = _BYTE_SUFFIXES.get(m.group(2).lower())
-    if mult is None:
+    if mult is None or int(m.group(1)) <= 0:
         return default
     return int(m.group(1)) * mult
 
@@ -285,9 +286,3 @@ def parquet_ts_unit(path: str, column: str) -> str:
     else:
         part = path
     return pq.ParquetFile(part).schema_arrow.field(column).type.unit
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> Catalog:
-    cat = Catalog(spark, sf_dir)
-    cat.register_views()
-    return cat

@@ -50,21 +50,6 @@ def all_string(col: Column | str) -> Column:
     return F.coalesce(c.cast("string"), F.lit(""))
 
 
-def money_to_string(col: Column | str) -> Column:
-    """Access MONEY columns are exported via ``Object.toString()`` +
-    ``setString`` (AccessExporter#populateTable bytecode 326-337) — i.e. the
-    wire format is a decimal string, not a number."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(19,4)").cast("string")
-
-
-def boolean_to_int(col: Column | str) -> Column:
-    """Access BOOLEAN exported as INTEGER 0/1 (AccessExporter#populateTable
-    bytecode 349-387)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("boolean").cast("int")
-
-
 def ilike_shadow_name(col: str) -> str:
     return f"_{col}_lower"
 

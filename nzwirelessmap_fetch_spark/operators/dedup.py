@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.hashing import MERSENNE_P, md5_long
+from ..functions.memo import memo
 from ..functions.vectors import dot, norm
 
 # MinHash configuration: 16 permutations in 4 bands of 4 rows. Band-match
@@ -194,12 +195,6 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _verified_jaccard_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
 
 
-# Checkpointed verified near-dup pairs, keyed per (application, sf_dir).
-# Keyed on sparkContext.applicationId (stable for a session's lifetime),
-# NOT id(spark) — CPython reuses ids after GC, which could hand a
-# checkpointed DataFrame bound to a stopped SparkContext to a new session.
-_PAIRS_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
-
 # Corpus-adaptive prefix order (r6 verdict directive #2). The r6 2×2
 # matrix proved the best global prefix order FLIPS with df skew:
 # df-ascending wins 30–34% on the Zipfian fixture (head shingles never
@@ -214,43 +209,72 @@ _PAIRS_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
 # by the df path (zero waste); on a flat corpus the probe pays only
 # the df groupBy, not the join-back that made hash order win.
 DF_SKEW_ORDER_RATIO = 8
-_ORDER_PROBE_CACHE: dict[tuple, str] = {}
 
 
-def _prefix_order_sets(spark, sh, probe_key, order):
-    """Build the doc → (globally-ordered shingle-hash array, size) table
-    both pair builds share, resolving ``order="auto"`` via the df-skew
-    probe. Returns ``(resolved_order, sets, df_tab)`` — ``df_tab`` is a
-    persisted frame the CALLER must unpersist after materializing
-    ``sets`` (None when the hash path ran or the probe was cached)."""
-    df_tab = None
-    if order == "auto":
-        cached = _ORDER_PROBE_CACHE.get(probe_key)
-        if cached is not None:
-            order = cached
-        else:
-            df_tab = sh.groupBy("h").agg(F.count(F.lit(1)).alias("dfc")).persist()
-            stats = df_tab.agg(
-                F.max("dfc").alias("mx"),
-                F.percentile_approx("dfc", F.lit(0.99), F.lit(10000)).alias("p99"),
-            ).first()
-            p99 = max(int(stats["p99"] or 1), 1)
-            # mx is None on an EMPTY shingle table (every doc shorter
-            # than the shingle width) — `None >= int` raises TypeError.
-            # Default to hash order: there is nothing to skew (r7 ADVICE).
-            mx = int(stats["mx"] or 0)
-            order = "df" if mx >= DF_SKEW_ORDER_RATIO * p99 else "hash"
-            _ORDER_PROBE_CACHE[probe_key] = order
-            if order != "df":
-                df_tab.unpersist()
-                df_tab = None
+def _hashed_shingles(spark: SparkSession, sf_dir: str, max_df: int | None) -> DataFrame:
+    """(doc_id, h) shingle stream both pair builds share. h is a 64-bit
+    xxhash64 shingle identity — PURELY INTERNAL key (the oracles
+    recompute from shingle STRINGS; results agree absent 2^-64 collision
+    events). xxhash64 is ~1.6× faster than md5+conv on the warm sets
+    build (1.12 s → 0.70 s at sf0.1). Hashes that an ORACLE replays in
+    SQL (minhash perms, simhash, KMV) stay md5 — DuckDB has no xxhash64."""
+    d = Catalog(spark, sf_dir).table("documents")
+    return _shingles(d, max_df=max_df).select(
+        "doc_id", F.xxhash64("shingle").alias("h")
+    )
+
+
+def _df_table(sh: DataFrame) -> DataFrame:
+    return sh.groupBy("h").agg(F.count(F.lit(1)).alias("dfc"))
+
+
+def _probe_prefix_order(sh: DataFrame) -> str:
+    """The df-skew probe over a (doc_id, h) shingle stream. When it
+    picks "df" the probed df table stays persisted: the df path's
+    ``_df_table`` over an identical shingle plan reads it from Spark's
+    cache (zero waste) and unpersists it once ``sets`` is filled."""
+    df_tab = _df_table(sh).persist()
+    stats = df_tab.agg(
+        F.max("dfc").alias("mx"),
+        F.percentile_approx("dfc", F.lit(0.99), F.lit(10000)).alias("p99"),
+    ).first()
+    p99 = max(int(stats["p99"] or 1), 1)
+    # mx is None on an EMPTY shingle table (every doc shorter
+    # than the shingle width) — `None >= int` raises TypeError.
+    # Default to hash order: there is nothing to skew (r7 ADVICE).
+    mx = int(stats["mx"] or 0)
+    if mx >= DF_SKEW_ORDER_RATIO * p99:
+        return "df"
+    df_tab.unpersist()
+    return "hash"
+
+
+def _resolve_prefix_order(
+    spark: SparkSession, sf_dir: str, max_df: int | None, order: str
+) -> str:
+    """``order="auto"`` → the probe's pick, memoized per (sf_dir, max_df)
+    in the ``prefix_order`` family (both pair builds share it). Resolving
+    BEFORE the pair memo lets an "auto" build and an explicit call for
+    the order it picked share one entry."""
+    if order != "auto":
+        return order
+    return memo(
+        "prefix_order", spark, sf_dir, max_df,
+        lambda: _probe_prefix_order(_hashed_shingles(spark, sf_dir, max_df)),
+    )
+
+
+def _prefix_order_sets(sh: DataFrame, order: str) -> DataFrame:
+    """The doc → (globally-ordered shingle-hash array, size) table both
+    pair builds share, persisted and eagerly filled (the callers read it
+    from several subtrees; concurrently-scheduled consumers of a lazy
+    persist would each recompute the shingle aggregation — measured ~35 s
+    vs ~15 s at sf0.1). The CALLER unpersists it."""
     if order == "df":
         # df-ascending global order (canonical AllPairs/PPJoin): prefixes
         # carry the rarest shingles; (df, h) is a global total order so
         # the prefix + positional lemmas hold unchanged.
-        tab = df_tab
-        if tab is None:
-            tab = sh.groupBy("h").agg(F.count(F.lit(1)).alias("dfc"))
+        tab = _df_table(sh)
         sets = (
             sh.join(tab, "h")
             .select("doc_id", F.struct("dfc", "h").alias("kh"))
@@ -264,6 +288,7 @@ def _prefix_order_sets(spark, sh, probe_key, order):
             .persist()
         )
     else:
+        tab = None
         sets = (
             sh.groupBy("doc_id")
             .agg(
@@ -272,7 +297,10 @@ def _prefix_order_sets(spark, sh, probe_key, order):
             )
             .persist()
         )
-    return order, sets, df_tab
+    sets.count()
+    if tab is not None:
+        tab.unpersist()  # frees the probe's cached df table, if any
+    return sets
 
 
 def _verified_jaccard_pairs(
@@ -282,47 +310,37 @@ def _verified_jaccard_pairs(
     order: str = "auto",
     admission_guard: bool = False,
 ) -> DataFrame:
-    # the guard never changes the RESULT, so it is not part of the memo
-    # key — a cached frame (built by any consumer) serves guarded callers
-    key = (spark.sparkContext.applicationId, sf_dir, max_df, order)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = Catalog(spark, sf_dir).table("documents")
-    # 64-bit xxhash64 shingle identity — PURELY INTERNAL key (the oracle
-    # recomputes Jaccard from shingle STRINGS; results agree absent
-    # 2^-64 collision events, the same exposure the previous 60-bit
-    # md5-substring key carried). xxhash64 is ~1.6× faster than
-    # md5+conv on the warm sets build (1.12 s → 0.70 s at sf0.1) and
-    # this stage is the suite's heaviest shared line. Hashes that an
-    # ORACLE replays in SQL (minhash perms, simhash, KMV) stay md5 —
-    # DuckDB has no xxhash64.
+    """Verified near-dup pairs (doc_a, doc_b, jaccard), memoized as an
+    eager localCheckpoint in the ``jaccard_pairs`` family, keyed
+    (sf_dir, max_df, resolved order). The guard never changes the
+    RESULT, so it is not part of the key — a stored frame (built by any
+    consumer) serves guarded callers."""
+    order = _resolve_prefix_order(spark, sf_dir, max_df, order)
+    return memo(
+        "jaccard_pairs", spark, sf_dir, (max_df, order),
+        lambda: _build_jaccard_pairs(spark, sf_dir, max_df, order, admission_guard),
+    )
+
+
+def _build_jaccard_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    max_df: int | None,
+    order: str,
+    admission_guard: bool,
+) -> DataFrame:
     # Prefix order: "auto" since r7 — the df-skew probe picks
     # df-ascending on Zipfian corpora (30–34% faster, r6 matrix) and
     # hash order on flat ones (no wasted join-back); both orders are
     # proven row-identical (any fixed global total order satisfies the
-    # prefix + positional lemmas). See _prefix_order_sets.
-    sh = _shingles(d, max_df=max_df).select(
-        "doc_id", F.xxhash64("shingle").alias("h")
-    )
+    # prefix + positional lemmas). See _resolve_prefix_order.
     # doc → (ordered shingle-hash set, set size): |docs| rows (~2 MB at
     # sf0.1) with bounded arrays. Persisted (MEMORY_AND_DISK) because FOUR
     # consumers read it — both prefix join sides and both verification
     # joins — and without the persist each consumer re-runs the whole
     # shingle aggregation (measured 20× slower). Unpersisted below once the
     # checkpoint materializes.
-    resolved, sets, probe_tab = _prefix_order_sets(
-        spark, sh, (spark.sparkContext.applicationId, sf_dir, max_df), order
-    )
-    # Eager materialization (scalar count, no driver data): the plan below
-    # consumes `sets` from FOUR subtrees. A lazy persist is populated by
-    # whichever stage runs first — and concurrently-scheduled stages that
-    # all see an unfilled cache each recompute the full shingle aggregation
-    # (measured: the one-job formulation ran ~35 s at sf0.1 vs ~15 s with
-    # the two persists filled up front).
-    sets.count()
-    if probe_tab is not None:
-        probe_tab.unpersist()
+    sets = _prefix_order_sets(_hashed_shingles(spark, sf_dir, max_df), order)
     # prefix length p = n - ceil(t·n) + 1; with t=0.5: floor(n/2)+1.
     # posexplode keeps the in-set position for the PPJoin positional filter.
     prefixes = sets.select(
@@ -424,10 +442,6 @@ def _verified_jaccard_pairs(
     )
     sets.unpersist()
     cand.unpersist()
-    _PAIRS_CACHE[key] = pairs
-    # an "auto" build and an explicit call for the order it resolved to
-    # are the same frame — share the checkpoint under both keys
-    _PAIRS_CACHE[key[:3] + (resolved,)] = pairs
     return pairs
 
 
@@ -811,7 +825,7 @@ MAX_CC_ITERATIONS = 50
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric, distinct (doc_a, doc_b) edges at J ≥ 0.5.
 
-    Builds on the memoized verified-pair checkpoint (_PAIRS_CACHE), so
+    Builds on the memoized verified-pair checkpoint (``jaccard_pairs``), so
     the expensive similarity join runs once per (application, sf_dir) no
     matter how many of the three consuming queries execute; symmetrizing
     |dup pairs| checkpointed rows is noise."""
@@ -1193,15 +1207,14 @@ WHERE d.doc_id % {INCREMENTAL_BATCH_MOD} = 0
 
 HAMMING_MAX = 3  # ≤3 bit flips: 4-byte banding then has an intact band (pigeonhole)
 
-# Checkpointed verified Hamming-≤3 pair stream, keyed per
-# (application, sf_dir) — the _PAIRS_CACHE discipline applied to the
-# SimHash family (r10 verdict directive #1). THREE registry entries
+# Checkpointed verified Hamming-≤3 pair stream, memoized in the
+# ``simhash_pairs`` family (functions.memo, as the Jaccard pairs are;
+# r10 verdict directive #1). THREE registry entries
 # consume substantially the same 78.8 M-pair result at sf1-Zipf
 # (dedup_simhash_hamming, its content-hash adjudicator, and the
 # quality eval's candidate side); before this memo each re-derived the
 # full banding join (~943 s of the 3,111 s sf1-Zipf Spark-side bar).
 # One build, one eager localCheckpoint, three readers.
-_SIMHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,10 +1243,12 @@ def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast-join probe ran on the single-row-group scan's ONE
     task, serializing the entire pair production.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SIMHASH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(
+        "simhash_pairs", spark, sf_dir, (), lambda: _build_simhash_pairs(spark, sf_dir)
+    )
+
+
+def _build_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the signature build (tokenize + per-word md5 + fold over
     # the whole corpus) feeds BOTH sides of the self-join; without it
     # Spark computes the subtree twice (measured 2× at sf0.1).
@@ -1285,7 +1300,6 @@ def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     sigs.unpersist()
-    _SIMHASH_PAIRS_CACHE[key] = pairs
     return pairs
 
 
@@ -1564,26 +1578,28 @@ def corpus_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _containment_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
 
 
-# Memoized per (application, sf_dir, max_df, order) like _PAIRS_CACHE:
-# three registry entries (exact, capped, cap-eval) consume these builds,
-# and the cap-eval consumes BOTH — without the memo the suite runs the
-# inverted-index build up to twice per variant (r6: ~9 s duplicate work
-# per bench run). Output is pair-volume-sized; localCheckpoint truncates
-# the lineage and frees the internal `sets` persist.
-_CONTAIN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _containment_pairs(
     spark: SparkSession,
     sf_dir: str,
     max_df: int | None = None,
     order: str = "auto",
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, max_df, order)
-    cached = _CONTAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = Catalog(spark, sf_dir).table("documents")
+    """Containment pairs, memoized as an eager localCheckpoint in the
+    ``containment_pairs`` family, keyed (sf_dir, max_df, resolved order)
+    like the Jaccard build: three registry entries (exact, capped,
+    cap-eval) consume these builds, and the cap-eval consumes BOTH —
+    without the memo the suite runs the inverted-index build up to twice
+    per variant (r6: ~9 s duplicate work per bench run)."""
+    order = _resolve_prefix_order(spark, sf_dir, max_df, order)
+    return memo(
+        "containment_pairs", spark, sf_dir, (max_df, order),
+        lambda: _build_containment_pairs(spark, sf_dir, max_df, order),
+    )
+
+
+def _build_containment_pairs(
+    spark: SparkSession, sf_dir: str, max_df: int | None, order: str
+) -> DataFrame:
     # Asymmetric prefix filter (SSJoin overlap/containment variant —
     # exact, no recall loss): for C(A→B) = |A∩B|/|A| ≥ t, an A that
     # misses B on ALL of its first ⌊n_a·(1-t)⌋+1 shingles (any fixed
@@ -1601,23 +1617,9 @@ def _containment_pairs(
     # explicit order="df"/"hash" keeps both variants measurable.
     # Replaces the round-4
     # full df² self-join (18-33 s → 7.5 s best-of-3 on this host).
-    # xxhash64: internal-only key, same rationale as the Jaccard build.
-    # Order "auto" since r7: the df-skew probe picks df-ascending on
-    # Zipfian corpora (head terms never enter a prefix — 30% faster on
-    # the Zipf fixture) and hash order on flat ones (skips the
-    # join-back that made hash win 9% there); see _prefix_order_sets.
-    sh = _shingles(d, max_df=max_df).select(
-        "doc_id", F.xxhash64("shingle").alias("h")
-    )
-    resolved, sets, probe_tab = _prefix_order_sets(
-        spark, sh, (spark.sparkContext.applicationId, sf_dir, max_df), order
-    )
-    # Eager fill: `sets` feeds three subtrees (prefix probes, full
-    # postings, verify arrays) — concurrently-scheduled consumers of a
-    # lazy persist would each recompute the shingle aggregation.
-    sets.count()
-    if probe_tab is not None:
-        probe_tab.unpersist()
+    # `sets` feeds three subtrees (prefix probes, full postings, verify
+    # arrays); see _prefix_order_sets for the eager fill.
+    sets = _prefix_order_sets(_hashed_shingles(spark, sf_dir, max_df), order)
     # prefix length ⌊n/5⌋+1 at t=4/5 = n - ceil(t·n) + 1. Sizes ride
     # along on the exploded streams so the SIZE bound — C(A→B) ≥ t needs
     # |B| ≥ t·|A| because n_inter ≤ min — prunes candidate rows INSIDE
@@ -1717,8 +1719,6 @@ def _containment_pairs(
         .localCheckpoint(eager=True)
     )
     sets.unpersist()
-    _CONTAIN_CACHE[key] = out
-    _CONTAIN_CACHE[key[:3] + (resolved,)] = out
     return out
 
 

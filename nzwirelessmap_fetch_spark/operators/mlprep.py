@@ -177,6 +177,12 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary state, collision-tolerant by design. The layer every
     linear-model text pipeline runs between raw text and training.
 
+    The vector ships as its comma-joined counts ('3,0,1,…') on both
+    sides (``array_join`` / DuckDB ``array_to_string``): an ``array<int>``
+    cell is unhashable for a pandas row canonicalizer. NULL text yields
+    a NULL string on both sides (the fold and the join both propagate
+    NULL).
+
     Bucket hash: first 8 hex chars of md5(token) as an unsigned int mod
     ``HASH_DIM`` — both engines derive it bit-identically (same idiom as
     the corpus shingle keys). Plan: row-local — tokens explode INSIDE
@@ -189,8 +195,7 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     size(filter(tokens, t -> md5-bucket(t) = k)))``) — HASH_DIM md5
     evaluations per token. Rewritten as one bucket pass (md5 once per
     token) folded into the count array with integer increments; counts
-    are identical by construction (same bucket value, same k order), and
-    a NULL-text guard reproduces the old per-element-NULL shape exactly.
+    are identical by construction (same bucket value, same k order).
     The scan rides ``table_parallel`` — the md5 fold is pure scan-side
     compute, serialized on ONE task by the single-row-group fixture
     files (same class as the simhash signature pass).
@@ -198,12 +203,12 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table_parallel("documents")
     bucket = f"CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % {HASH_DIM}"
     vec = f"""
-      IF(text IS NULL,
-         transform(sequence(0, {HASH_DIM - 1}), k -> CAST(NULL AS INT)),
-         aggregate(
-           transform(split(text, ' '), t -> {bucket}),
-           array_repeat(0, {HASH_DIM}),
-           (acc, b) -> transform(acc, (x, i) -> IF(i = b, x + 1, x))))
+      array_join(
+        aggregate(
+          transform(split(text, ' '), t -> {bucket}),
+          array_repeat(0, {HASH_DIM}),
+          (acc, b) -> transform(acc, (x, i) -> IF(i = b, x + 1, x))),
+        ',')
     """
     return d.select(
         "doc_id",
@@ -214,10 +219,10 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ML_FEATURE_HASHING_SQL = f"""
 SELECT doc_id,
-       list_transform(range(0, {HASH_DIM}), k ->
+       array_to_string(list_transform(range(0, {HASH_DIM}), k ->
          CAST(LEN(list_filter(string_split(text, ' '),
                   t -> ('0x' || substr(md5(t), 1, 8))::BIGINT
-                       % {HASH_DIM} = k)) AS INT)) AS feature_counts,
+                       % {HASH_DIM} = k)) AS INT)), ',') AS feature_counts,
        CAST(LEN(string_split(text, ' ')) AS INT) AS n_tokens
 FROM documents
 """

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..functions.memo import memo
 
 # ---------------------------------------------------------------------------
 # Count-min sketch heavy hitters
@@ -110,13 +111,6 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_n",
         "cms_est",
         (F.col("cms_est") - F.col("exact_n")).alias("overshoot"),
-    )
-
-
-def _cms_col_sql(key: str, row: int) -> str:
-    return (
-        f"('0x' || substr(md5(CAST({key} AS VARCHAR)), {1 + 8 * row}, 8))::BIGINT"
-        f" % {CMS_WIDTH}"
     )
 
 
@@ -599,14 +593,11 @@ def embedding_principal_component(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantized-exact Gram accumulation — the only corpus-sized pass.
 
-    Memoized per (application, sf_dir) as an eager localCheckpoint (the
-    _PAIRS_CACHE discipline): FOUR registry queries consume this matrix
+    Memoized as an eager localCheckpoint in the ``pc_gram`` family
+    (functions.memo): FOUR registry queries consume this matrix
     (principal component, ABTT residual, PCA top-2, whitening) and each
     used to re-run the corpus fan-out; the checkpointed state is dim²
     rows — trivial at any corpus size. bench.py times the build as its
@@ -615,10 +606,10 @@ def _pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-robin pre-split: the embeddings table is one parquet file at
     bench SF and the dim² fan-out (4096 rows per vector) would
     otherwise run on a single task (the one-file-scan lesson)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo("pc_gram", spark, sf_dir, (), lambda: _build_pc_gram(spark, sf_dir))
+
+
+def _build_pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = Catalog(spark, sf_dir).table("embeddings").repartition(width)
     pairs = (
@@ -636,14 +627,12 @@ def _pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("q"),
         )
     )
-    gram = (
+    return (
         pairs.groupBy("i", "j")
         .agg(F.sum("q").alias("gq"))
         .select("i", "j", (F.col("gq").cast("double") / F.lit(_PC_SCALE)).alias("g"))
         .localCheckpoint(eager=True)
     )
-    _GRAM_CACHE[key] = gram
-    return gram
 
 
 def _pc_iterate(spark: SparkSession, gram: DataFrame):
@@ -716,21 +705,16 @@ def _pc_iterate(spark: SparkSession, gram: DataFrame):
     return normalized(w_last), lam
 
 
-_TRAJ_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _pc_trajectory(spark: SparkSession, sf_dir: str):
     """The shared power-iteration trajectory on the corpus Gram matrix.
     Consumed by ``embedding_principal_component``, the ABTT residual
-    projection, and (as component 1) ``_top2_components``. Memoized per
-    (application, sf_dir): every iterate is already an eager
+    projection, and (as component 1) ``_top2_components``. Memoized in
+    the ``pc_trajectory`` family: every iterate is already an eager
     localCheckpoint of ≤ dim² rows, so reuse is free and exact."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TRAJ_CACHE.get(key)
-    if cached is None:
-        cached = _pc_iterate(spark, _pc_gram(spark, sf_dir))
-        _TRAJ_CACHE[key] = cached
-    return cached
+    return memo(
+        "pc_trajectory", spark, sf_dir, (),
+        lambda: _pc_iterate(spark, _pc_gram(spark, sf_dir)),
+    )
 
 
 def _ddb_matvec(gram: str, v: str, out: str) -> str:
@@ -912,20 +896,22 @@ FROM base
 """
 
 
-_TOP2_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _top2_components(spark: SparkSession, sf_dir: str):
     """Shared top-2 trajectory: power-iterate the Gram matrix, deflate
     (G₂ = G − λ₁·v₁v₁ᵀ), iterate again. Returns (v1, lam1, v2, lam2) —
-    per-dim loading frames and 1-row eigenvalue frames. Memoized like
-    ``_pc_trajectory`` (component 1 comes FROM that cache, so the two
-    PCA-family consumers and the two trajectory consumers share one
-    physical iteration history)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    top2 = _TOP2_CACHE.get(key)
-    if top2 is not None:
-        return top2
+    per-dim loading frames and 1-row eigenvalue frames. Component 1 comes
+    FROM the ``pc_trajectory`` memo, so the two PCA-family consumers and
+    the two trajectory consumers share one physical iteration history;
+    the ``pc_top2`` family stores only component 2, so releasing it
+    never frees component 1's checkpoints."""
+    v1, lam1 = _pc_trajectory(spark, sf_dir)
+    v2, lam2 = memo(
+        "pc_top2", spark, sf_dir, (), lambda: _deflated_component(spark, sf_dir)
+    )
+    return v1, lam1, v2, lam2
+
+
+def _deflated_component(spark: SparkSession, sf_dir: str):
     gram = _pc_gram(spark, sf_dir)
     v1, lam1 = _pc_trajectory(spark, sf_dir)
     vi = v1.select(F.col("j").alias("i"), F.col("v").alias("vi"))
@@ -941,9 +927,7 @@ def _top2_components(spark: SparkSession, sf_dir: str):
         )
     )
     # dim²-row deflated matrix; _pc_iterate checkpoints it on entry
-    v2, lam2 = _pc_iterate(spark, gram2)
-    _TOP2_CACHE[key] = (v1, lam1, v2, lam2)
-    return v1, lam1, v2, lam2
+    return _pc_iterate(spark, gram2)
 
 
 def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:

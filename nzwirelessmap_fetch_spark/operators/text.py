@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.hashing import md5_long, md5_long60, rolling_hash
+from ..functions.memo import memo
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
@@ -1867,30 +1868,23 @@ def _winnow_adaptive_cap(dfs: DataFrame, n_docs: int) -> int:
     return max(WINNOW_MAX_DF, int(row["c"] or 0))
 
 
-# Memoized base fingerprint table per (applicationId, sf_dir): the
-# md5-per-kgram extraction is the dominant shared stage (6.8 s of the
-# 15 s capped build at sf0.1) and THREE registry entries consume it
-# (exact, capped, cap_eval — the shared_jaccard_pair_build discipline).
-# Value is (persisted fp frame, n_docs).
-_WINNOW_FP_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
-
-# Memoized FINAL pair frames per (applicationId, sf_dir, max_df
-# sentinel): outputs are tiny (26–285 rows at the gate SFs) and
-# cap_eval re-reads both the exact and capped sets — localCheckpoint
-# truncates the 190M-pair lineage so the eval costs two joins over
-# output-sized frames, not two full rebuilds.
-_WINNOW_PAIRS_CACHE: dict[tuple[str, str, object], DataFrame] = {}
-
-
 def _winnow_base_fingerprints(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int]:
     """The UNCAPPED (doc_id, fp) table + the fingerprinted doc count,
-    built once per (application, corpus) and persisted."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _WINNOW_FP_CACHE.get(key)
-    if cached is not None:
-        return cached
+    memoized in the ``winnow_fingerprints`` family: the md5-per-kgram
+    extraction is the dominant shared stage (6.8 s of the 15 s capped
+    build at sf0.1) and THREE registry entries consume it (exact,
+    capped, cap_eval). Value is (persisted fp frame, n_docs)."""
+    return memo(
+        "winnow_fingerprints", spark, sf_dir, (),
+        lambda: _build_winnow_base_fingerprints(spark, sf_dir),
+    )
+
+
+def _build_winnow_base_fingerprints(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
     width = max(4 * int(spark.conf.get("spark.sql.shuffle.partitions")), 128)
     d = (
         Catalog(spark, sf_dir)
@@ -1923,9 +1917,7 @@ def _winnow_base_fingerprints(
         .persist()
     )
     fp.count()  # eager fill: every consumer below reads the cache
-    out = (fp, d.count())
-    _WINNOW_FP_CACHE[key] = out
-    return out
+    return fp, d.count()
 
 
 def _winnow_fingerprints(
@@ -1956,15 +1948,20 @@ def _winnow_fingerprints(
 def _winnow_pairs(
     spark: SparkSession, sf_dir: str, max_df: int | None | str
 ) -> DataFrame:
-    # Memoized per (application, corpus, cap sentinel): the output is
-    # output-sized (tens to hundreds of rows at gate SFs) and cap_eval
-    # re-reads both the exact and the capped pair sets — the eager
-    # localCheckpoint below truncates the pair-join lineage so reuse
-    # costs a cached-frame read, not a rebuild.
-    key = (spark.sparkContext.applicationId, sf_dir, max_df)
-    cached = _WINNOW_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Winnowing pair frame, memoized in the ``winnow_pairs`` family per
+    cap sentinel: the output is output-sized (tens to hundreds of rows at
+    gate SFs) and cap_eval re-reads both the exact and the capped pair
+    sets — the eager localCheckpoint truncates the 190M-pair lineage so
+    reuse costs a cached-frame read, not a rebuild."""
+    return memo(
+        "winnow_pairs", spark, sf_dir, max_df,
+        lambda: _build_winnow_pairs(spark, sf_dir, max_df),
+    )
+
+
+def _build_winnow_pairs(
+    spark: SparkSession, sf_dir: str, max_df: int | None | str
+) -> DataFrame:
     # Fingerprint extraction shared with the array-verify variant
     # (round-robin pre-split + persist + optional df-cap all live in
     # `_winnow_fingerprints` — the one-file-scan lesson and the r4
@@ -2012,7 +2009,7 @@ def _winnow_pairs(
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_fp").alias("n_fp_a"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_fp").alias("n_fp_b"))
-    out = (
+    return (
         shared.join(na, "doc_a")
         .join(nb, "doc_b")
         .filter(2 * F.col("n_shared") >= F.least("n_fp_a", "n_fp_b"))
@@ -2029,8 +2026,6 @@ def _winnow_pairs(
         )
         .localCheckpoint(eager=True)
     )
-    _WINNOW_PAIRS_CACHE[key] = out
-    return out
 
 
 CORPUS_WINNOWING_SQL = f"""

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..functions.memo import memo, temp_dir
 
 
 def _dec(c: Column | str) -> Column:
@@ -2119,11 +2120,6 @@ def _snapshot_diff(v1: DataFrame, v2: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-# Per-(application, sf_dir) snapshot roots for table_diff_versions — one
-# mkdtemp per session, re-written idempotently on each call.
-_SNAPSHOT_ROOTS: dict[tuple[str, str], str] = {}
-
-
 def table_diff_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``table_snapshot_diff`` through the AT-REST snapshot layout
     (VERDICT r3 "what's missing" #3): both versions are written as
@@ -2138,15 +2134,9 @@ def table_diff_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     No Delta/Iceberg jars in this environment; the layout IS the
     reference's own versioned-artifact time travel (fetch.go:48-53)
     applied to columnar tables."""
-    import tempfile
-
     from ..sinks.writers import SnapshotParquetTable
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _SNAPSHOT_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-")
-        _SNAPSHOT_ROOTS[key] = root
+    root = memo("snapshot", spark, sf_dir, "diff", lambda: temp_dir("snapshots-"))
     sink = SnapshotParquetTable(root)
     v1, v2, cols = _orders_two_snapshots(spark, sf_dir)
     sink.write_version(v1, "orders", "1")
@@ -2167,15 +2157,9 @@ def table_merge_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     every update/insert/delete the oracle derives must have survived a
     parquet round trip that only exists because the merge committed.
     """
-    import tempfile
-
     from ..sinks.writers import SnapshotParquetTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "merge")
-    root = _SNAPSHOT_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-merge-")
-        _SNAPSHOT_ROOTS[key] = root
+    root = memo("snapshot", spark, sf_dir, "merge", lambda: temp_dir("snapshots-merge-"))
     sink = SnapshotParquetTable(root)
     cols = ["o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
     o, updates, inserts, deletes = _orders_change_set(spark, sf_dir)
@@ -2212,20 +2196,15 @@ def table_txn_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     table format's snapshot manager uses; row counts and diff counts
     are distributed aggregates over the at-rest parquet, never
     collected."""
-    import tempfile
-
     from ..sinks.writers import SnapshotParquetTable
 
     ts1 = "2024-01-01T00:00:00.000000Z"
     ts2 = "2024-01-02T00:00:00.000000Z"
     mid = "2024-01-01T12:00:00.000000Z"
     cols = ["o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
-    key = (spark.sparkContext.applicationId, sf_dir, "txn")
-    root = _SNAPSHOT_ROOTS.get(key)
-    sink = SnapshotParquetTable(root) if root else None
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-txn-")
-        _SNAPSHOT_ROOTS[key] = root
+
+    def build() -> str:
+        root = temp_dir("snapshots-txn-")
         sink = SnapshotParquetTable(root)
         o, updates, inserts, deletes = _orders_change_set(spark, sf_dir)
         # the log APPENDS (commits are history, not state), so the build
@@ -2240,6 +2219,9 @@ def table_txn_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             deletes=deletes,
             commit_ts=ts2,
         )
+        return root
+
+    sink = SnapshotParquetTable(memo("snapshot", spark, sf_dir, "txn", build))
     entries = sink.log_entries("orders")
     assert [e["version"] for e in entries] == ["1", "2"]
     log = spark.createDataFrame(
@@ -2309,17 +2291,12 @@ def table_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     10⁵-commit steady state (streaming MERGE sink) resolve/read_as_of
     cost pointer + checkpoint + ≤interval tail files, flat in version
     count (growth row in SCALING.md r9)."""
-    import tempfile
-
     from ..sinks.writers import SnapshotParquetTable
 
     n_commits = 12
-    key = (spark.sparkContext.applicationId, sf_dir, "txn-checkpoint")
-    root = _SNAPSHOT_ROOTS.get(key)
-    sink = SnapshotParquetTable(root) if root else None
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-cp-")
-        _SNAPSHOT_ROOTS[key] = root
+
+    def build() -> str:
+        root = temp_dir("snapshots-cp-")
         sink = SnapshotParquetTable(root)
         o = Catalog(spark, sf_dir).table("orders")
         for i in range(n_commits):
@@ -2331,6 +2308,9 @@ def table_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"v{i}",
                 commit_ts=f"2024-01-01T00:00:{i:02d}.000000Z",
             )
+        return root
+
+    sink = SnapshotParquetTable(memo("snapshot", spark, sf_dir, "txn-checkpoint", build))
     state = sink._state("orders_cp")
     assert state is not None, "checkpoint must exist after 12 commits"
     cdir = sink._checkpoint_dir("orders_cp")
@@ -2395,17 +2375,13 @@ def table_txn_checkpoint_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     test is identical (it sees only log entries), and the entry stays a
     ~3 s driver-window line instead of 45 Spark write jobs."""
     import json as _json
-    import tempfile
 
     from ..sinks.writers import SnapshotParquetTable
 
     n_commits = 45
-    key = (spark.sparkContext.applicationId, sf_dir, "txn-checkpoint-parts")
-    root = _SNAPSHOT_ROOTS.get(key)
-    sink = SnapshotParquetTable(root) if root else None
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-cpp-")
-        _SNAPSHOT_ROOTS[key] = root
+
+    def build() -> str:
+        root = temp_dir("snapshots-cpp-")
         sink = SnapshotParquetTable(root)
         o = Catalog(spark, sf_dir).table("orders")
         for i in range(n_commits):
@@ -2426,6 +2402,11 @@ def table_txn_checkpoint_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     [["o_orderkey", "bigint"], ["o_totalprice", "double"]],
                     commit_ts=ts,
                 )
+        return root
+
+    sink = SnapshotParquetTable(
+        memo("snapshot", spark, sf_dir, "txn-checkpoint-parts", build)
+    )
     state = sink._state("orders_cpp")
     assert state is not None, "checkpoint must exist after 45 commits"
     cdir = sink._checkpoint_dir("orders_cpp")
@@ -2564,17 +2545,11 @@ def table_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the log is what makes it safe to run concurrently with
     ingest — the conflict check aborts the OPTIMIZE, never the
     writer."""
-    import tempfile
-
     from ..operators.sketches import orders_merkle_manifest
     from ..sinks.writers import SnapshotParquetTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "optimize")
-    root = _SNAPSHOT_ROOTS.get(key)
-    sink = SnapshotParquetTable(root) if root else None
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-optimize-")
-        _SNAPSHOT_ROOTS[key] = root
+    def build() -> str:
+        root = temp_dir("snapshots-optimize-")
         sink = SnapshotParquetTable(root)
         o = Catalog(spark, sf_dir).table("orders")
         sink.write_version(
@@ -2607,6 +2582,9 @@ def table_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"bytes_before={stats['bytes_before']}); raise the oracle's "
                 "VALUES n_files pin or optimize() target_file_mb together"
             )
+        return root
+
+    sink = SnapshotParquetTable(memo("snapshot", spark, sf_dir, "optimize", build))
     entries = {e["version"]: e for e in sink.log_entries("orders")}
     assert entries["2"]["op"] == "optimize"
     assert entries["2"]["parent"] == "1"
@@ -2682,19 +2660,14 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the validation is metadata-only (field lists from the log,
     never a data scan) and runs BEFORE any data file is written — the
     same order a real table format's commit protocol runs it."""
-    import tempfile
-
     from ..sinks.writers import SnapshotParquetTable
 
     ts1 = "2024-01-01T00:00:00.000000Z"
     ts2 = "2024-01-02T00:00:00.000000Z"
     mid = "2024-01-01T12:00:00.000000Z"
-    key = (spark.sparkContext.applicationId, sf_dir, "evolve")
-    root = _SNAPSHOT_ROOTS.get(key)
-    sink = SnapshotParquetTable(root) if root else None
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-evolve-")
-        _SNAPSHOT_ROOTS[key] = root
+
+    def build() -> str:
+        root = temp_dir("snapshots-evolve-")
         sink = SnapshotParquetTable(root)
         o, updates, inserts, _deletes = _orders_change_set(spark, sf_dir)
         sink.write_version(o, "orders", "1", commit_ts=ts1)
@@ -2704,6 +2677,9 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink.merge_into(
             spark, "orders", changes, "o_orderkey", "2", commit_ts=ts2
         )
+        return root
+
+    sink = SnapshotParquetTable(memo("snapshot", spark, sf_dir, "evolve", build))
     entries = {e["version"]: e for e in sink.log_entries("orders")}
     assert entries["2"]["schema_added"] == ["o_channel"]
     assert [n for n, _t in entries["2"]["schema"]][:5] == [
@@ -2782,16 +2758,10 @@ def table_restore_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     gone) and recomputes v2/v3 row counts from the fixture, so the
     green row certifies restore content (v3 ≡ base), the log's parent
     chain across all three ops, and vacuum's exact retention cut."""
-    import tempfile
-
     from ..sinks.writers import SnapshotParquetTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "lifecycle")
-    root = _SNAPSHOT_ROOTS.get(key)
-    sink = SnapshotParquetTable(root) if root else None
-    if root is None:
-        root = tempfile.mkdtemp(prefix="snapshots-lifecycle-")
-        _SNAPSHOT_ROOTS[key] = root
+    def build() -> str:
+        root = temp_dir("snapshots-lifecycle-")
         sink = SnapshotParquetTable(root)
         o, updates, inserts, deletes = _orders_change_set(spark, sf_dir)
         sink.write_version(
@@ -2812,6 +2782,10 @@ def table_restore_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stats = sink.vacuum("orders", keep_latest=2)
         assert stats["removed_expired"] == ["1"] and stats["removed_orphans"] == []
+        return root
+
+    root = memo("snapshot", spark, sf_dir, "lifecycle", build)
+    sink = SnapshotParquetTable(root)
     from pathlib import Path
 
     out = None
@@ -3328,11 +3302,6 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_RECURSIVE_CTE_SQL = _RECURSIVE_CTE_SQL
 
 
-# Per-(application, sf_dir) ORC staging roots — one mkdtemp per session,
-# re-written idempotently (same discipline as _SNAPSHOT_ROOTS above).
-_ORC_ROOTS: dict[tuple[str, str], str] = {}
-
-
 def format_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write → read → aggregate: certifies the second columnar
     format end to end (projection/predicate pushdown against ORC uses
@@ -3351,13 +3320,7 @@ def format_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     heart (Access → SQLite → CSV/JSON, fetch.go:180-246); ORC is the
     columnar member of that conversion family.
     """
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _ORC_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="orc-stage-")
-        _ORC_ROOTS[key] = root
+    root = memo("orc_stage", spark, sf_dir, (), lambda: temp_dir("orc-stage-"))
     li = Catalog(spark, sf_dir).table("lineitem").select(
         "l_orderkey",
         "l_returnflag",
@@ -3387,9 +3350,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-_PARTED_ROOTS: dict[tuple, str] = {}
-
-
 def format_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned write → partition-pruned read-back: orders
     land as ``o_orderpriority=<v>/`` directories (the layout every lake
@@ -3411,13 +3371,7 @@ def format_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     version directory scheme; this operator is that idea as a queryable
     table layout.
     """
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _PARTED_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="parted-stage-")
-        _PARTED_ROOTS[key] = root
+    root = memo("parted_stage", spark, sf_dir, (), lambda: temp_dir("parted-stage-"))
     o = Catalog(spark, sf_dir).table("orders").select(
         "o_orderkey",
         "o_orderdate",
@@ -3490,9 +3444,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-_MERGE_ROOTS: dict[tuple, str] = {}
-
-
 def format_schema_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on read (``mergeSchema``): an early batch of a
     dataset lands WITHOUT a column that later batches carry — the
@@ -3513,13 +3464,7 @@ def format_schema_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     allowed to drift per version; this operator is that contract on a
     columnar lake layout.
     """
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _MERGE_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="schemamerge-stage-")
-        _MERGE_ROOTS[key] = root
+    root = memo("merge_stage", spark, sf_dir, (), lambda: temp_dir("schemamerge-stage-"))
     o = Catalog(spark, sf_dir).table("orders").select(
         "o_orderkey",
         "o_orderdate",

@@ -161,27 +161,3 @@ def read_access_jdbc(
         spark, url, table, driver=UCANACCESS_DRIVER, **options
     )
     return access_select_with_conversions(df, declared_types)
-
-
-def read_csv_all_strings(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
-    """P16 parity: headered CSV → records where EVERY value is a string
-    (``csv.DictReader`` semantics, csv2json2.py:3). No inference pass."""
-    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
-    return spark.read.option("header", True).schema(schema).csv(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Opaque-binary source for multimodal columns (path, mtime, length,
-    content)."""
-    return (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    )
-
-
-def with_access_conversions(df: DataFrame, money_cols: list[str] = (), bool_cols: list[str] = ()) -> DataFrame:
-    """Apply the two value conversions the jar special-cases (P12)."""
-    for c in money_cols:
-        df = df.withColumn(c, F.col(c).cast("decimal(19,4)").cast("string"))
-    for c in bool_cols:
-        df = df.withColumn(c, F.col(c).cast("boolean").cast("int"))
-    return df

@@ -1,0 +1,165 @@
+"""The session memo (functions/memo.py): one live corpus per family,
+release frees checkpoint storage and temp dirs, failed builds store
+nothing."""
+
+from __future__ import annotations
+
+import os
+import time
+from types import SimpleNamespace
+
+import pytest
+
+from nzwirelessmap_fetch_spark.functions import memo
+from tests.conftest import SF_SMOKE
+
+
+def _live_rdd_ids(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {infos[i].id() for i in range(len(infos))}
+
+
+def _checkpoint_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _eventually(pred, timeout_s: float = 20.0) -> bool:
+    """Block removal is asynchronous (unpersist(blocking=False))."""
+    deadline = time.monotonic() + timeout_s
+    while not pred():
+        if time.monotonic() > deadline:
+            return False
+        time.sleep(0.2)
+    return True
+
+
+def _aliases(tmp_path, n: int) -> list[str]:
+    out = []
+    for i in range(n):
+        alias = tmp_path / f"alias{i}"
+        alias.symlink_to(SF_SMOKE, target_is_directory=True)
+        out.append(str(alias))
+    return out
+
+
+def test_hit_miss_and_eviction_contract(spark):
+    builds = []
+
+    def build(tag):
+        def run():
+            builds.append(tag)
+            return tag
+
+        return run
+
+    memo.reset("contract")
+    try:
+        assert memo.memo("contract", spark, "sfA", 1, build("a1")) == "a1"
+        assert memo.memo("contract", spark, "sfA", 1, build("again")) == "a1"
+        # other params under the same corpus coexist
+        assert memo.memo("contract", spark, "sfA", 2, build("a2")) == "a2"
+        assert len(memo.entries("contract")) == 2
+        # a new corpus releases every entry of the old one
+        assert memo.memo("contract", spark, "sfB", 1, build("b1")) == "b1"
+        assert [k[1:] for k in memo.entries("contract")] == [("sfB", 1)]
+        assert builds == ["a1", "a2", "b1"]
+    finally:
+        memo.reset("contract")
+    assert memo.entries("contract") == {}
+
+
+def test_failed_build_stores_nothing(spark):
+    def boom():
+        raise RuntimeError("build failed")
+
+    memo.reset("failing")
+    with pytest.raises(RuntimeError):
+        memo.memo("failing", spark, SF_SMOKE, (), boom)
+    assert memo.entries("failing") == {}
+    assert memo.memo("failing", spark, SF_SMOKE, (), lambda: "ok") == "ok"
+    memo.reset("failing")
+
+
+def test_two_aliases_leave_one_live_jaccard_checkpoint(spark, tmp_path):
+    """Each path alias is a new sf_dir: the second build releases the
+    first one's localCheckpoint blocks, which unpersist()/clearCache()
+    alone leave in storage."""
+    from nzwirelessmap_fetch_spark.operators.dedup import _verified_jaccard_pairs
+
+    memo.reset()
+    before = _live_rdd_ids(spark)
+    ids = [
+        _checkpoint_id(_verified_jaccard_pairs(spark, alias))
+        for alias in _aliases(tmp_path, 2)
+    ]
+    assert ids[0] != ids[1]
+    assert _eventually(lambda: _live_rdd_ids(spark) - before == {ids[1]})
+    assert len(memo.entries("jaccard_pairs")) == 1
+    memo.reset()
+    assert _eventually(lambda: not (_live_rdd_ids(spark) - before))
+
+
+def test_reset_frees_every_memo_storage(spark):
+    from nzwirelessmap_fetch_spark.operators.dedup import (
+        _containment_pairs,
+        _verified_jaccard_pairs,
+        _verified_simhash_pairs,
+    )
+    from nzwirelessmap_fetch_spark.operators.sketches import _top2_components
+    from nzwirelessmap_fetch_spark.operators.text import _winnow_pairs
+
+    memo.reset()
+    frames = [
+        _verified_jaccard_pairs(spark, SF_SMOKE),
+        _containment_pairs(spark, SF_SMOKE),
+        _verified_simhash_pairs(spark, SF_SMOKE),
+        _winnow_pairs(spark, SF_SMOKE, max_df=None),
+        *_top2_components(spark, SF_SMOKE),
+    ]
+    for frame in frames:
+        frame.count()
+    held = set()
+    for frame in frames:
+        leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                held.add(leaf.rdd().id())
+    assert held <= _live_rdd_ids(spark)
+    fp, _n_docs = memo.entries("winnow_fingerprints")[
+        (spark.sparkContext.applicationId, SF_SMOKE, ())
+    ]
+    assert fp.is_cached
+    memo.reset()
+    assert all(memo.entries(f) == {} for f in ("jaccard_pairs", "pc_top2"))
+    assert _eventually(lambda: not (held & _live_rdd_ids(spark)))
+    assert not fp.is_cached
+
+
+def test_stopped_application_entry_dropped_without_jvm_call(spark):
+    """An entry keyed by another applicationId is dropped on the next
+    miss, and its frame is not touched (the JVM it lived in is gone)."""
+    frame = spark.range(10).localCheckpoint(eager=True)
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-stopped"))
+    memo.reset("stopped")
+    memo.memo("stopped", stopped, SF_SMOKE, (), lambda: frame)
+    memo.memo("stopped", spark, SF_SMOKE, (), lambda: "fresh")
+    assert list(memo.entries("stopped").values()) == ["fresh"]
+    assert _checkpoint_id(frame) in _live_rdd_ids(spark)
+    memo.reset("stopped")
+    frame._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
+def test_evicting_snapshot_root_removes_its_temp_dir(spark, tmp_path):
+    from nzwirelessmap_fetch_spark.plans.relational import table_diff_versions
+
+    memo.reset("snapshot")
+    first, second = _aliases(tmp_path, 2)
+    table_diff_versions(spark, first).count()
+    (root1,) = memo.entries("snapshot").values()
+    assert os.path.isdir(root1)
+    table_diff_versions(spark, second).count()
+    (root2,) = memo.entries("snapshot").values()
+    assert not os.path.exists(root1) and os.path.isdir(root2)
+    memo.reset("snapshot")
+    assert not os.path.exists(root2)

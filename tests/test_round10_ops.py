@@ -186,6 +186,7 @@ def test_spoofed_small_host_refuses_earlier(spark, monkeypatch):
     exact measure refuses at sf0.01 where the real host admits it."""
     import nzwirelessmap_fetch_spark.functions.admission as adm
     import nzwirelessmap_fetch_spark.operators.text as tx
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import ExactMeasureBoundError
 
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", raising=False)
@@ -194,12 +195,12 @@ def test_spoofed_small_host_refuses_earlier(spark, monkeypatch):
     adm._derived_budget.cache_clear()
     monkeypatch.setattr(adm, "MIN_BUDGET", 1)
     try:
-        monkeypatch.setattr(tx, "_WINNOW_PAIRS_CACHE", {})
+        memo.reset("winnow_pairs")
         with pytest.raises(ExactMeasureBoundError, match="corpus_winnowing_capped"):
             tx.corpus_winnowing(spark, SF_CORRECT)
     finally:
         adm._derived_budget.cache_clear()
-        tx._WINNOW_PAIRS_CACHE.clear()
+        memo.reset("winnow_pairs")
 
 
 # ---------------------------------------------------------------- vacuum

@@ -36,6 +36,9 @@ def test_parse_byte_string_suffixes():
     assert parse_byte_string("garbage", default=7) == 7
     assert parse_byte_string("12x", default=7) == 7
     assert parse_byte_string("", default=7) == 7
+    # A zero size is unparseable too: table_parallel divides by it.
+    assert parse_byte_string("0", default=7) == 7
+    assert parse_byte_string("0b", default=7) == 7
 
 
 def test_table_parallel_survives_suffixed_conf(spark):

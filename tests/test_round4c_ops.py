@@ -320,9 +320,54 @@ def test_feature_hashing_matches_python_replay(spark):
             b = int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % HASH_DIM
             vec[b] += 1
         row = got[doc_id]
-        assert list(row["feature_counts"]) == vec
+        counts = [int(x) for x in row["feature_counts"].split(",")]
+        assert counts == vec
         assert row["n_tokens"] == len(toks)
-        assert sum(row["feature_counts"]) == len(toks)  # mass conservation
+        assert sum(counts) == len(toks)  # mass conservation
+
+
+def test_feature_hashing_null_text_renders_identically(spark, tmp_path):
+    """NULL text renders as the same cell on both engines (a NULL
+    string), and every cell is a scalar a pandas row canonicalizer can
+    sort and hash — an ``array<int>`` cell cannot."""
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nzwirelessmap_fetch_spark.operators.mlprep import (
+        ML_FEATURE_HASHING_SQL,
+        ml_feature_hashing,
+    )
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([1, 2, 3], pa.int64()),
+                "text": ["a b a", None, "x"],
+                "lang": ["en"] * 3,
+                "source": ["s"] * 3,
+                "n_chars": pa.array([5, None, 1], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    pdf = ml_feature_hashing(spark, str(tmp_path)).toPandas()
+    pd.util.hash_pandas_object(pdf.sort_values(list(pdf.columns)), index=False)
+    got = dict(zip(pdf["doc_id"], pdf["feature_counts"]))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = dict(
+        con.execute(
+            f"SELECT doc_id, feature_counts FROM ({ML_FEATURE_HASHING_SQL})"
+        ).fetchall()
+    )
+    con.close()
+    assert got == want
+    assert got[2] is None
 
 
 def test_standard_scaler_matches_python_replay(spark):

@@ -18,18 +18,16 @@ def test_adaptive_prefix_order_probe_and_identity(spark):
     order on the flat smoke fixture (measured max/p99 ≈ 1.1, threshold
     8), memoizes the decision per (app, corpus, max_df), and all three
     orders produce row-identical pair sets."""
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.dedup import (
-        _CONTAIN_CACHE,
-        _ORDER_PROBE_CACHE,
-        _PAIRS_CACHE,
         _containment_pairs,
         _verified_jaccard_pairs,
     )
 
-    _PAIRS_CACHE.clear()
-    _CONTAIN_CACHE.clear()
-    _ORDER_PROBE_CACHE.clear()
-    probe_key = (spark.sparkContext.applicationId, SF_SMOKE, None)
+    families = ("jaccard_pairs", "containment_pairs", "prefix_order")
+    for family in families:
+        memo.reset(family)
+    app = spark.sparkContext.applicationId
 
     auto = {
         tuple(r)
@@ -38,9 +36,9 @@ def test_adaptive_prefix_order_probe_and_identity(spark):
         .collect()
     }
     # flat synthetic corpus → hash order (no df join-back)
-    assert _ORDER_PROBE_CACHE[probe_key] == "hash"
-    # the auto build is also cached under its RESOLVED order key
-    assert any(k[3] == "hash" for k in _PAIRS_CACHE)
+    assert memo.entries("prefix_order") == {(app, SF_SMOKE, None): "hash"}
+    # the auto build is stored under its RESOLVED order key
+    assert list(memo.entries("jaccard_pairs")) == [(app, SF_SMOKE, (None, "hash"))]
 
     for order in ("df", "hash"):
         explicit = {
@@ -64,9 +62,8 @@ def test_adaptive_prefix_order_probe_and_identity(spark):
         .collect()
     }
     assert c_auto == c_df
-    _PAIRS_CACHE.clear()
-    _CONTAIN_CACHE.clear()
-    _ORDER_PROBE_CACHE.clear()
+    for family in families:
+        memo.reset(family)
 
 
 def test_txn_log_seq_allocation_is_atomic(tmp_path, spark):

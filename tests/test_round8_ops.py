@@ -12,21 +12,16 @@ def test_prefix_order_probe_empty_corpus(spark):
     """r7 ADVICE (dedup.py:217): order='auto' on an EMPTY shingle table
     must resolve to hash order, not raise TypeError on max(df)=None."""
     from nzwirelessmap_fetch_spark.operators.dedup import (
-        _ORDER_PROBE_CACHE,
         _prefix_order_sets,
+        _probe_prefix_order,
     )
 
     sh = spark.createDataFrame([], "doc_id long, h long")
-    _ORDER_PROBE_CACHE.clear()
-    order, sets, probe_tab = _prefix_order_sets(
-        spark, sh, ("test-empty-corpus-probe",), "auto"
-    )
+    order = _probe_prefix_order(sh)
     assert order == "hash"
+    sets = _prefix_order_sets(sh, order)
     assert sets.count() == 0
-    if probe_tab is not None:
-        probe_tab.unpersist()
     sets.unpersist()
-    _ORDER_PROBE_CACHE.clear()
 
 
 def test_png_trns_on_truecolor_fails_loud():
@@ -96,9 +91,8 @@ def test_winnow_adaptive_capped_subset_of_exact(spark):
     the smoke corpus, and both runs hit the memoized substrates."""
     from tests.conftest import SF_SMOKE
 
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import (
-        _WINNOW_FP_CACHE,
-        _WINNOW_PAIRS_CACHE,
         corpus_winnowing,
         corpus_winnowing_capped,
     )
@@ -111,8 +105,8 @@ def test_winnow_adaptive_capped_subset_of_exact(spark):
         for r in corpus_winnowing_capped(spark, SF_SMOKE).collect()
     }
     assert capped <= exact
-    assert any(k[1] == SF_SMOKE for k in _WINNOW_FP_CACHE)
-    assert sum(1 for k in _WINNOW_PAIRS_CACHE if k[1] == SF_SMOKE) == 2
+    assert [k[1] for k in memo.entries("winnow_fingerprints")] == [SF_SMOKE]
+    assert [k[1] for k in memo.entries("winnow_pairs")] == [SF_SMOKE, SF_SMOKE]
 
 
 def _txn_stress_worker(root: str, wid: int, n_rounds: int, q) -> None:
@@ -297,19 +291,19 @@ def test_winnow_exact_measure_budget_guard(spark, monkeypatch):
 
     from tests.conftest import SF_SMOKE
 
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import (
         ExactMeasureBoundError,
-        _WINNOW_PAIRS_CACHE,
         corpus_winnowing,
     )
 
-    _WINNOW_PAIRS_CACHE.clear()
+    memo.reset("winnow_pairs")
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", "1")
     with _pytest.raises(ExactMeasureBoundError, match="corpus_winnowing_capped"):
         corpus_winnowing(spark, SF_SMOKE)
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
     assert corpus_winnowing(spark, SF_SMOKE).count() >= 0
-    _WINNOW_PAIRS_CACHE.clear()
+    memo.reset("winnow_pairs")
 
 
 def test_lsh_eval_sequenced_oracle_equals_oneshot(spark, ddb):

@@ -113,14 +113,15 @@ def test_jaccard_exact_measure_budget_guard(spark, monkeypatch):
     prefix-join fan-out and refuses over-budget runs naming the capped
     twin, before generating any pair."""
     import nzwirelessmap_fetch_spark.operators.dedup as dd
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import ExactMeasureBoundError
 
-    monkeypatch.setattr(dd, "_PAIRS_CACHE", {})
+    memo.reset("jaccard_pairs")
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", "1")
     with pytest.raises(ExactMeasureBoundError, match="dedup_ngram_jaccard_capped"):
         dd.dedup_ngram_jaccard(spark, SF_CORRECT)
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
-    monkeypatch.setattr(dd, "_PAIRS_CACHE", {})
+    memo.reset("jaccard_pairs")
     assert dd.dedup_ngram_jaccard(spark, SF_CORRECT).count() > 0
 
 
@@ -129,16 +130,17 @@ def test_containment_exact_measure_budget_guard(spark, monkeypatch):
     in the shared builder, so the cap_eval's exact truth side inherits
     it (both are registered exact_measure with the capped twin)."""
     import nzwirelessmap_fetch_spark.operators.dedup as dd
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import ExactMeasureBoundError
 
-    monkeypatch.setattr(dd, "_CONTAIN_CACHE", {})
+    memo.reset("containment_pairs")
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", "1")
     with pytest.raises(ExactMeasureBoundError, match="corpus_containment_capped"):
         dd.corpus_containment(spark, SF_CORRECT)
     # the capped twin is NOT bounded by the guard
     assert dd.corpus_containment_capped(spark, SF_CORRECT).count() >= 0
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
-    monkeypatch.setattr(dd, "_CONTAIN_CACHE", {})
+    memo.reset("containment_pairs")
     assert dd.corpus_containment(spark, SF_CORRECT).count() > 0
 
 

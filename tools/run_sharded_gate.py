@@ -64,7 +64,9 @@ def reap_orphan_spill_dirs() -> list[str]:
 
 
 # Entries that consume the same heavy per-PROCESS memoized substrate
-# (eager-checkpoint pair frames / power-iteration trajectories). Shard
+# (functions/memo.py families: eager-checkpoint pair frames /
+# power-iteration trajectories). Kept by hand; each comment names the
+# memo family. Shard
 # isolation defeats an in-process memo — each shard that holds any
 # member rebuilds the whole substrate (r10 verdict directive #6) — so
 # members of a family must ride in ONE shard. dedup_simhash_quality_eval
@@ -72,28 +74,28 @@ def reap_orphan_spill_dirs() -> list[str]:
 # families into one group that lands on the H shard with the
 # oracle-cache-eligible truth entries.
 MEMO_FAMILIES: list[set[str]] = [
-    {  # _verified_simhash_pairs (operators/dedup.py)
+    {  # memo family "simhash_pairs" (operators/dedup.py)
         "dedup_simhash_hamming",
         "dedup_simhash_content_hash",
         "dedup_simhash_quality_eval",
     },
-    {  # _winnow_pairs (operators/text.py)
+    {  # memo families "winnow_fingerprints" + "winnow_pairs" (operators/text.py)
         "corpus_winnowing",
         "corpus_winnowing_capped",
         "corpus_winnowing_cap_eval",
     },
-    {  # _containment_pairs (operators/dedup.py)
+    {  # memo family "containment_pairs" (operators/dedup.py)
         "corpus_containment",
         "corpus_containment_capped",
         "corpus_containment_cap_eval",
     },
-    {  # _top2_components (operators/sketches.py)
+    {  # memo families "pc_gram", "pc_trajectory", "pc_top2" (operators/sketches.py)
         "embedding_principal_component",
         "embedding_abtt_residual",
         "embedding_pca_top2",
         "embedding_whitening",
     },
-    {  # _verified_jaccard_pairs (operators/dedup.py) — including the
+    {  # memo family "jaccard_pairs" (operators/dedup.py) — including the
         # 11 graph entries that reach it through _jaccard_edges
         # (operators/graph.py). Today every one of those is also
         # oracle-cache ELIGIBLE (so they ride the H shard regardless);

@@ -316,9 +316,8 @@ def variants() -> None:
     order for BOTH pair builds, on BOTH fixtures (near-uniform sf0.1 and
     the Zipfian skew corpus). Best-of-2 per cell; the winner per fixture
     goes to PLANS.md."""
+    from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.dedup import (
-        _CONTAIN_CACHE,
-        _PAIRS_CACHE,
         _containment_pairs,
         _verified_jaccard_pairs,
     )
@@ -328,15 +327,16 @@ def variants() -> None:
         "skew-variants", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     )
 
+    # Both pair builds are memoized per (app, sf, max_df, order): reset
+    # before each timed run so none of them is a ~0 s memo hit. reset()
+    # also frees the superseded localCheckpoint blocks, which
+    # clearCache() leaves in storage.
     def jacc(sf, o):
-        _PAIRS_CACHE.clear()  # memoized per (app, sf, order): bypass for timing
+        memo.reset("jaccard_pairs")
         return _verified_jaccard_pairs(spark, sf, order=o)
 
     def contain(sf, o):
-        # Same bypass for the containment memo: clearCache() does NOT
-        # evict localCheckpoint blocks, so a stale _CONTAIN_CACHE entry
-        # would make every timed run after the first a ~0 s cache hit.
-        _CONTAIN_CACHE.clear()
+        memo.reset("containment_pairs")
         return _containment_pairs(spark, sf, order=o)
 
     builds = {
