@@ -16,7 +16,9 @@ of the line fell off the window, and the round's bench artifact recorded
 metric/value/unit/sf plus the slowest queries that fit in the budget, and
 the COMPLETE per-query map, stamped with the CPU count, is written next to
 this file as BENCH_FULL_c{cpus}.json and as BENCH_FULL.json (the alias the
-line echoes under "full").
+line echoes under "full"). Entries whose exact measure the host's pair
+budget refuses are listed under "refused" (their count, if the names do
+not fit) instead of ending the run.
 """
 
 from __future__ import annotations
@@ -117,15 +119,23 @@ def main() -> None:
 
     def run_one(name: str, fn) -> float:
         start = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - start, 3)
-        # release caches an operator legitimately created (multi-consumer
-        # persists) so no query's residue skews its successors
-        spark.catalog.clearCache()
-        return elapsed
+        try:
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return round(time.perf_counter() - start, 3)
+        finally:
+            # release caches an operator legitimately created (multi-consumer
+            # persists) so no query's residue skews its successors
+            spark.catalog.clearCache()
 
+    # An exact measure whose pre-flight exceeds the host's pair budget
+    # raises ExactMeasureBoundError before its pair join runs: list it
+    # under "refused" (never timed, never retried) and go on.
+    refused = []
     for name, fn in sorted(registry.queries().items()):
-        timings[name] = run_one(name, fn)
+        try:
+            timings[name] = run_one(name, fn)
+        except ExactMeasureBoundError:
+            refused.append(name)
 
     # Host-load guard (BASELINE.md documents ±3× swings): queries whose
     # first timing is slow get ONE retry and keep the min — a genuinely
@@ -137,7 +147,7 @@ def main() -> None:
     RETRY_OVER_S = 2.5
     retried = []
     for name, fn in sorted(registry.queries().items()):
-        if timings[name] > RETRY_OVER_S:
+        if name not in refused and timings[name] > RETRY_OVER_S:
             retried.append(name)
             timings[name] = min(timings[name], run_one(name, fn))
 
@@ -151,6 +161,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "elapsed_s": round(time.perf_counter() - t_start, 3),
         "retried": retried,
+        "refused": refused,
         "n_queries": len(timings),
     }
     # The per-CPU file keeps each core count's map (an 8-core run never
@@ -178,8 +189,9 @@ def main() -> None:
         if len(json.dumps(trial)) > LINE_BUDGET:
             break
         compact = trial
-    if len(json.dumps(compact)) > LINE_BUDGET:  # pathological: drop retried list
+    if len(json.dumps(compact)) > LINE_BUDGET:  # pathological: counts, not lists
         compact["retried"] = len(retried)
+        compact["refused"] = len(refused)
     print(json.dumps(compact))
 
 

@@ -5,17 +5,20 @@ Last-Modified → skip if marker exists → stage → convert → query → CSV 
 JSON → multi-sink with latest pointer and marker-last ordering.
 
 Here: acquire (staged path or zip) → version key from source mtime →
-idempotency gate → flagship query → headered CSV + NDJSON + bug-compat
-JSON array artifacts. The 4 process boundaries of the reference (java,
-sqlite3 ×2, python3) collapse into one Spark job.
+idempotency gate → flagship query → headered CSV + bug-compat JSON array
+artifacts, published through ``VersionedArtifactSink``. The three entry
+points differ only in how they build the flagship result. The 4 process
+boundaries of the reference (java, sqlite3 ×2, python3) collapse into one
+Spark job.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from datetime import datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .plans.flagship import FLAGSHIP_ORACLE_SQL, flagship
 from .sinks.writers import VersionedArtifactSink
@@ -36,6 +39,20 @@ def version_key_from_mtime(path: str | Path) -> str:
     )
 
 
+def _run(out_root: str | Path, version: str, build: Callable[[], DataFrame]) -> dict:
+    """The shared body: idempotency gate → ``build()`` the flagship result
+    → versioned CSV → JSON artifact, whose logged commit is the
+    completion marker (P3/P15-P18, fetch.go:55-67, 138-157). ``rows``
+    comes from the JSON publish."""
+    sink = VersionedArtifactSink(out_root)
+    if sink.exists(ARTIFACT_JSON, version):
+        return {"skipped": True, "version": version, "rows": None}
+    result = build()
+    sink.write_versioned_csv(result, ARTIFACT_CSV, version)
+    rows = sink.write_versioned_json(result, ARTIFACT_JSON, version)
+    return {"skipped": False, "version": version, "rows": rows}
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -44,19 +61,7 @@ def run_pipeline(
 ) -> dict:
     """Returns a run report: {skipped: bool, version: str, rows: int|None}."""
     version = version or version_key_from_mtime(Path(sf_dir) / "lineitem.parquet")
-    sink = VersionedArtifactSink(out_root)
-
-    # P3: the timestamped JSON artifact is the completion marker; its
-    # existence memoizes the whole run (fetch.go:55-67).
-    if sink.exists(ARTIFACT_JSON, version):
-        return {"skipped": True, "version": version, "rows": None}
-
-    result = flagship(spark, sf_dir)
-
-    # P15/P18: versioned CSV, then JSON latest-first marker-last.
-    sink.write_versioned_csv(result, ARTIFACT_CSV, version)
-    sink.write_versioned_json(result, ARTIFACT_JSON, version)
-    return {"skipped": False, "version": version, "rows": result.count()}
+    return _run(out_root, version, lambda: flagship(spark, sf_dir))
 
 
 def run_pipeline_from_url(
@@ -82,17 +87,13 @@ def run_pipeline_from_url(
 
     staging = Path(staging_dir)
     art = fetch_artifact(url, staging)
-    sink = VersionedArtifactSink(out_root)
-    if sink.exists(ARTIFACT_JSON, art.version):
-        return {"skipped": True, "version": art.version, "rows": None}
 
-    db_path = stage_member(art.local_path, member, staging / "extracted")
-    register_sqlite_database(spark, db_path, staging_dir=staging / "parquet")
-    result = spark.sql(FLAGSHIP_ORACLE_SQL)
+    def build() -> DataFrame:
+        db_path = stage_member(art.local_path, member, staging / "extracted")
+        register_sqlite_database(spark, db_path, staging_dir=staging / "parquet")
+        return spark.sql(FLAGSHIP_ORACLE_SQL)
 
-    sink.write_versioned_csv(result, ARTIFACT_CSV, art.version)
-    sink.write_versioned_json(result, ARTIFACT_JSON, art.version)
-    return {"skipped": False, "version": art.version, "rows": result.count()}
+    return _run(out_root, art.version, build)
 
 
 def run_pipeline_from_url_jdbc(
@@ -130,30 +131,26 @@ def run_pipeline_from_url_jdbc(
 
     staging = Path(staging_dir)
     art = fetch_artifact(url, staging)
-    sink = VersionedArtifactSink(out_root)
-    if sink.exists(ARTIFACT_JSON, art.version):
-        return {"skipped": True, "version": art.version, "rows": None}
 
-    db_root = stage_tree(art.local_path, member_prefix, staging / "dbtree")
-    jdbc_url = (
-        jdbc_url_for(db_root) if jdbc_url_for else f"jdbc:derby:{db_root}"
-    )
-    names = tables or discover_jdbc_tables(spark, jdbc_url, driver=driver)
-    for t in names:
-        # quote the EXACT discovered name: engines fold unquoted
-        # identifiers (Derby uppercases), so a discovered lowercase
-        # name would not resolve unquoted
-        df = read_jdbc(spark, jdbc_url, f'"{t}"', driver=driver)
-        # engines uppercase unquoted identifiers (Derby does); the
-        # flagship SQL is written lowercase — normalize at the boundary
-        df.toDF(*[c.lower() for c in df.columns]).createOrReplaceTempView(
-            t.lower()
+    def build() -> DataFrame:
+        db_root = stage_tree(art.local_path, member_prefix, staging / "dbtree")
+        jdbc_url = (
+            jdbc_url_for(db_root) if jdbc_url_for else f"jdbc:derby:{db_root}"
         )
-    result = spark.sql(FLAGSHIP_ORACLE_SQL)
+        names = tables or discover_jdbc_tables(spark, jdbc_url, driver=driver)
+        for t in names:
+            # quote the EXACT discovered name: engines fold unquoted
+            # identifiers (Derby uppercases), so a discovered lowercase
+            # name would not resolve unquoted
+            df = read_jdbc(spark, jdbc_url, f'"{t}"', driver=driver)
+            # engines uppercase unquoted identifiers (Derby does); the
+            # flagship SQL is written lowercase — normalize at the boundary
+            df.toDF(*[c.lower() for c in df.columns]).createOrReplaceTempView(
+                t.lower()
+            )
+        return spark.sql(FLAGSHIP_ORACLE_SQL)
 
-    sink.write_versioned_csv(result, ARTIFACT_CSV, art.version)
-    sink.write_versioned_json(result, ARTIFACT_JSON, art.version)
-    return {"skipped": False, "version": art.version, "rows": result.count()}
+    return _run(out_root, art.version, build)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -8,9 +8,10 @@ first-class readable source:
 
 One row per (artifact, version) object: record count, latest-pointer
 membership, and byte size — the manifest view a pipeline audits before
-trusting `latest` (a crash mid-run leaves `latest` behind the newest
-timestamped version; this source makes that visible as is_latest=false
-on the newest row).
+trusting `latest` (a crash between a publish's `latest` write and its
+version copy leaves `latest` matching no version; this source makes that
+visible as is_latest=false on every version row). Writes publish through
+``VersionedArtifactSink``.
 
 Scale design: `partitions()` emits one InputPartition per ARTIFACT, so a
 root with thousands of artifacts fans out across executors; each task
@@ -33,6 +34,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.types import StructType
+
+from ..sinks.writers import VersionedArtifactSink
 
 
 @dataclass
@@ -72,9 +76,7 @@ class VersionedArtifactDataSource(DataSource):
             raise ValueError(
                 "versioned_artifacts write requires .option('root'/'artifact'/'version')"
             )
-        return VersionedArtifactWriter(
-            root, artifact, version, [f.name for f in schema.fields], overwrite
-        )
+        return VersionedArtifactWriter(root, artifact, version, schema, overwrite)
 
 
 class VersionedArtifactReader(DataSourceReader):
@@ -92,10 +94,9 @@ class VersionedArtifactReader(DataSourceReader):
     def read(self, partition: ArtifactPartition):
         adir = os.path.join(partition.root, partition.artifact)
         names = sorted(os.listdir(adir))
-        # `latest` may be a DIRECTORY on stores written by Spark's
-        # directory-output sinks (write_versioned_ndjson /
-        # CloudArtifactSink) — guard with isfile so those stores still
-        # yield size-only rows instead of IsADirectoryError.
+        # `latest` is a DIRECTORY for Spark directory-output artifacts
+        # (write_versioned_ndjson) — guard with isfile so such an artifact
+        # yields no directory rows instead of IsADirectoryError.
         latest_bytes = None
         latest_path = os.path.join(adir, "latest")
         if "latest" in names and os.path.isfile(latest_path):
@@ -110,15 +111,11 @@ class VersionedArtifactReader(DataSourceReader):
                 continue
             with open(path, "rb") as f:
                 payload = f.read()
-            try:
-                n_records = len(json.loads(payload))
-            except ValueError:
-                n_records = -1  # non-JSON-array artifact: size-only row
             rows.append(
                 [
                     partition.artifact,
                     name,
-                    n_records,
+                    _count_records(payload),
                     len(payload),
                     latest_bytes is not None and payload == latest_bytes,
                 ]
@@ -136,6 +133,20 @@ class VersionedArtifactReader(DataSourceReader):
             yield tuple(r)
 
 
+def _count_records(payload: bytes) -> int:
+    """A JSON array's length, or an NDJSON object's non-empty line count;
+    -1 (a size-only row) for anything else."""
+    lines = [line for line in payload.splitlines() if line.strip()]
+    try:
+        if payload.lstrip().startswith(b"["):
+            return len(json.loads(payload))
+        if all(isinstance(json.loads(line), dict) for line in lines):
+            return len(lines)
+    except ValueError:
+        pass
+    return -1
+
+
 @dataclass
 class _PartNdjson(WriterCommitMessage):
     """Per-task commit message: the task's staged NDJSON payload. Rows
@@ -149,17 +160,15 @@ class _PartNdjson(WriterCommitMessage):
 
 
 class VersionedArtifactWriter(DataSourceWriter):
-    """WRITE side of the Spark 4 Python DataSource — the committer
-    pattern the reference's layout implies, done properly:
+    """WRITE side of the Spark 4 Python DataSource — a committer over
+    ``VersionedArtifactSink``:
 
     - ``write(iterator)`` per task serializes its partition to NDJSON
       and returns it as the commit MESSAGE (no files appear yet).
-    - ``commit(messages)`` on the driver assembles the version object,
-      writes ``root/<artifact>/<version>`` first and the mutable
-      ``latest`` copy after — and ONLY on all-tasks-success; a failed
-      job calls ``abort`` and the store is untouched (fetch.go's
-      versioned layout with real all-or-nothing semantics instead of
-      its best-effort ordering).
+    - ``commit(messages)`` on the driver assembles the version object and
+      hands it to the sink's publish step (``latest``, then
+      ``<version>``, then the logged commit) — and ONLY on all-tasks-
+      success; a failed job calls ``abort`` and the store is untouched.
 
     Usage:
         df.write.format("versioned_artifacts")
@@ -172,43 +181,36 @@ class VersionedArtifactWriter(DataSourceWriter):
         root: str,
         artifact: str,
         version: str,
-        cols: list[str],
+        schema: StructType,
         overwrite: bool = False,
     ):
         self.root = root
         self.artifact = artifact
         self.version = version
-        self.cols = cols
+        self.schema = schema
         self.overwrite = overwrite
 
     def write(self, iterator) -> _PartNdjson:
         from pyspark import TaskContext
 
-        lines = [
-            json.dumps(dict(zip(self.cols, row)), sort_keys=True)
-            for row in iterator
-        ]
+        cols = self.schema.fieldNames()
+        lines = [json.dumps(dict(zip(cols, row)), sort_keys=True) for row in iterator]
         payload = ("\n".join(lines) + ("\n" if lines else "")).encode()
         return _PartNdjson(TaskContext.get().partitionId(), payload)
 
     def commit(self, messages) -> None:
-        adir = os.path.join(self.root, self.artifact)
-        os.makedirs(adir, exist_ok=True)
-        body = b"".join(
-            m.payload for m in sorted(messages, key=lambda m: m.index)
-        )
-        vpath = os.path.join(adir, self.version)
-        # version objects are immutable: mode('append') refuses to clobber
-        # an existing version; mode('overwrite') opts into replacement
-        if os.path.exists(vpath) and not self.overwrite:
+        sink = VersionedArtifactSink(self.root)
+        # committed versions are immutable: mode('append') refuses to
+        # replace one, before anything is written; mode('overwrite') opts in
+        if sink.exists(self.artifact, self.version) and not self.overwrite:
             raise FileExistsError(
                 f"version {self.version!r} of {self.artifact!r} already exists; "
                 "use mode('overwrite') to replace it"
             )
-        with open(vpath, "wb") as f:
-            f.write(body)
-        with open(os.path.join(adir, "latest"), "wb") as f:
-            f.write(body)
+        body = b"".join(
+            m.payload for m in sorted(messages, key=lambda m: m.index)
+        )
+        sink.write_versioned_bytes(body, self.artifact, self.version, self.schema)
 
     def abort(self, messages) -> None:
         pass  # nothing staged on disk — abort is a true no-op

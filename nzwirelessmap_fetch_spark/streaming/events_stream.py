@@ -428,27 +428,30 @@ def stream_to_versioned_sink(
 ) -> dict:
     """``foreachBatch`` bridge: the streaming plan feeds the SAME versioned
     artifact layer batch pipelines use (sinks/writers.py P15/P18) — each
-    micro-batch lands as ``events_counts/batch=<id>`` NDJSON plus a
-    refreshed ``latest``, so downstream consumers of the reference's
-    artifact contract can't tell streaming wrote it.
+    non-empty micro-batch is one publish of ``events_counts/batch=<id>``
+    NDJSON (``latest`` refreshed first, the logged commit last), so
+    downstream consumers of the reference's artifact contract can't tell
+    streaming wrote it.
 
     ``foreachBatch`` hands the sink a NORMAL DataFrame per micro-batch:
     any batch writer (JDBC, bucketed table, MERGE) plugs in unchanged.
-    Batch id gives exactly-once bookkeeping — a restarted query re-offers
-    the same id, and the versioned path makes the write idempotent (the
-    reference's marker semantics, per micro-batch). Returns
-    {batches, rows} for verification."""
+    Batch id gives exactly-once bookkeeping: a replayed batch id whose
+    version is already committed is skipped, so a restarted query leaves
+    one log entry per batch (the reference's marker semantics, per
+    micro-batch). Returns {batches, rows} written by this call."""
     from ..sinks.writers import VersionedArtifactSink
 
     sink = VersionedArtifactSink(out_root)
     seen = {"batches": 0, "rows": 0}
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # count() first: a stateful batch must consume every partition
+        # (Spark validates the state-store commits), even when skipped
         n = batch_df.count()
-        if n == 0:
+        version = f"batch={batch_id}"
+        if n == 0 or sink.exists("events_counts", version):
             return
-        sink.write_versioned_ndjson(batch_df, "events_counts", f"batch={batch_id}")
-        sink.write_versioned_ndjson(batch_df, "events_counts", "latest")
+        sink.write_versioned_ndjson(batch_df, "events_counts", version)
         seen["batches"] += 1
         seen["rows"] += n
 

@@ -1,6 +1,6 @@
-"""Pipeline + sink semantics pin-tests (SURVEY.md §5.2 items 3-4):
-all-string JSON typing, single-array output shape, idempotent skip,
-marker-last ordering, zip staging."""
+"""Pipeline pin-tests (SURVEY.md §5.2 items 3-4): idempotent skip,
+the latest + version layout, zip staging, the closed registries and the
+query CLI. Sink and stream tests live in ``tests/test_artifacts.py``."""
 
 from __future__ import annotations
 
@@ -12,10 +12,6 @@ import pytest
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 from nzwirelessmap_fetch_spark.pipeline import ARTIFACT_JSON, run_pipeline
-from nzwirelessmap_fetch_spark.sinks.writers import (
-    to_all_strings,
-    write_single_json_array,
-)
 from nzwirelessmap_fetch_spark.sources.readers import map_access_type
 from nzwirelessmap_fetch_spark.sources.zip_staging import stage_member
 
@@ -30,27 +26,6 @@ def test_pipeline_runs_then_skips(spark, tmp_path):
     # latest pointer exists alongside the versioned marker (P18)
     assert (tmp_path / ARTIFACT_JSON / "latest").exists()
     assert (tmp_path / ARTIFACT_JSON / "v1").exists()
-
-
-def test_single_json_array_all_strings(spark, tmp_path):
-    """P16/P17: one JSON array; every value a string; NULL → ''."""
-    df = spark.createDataFrame(
-        [(1, 2.5, None), (2, None, "x")], "a long, b double, c string"
-    )
-    out = tmp_path / "out.json"
-    write_single_json_array(df, out)
-    data = json.loads(out.read_text())
-    assert isinstance(data, list) and len(data) == 2
-    by_a = {r["a"]: r for r in data}
-    assert by_a["1"] == {"a": "1", "b": "2.5", "c": ""}
-    assert by_a["2"] == {"a": "2", "b": "", "c": "x"}
-
-
-def test_all_strings_schema(spark):
-    df = to_all_strings(
-        spark.createDataFrame([(1, 2.5)], "a long, b double")
-    )
-    assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "string"]
 
 
 def test_access_type_map_closed():
@@ -87,22 +62,6 @@ def test_missing_sf_dir_raises_path_not_found(spark):
 
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         Catalog(spark, "/root/testdata/sf-nope").table("orders").count()
-
-
-def test_stream_to_versioned_sink(spark, tmp_path):
-    """foreachBatch must land micro-batches in the P18 versioned layout."""
-    from nzwirelessmap_fetch_spark.streaming.events_stream import (
-        stream_to_versioned_sink,
-    )
-
-    report = stream_to_versioned_sink(spark, SF_CORRECT, str(tmp_path))
-    assert report["batches"] >= 1 and report["rows"] > 0
-    batches = [
-        p for p in (tmp_path / "events_counts").iterdir() if p.name.startswith("batch=")
-    ]
-    assert batches and (tmp_path / "events_counts" / "latest").exists()
-    out = spark.read.json(str(batches[0]))
-    assert out.count() > 0 and set(out.columns) == {"window_start", "event_type", "n"}
 
 
 def test_run_query_cli(spark, capsys):

@@ -52,47 +52,6 @@ def test_containment_cap_off_is_identity(spark):
     assert uncapped.exceptAll(loose).count() == 0
 
 
-def test_artifact_reader_dir_latest_and_duplicate_content(spark, tmp_path):
-    """r4 ADVICE: (a) a directory named `latest` (Spark dir-output
-    stores) must yield size-only rows, not IsADirectoryError; (b) when
-    an OLD version's bytes equal `latest`, only the NEWEST byte-equal
-    version keeps is_latest."""
-    import os
-
-    from nzwirelessmap_fetch_spark.sources.artifact_source import (
-        VersionedArtifactDataSource,
-    )
-
-    store = tmp_path / "store"
-    # artifact A: v1 and v3 identical content, latest = that content
-    a = store / "a.json"
-    os.makedirs(a)
-    (a / "2024-01-01T00:00:00Z").write_bytes(b"[1,2]")
-    (a / "2024-01-02T00:00:00Z").write_bytes(b"[9]")
-    (a / "2024-01-03T00:00:00Z").write_bytes(b"[1,2]")
-    (a / "latest").write_bytes(b"[1,2]")
-    # artifact B: `latest` is a DIRECTORY (Spark directory sink shape)
-    b = store / "b.json"
-    os.makedirs(b / "latest")
-    (b / "latest" / "part-00000").write_bytes(b"[1]")
-    (b / "2024-01-01T00:00:00Z").write_bytes(b"[1]")
-
-    spark.dataSource.register(VersionedArtifactDataSource)
-    rows = (
-        spark.read.format("versioned_artifacts")
-        .option("root", str(store))
-        .load()
-        .collect()
-    )
-    by_key = {(r.artifact, r.version): r for r in rows}
-    assert by_key[("a.json", "2024-01-03T00:00:00Z")].is_latest
-    assert not by_key[("a.json", "2024-01-01T00:00:00Z")].is_latest
-    assert not by_key[("a.json", "2024-01-02T00:00:00Z")].is_latest
-    # directory `latest` skipped, version row still present, no crash
-    assert ("b.json", "latest") not in by_key
-    assert not by_key[("b.json", "2024-01-01T00:00:00Z")].is_latest
-
-
 def test_jdbc_ingest_live_roundtrip(spark, tmp_path):
     """LIVE end-to-end JDBC ingest in this container: Spark ships the
     Derby embedded driver, so the generic `read_jdbc` path — the exact
@@ -141,52 +100,6 @@ def test_jdbc_ingest_live_roundtrip(spark, tmp_path):
     assert rows[1].fee == "150.2500"  # MONEY → string, 4dp wire format
     assert rows[1].active == 1 and rows[2].active == 0  # BOOLEAN → 0/1 int
     assert dict(out.dtypes)["licenceid"] == "int"
-
-
-def test_artifact_datasource_write_path(spark, tmp_path):
-    """Spark 4 Python DataSource WRITE path: df.write.format(...) stages
-    per-task NDJSON in commit messages and materializes version + latest
-    only in commit() — then the READ side of the same source sees the
-    new version as latest."""
-    from pyspark.sql import functions as F
-
-    from nzwirelessmap_fetch_spark.sources.artifact_source import (
-        VersionedArtifactDataSource,
-    )
-
-    spark.dataSource.register(VersionedArtifactDataSource)
-    root = str(tmp_path / "store")
-    df = spark.range(5).select(
-        F.col("id"), F.concat(F.lit("v"), F.col("id")).alias("name")
-    )
-    (
-        df.repartition(3)
-        .write.format("versioned_artifacts")
-        .option("root", root)
-        .option("artifact", "prism.json")
-        .option("version", "2024-02-01T00:00:00Z")
-        .mode("append")
-        .save()
-    )
-    import json as _json
-    import os as _os
-
-    lines = [
-        _json.loads(l)
-        for l in open(_os.path.join(root, "prism.json", "2024-02-01T00:00:00Z"))
-    ]
-    assert sorted(r["id"] for r in lines) == [0, 1, 2, 3, 4]
-    assert all(r["name"] == f"v{r['id']}" for r in lines)
-    # read side: version flagged latest (byte-copy contract)
-    rows = {
-        r.version: r
-        for r in spark.read.format("versioned_artifacts")
-        .option("root", root)
-        .load()
-        .collect()
-    }
-    assert rows["2024-02-01T00:00:00Z"].is_latest
-    assert rows["latest"].n_bytes == rows["2024-02-01T00:00:00Z"].n_bytes
 
 
 def test_snapshot_merge_into(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Round-6 tests: ADVICE fixes (version immutability, MERGE unique-key
+"""Round-6 tests: ADVICE fixes (MERGE unique-key
 contract, foreachBatch retry idempotence) plus round-6 operators."""
 
 from __future__ import annotations
@@ -150,39 +150,6 @@ def test_image_pipelines_real_pixels(spark):
     ham = lambda a, b: bin((a ^ b) & ((1 << 64) - 1)).count("1")  # noqa: E731
     assert ham(hashes[0], hashes[1]) <= 4  # near-dup stays near
     assert ham(hashes[0], hashes[2]) > 10  # unrelated image far
-
-
-def test_artifact_version_immutability(spark, tmp_path):
-    """mode('append') must refuse to clobber an existing version object
-    (the store's version-immutability contract); mode('overwrite') opts
-    into replacement explicitly."""
-    from nzwirelessmap_fetch_spark.sources.artifact_source import (
-        VersionedArtifactDataSource,
-    )
-
-    spark.dataSource.register(VersionedArtifactDataSource)
-    root = str(tmp_path / "store")
-
-    def write(df, mode):
-        (
-            df.write.format("versioned_artifacts")
-            .option("root", root)
-            .option("artifact", "prism.json")
-            .option("version", "2024-03-01T00:00:00Z")
-            .mode(mode)
-            .save()
-        )
-
-    write(spark.range(3), "append")
-    with pytest.raises(Exception, match="already exists"):
-        write(spark.range(5), "append")
-    # the failed append must not have touched the stored object
-    import os
-
-    vpath = os.path.join(root, "prism.json", "2024-03-01T00:00:00Z")
-    assert len(open(vpath).readlines()) == 3
-    write(spark.range(5), "overwrite")
-    assert len(open(vpath).readlines()) == 5
 
 
 def test_merge_into_rejects_duplicate_source_keys(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Round-8 tests: r7 ADVICE regressions (empty-corpus order probe, tRNS
 fail-loud, atomic commit admission, pinned-base streaming merge) and the
-round-8 operators (adaptive winnowing cap, unified artifact commits)."""
+round-8 operators (adaptive winnowing cap)."""
 
 from __future__ import annotations
 
@@ -238,49 +238,6 @@ def test_vacuum_vs_time_travel_named_error(tmp_path, spark):
     assert sink.read_version(spark, "t", "latest").count() == 3
     with _pytest.raises(FileNotFoundError, match="no snapshot"):
         sink.read_version(spark, "t", "never-committed")
-
-
-def test_pipeline_artifacts_commit_through_shared_log(spark, tmp_path):
-    """r7 verdict directive #5: the §3.1 pipeline's versioned artifacts
-    commit through the SnapshotParquetTable log protocol — _log/
-    entries exist per artifact, the idempotency gate reads the LOG
-    (not file presence), and a crash that wrote data objects without a
-    log entry correctly re-runs."""
-    import json as _json
-
-    from tests.conftest import SF_SMOKE
-
-    from nzwirelessmap_fetch_spark.pipeline import (
-        ARTIFACT_CSV,
-        ARTIFACT_JSON,
-        run_pipeline,
-    )
-    from nzwirelessmap_fetch_spark.sinks.writers import VersionedArtifactSink
-
-    r1 = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
-    assert r1["skipped"] is False and r1["rows"] > 0
-    sink = VersionedArtifactSink(tmp_path)
-    # both artifacts carry logged commits with schema + op
-    csv_log = sink.commit_log(ARTIFACT_CSV)
-    json_log = sink.commit_log(ARTIFACT_JSON)
-    assert [e["op"] for e in csv_log] == ["artifact-csv"]
-    assert [e["op"] for e in json_log] == ["artifact-json"]
-    assert json_log[0]["version"] == "v1" and json_log[0]["schema"]
-    # byte layout unchanged (fetch.go parity): latest + version objects
-    assert (tmp_path / ARTIFACT_JSON / "latest").exists()
-    assert (tmp_path / ARTIFACT_JSON / "v1").exists()
-    # idempotent re-run is a no-op gated BY THE LOG
-    assert run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")["skipped"]
-    assert len(sink.commit_log(ARTIFACT_JSON)) == 1
-    # crash simulation: data objects present but log entry missing →
-    # incomplete → the re-run re-executes and re-commits
-    for p in (tmp_path / ARTIFACT_JSON / "_log").iterdir():
-        p.unlink()
-    r3 = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
-    assert r3["skipped"] is False
-    assert len(sink.commit_log(ARTIFACT_JSON)) == 1
-    data = _json.loads((tmp_path / ARTIFACT_JSON / "v1").read_text())
-    assert isinstance(data, list) and len(data) == r3["rows"]
 
 
 def test_winnow_exact_measure_budget_guard(spark, monkeypatch):
