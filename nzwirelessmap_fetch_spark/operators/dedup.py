@@ -823,20 +823,17 @@ MAX_CC_ITERATIONS = 50
 
 
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric, distinct (doc_a, doc_b) edges at J ≥ 0.5.
+    """Symmetric, distinct (doc_a, doc_b) edges at J ≥ 0.5, no self-loops.
 
     Builds on the memoized verified-pair checkpoint (``jaccard_pairs``), so
     the expensive similarity join runs once per (application, sf_dir) no
-    matter how many of the three consuming queries execute; symmetrizing
-    |dup pairs| checkpointed rows is noise."""
+    matter how many consuming queries execute. The verified pairs are
+    already unique with doc_a < doc_b (distinct candidates joined to
+    one-row-per-doc sets), so the pairs and their swapped copy are
+    disjoint and the union needs no distinct shuffle."""
     pairs = _verified_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return (
-        pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .distinct()
+    return pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
 
 

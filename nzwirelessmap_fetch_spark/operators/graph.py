@@ -20,7 +20,9 @@ side is the only thing that moves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
@@ -231,7 +233,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output pins integers plus the clustering coefficient = 3T/W as a
     decimal-rounded double (single division — identical IEEE tree both
-    engines)."""
+    engines); a graph with no wedges gets a NULL coefficient, as DuckDB's
+    division by zero gives."""
     sym = _jaccard_edges(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
@@ -260,7 +263,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_triangles",
             "n_wedges",
             "n_nodes",
-            (3 * F.col("n_triangles") / F.col("n_wedges"))
+            F.try_divide(3 * F.col("n_triangles"), F.col("n_wedges"))
             .cast("decimal(18,6)")
             .cast("double")
             .alias("clustering_coeff"),
@@ -325,7 +328,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degrees are ints — no decimal needed) folded in ONE
     map-side-combining pass, with the agg_stats_moments IEEE tree for
     the final doubles. Symmetric edge set ⇒ the two marginals coincide,
-    which the oracle replicates by construction."""
+    which the oracle replicates by construction. Zero degree variance
+    (every endpoint has the same degree) leaves r undefined: NULL, as in
+    the oracle."""
     sym = _jaccard_edges(spark, sf_dir)
     deg = sym.groupBy("doc_a").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("doc_a").alias("node"), "deg"
@@ -347,8 +352,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sy = F.col("sy").cast("double")
     syy = F.col("syy").cast("double")
     sxy = F.col("sxy").cast("double")
-    corr = (sxy - (sx * sy) / n) / (
-        F.sqrt(sxx - (sx * sx) / n) * F.sqrt(syy - (sy * sy) / n)
+    corr = F.try_divide(
+        sxy - (sx * sy) / n,
+        F.sqrt(sxx - (sx * sx) / n) * F.sqrt(syy - (sy * sy) / n),
     )
     nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     return (
@@ -616,6 +622,70 @@ FROM ranked WHERE rank <= {LINK_PRED_TOP_N}
 """
 
 
+def _modularity_ladder(
+    edges: DataFrame, rungs: list[tuple[str, DataFrame, int]]
+) -> DataFrame:
+    """Newman modularity of several partitions of one directed edge list
+    (s, t), one output row per rung ``(method, labels (node, c),
+    n_moved)``, in one plan.
+
+    Each rung's labels are tagged with its method, so ONE labels join on
+    (method, endpoint) serves every rung. A groupBy on (method, c) gives
+    D_c (edges leaving c) and e_c (edges inside c) in one aggregate; a
+    groupBy on method folds them with E = Σ_c D_c, since
+    q_num = Σ_c (e_c·E − D_c²) = E·Σe_c − ΣD_c². The driver-side
+    n_moved values enter as one local row per rung in that last
+    groupBy, which also keeps one row per rung on an edgeless graph
+    (n_communities 0, NULL E and q_num, as the oracles' global aggs)."""
+    labels = reduce(
+        DataFrame.unionByName,
+        (lab.select(F.lit(method).alias("method"), "node", "c")
+         for method, lab, _ in rungs),
+    )
+    ls = labels.select("method", F.col("node").alias("s"), F.col("c").alias("cs"))
+    lt = labels.select("method", F.col("node").alias("t"), F.col("c").alias("ct"))
+    per_c = (
+        edges.join(ls, "s")
+        .join(lt, ["method", "t"])
+        .groupBy("method", "cs")
+        .agg(
+            F.count(F.lit(1)).alias("d_c"),
+            F.sum((F.col("cs") == F.col("ct")).cast("long")).alias("e_c"),
+        )
+    )
+    # built from literals, not createDataFrame: a Python-side local list
+    # would start a Python worker to feed the JVM
+    pads = [
+        F.struct(F.lit(method).alias("method"), F.lit(n).cast("long").alias("n_moved"))
+        for method, _, n in rungs
+    ]
+    moved = edges.sparkSession.range(1).select(F.inline(F.array(*pads)))
+    e = F.col("n_directed_edges")
+    q_num = e * F.col("e_in") - F.col("d_sq")
+    return (
+        per_c.unionByName(moved, allowMissingColumns=True)
+        .groupBy("method")
+        .agg(
+            F.count("cs").alias("n_communities"),
+            F.max("n_moved").alias("n_moved"),
+            F.sum("d_c").alias("n_directed_edges"),
+            F.sum("e_c").alias("e_in"),
+            F.sum(F.col("d_c") * F.col("d_c")).alias("d_sq"),
+        )
+        .select(
+            "method",
+            "n_communities",
+            "n_moved",
+            "n_directed_edges",
+            q_num.alias("q_num"),
+            (q_num.cast("double") / (e.cast("double") * e.cast("double")))
+            .cast("decimal(18,6)")
+            .cast("double")
+            .alias("modularity"),
+        )
+    )
+
+
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of two candidate partitions of the near-dup
     graph (§2.4 graph family): (a) the single-round STAR partition
@@ -632,11 +702,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     D_c = total degree of c) and only the single closing division is a
     pinned double — nothing float ever folds.
 
-    Plan per partition: labels attach to the edge list via two keyed
-    joins, e_c and D_c are two map-side-combining aggs, and the closing
-    scalar is a one-row agg. The component labels come from the shared
-    label-propagation loop (bounded rounds, checkpoint-truncated); the
-    star labels are ONE groupBy over the edge set."""
+    Plan: both partitions are rungs of one ``_modularity_ladder`` (one
+    tagged labels join, two aggs). The component labels come from the
+    shared label-propagation loop (bounded rounds, checkpoint-truncated);
+    the star labels are ONE groupBy over the edge set."""
     from .dedup import _label_propagation
 
     sym = _jaccard_edges(spark, sf_dir)
@@ -656,50 +725,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    out = None
-    for method, labels in (("star", star), ("components", comp)):
-        ls = labels.select(F.col("node").alias("s"), F.col("c").alias("cs"))
-        lt = labels.select(F.col("node").alias("t"), F.col("c").alias("ct"))
-        tagged = edges.join(ls, "s").join(lt, "t")
-        e_c = (
-            tagged.filter(F.col("cs") == F.col("ct"))
-            .groupBy(F.col("cs").alias("c"))
-            .agg(F.count(F.lit(1)).alias("e_c"))
-        )
-        d_c = tagged.groupBy(F.col("cs").alias("c")).agg(
-            F.count(F.lit(1)).alias("d_c")
-        )
-        tot = edges.agg(F.count(F.lit(1)).alias("m"))
-        per_c = (
-            d_c.join(e_c, "c", "left")
-            .withColumn("e_c", F.coalesce(F.col("e_c"), F.lit(0)))
-            .crossJoin(F.broadcast(tot))
-        )
-        row = per_c.agg(
-            F.lit(method).alias("method"),
-            F.count(F.lit(1)).alias("n_communities"),
-            F.max("m").alias("n_directed_edges"),
-            F.sum(
-                F.col("e_c") * F.col("m") - F.col("d_c") * F.col("d_c")
-            ).alias("q_num"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        "method",
-        "n_communities",
-        "n_directed_edges",
-        "q_num",
-        (
-            F.col("q_num").cast("double")
-            / (
-                F.col("n_directed_edges").cast("double")
-                * F.col("n_directed_edges").cast("double")
-            )
-        )
-        .cast("decimal(18,6)")
-        .cast("double")
-        .alias("modularity"),
-    )
+    return _modularity_ladder(
+        edges, [("star", star, 0), ("components", comp, 0)]
+    ).drop("n_moved")
 
 
 def _modularity_tail_sql(method: str, labels_cte: str) -> str:
@@ -773,80 +801,18 @@ def graph_louvain_one_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_communities, n_moved, exact q_num, modularity) — the measured
     statement "one greedy level buys THIS much modularity".
 
-    Plan: degrees are one keyed agg; gains ride the edge stream with two
-    degree joins (AQE-broadcast at this size, keyed at corpus scale);
-    the argmax is a struct-min groupBy; post-sweep modularity is the
-    same two-agg pattern as ``graph_modularity``. No iteration, no
-    driver state, no quadratic stage."""
-    sym = _jaccard_edges(spark, sf_dir)
-    edges = sym.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-    deg = edges.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("k")
-    )
-    tot = edges.agg(F.count(F.lit(1)).alias("m"))
-    # Sweep + synchronous-swap resolution live in the shared weighted
-    # helper (w=1 here): gain 2·1·E − 2·k_s·k_t is strictly decreasing
-    # in k_t, so its (gain desc, t) argmax equals the original
-    # min(k_t, t) pick — same labels, oracle unchanged. In a mutual
-    # pair (i→j AND j→i) only the LARGER id moves, so {i, j} lands in
-    # community min(i, j) instead of swapping labels.
-    best = _louvain_weighted_sweep(
-        edges.withColumn("w", F.lit(1).cast("long")), deg, tot
-    )
-    singleton = deg.select("node", F.col("node").alias("c"))
-    out = None
-    for method, labels, moved in (
-        ("singleton", singleton, F.lit(0).cast("long")),
-        ("louvain1", best, F.sum(F.col("moved").cast("long"))),
-    ):
-        ls = labels.select(F.col("node").alias("s"), F.col("c").alias("cs"))
-        lt = labels.select(F.col("node").alias("t"), F.col("c").alias("ct"))
-        tagged = edges.join(ls, "s").join(lt, "t")
-        e_c = (
-            tagged.filter(F.col("cs") == F.col("ct"))
-            .groupBy(F.col("cs").alias("c"))
-            .agg(F.count(F.lit(1)).alias("e_c"))
-        )
-        d_c = tagged.groupBy(F.col("cs").alias("c")).agg(
-            F.count(F.lit(1)).alias("d_c")
-        )
-        n_moved = (
-            labels.agg(moved.alias("n_moved"))
-            if method == "louvain1"
-            else spark.range(1).select(F.lit(0).cast("long").alias("n_moved"))
-        )
-        row = (
-            d_c.join(e_c, "c", "left")
-            .withColumn("e_c", F.coalesce(F.col("e_c"), F.lit(0)))
-            .crossJoin(F.broadcast(tot))
-            .agg(
-                F.lit(method).alias("method"),
-                F.count(F.lit(1)).alias("n_communities"),
-                F.max("m").alias("n_directed_edges"),
-                F.sum(
-                    F.col("e_c") * F.col("m") - F.col("d_c") * F.col("d_c")
-                ).alias("q_num"),
-            )
-            .crossJoin(F.broadcast(n_moved))
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        "method",
-        "n_communities",
-        "n_moved",
-        "n_directed_edges",
-        "q_num",
-        (
-            F.col("q_num").cast("double")
-            / (
-                F.col("n_directed_edges").cast("double")
-                * F.col("n_directed_edges").cast("double")
-            )
-        )
-        .cast("decimal(18,6)")
-        .cast("double")
-        .alias("modularity"),
-    )
+    Plan (``_louvain_levels`` with one level): degrees are one keyed
+    agg; gains ride the edge stream with two degree joins (AQE-broadcast
+    at this size, keyed at corpus scale); the argmax is a struct-max
+    groupBy; both modularity rows come from one ``_modularity_ladder``
+    plan. No iteration, no quadratic stage.
+
+    The sweep is the shared weighted helper with w=1: gain
+    2·1·E − 2·k_s·k_t is strictly decreasing in k_t, so its (gain desc,
+    t) argmax equals the min(k_t, t) pick above — same labels as the
+    oracle. In a mutual pair (i→j AND j→i) only the LARGER id moves, so
+    {i, j} lands in community min(i, j) instead of swapping labels."""
+    return _louvain_levels(spark, sf_dir, 1, converge=False)
 
 
 def _louvain_tail_sql(method: str, labels_cte: str, moved_sql: str) -> str:
@@ -919,59 +885,119 @@ FROM q
 """
 
 
-def _louvain_weighted_sweep(wedges: DataFrame, deg: DataFrame, tot) -> DataFrame:
+def _louvain_weighted_sweep(
+    wedges: DataFrame, deg: DataFrame, m: int
+) -> tuple[DataFrame, int]:
     """One synchronous greedy sweep over a WEIGHTED directed edge list
-    (s, t, w) with degrees (node, k): gain of moving s into {t} is
-    ΔQ·E² = 2·w(s,t)·E − 2·k_s·k_t (self-loop terms cancel — the level-2
-    form; level 1 is the w=1 special case). Argmax by (gain desc, t asc),
-    move iff gain > 0; mutual-swap resolution keeps the smaller id in
-    place. Returns (node, c, moved)."""
+    (s, t, w) with degrees (node, k) and E = m directed edges: gain of
+    moving s into {t} is ΔQ·E² = 2·w(s,t)·E − 2·k_s·k_t (self-loop
+    terms cancel — the level-2 form; level 1 is the w=1 special case).
+    Argmax by (gain desc, t asc), move iff gain > 0.
+
+    Mutual-swap resolution is ONE groupBy on the unordered pair
+    (least(node, c), greatest(node, c)): a group of two is a mutual
+    pair (i→j AND j→i), in which only the LARGER id moves, so both land
+    in community min(i, j); a group of one is a one-way proposal, which
+    stands, or a node that stays (keyed (node, node), which no proposal
+    shares). Returns the eagerly checkpointed (node, c, moved) labels —
+    every consumer of the level (label joins, contraction, composition)
+    reads the checkpoint — and n_moved, observed on that same
+    checkpoint job."""
     ks = deg.select(F.col("node").alias("s"), F.col("k").alias("k_s"))
     kt = deg.select(F.col("node").alias("t"), F.col("k").alias("k_t"))
-    gain = (
-        2 * F.col("w") * F.col("m") - 2 * F.col("k_s") * F.col("k_t")
-    ).alias("gain")
+    gain = 2 * F.col("w") * F.lit(m).cast("long") - 2 * F.col("k_s") * F.col("k_t")
     prop = (
         wedges.join(ks, "s")
         .join(kt, "t")
-        .crossJoin(F.broadcast(tot))  # 1-row scalar
-        .select("s", "t", gain)
-        .groupBy("s")
-        .agg(F.max(F.struct(F.col("gain"), (-F.col("t")).alias("nt"))).alias("b"))
-        .select(
-            F.col("s").alias("node"),
-            F.when(F.col("b.gain") > 0, -F.col("b.nt"))
-            .otherwise(F.col("s"))
-            .alias("c"),
-        )
-    )
-    # prop feeds THREE subtrees (both mutual-join sides + the final
-    # select); the sweep output feeds every downstream consumer of the
-    # level (label joins ×2 per modularity row, contraction,
-    # composition). Persist + checkpoint bound the re-evaluation — the
-    # in-suite two-level entry measured 22.5 s without this, 3-4 s with.
-    prop = prop.persist()
-    mutual = prop.alias("p1").join(
-        prop.alias("p2"),
-        (F.col("p1.c") == F.col("p2.node")) & (F.col("p2.c") == F.col("p1.node")),
-        "left_semi",
-    ).select(F.col("node"), F.lit(True).alias("is_mutual"))
-    out = (
-        prop.join(mutual, "node", "left")
+        .groupBy(F.col("s").alias("node"))
+        .agg(F.max(F.struct(gain.alias("gain"), (-F.col("t")).alias("nt"))).alias("b"))
         .select(
             "node",
-            F.when(
-                F.col("is_mutual").isNotNull() & (F.col("node") < F.col("c")),
-                F.col("node"),
-            )
-            .otherwise(F.col("c"))
-            .alias("c"),
+            F.when(F.col("b.gain") > 0, -F.col("b.nt")).otherwise(F.col("node")).alias("c"),
         )
+    )
+    lo, hi = F.col("lo"), F.col("hi")
+    resolved = F.when(
+        F.col("n") == 2,
+        F.array(
+            F.struct(lo.alias("node"), lo.alias("c")),
+            F.struct(hi.alias("node"), lo.alias("c")),
+        ),
+    ).otherwise(F.array(F.struct(F.col("p").alias("node"), F.col("pc").alias("c"))))
+    obs = Observation()
+    out = (
+        prop.groupBy(
+            F.least("node", "c").alias("lo"), F.greatest("node", "c").alias("hi")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("node").alias("p"),
+            F.min("c").alias("pc"),
+        )
+        .select(F.inline(resolved))
         .withColumn("moved", F.col("c") != F.col("node"))
+        .observe(obs, F.sum(F.col("moved").cast("long")).alias("n_moved"))
         .localCheckpoint(eager=True)
     )
-    prop.unpersist()
-    return out
+    return out, obs.get["n_moved"] or 0
+
+
+def _louvain_levels(
+    spark: SparkSession, sf_dir: str, levels: int, converge: bool
+) -> DataFrame:
+    """Louvain levels 1..``levels`` over the near-dup graph and their
+    modularity ladder: each level sweeps the current community graph,
+    composes its labels onto the original nodes and contracts the graph
+    for the next level (relabel both endpoints, sum weights; self-loops
+    keep internal mass and count in degrees, not in gains). With
+    ``converge`` the loop stops after the first level that moves no
+    node — that level is the terminal row, with the previous labels.
+
+    Each sweep is checkpointed by the helper. A contraction or
+    composition is checkpointed only when a later level reads it: the
+    last level's contraction feeds only its sweep and its composition
+    only the ladder, so neither pays an eager job."""
+    edges = _jaccard_edges(spark, sf_dir).select(
+        F.col("doc_a").alias("s"), F.col("doc_b").alias("t")
+    )
+    deg = edges.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("k"))
+    m = edges.count()  # E: the sweeps' gains read it as a literal
+    rungs = [("singleton", deg.select("node", F.col("node").alias("c")), 0)]
+    wg, gdeg = edges.withColumn("w", F.lit(1).cast("long")), deg
+    composed = None
+    for level in range(1, levels + 1):
+        last = level == levels
+        if level > 1:
+            l_s = lab.select(F.col("node").alias("s"), F.col("c").alias("cs"))
+            l_t = lab.select(F.col("node").alias("t"), F.col("c").alias("ct"))
+            wg = (
+                wg.join(l_s, "s")
+                .join(l_t, "t")
+                .groupBy(F.col("cs").alias("s"), F.col("ct").alias("t"))
+                .agg(F.sum("w").alias("w"))
+            )
+            if not last:
+                wg = wg.localCheckpoint(eager=True)
+            gdeg = wg.groupBy(F.col("s").alias("node")).agg(F.sum("w").alias("k"))
+        lab, n_moved = _louvain_weighted_sweep(
+            wg.filter(F.col("s") != F.col("t")), gdeg, m
+        )
+        if composed is None:  # level 1 sweeps every node
+            composed = lab.select("node", "c")
+        elif n_moved:
+            # a community with only self-loops never proposes: it keeps
+            # its label through the coalesce
+            composed = composed.join(
+                lab.select(F.col("node").alias("c"), F.col("c").alias("c2")),
+                "c",
+                "left",
+            ).select("node", F.coalesce("c2", "c").alias("c"))
+            if not last:
+                composed = composed.localCheckpoint(eager=True)
+        rungs.append((f"louvain{level}", composed, n_moved))
+        if converge and n_moved == 0:
+            break  # converged: the zero-move level is the terminal row
+    return _modularity_ladder(edges, rungs)
 
 
 def graph_louvain_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,104 +1011,15 @@ def graph_louvain_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels — level 2's Q is exactly the contracted graph's Q, so the row
     sequence is the algorithm's monotone-improvement ladder, measured.
 
-    Scale: contraction is one keyed agg over the edge list (the graph
-    SHRINKS each level — the property that makes Louvain tractable at
-    billions of edges); each sweep is degree joins + a struct-max
-    groupBy. No iteration beyond the two unrolled levels, no driver
-    state."""
-    sym = _jaccard_edges(spark, sf_dir)
-    edges = sym.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-    deg = edges.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("k")
-    )
-    tot = edges.agg(F.count(F.lit(1)).alias("m"))
-    lab1 = _louvain_weighted_sweep(
-        edges.withColumn("w", F.lit(1).cast("long")), deg, tot
-    )  # checkpointed by the sweep: contraction/composition reuse it free
-
-    # contraction: community graph with summed directed weights
-    l_s = lab1.select(F.col("node").alias("s"), F.col("c").alias("cs"))
-    l_t = lab1.select(F.col("node").alias("t"), F.col("c").alias("ct"))
-    ce = (
-        edges.join(l_s, "s")
-        .join(l_t, "t")
-        .groupBy(F.col("cs").alias("s"), F.col("ct").alias("t"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
-    )
-    ce.count()
-    cdeg = ce.groupBy(F.col("s").alias("node")).agg(F.sum("w").alias("k"))
-    lab2 = _louvain_weighted_sweep(ce.filter(F.col("s") != F.col("t")), cdeg, tot)
-    # communities whose only edges are self-loops never propose: they
-    # keep their label through the coalesce below
-    composed = (
-        lab1.select("node", F.col("c").alias("c1"))
-        .join(
-            lab2.select(F.col("node").alias("c1"), F.col("c").alias("c2")),
-            "c1",
-            "left",
-        )
-        .select("node", F.coalesce("c2", "c1").alias("c"))
-    )
-    n_moved2 = lab2.agg(
-        F.sum(F.col("moved").cast("long")).alias("n_moved")
-    ).fillna(0)
-
-    singleton = deg.select("node", F.col("node").alias("c"))
-    out = None
-    for method, labels, moved_frame in (
-        ("singleton", singleton, None),
-        ("louvain1", lab1.select("node", "c"),
-         lab1.agg(F.sum(F.col("moved").cast("long")).alias("n_moved"))),
-        ("louvain2", composed, n_moved2),
-    ):
-        ls = labels.select(F.col("node").alias("s"), F.col("c").alias("cs"))
-        lt = labels.select(F.col("node").alias("t"), F.col("c").alias("ct"))
-        tagged = edges.join(ls, "s").join(lt, "t")
-        e_c = (
-            tagged.filter(F.col("cs") == F.col("ct"))
-            .groupBy(F.col("cs").alias("c"))
-            .agg(F.count(F.lit(1)).alias("e_c"))
-        )
-        d_c = tagged.groupBy(F.col("cs").alias("c")).agg(
-            F.count(F.lit(1)).alias("d_c")
-        )
-        if moved_frame is None:
-            moved_frame = edges.sparkSession.range(1).select(
-                F.lit(0).cast("long").alias("n_moved")
-            )
-        row = (
-            d_c.join(e_c, "c", "left")
-            .withColumn("e_c", F.coalesce(F.col("e_c"), F.lit(0)))
-            .crossJoin(F.broadcast(tot))
-            .agg(
-                F.lit(method).alias("method"),
-                F.count(F.lit(1)).alias("n_communities"),
-                F.max("m").alias("n_directed_edges"),
-                F.sum(
-                    F.col("e_c") * F.col("m") - F.col("d_c") * F.col("d_c")
-                ).alias("q_num"),
-            )
-            .crossJoin(F.broadcast(moved_frame))
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        "method",
-        "n_communities",
-        "n_moved",
-        "n_directed_edges",
-        "q_num",
-        (
-            F.col("q_num").cast("double")
-            / (
-                F.col("n_directed_edges").cast("double")
-                * F.col("n_directed_edges").cast("double")
-            )
-        )
-        .cast("decimal(18,6)")
-        .cast("double")
-        .alias("modularity"),
-    )
+    Plan (``_louvain_levels`` with two levels, no early stop): E is one
+    count; each sweep is degree joins, a struct-max groupBy and a
+    pair groupBy for swap resolution, eagerly checkpointed with its
+    n_moved observed on the same job; the contraction is one keyed agg
+    that feeds the level-2 sweep directly; all three modularity rows
+    come from one ``_modularity_ladder`` plan. The graph SHRINKS each
+    level — the property that makes Louvain tractable at billions of
+    edges."""
+    return _louvain_levels(spark, sf_dir, 2, converge=False)
 
 
 GRAPH_LOUVAIN_TWO_LEVEL_SQL = f"""
@@ -1203,115 +1140,17 @@ def graph_louvain_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     shows n_moved = 0 (the convergence PROOF, not just absence of more
     rows), and rounds-to-stop is the row count minus the singleton.
 
-    Plan: per level, one weighted sweep (degree joins + struct-max
-    groupBy, mutual-swap resolution) and one keyed contraction agg;
-    label/contraction outputs are eagerly checkpointed so lineage stays
-    LINEAR in levels (the r6 persist lesson — without truncation each
-    level's plan re-embeds every prior level ~4×). Driver state is one
-    scalar (n_moved) per level, cap-bounded; the graph SHRINKS each
+    Plan (``_louvain_levels``): per level, one weighted sweep (degree
+    joins + struct-max groupBy, pair-groupBy swap resolution) and one
+    keyed contraction agg; label/contraction outputs are eagerly
+    checkpointed so lineage stays LINEAR in levels (the r6 persist
+    lesson — without truncation each level's plan re-embeds every prior
+    level ~4×). The stop scalar n_moved is observed on the sweep's own
+    checkpoint job, so convergence costs no extra job. Driver state is
+    one scalar per level, cap-bounded; the graph SHRINKS each
     contraction, which is what makes the loop tractable at billions of
     edges."""
-    sym = _jaccard_edges(spark, sf_dir)
-    edges = sym.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-    deg = edges.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("k")
-    )
-    tot = edges.agg(F.count(F.lit(1)).alias("m"))
-
-    singleton = deg.select("node", F.col("node").alias("c"))
-    composed = singleton
-    wg = edges.withColumn("w", F.lit(1).cast("long"))  # no self-loops yet
-    gdeg = deg
-    ladder: list[tuple[str, DataFrame, DataFrame]] = [
-        (
-            "singleton",
-            singleton,
-            spark.range(1).select(F.lit(0).cast("long").alias("n_moved")),
-        )
-    ]
-    for level in range(1, LOUVAIN_MAX_LEVELS + 1):
-        lab = _louvain_weighted_sweep(
-            wg.filter(F.col("s") != F.col("t")), gdeg, tot
-        )  # eagerly checkpointed by the sweep helper
-        n_moved = lab.agg(F.sum(F.col("moved").cast("long"))).first()[0] or 0
-        composed = (
-            composed.join(
-                lab.select(F.col("node").alias("c"), F.col("c").alias("c2")),
-                "c",
-                "left",
-            )
-            .select("node", F.coalesce("c2", "c").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        ladder.append(
-            (
-                f"louvain{level}",
-                composed,
-                spark.range(1).select(
-                    F.lit(int(n_moved)).cast("long").alias("n_moved")
-                ),
-            )
-        )
-        if n_moved == 0:
-            break  # converged: the zero-move level is the terminal row
-        # contraction: relabel the CURRENT community graph, sum weights
-        # (self-loops keep internal mass; degrees include them)
-        l_s = lab.select(F.col("node").alias("s"), F.col("c").alias("cs"))
-        l_t = lab.select(F.col("node").alias("t"), F.col("c").alias("ct"))
-        wg = (
-            wg.join(l_s, "s")
-            .join(l_t, "t")
-            .groupBy(F.col("cs").alias("s"), F.col("ct").alias("t"))
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-        gdeg = wg.groupBy(F.col("s").alias("node")).agg(F.sum("w").alias("k"))
-
-    out = None
-    for method, labels, moved_frame in ladder:
-        ls = labels.select(F.col("node").alias("s"), F.col("c").alias("cs"))
-        lt = labels.select(F.col("node").alias("t"), F.col("c").alias("ct"))
-        tagged = edges.join(ls, "s").join(lt, "t")
-        e_c = (
-            tagged.filter(F.col("cs") == F.col("ct"))
-            .groupBy(F.col("cs").alias("c"))
-            .agg(F.count(F.lit(1)).alias("e_c"))
-        )
-        d_c = tagged.groupBy(F.col("cs").alias("c")).agg(
-            F.count(F.lit(1)).alias("d_c")
-        )
-        row = (
-            d_c.join(e_c, "c", "left")
-            .withColumn("e_c", F.coalesce(F.col("e_c"), F.lit(0)))
-            .crossJoin(F.broadcast(tot))
-            .agg(
-                F.lit(method).alias("method"),
-                F.count(F.lit(1)).alias("n_communities"),
-                F.max("m").alias("n_directed_edges"),
-                F.sum(
-                    F.col("e_c") * F.col("m") - F.col("d_c") * F.col("d_c")
-                ).alias("q_num"),
-            )
-            .crossJoin(F.broadcast(moved_frame))
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        "method",
-        "n_communities",
-        "n_moved",
-        "n_directed_edges",
-        "q_num",
-        (
-            F.col("q_num").cast("double")
-            / (
-                F.col("n_directed_edges").cast("double")
-                * F.col("n_directed_edges").cast("double")
-            )
-        )
-        .cast("decimal(18,6)")
-        .cast("double")
-        .alias("modularity"),
-    )
+    return _louvain_levels(spark, sf_dir, LOUVAIN_MAX_LEVELS, converge=True)
 
 
 def _louvain_level_sql(level: int) -> str:

@@ -185,17 +185,6 @@ def test_chi_square_grid_shape(spark):
     assert r.n_orders == o.count()
 
 
-def test_modularity_bounds_and_methods(spark):
-    from nzwirelessmap_fetch_spark.operators.graph import graph_modularity
-
-    rows = {r.method: r for r in graph_modularity(spark, SF_SMOKE).collect()}
-    assert set(rows) == {"star", "components"}
-    for r in rows.values():
-        assert -1.0 <= r.modularity <= 1.0
-    # components: every edge is intra-community, so Q = 1 − Σ(D_c/E)² ≥ 0
-    assert rows["components"].modularity >= 0
-
-
 def test_winnowing_pair_invariants(spark):
     from nzwirelessmap_fetch_spark.operators.text import corpus_winnowing
 

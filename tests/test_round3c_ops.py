@@ -307,34 +307,6 @@ def test_semdedup_drop_rules(spark):
             assert rep_row.kept_rep < r.kept_rep
 
 
-def test_random_walks_follow_edges(spark):
-    from nzwirelessmap_fetch_spark.operators.dedup import _jaccard_edges
-    from nzwirelessmap_fetch_spark.operators.graph import (
-        WALK_LENGTH,
-        WALKS_PER_NODE,
-        graph_random_walks,
-    )
-
-    edges = {
-        (r.doc_a, r.doc_b)
-        for r in _jaccard_edges(spark, SF_SMOKE).collect()
-    }
-    sym = edges | {(b, a) for a, b in edges}
-    walks = graph_random_walks(spark, SF_SMOKE).collect()
-    nodes = {a for a, _ in sym}
-    assert len(walks) == len(nodes) * WALKS_PER_NODE
-    for r in walks:
-        assert len(r.path) == WALK_LENGTH + 1
-        assert r.path[0] == r.start and r.path[-1] == r.end_node
-        for u, v in zip(r.path, r.path[1:]):
-            assert (u, v) in sym  # every hop is a real edge
-    # determinism: a second run yields the identical corpus
-    again = graph_random_walks(spark, SF_SMOKE).collect()
-    assert [(r.start, r.walk_no, r.path) for r in walks] == [
-        (r.start, r.walk_no, r.path) for r in again
-    ]
-
-
 def test_ivf_recall_bounds(spark):
     from nzwirelessmap_fetch_spark.operators.similarity import (
         TOP_K,

@@ -1,6 +1,5 @@
 """Round-7 tests: adaptive prefix order, txn-log concurrency, and the
-round-7 operators (executing compaction, schema evolution, converged
-Louvain)."""
+round-7 operators (executing compaction, schema evolution)."""
 
 from __future__ import annotations
 
@@ -274,32 +273,6 @@ def test_stream_merge_log_is_commit_protocol(tmp_path, spark):
     # batch1's delta (+1 event, +50 cents for user 2) folded ON TOP of
     # the concurrent ingest's (5, 5000) — no lost update on either side
     assert rows == {1: (2, 350), 2: (6, 5050), 99: (1, 100)}
-
-
-def test_louvain_converged_ladder_monotone(spark):
-    """Directive #8: the converged Louvain ladder improves Q monotonely
-    from the singleton baseline and TERMINATES with an explicit
-    zero-move level (or the cap) — rounds-to-stop is the ladder length
-    minus the singleton row."""
-    from nzwirelessmap_fetch_spark.operators.graph import (
-        LOUVAIN_MAX_LEVELS,
-        graph_louvain_converged,
-    )
-
-    rows = graph_louvain_converged(spark, SF_SMOKE).collect()
-    by_method = {r["method"]: r for r in rows}
-    assert "singleton" in by_method and "louvain1" in by_method
-    levels = sorted(m for m in by_method if m.startswith("louvain"))
-    assert len(levels) <= LOUVAIN_MAX_LEVELS
-    q = [by_method["singleton"]["modularity"]] + [
-        by_method[m]["modularity"] for m in levels
-    ]
-    assert all(b >= a - 1e-12 for a, b in zip(q, q[1:])), f"non-monotone: {q}"
-    last = by_method[levels[-1]]
-    # either proven converged (terminal zero-move row) or cap-bounded
-    assert last["n_moved"] == 0 or len(levels) == LOUVAIN_MAX_LEVELS
-    # labels compose to a coarser partition than singleton
-    assert last["n_communities"] <= by_method["singleton"]["n_communities"]
 
 
 def test_png_palette_roundtrip_and_trns():
