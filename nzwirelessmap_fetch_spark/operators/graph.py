@@ -157,7 +157,6 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _jaccard_edges(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    edges = edges.union(edges.select(F.col("dst"), F.col("src"))).distinct()
     nodes = edges.select(F.col("src").alias("node")).distinct()
     visited = nodes.filter(F.col("node") % BFS_SEED_MOD == 0).select(
         "node", F.lit(0).cast("int").alias("level")

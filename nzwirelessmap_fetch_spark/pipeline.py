@@ -7,9 +7,11 @@ JSON → multi-sink with latest pointer and marker-last ordering.
 Here: acquire (staged path or zip) → version key from source mtime →
 idempotency gate → flagship query → headered CSV + bug-compat JSON array
 artifacts, published through ``VersionedArtifactSink``. The three entry
-points differ only in how they build the flagship result. The 4 process
-boundaries of the reference (java, sqlite3 ×2, python3) collapse into one
-Spark job.
+points differ only in how they build the flagship result. Like the
+reference, which runs the query once and derives the JSON from that one
+CSV (fetch.go:214-232, csv2json2.py:1-3), a run executes the flagship
+query once: the CSV write fills a cache of the result, and the JSON
+publish's count and collect read that cache.
 """
 
 from __future__ import annotations
@@ -43,13 +45,21 @@ def _run(out_root: str | Path, version: str, build: Callable[[], DataFrame]) -> 
     """The shared body: idempotency gate → ``build()`` the flagship result
     → versioned CSV → JSON artifact, whose logged commit is the
     completion marker (P3/P15-P18, fetch.go:55-67, 138-157). ``rows``
-    comes from the JSON publish."""
+    comes from the JSON publish.
+
+    The result is persisted, so the flagship query executes once: the
+    CSV write fills the cache and the JSON publish's count and collect
+    are two reads of it. It is unpersisted however the run ends, so a
+    failed or refused run leaves nothing cached."""
     sink = VersionedArtifactSink(out_root)
     if sink.exists(ARTIFACT_JSON, version):
         return {"skipped": True, "version": version, "rows": None}
-    result = build()
-    sink.write_versioned_csv(result, ARTIFACT_CSV, version)
-    rows = sink.write_versioned_json(result, ARTIFACT_JSON, version)
+    result = build().persist()
+    try:
+        sink.write_versioned_csv(result, ARTIFACT_CSV, version)
+        rows = sink.write_versioned_json(result, ARTIFACT_JSON, version)
+    finally:
+        result.unpersist()
     return {"skipped": False, "version": version, "rows": rows}
 
 

@@ -20,6 +20,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -53,6 +54,11 @@ def get_spark(
         # 128 MiB scan partitions: keeps partition count proportional to
         # data volume, so the same code ships to a 1000-executor cluster.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Python UDF workers import this package to unpickle the operators'
+        # functions, but run from the JVM's environment, not the driver's
+        # sys.path. Spark adds this directory to the workers' PYTHONPATH,
+        # so they find it from any cwd with PYTHONPATH unset.
+        .config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1]))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 from nzwirelessmap_fetch_spark.pipeline import ARTIFACT_CSV, ARTIFACT_JSON, run_pipeline
+from nzwirelessmap_fetch_spark.sinks import writers
 from nzwirelessmap_fetch_spark.sinks.writers import (
     VersionedArtifactSink,
     to_all_strings,
@@ -39,6 +40,11 @@ def _write_datasource(df, root, version, mode="append", artifact="prism.json"):
 def _read_datasource(spark, root):
     spark.dataSource.register(VersionedArtifactDataSource)
     return spark.read.format("versioned_artifacts").option("root", root).load()
+
+
+def _persisted_rdds(spark):
+    """Ids of the RDDs the session holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _snapshot(adir):
@@ -159,6 +165,53 @@ def test_pipeline_artifacts_commit_through_shared_log(spark, tmp_path):
     assert len(sink.commit_log(ARTIFACT_JSON)) == 1
     data = json.loads((tmp_path / ARTIFACT_JSON / "v1").read_text())
     assert isinstance(data, list) and len(data) == r3["rows"]
+
+
+def test_pipeline_publishes_both_artifacts_from_one_cached_result(
+    spark, tmp_path, monkeypatch
+):
+    """The flagship query executes once per run: the CSV and JSON
+    publishes receive the same persisted frame, and the run leaves no
+    RDD persisted behind it."""
+    seen = []
+
+    def spy(name, write):
+        def wrapped(df, path):
+            seen.append((name, df, df.is_cached))
+            return write(df, path)
+        return wrapped
+
+    monkeypatch.setattr(writers, "write_headered_csv",
+                        spy("csv", writers.write_headered_csv))
+    monkeypatch.setattr(writers, "write_single_json_array",
+                        spy("json", writers.write_single_json_array))
+    before = _persisted_rdds(spark)
+    report = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
+    assert report["rows"] > 0
+    assert [name for name, _, _ in seen] == ["csv", "json"]
+    assert seen[0][1] is seen[1][1]
+    assert all(cached for _, _, cached in seen)
+    assert _persisted_rdds(spark) == before
+
+
+def test_pipeline_budget_refusal_commits_nothing_and_uncaches(
+    spark, tmp_path, monkeypatch
+):
+    """A result over the single-array budget is refused before the JSON
+    commit: the version reads as incomplete, the cached result is
+    released, and a re-run within budget completes and publishes."""
+    sink = VersionedArtifactSink(tmp_path)
+    before = _persisted_rdds(spark)
+    monkeypatch.setattr(writers, "SINGLE_ARRAY_MAX_ROWS", 1)
+    with pytest.raises(ValueError, match="budget"):
+        run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
+    assert not sink.exists(ARTIFACT_JSON, "v1")
+    assert _persisted_rdds(spark) == before
+    monkeypatch.undo()
+    report = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
+    assert report["skipped"] is False and report["rows"] > 0
+    assert sink.exists(ARTIFACT_JSON, "v1")
+    assert len(json.loads((tmp_path / ARTIFACT_JSON / "v1").read_text())) == report["rows"]
 
 
 # ─── streaming into the sink ─────────────────────────────────────────────────

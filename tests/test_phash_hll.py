@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import os
 import random
+import subprocess
+import sys
+import textwrap
 
 from pyspark.sql import functions as F
 
@@ -17,6 +21,8 @@ from nzwirelessmap_fetch_spark.operators.multimodal import (
 )
 from nzwirelessmap_fetch_spark.operators.sketches import agg_hll_partition_merge
 from tests.conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_phash_locality_single_byte_edit():
@@ -56,6 +62,37 @@ def test_phash_pairs_symmetric_and_bounded(spark):
         assert 0 <= r.hamming <= PHASH_HAMMING_MAX
     # exact duplicate docs must surface at hamming 0
     assert any(r.hamming == 0 for r in out)
+
+
+def test_phash_runs_from_any_cwd(spark, tmp_path):
+    """The Python UDF workers import the package from the session's
+    executor environment, so an entry built by ``get_spark`` runs from a
+    foreign cwd with PYTHONPATH unset, like a caller that only puts the
+    repo on its own sys.path."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from nzwirelessmap_fetch_spark.operators.multimodal import multimodal_phash_dedup
+        from nzwirelessmap_fetch_spark.session import get_spark
+
+        spark = get_spark("foreign-cwd", cpus=2)
+        print("ROWS", multimodal_phash_dedup(spark, {SF_SMOKE!r}).count())
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    rows = multimodal_phash_dedup(spark, SF_SMOKE).count()
+    assert f"ROWS {rows}" in proc.stdout.splitlines()
 
 
 def test_hll_merge_bands_hold(spark):
