@@ -40,16 +40,6 @@ def sqlite_like(col: Column | str, pattern: str) -> Column:
     return semantic
 
 
-def all_string(col: Column | str) -> Column:
-    """The reference's public result type system is all-strings: CSV via the
-    sqlite3 CLI then ``csv.DictReader`` → string dicts (csv2json2.py:1-3).
-    NULL becomes the empty string at the CSV boundary (empty field), which is
-    what ``coalesce(cast(. as string), '')`` pins.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.cast("string"), F.lit(""))
-
-
 def ilike_shadow_name(col: str) -> str:
     return f"_{col}_lower"
 

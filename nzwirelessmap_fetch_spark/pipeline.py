@@ -8,10 +8,11 @@ Here: acquire (staged path or zip) → version key from source mtime →
 idempotency gate → flagship query → headered CSV + bug-compat JSON array
 artifacts, published through ``VersionedArtifactSink``. The three entry
 points differ only in how they build the flagship result. Like the
-reference, which runs the query once and derives the JSON from that one
-CSV (fetch.go:214-232, csv2json2.py:1-3), a run executes the flagship
-query once: the CSV write fills a cache of the result, and the JSON
-publish's count and collect read that cache.
+reference, which runs the query once into one CSV and derives the JSON
+from it on the same machine (fetch.go:214-232, csv2json2.py:1-3), a run
+issues one Spark action: it collects the result, which its completion
+marker (the single JSON array) already bounds, and writes both artifacts
+from those rows on the driver. Nothing is cached.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from .plans.flagship import FLAGSHIP_ORACLE_SQL, flagship
-from .sinks.writers import VersionedArtifactSink
+from .sinks.writers import VersionedArtifactSink, collect_all_strings
 
 ARTIFACT_CSV = "links.csv"
 ARTIFACT_JSON = "links.json"
@@ -43,24 +44,20 @@ def version_key_from_mtime(path: str | Path) -> str:
 
 def _run(out_root: str | Path, version: str, build: Callable[[], DataFrame]) -> dict:
     """The shared body: idempotency gate → ``build()`` the flagship result
-    → versioned CSV → JSON artifact, whose logged commit is the
-    completion marker (P3/P15-P18, fetch.go:55-67, 138-157). ``rows``
-    comes from the JSON publish.
+    → collect it → versioned CSV → JSON artifact, whose logged commit is
+    the completion marker (P3/P15-P18, fetch.go:55-67, 138-157).
 
-    The result is persisted, so the flagship query executes once: the
-    CSV write fills the cache and the JSON publish's count and collect
-    are two reads of it. It is unpersisted however the run ends, so a
-    failed or refused run leaves nothing cached."""
+    The collect is the run's one Spark action, and nothing is cached. A
+    result over the single-array budget is refused there, before either
+    artifact is published. Both commits log the result's typed schema."""
     sink = VersionedArtifactSink(out_root)
     if sink.exists(ARTIFACT_JSON, version):
         return {"skipped": True, "version": version, "rows": None}
-    result = build().persist()
-    try:
-        sink.write_versioned_csv(result, ARTIFACT_CSV, version)
-        rows = sink.write_versioned_json(result, ARTIFACT_JSON, version)
-    finally:
-        result.unpersist()
-    return {"skipped": False, "version": version, "rows": rows}
+    result = build()
+    rows = collect_all_strings(result)
+    sink.write_versioned_csv(result.schema, rows, ARTIFACT_CSV, version)
+    n = sink.write_versioned_json(result.schema, rows, ARTIFACT_JSON, version)
+    return {"skipped": False, "version": version, "rows": n}
 
 
 def run_pipeline(

@@ -9,30 +9,33 @@ the completion marker and the idempotency key (fetch.go:55-67).
 ``VersionedArtifactSink`` is the one place that publishes such a version.
 
 Spark-native translation:
-- headered CSV / NDJSON: ``df.write`` (distributed, committer-atomic).
-- bug-compat single JSON array (csv2json2.py:3 emits ONE array, not
-  NDJSON): requires driver materialization → hard-gated by a row budget.
-  At 100 TB you use NDJSON + a manifest; the array writer exists for
-  byte-level parity on small results only.
+- NDJSON: ``df.write`` (distributed, committer-atomic) — the scale path.
+- pipeline result: bounded by its completion marker, the single JSON
+  array (csv2json2.py:3 emits ONE array, not NDJSON), which is refused
+  above ``SINGLE_ARRAY_MAX_ROWS``. So ``collect_all_strings`` brings the
+  result to the driver in one Spark action, and both the headered CSV and
+  the JSON array are written there from those rows, as the reference
+  derives its JSON from the CSV on one machine. At 100 TB you use NDJSON
+  + a manifest; the array exists for byte-level parity on small results.
 - all-string projection: P16 — every value stringified, NULL → '' (the
   CSV boundary semantics).
 """
 
 from __future__ import annotations
 
+import csv
 import json
 import os
 import shutil
 from collections.abc import Callable
+from itertools import chain
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.compat import all_string
-
-# Driver-side materialization budget for the bug-compat array writer.
+# Row budget of the driver-side collect behind the bug-compat single array.
 SINGLE_ARRAY_MAX_ROWS = 1_000_000
 
 # fetch.go:247-265: the mutable `latest` object is STANDARD-class and every
@@ -42,13 +45,37 @@ DEFAULT_STORAGE_CLASSES = {"latest": "STANDARD", "versioned": "NEARLINE"}
 
 def to_all_strings(df: DataFrame) -> DataFrame:
     """P16: the reference's public result type system is
-    Array<Map<String,String>> — stringify every column, NULL → ''."""
-    return df.select([all_string(c).alias(c) for c in df.columns])
+    Array<Map<String,String>> — stringify every column, NULL → '' (an
+    empty CSV field, read back by ``csv.DictReader`` as ``''``;
+    csv2json2.py:1-3)."""
+    quoted = ["`" + c.replace("`", "``") + "`" for c in df.columns]
+    return df.selectExpr(*[f"coalesce(cast({q} AS STRING), '') AS {q}" for q in quoted])
 
 
-def write_headered_csv(df: DataFrame, path: str) -> None:
-    """P15: headered CSV (sqlite3 ``.headers on`` / ``.mode csv``)."""
-    df.write.mode("overwrite").option("header", True).csv(path)
+def collect_all_strings(df: DataFrame) -> list[tuple[str, ...]]:
+    """The all-string rows of ``df``, in one Spark action. Refused above
+    the single-array budget, so no more than it plus one row ever reaches
+    the driver."""
+    rows = to_all_strings(df).limit(SINGLE_ARRAY_MAX_ROWS + 1).collect()
+    if len(rows) > SINGLE_ARRAY_MAX_ROWS:
+        raise ValueError(
+            f"single-array JSON writer is driver-side; the result exceeds the "
+            f"{SINGLE_ARRAY_MAX_ROWS} row budget — use write_ndjson at scale"
+        )
+    return rows
+
+
+def write_headered_csv(columns: list[str], rows: list[tuple[str, ...]],
+                       path: str | Path) -> None:
+    """P15: headered CSV (sqlite3 ``.headers on`` / ``.mode csv``) of
+    collected all-string rows; every cell reads back as its JSON value.
+    Minimal quoting leaves a bare ``\\r`` unquoted when the line ends in
+    ``\\n``, so a row holding one is written fully quoted."""
+    with open(path, "w", newline="", encoding="utf-8") as f:
+        minimal = csv.writer(f, lineterminator="\n")
+        quoted = csv.writer(f, lineterminator="\n", quoting=csv.QUOTE_ALL)
+        for row in chain([columns], rows):
+            (quoted if any("\r" in cell for cell in row) else minimal).writerow(row)
 
 
 def write_ndjson(df: DataFrame, path: str) -> None:
@@ -56,21 +83,12 @@ def write_ndjson(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def write_single_json_array(df: DataFrame, path: str | Path) -> int:
+def write_single_json_array(columns: list[str], rows: list[tuple[str, ...]],
+                            path: str | Path) -> int:
     """P17 bug-compat: ONE JSON array of all-string records
-    (csv2json2.py:1-3). Materializes on the driver — guarded. Returns the
-    row count."""
-    n = df.count()
-    if n > SINGLE_ARRAY_MAX_ROWS:
-        raise ValueError(
-            f"single-array JSON writer is driver-side; {n} rows exceeds the "
-            f"{SINGLE_ARRAY_MAX_ROWS} budget — use write_ndjson at scale"
-        )
-    records = [row.asDict() for row in to_all_strings(df).collect()]
-    Path(path).parent.mkdir(parents=True, exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(records, f)
-    return n
+    (csv2json2.py:1-3) from collected rows. Returns the row count."""
+    Path(path).write_text(json.dumps([dict(zip(columns, r)) for r in rows]))
+    return len(rows)
 
 
 def _replace(src: Path, dst: Path) -> None:
@@ -148,14 +166,20 @@ class VersionedArtifactSink:
         self._commit(artifact, version, schema, op)
         return result
 
-    def write_versioned_json(self, df: DataFrame, artifact: str, version: str) -> int:
-        """The single-array JSON artifact; returns its row count."""
-        return self._publish(artifact, version, df.schema, "artifact-json",
-                             lambda path: write_single_json_array(df, path))
+    def write_versioned_json(self, schema: StructType, rows: list[tuple[str, ...]],
+                             artifact: str, version: str) -> int:
+        """The single-array JSON artifact of ``collect_all_strings`` rows;
+        ``schema`` is the result's typed schema, logged with the commit.
+        Returns the row count."""
+        return self._publish(artifact, version, schema, "artifact-json",
+                             lambda path: write_single_json_array(schema.names, rows, path))
 
-    def write_versioned_csv(self, df: DataFrame, artifact: str, version: str) -> None:
-        self._publish(artifact, version, df.schema, "artifact-csv",
-                      lambda path: write_headered_csv(df, str(path)), latest=False)
+    def write_versioned_csv(self, schema: StructType, rows: list[tuple[str, ...]],
+                            artifact: str, version: str) -> None:
+        """The headered CSV artifact, version-only (fetch.go:138)."""
+        self._publish(artifact, version, schema, "artifact-csv",
+                      lambda path: write_headered_csv(schema.names, rows, path),
+                      latest=False)
 
     def write_versioned_ndjson(self, df: DataFrame, artifact: str, version: str) -> None:
         self._publish(artifact, version, df.schema, "artifact-ndjson",

@@ -6,6 +6,7 @@ that reads and writes the same layout."""
 
 from __future__ import annotations
 
+import csv
 import json
 import os
 
@@ -18,6 +19,7 @@ from nzwirelessmap_fetch_spark.pipeline import ARTIFACT_CSV, ARTIFACT_JSON, run_
 from nzwirelessmap_fetch_spark.sinks import writers
 from nzwirelessmap_fetch_spark.sinks.writers import (
     VersionedArtifactSink,
+    collect_all_strings,
     to_all_strings,
     write_single_json_array,
 )
@@ -65,7 +67,7 @@ def test_single_json_array_all_strings(spark, tmp_path):
         [(1, 2.5, None), (2, None, "x")], "a long, b double, c string"
     )
     out = tmp_path / "out.json"
-    write_single_json_array(df, out)
+    assert write_single_json_array(df.columns, collect_all_strings(df), out) == 2
     data = json.loads(out.read_text())
     assert isinstance(data, list) and len(data) == 2
     by_a = {r["a"]: r for r in data}
@@ -78,6 +80,11 @@ def test_all_strings_schema(spark):
         spark.createDataFrame([(1, 2.5)], "a long, b double")
     )
     assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "string"]
+    # names that need quoting in SQL keep their name and value
+    odd = spark.createDataFrame([(1, None)], "`we``ird.name` long, `sp ace` int")
+    assert odd.columns == ["we`ird.name", "sp ace"]
+    assert collect_all_strings(odd) == [("1", "")]
+    assert to_all_strings(odd).columns == odd.columns
 
 
 # ─── VersionedArtifactSink: the one publish path ─────────────────────────────
@@ -117,13 +124,14 @@ def test_versioned_json_latest_is_byte_copy_with_classes(spark, tmp_path):
     row count is the array's length."""
     sink = VersionedArtifactSink(tmp_path)
     df = spark.range(7).select(F.col("id"), (F.col("id") * 2).alias("twice"))
-    assert sink.write_versioned_json(df, "prism.json", "v1") == 7
+    rows = collect_all_strings(df)
+    assert sink.write_versioned_json(df.schema, rows, "prism.json", "v1") == 7
     adir = tmp_path / "prism.json"
     assert (adir / "latest").read_bytes() == (adir / "v1").read_bytes()
     assert len(json.loads((adir / "v1").read_text())) == 7
     manifest = json.loads((adir / "_storage_classes.json").read_text())
     assert manifest == {"latest": "STANDARD", "v1": "NEARLINE"}
-    sink.write_versioned_json(df, "prism.json", "v2")
+    sink.write_versioned_json(df.schema, rows, "prism.json", "v2")
     manifest = json.loads((adir / "_storage_classes.json").read_text())
     assert manifest == {"latest": "STANDARD", "v1": "NEARLINE", "v2": "NEARLINE"}
     assert [e["version"] for e in sink.commit_log("prism.json")] == ["v1", "v2"]
@@ -139,8 +147,12 @@ def test_pipeline_artifacts_commit_through_shared_log(spark, tmp_path):
     assert r1["skipped"] is False and r1["rows"] > 0
     # `rows` is reported by the JSON publish itself
     assert r1["rows"] == len(json.loads((tmp_path / ARTIFACT_JSON / "v1").read_text()))
-    # the CSV is version-only (fetch.go:138)
+    # the CSV is version-only (fetch.go:138), one headered file whose
+    # cells read back as the JSON records (csv2json2.py:1-3)
     assert not (tmp_path / ARTIFACT_CSV / "latest").exists()
+    with open(tmp_path / ARTIFACT_CSV / "v1", newline="", encoding="utf-8") as f:
+        assert list(csv.DictReader(f)) == json.loads(
+            (tmp_path / ARTIFACT_JSON / "v1").read_text())
     csv_classes = (tmp_path / ARTIFACT_CSV / "_storage_classes.json").read_text()
     assert json.loads(csv_classes) == {"v1": "NEARLINE"}
     sink = VersionedArtifactSink(tmp_path)
@@ -167,50 +179,50 @@ def test_pipeline_artifacts_commit_through_shared_log(spark, tmp_path):
     assert isinstance(data, list) and len(data) == r3["rows"]
 
 
-def test_pipeline_publishes_both_artifacts_from_one_cached_result(
-    spark, tmp_path, monkeypatch
-):
-    """The flagship query executes once per run: the CSV and JSON
-    publishes receive the same persisted frame, and the run leaves no
-    RDD persisted behind it."""
-    seen = []
+def test_pipeline_runs_one_spark_action(spark, tmp_path, monkeypatch):
+    """A run's one Spark action is the collect of its result: no cache,
+    no count, no distributed write, and no RDD left persisted."""
+    probe = spark.range(1)
+    calls = []
 
-    def spy(name, write):
-        def wrapped(df, path):
-            seen.append((name, df, df.is_cached))
-            return write(df, path)
-        return wrapped
+    def record(cls, name):
+        method = getattr(cls, name)
 
-    monkeypatch.setattr(writers, "write_headered_csv",
-                        spy("csv", writers.write_headered_csv))
-    monkeypatch.setattr(writers, "write_single_json_array",
-                        spy("json", writers.write_single_json_array))
+        def wrapped(self, *args, **kwargs):
+            calls.append(name)
+            return method(self, *args, **kwargs)
+        monkeypatch.setattr(cls, name, wrapped)
+
+    for name in ("collect", "persist", "cache", "count"):
+        record(type(probe), name)
+    for name in ("save", "csv", "json", "parquet", "text", "saveAsTable", "insertInto"):
+        record(type(probe.write), name)
     before = _persisted_rdds(spark)
     report = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
     assert report["rows"] > 0
-    assert [name for name, _, _ in seen] == ["csv", "json"]
-    assert seen[0][1] is seen[1][1]
-    assert all(cached for _, _, cached in seen)
+    assert calls == ["collect"]
     assert _persisted_rdds(spark) == before
 
 
 def test_pipeline_budget_refusal_commits_nothing_and_uncaches(
     spark, tmp_path, monkeypatch
 ):
-    """A result over the single-array budget is refused before the JSON
-    commit: the version reads as incomplete, the cached result is
-    released, and a re-run within budget completes and publishes."""
+    """A result over the single-array budget is refused before anything
+    is published: neither version reads as complete, nothing is left
+    cached, and a re-run within budget commits each artifact once."""
     sink = VersionedArtifactSink(tmp_path)
     before = _persisted_rdds(spark)
     monkeypatch.setattr(writers, "SINGLE_ARRAY_MAX_ROWS", 1)
     with pytest.raises(ValueError, match="budget"):
         run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
     assert not sink.exists(ARTIFACT_JSON, "v1")
+    assert not sink.exists(ARTIFACT_CSV, "v1")
     assert _persisted_rdds(spark) == before
     monkeypatch.undo()
     report = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
     assert report["skipped"] is False and report["rows"] > 0
     assert sink.exists(ARTIFACT_JSON, "v1")
+    assert [e["version"] for e in sink.commit_log(ARTIFACT_CSV)] == ["v1"]
     assert len(json.loads((tmp_path / ARTIFACT_JSON / "v1").read_text())) == report["rows"]
 
 
@@ -256,9 +268,12 @@ def test_versioned_artifact_datasource(spark, tmp_path):
     sink = VersionedArtifactSink(tmp_path / "store")
     df1 = spark.range(3).select(F.col("id").cast("string").alias("v"))
     df2 = spark.range(5).select(F.col("id").cast("string").alias("v"))
-    sink.write_versioned_json(df1, "prism.json", "2024-01-01T00:00:00Z")
-    sink.write_versioned_json(df2, "prism.json", "2024-01-02T00:00:00Z")
-    sink.write_versioned_json(df1, "other.json", "2024-01-03T00:00:00Z")
+    for df, artifact, version in [
+        (df1, "prism.json", "2024-01-01T00:00:00Z"),
+        (df2, "prism.json", "2024-01-02T00:00:00Z"),
+        (df1, "other.json", "2024-01-03T00:00:00Z"),
+    ]:
+        sink.write_versioned_json(df.schema, collect_all_strings(df), artifact, version)
 
     rows = _read_datasource(spark, str(tmp_path / "store")).collect()
     by_key = {(r.artifact, r.version): r for r in rows}

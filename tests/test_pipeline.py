@@ -76,3 +76,17 @@ def test_run_query_cli(spark, capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert len(out) == 3 and all(json.loads(line) for line in out)
     assert main(["nope"]) == 2
+
+
+def test_pipeline_cli(spark, tmp_path, capsys):
+    """The `/fetch` trigger's CLI form prints the run report as JSON: a
+    first call publishes rows, a second one skips on the marker."""
+    from nzwirelessmap_fetch_spark.pipeline import main
+
+    out = str(tmp_path / "out")
+    main([SF_SMOKE, out, "v1"])
+    report = json.loads(capsys.readouterr().out)
+    assert report["skipped"] is False and report["rows"] > 0
+    main([SF_SMOKE, out, "v1"])
+    assert json.loads(capsys.readouterr().out) == {
+        "skipped": True, "version": "v1", "rows": None}

@@ -8,6 +8,7 @@ Spark job count stays proportional to max_examples, not to data size.
 
 from __future__ import annotations
 
+import csv
 import json
 import re
 
@@ -16,7 +17,11 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nzwirelessmap_fetch_spark.functions.hashing import MERSENNE_P, rolling_hash
-from nzwirelessmap_fetch_spark.sinks.writers import write_single_json_array
+from nzwirelessmap_fetch_spark.sinks.writers import (
+    collect_all_strings,
+    write_headered_csv,
+    write_single_json_array,
+)
 
 SETTINGS = settings(
     max_examples=10,
@@ -80,7 +85,7 @@ def test_single_json_array_roundtrip(spark, tmp_path_factory, rows):
     ints keep their decimal text form."""
     out = tmp_path_factory.mktemp("json") / "out.json"
     df = spark.createDataFrame(rows, "a long, b string")
-    write_single_json_array(df, out)
+    write_single_json_array(df.columns, collect_all_strings(df), out)
     data = json.load(open(out))
     expect = [
         {"a": "" if a is None else str(a), "b": "" if b is None else b}
@@ -88,6 +93,36 @@ def test_single_json_array_roundtrip(spark, tmp_path_factory, rows):
     ]
     key = lambda r: (r["a"], r["b"])  # noqa: E731 — writer order is plan order
     assert sorted(data, key=key) == sorted(expect, key=key)
+
+
+# Cells the CSV boundary must carry intact: quotes, commas, line breaks,
+# backslashes, leading and trailing spaces, the empty string and NULL.
+CSV_TEXT = st.lists(
+    st.sampled_from(["a", "é", " ", '"', "'", ",", "\n", "\r", "\r\n", "\\"]),
+    max_size=8,
+).map("".join)
+CSV_ROWS = st.lists(
+    st.tuples(st.one_of(st.none(), CSV_TEXT), st.one_of(st.none(), CSV_TEXT)),
+    min_size=1,
+    max_size=15,
+)
+
+
+@SETTINGS
+@given(CSV_ROWS)
+def test_csv_cells_equal_json_values(spark, tmp_path_factory, rows):
+    """csv2json2.py:1-3's contract: ``csv.DictReader`` reads the headered
+    CSV back as exactly the JSON array's records, in order."""
+    out = tmp_path_factory.mktemp("csv")
+    df = spark.createDataFrame(rows, "a string, b string")
+    collected = collect_all_strings(df)
+    write_headered_csv(df.columns, collected, out / "out.csv")
+    write_single_json_array(df.columns, collected, out / "out.json")
+    with open(out / "out.csv", newline="", encoding="utf-8") as f:
+        cells = list(csv.DictReader(f))
+    records = json.loads((out / "out.json").read_text())
+    assert cells == records
+    assert records == [{"a": a or "", "b": b or ""} for a, b in rows]
 
 
 def _md5_long_model(s: str) -> int:
