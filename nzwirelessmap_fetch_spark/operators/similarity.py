@@ -12,6 +12,14 @@
   knobs; an IVF variant is the same plan shape with learned centroids as
   the bucketer.
 
+- sim_lsh_banded       banded hyperplane LSH (2 bands × 8 planes) with a
+  bucket-population valve and exact cosine verification. Its verified
+  pair stream and the ranked top-K_NN adjacency over it (``_knn_ranked``)
+  are ONE memoized substrate (``functions/memo.py`` family
+  ``lsh_banded``): the kNN graph, kNN outliers, greedy and beam graph
+  search, submodular selection, pruned MaxSim and the kNN classifier all
+  read it, and their oracles share its SQL twin (``_KNN_CTES``).
+
 Hyperplanes are pseudo-random ±1 vectors derived from an LCG on (plane,
 dim) — integer arithmetic, so Spark and the DuckDB oracle build bit-equal
 planes without sharing code.
@@ -23,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..functions.memo import memo
 from ..functions.vectors import cosine, dot, norm
 
 TOP_K = 10
@@ -621,6 +630,15 @@ LSH_BAND_BITS = 8
 
 
 def sim_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-neighbor pairs (vec_a < vec_b, cos), memoized as an eager
+    localCheckpoint in the ``lsh_banded`` family: the verified pair
+    stream every graph-ANN consumer reads (see ``_build_lsh_banded``)."""
+    return memo(
+        "lsh_banded", spark, sf_dir, "pairs", lambda: _build_lsh_banded(spark, sf_dir)
+    )
+
+
+def _build_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-neighbor pairs via BANDED hyperplane LSH + exact cosine
     re-rank: candidates are pairs agreeing on ALL bits of at least one
     band; each band is an independent 8-plane code (planes 0-7, 8-15).
@@ -651,34 +669,39 @@ def sim_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", f"stack({LSH_BANDS}, {stack_args}) AS (band, code)"
     )
     # persist: the banded codes feed the valve count AND both self-join
-    # sides — three consumers of a 1024-term fold per row
+    # sides — three consumers of a 1024-term fold per row; released once
+    # the pair checkpoint has materialized
     bands = bands.persist()
-    keep = (
-        bands.groupBy("band", "code")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") <= LSH_MAX_BUCKET)
-        .select("band", "code")
-    )
-    bands = bands.join(keep, ["band", "code"])
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, ["band", "code"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
+    try:
+        keep = (
+            bands.groupBy("band", "code")
+            .agg(F.count(F.lit(1)).alias("bsz"))
+            .filter(F.col("bsz") <= LSH_MAX_BUCKET)
+            .select("band", "code")
         )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .withColumn("cos", cosine(F.col("emb_a"), F.col("emb_b")))
-        .filter(F.col("cos") >= PAIR_THRESHOLD)
-        .select("vec_a", "vec_b", "cos")
-    )
+        kept = bands.join(keep, ["band", "code"])
+        a, b = kept.alias("a"), kept.alias("b")
+        cand = (
+            a.join(b, ["band", "code"])
+            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+            .select(
+                F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"),
+            )
+            .dropDuplicates(["vec_a", "vec_b"])
+        )
+        ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
+        eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
+        return (
+            cand.join(ea, "vec_a")
+            .join(eb, "vec_b")
+            .withColumn("cos", cosine(F.col("emb_a"), F.col("emb_b")))
+            .filter(F.col("cos") >= PAIR_THRESHOLD)
+            .select("vec_a", "vec_b", "cos")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        bands.unpersist()
 
 
 def _ddb_code(bits: int, offset: int) -> str:
@@ -694,8 +717,8 @@ def _ddb_code(bits: int, offset: int) -> str:
            (a, b) -> a + b) AS INT)"""
 
 
-# CTE prefix shared with SIM_KNN_GRAPH_SQL (which consumes the same
-# verified banded-LSH pair stream).
+# CTE prefix shared by every oracle that reads the verified banded-LSH
+# pair stream (``_KNN_CTES`` extends it with the ranked adjacency).
 _BANDED_CTES = f"""coded AS (
   SELECT vec_id, embedding,
          {_ddb_code(LSH_BAND_BITS, 0)} AS c0,
@@ -737,6 +760,47 @@ SELECT vec_a, vec_b, cos FROM banded_pairs
 K_NN = 5
 
 
+def _symmetric(pairs: DataFrame) -> DataFrame:
+    """(a, b, cos) in both directions of every (vec_a, vec_b, cos) pair."""
+    return pairs.select(
+        F.col("vec_a").alias("a"), F.col("vec_b").alias("b"), "cos"
+    ).union(pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"), "cos"))
+
+
+def _knn_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed top-{K_NN} adjacency (a, b, cos, rk INT) over the
+    symmetrized verified pairs: one window exchange keyed by source node,
+    ranks pinned by (cos DESC, b ASC). (a, b) rows are unique because the
+    pair stream is. Memoized as an eager localCheckpoint next to the pair
+    stream in the ``lsh_banded`` family, so both are evicted together."""
+
+    def build() -> DataFrame:
+        w = Window.partitionBy("a").orderBy(F.desc("cos"), F.asc("b"))
+        return (
+            _symmetric(sim_lsh_banded(spark, sf_dir))
+            .withColumn("rk", F.row_number().over(w).cast("int"))
+            .filter(F.col("rk") <= K_NN)
+            .localCheckpoint(eager=True)
+        )
+
+    return memo("lsh_banded", spark, sf_dir, "knn", build)
+
+
+# The oracle twin of ``_knn_ranked``: ``sym`` and ``knn`` after the pair CTEs.
+_KNN_CTES = f"""{_BANDED_CTES},
+sym AS (
+  SELECT vec_a AS a, vec_b AS b, cos FROM banded_pairs
+  UNION ALL
+  SELECT vec_b AS a, vec_a AS b, cos FROM banded_pairs
+),
+knn AS (
+  SELECT a, b, cos,
+         CAST(ROW_NUMBER() OVER (PARTITION BY a ORDER BY cos DESC, b ASC) AS INT) AS rk
+  FROM sym
+  QUALIFY rk <= {K_NN}
+)"""
+
+
 def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual-kNN graph construction (§2.4 similarity substrate): edges
     (a, b) where each endpoint ranks the other within its top-{K_NN}
@@ -744,25 +808,13 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering, diversity filtering, and label propagation (mutual-kNN
     prunes hub nodes' asymmetric edges, which plain kNN graphs keep).
 
-    Built on the banded-LSH verified pair stream (approximate kNN — the
-    production shape: exact all-pairs kNN is O(n²) at corpus scale while
-    candidates here come from bucket-local joins): symmetrize the pairs,
-    one window exchange keyed by source node for per-node rank, then the
+    Built on the shared ranked adjacency ``_knn_ranked`` (approximate
+    kNN — the production shape: exact all-pairs kNN is O(n²) at corpus
+    scale while candidates here come from bucket-local joins): the
     mutuality check is a self-equi-join on the REVERSED (a, b) key —
     edge-stream-sized, never touching the vectors again. Ranks pin ties
     by (cos DESC, neighbor id)."""
-    # persist: the verified pair stream feeds both union branches, and
-    # the ranked kNN feeds both sides of the mutuality join
-    pairs = sim_lsh_banded(spark, sf_dir).persist()
-    sym = pairs.select(
-        F.col("vec_a").alias("a"), F.col("vec_b").alias("b"), "cos"
-    ).union(pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"), "cos"))
-    w = Window.partitionBy("a").orderBy(F.desc("cos"), F.asc("b"))
-    knn = (
-        sym.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= K_NN)
-        .persist()
-    )
+    knn = _knn_ranked(spark, sf_dir)
     x, y = knn.alias("x"), knn.alias("y")
     return (
         x.join(y, (F.col("x.a") == F.col("y.b")) & (F.col("x.b") == F.col("y.a")))
@@ -778,18 +830,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIM_KNN_GRAPH_SQL = f"""
-WITH {_BANDED_CTES},
-sym AS (
-  SELECT vec_a AS a, vec_b AS b, cos FROM banded_pairs
-  UNION ALL
-  SELECT vec_b AS a, vec_a AS b, cos FROM banded_pairs
-),
-knn AS (
-  SELECT a, b, cos,
-         CAST(ROW_NUMBER() OVER (PARTITION BY a ORDER BY cos DESC, b ASC) AS INT) AS rk
-  FROM sym
-  QUALIFY rk <= {K_NN}
-)
+WITH {_KNN_CTES}
 SELECT x.a AS vec_a, x.b AS vec_b, x.cos AS cos,
        x.rk AS rank_ab, y.rk AS rank_ba
 FROM knn x JOIN knn y ON x.a = y.b AND x.b = y.a
@@ -1696,22 +1737,16 @@ def embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against the full embedding table, which a pair-stream-only
     formulation would silently drop).
 
-    Plan: reuses the banded-LSH verified pair stream (never re-touches
-    the vectors), symmetrizes it, one per-node window for the top-K cut,
-    one keyed agg, one left join from the (key, id)-only embedding scan.
+    Plan: reads the shared ranked adjacency ``_knn_ranked`` (never
+    re-touches the vectors), one keyed agg, one left join from the
+    (key, id)-only embedding scan.
     Exactness: each cosine quantizes to integer micro-units BEFORE the
     sum (floor of a double — deterministic per value), so the aggregate
     is order-free and the ascending-rank LIMIT boundary pins by
     (score, vec_id).
     """
-    pairs = sim_lsh_banded(spark, sf_dir)
-    sym = pairs.select(
-        F.col("vec_a").alias("a"), F.col("vec_b").alias("b"), "cos"
-    ).union(pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"), "cos"))
-    w = Window.partitionBy("a").orderBy(F.desc("cos"), F.asc("b"))
     per_node = (
-        sym.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K_NN)
+        _knn_ranked(spark, sf_dir)
         .groupBy("a")
         .agg(
             F.count(F.lit(1)).cast("int").alias("nn"),
@@ -1732,22 +1767,11 @@ def embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_KNN_OUTLIERS_SQL = f"""
-WITH {_BANDED_CTES},
-sym AS (
-  SELECT vec_a AS a, vec_b AS b, cos FROM banded_pairs
-  UNION ALL
-  SELECT vec_b AS a, vec_a AS b, cos FROM banded_pairs
-),
-topk AS (
-  SELECT a, cos,
-         ROW_NUMBER() OVER (PARTITION BY a ORDER BY cos DESC, b ASC) AS rk
-  FROM sym
-  QUALIFY rk <= {K_NN}
-),
+WITH {_KNN_CTES},
 per_node AS (
   SELECT a, CAST(COUNT(*) AS INT) AS nn,
          SUM(CAST(floor(cos * 1000000) AS BIGINT)) AS sim_micro
-  FROM topk GROUP BY a
+  FROM knn GROUP BY a
 )
 SELECT vec_id,
        CAST(COALESCE(nn, 0) AS INT) AS n_neighbors,
@@ -1985,9 +2009,9 @@ GREEDY_HOPS = 3
 def sim_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-traversal ANN (§2.4 similarity — the THIRD index family
     next to hashing (LSH) and partitioning (IVF); the navigable-graph
-    idea underlying HNSW/NSG, reduced to its deterministic core): build
-    the directed top-{K_NN} neighbor graph from the verified LSH pair
-    stream, then answer each query by GREEDY DESCENT — start at a fixed
+    idea underlying HNSW/NSG, reduced to its deterministic core): over
+    the shared directed top-{K_NN} neighbor graph (``_knn_ranked``),
+    answer each query by GREEDY DESCENT — start at a fixed
     entry node (the smallest graph node id) and repeatedly hop to the
     neighbor most similar to the query, {GREEDY_HOPS} unrolled hops,
     tracking the best node seen. A real HNSW adds layered entry points
@@ -2000,18 +2024,7 @@ def sim_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same hops over the same graph.
     """
     e = Catalog(spark, sf_dir).table("embeddings")
-    pairs = sim_lsh_banded(spark, sf_dir)
-    sym = pairs.select(
-        F.col("vec_a").alias("a"), F.col("vec_b").alias("b"), "cos"
-    ).union(pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"), "cos"))
-    w = Window.partitionBy("a").orderBy(F.desc("cos"), F.asc("b"))
-    adj = (
-        sym.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K_NN)
-        .groupBy("a")
-        .agg(F.collect_set("b").alias("nbrs"))
-        .persist()
-    )
+    adj = _knn_ranked(spark, sf_dir).select("a", F.col("b").alias("cand"))
     entry = adj.agg(F.min("a").alias("cur"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
@@ -2031,10 +2044,7 @@ def sim_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(GREEDY_HOPS):
         cands = (
             state.join(adj, state.cur == adj.a)
-            .select(
-                "q_id", "q_emb", "best_cos", "best_node",
-                F.explode("nbrs").alias("cand"),
-            )
+            .select("q_id", "q_emb", "best_cos", "best_node", "cand")
             .join(
                 e.select(F.col("vec_id").alias("cand"), F.col("embedding").alias("cand_emb")),
                 "cand",
@@ -2076,7 +2086,7 @@ h{k} AS (
            ROW_NUMBER() OVER (PARTITION BY s.q_id ORDER BY
              {_DDB_COS.format(a='s.q_emb', b='eb.embedding')} DESC, c.b ASC) AS rn
     FROM h{k - 1} s
-    JOIN adj_edges c ON c.a = s.cur
+    JOIN knn c ON c.a = s.cur
     JOIN embeddings eb ON eb.vec_id = c.b
   ) t,
   LATERAL (SELECT t.cand AS cur,
@@ -2088,19 +2098,8 @@ h{k} AS (
 
 SIM_GRAPH_GREEDY_SEARCH_SQL = (
     f"""
-WITH {_BANDED_CTES},
-sym AS (
-  SELECT vec_a AS a, vec_b AS b, cos FROM banded_pairs
-  UNION ALL
-  SELECT vec_b AS a, vec_a AS b, cos FROM banded_pairs
-),
-adj_edges AS (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b,
-           ROW_NUMBER() OVER (PARTITION BY a ORDER BY cos DESC, b ASC) AS rk
-    FROM sym) WHERE rk <= {K_NN}
-),
-entry AS (SELECT MIN(a) AS cur FROM adj_edges),
+WITH {_KNN_CTES},
+entry AS (SELECT MIN(a) AS cur FROM knn),
 q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}),
 h0 AS (
   SELECT q.q_id, q.q_emb, entry.cur,
@@ -2129,24 +2128,13 @@ def sim_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     best node seen across all hops. Same cost model as greedy ×
     beam width — still corpus-size-independent after the graph build.
 
-    Plan per hop: frontier ⋈ adjacency (explode) ⋈ vectors, one
+    Plan per hop: frontier ⋈ adjacency ⋈ vectors, one
     per-query rank window over ≤ B·K candidates — tiny. The frontier
     dedup (a node reached via two paths) is part of the hop's groupBy,
     which is what keeps the beam from collapsing to duplicates.
     """
     e = Catalog(spark, sf_dir).table("embeddings")
-    pairs = sim_lsh_banded(spark, sf_dir)
-    sym = pairs.select(
-        F.col("vec_a").alias("a"), F.col("vec_b").alias("b"), "cos"
-    ).union(pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"), "cos"))
-    w = Window.partitionBy("a").orderBy(F.desc("cos"), F.asc("b"))
-    adj = (
-        sym.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K_NN)
-        .groupBy("a")
-        .agg(F.collect_set("b").alias("nbrs"))
-        .persist()
-    )
+    adj = _knn_ranked(spark, sf_dir).select("a", F.col("b").alias("nb"))
     entry = adj.agg(F.min("a").alias("node"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
@@ -2159,7 +2147,7 @@ def sim_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(GREEDY_HOPS):
         expanded = (
             frontier.join(adj, frontier.node == adj.a)
-            .select("q_id", "q_emb", F.explode("nbrs").alias("node"))
+            .select("q_id", "q_emb", F.col("nb").alias("node"))
             .union(frontier.select("q_id", "q_emb", "node"))
             .distinct()
             .join(
@@ -2198,7 +2186,7 @@ f{k} AS (
     FROM (
       SELECT DISTINCT q_id, q_emb, node FROM (
         SELECT s.q_id, s.q_emb, ae.b AS node
-        FROM f{k - 1} s JOIN adj_edges ae ON ae.a = s.node
+        FROM f{k - 1} s JOIN knn ae ON ae.a = s.node
         UNION
         SELECT q_id, q_emb, node FROM f{k - 1})
     ) c
@@ -2209,19 +2197,8 @@ f{k} AS (
 
 SIM_GRAPH_BEAM_SEARCH_SQL = (
     f"""
-WITH {_BANDED_CTES},
-sym AS (
-  SELECT vec_a AS a, vec_b AS b, cos FROM banded_pairs
-  UNION ALL
-  SELECT vec_b AS a, vec_a AS b, cos FROM banded_pairs
-),
-adj_edges AS (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b,
-           ROW_NUMBER() OVER (PARTITION BY a ORDER BY cos DESC, b ASC) AS rk
-    FROM sym) WHERE rk <= {K_NN}
-),
-entry AS (SELECT MIN(a) AS node FROM adj_edges),
+WITH {_KNN_CTES},
+entry AS (SELECT MIN(a) AS node FROM knn),
 q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}),
 f0 AS (
   SELECT q.q_id, q.q_emb, entry.node,
@@ -2267,17 +2244,11 @@ def corpus_submodular_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy trajectory replays bit-identically.
     """
     e = Catalog(spark, sf_dir).table("embeddings")
-    pairs = sim_lsh_banded(spark, sf_dir)
     edges = (
-        pairs.select(
-            F.col("vec_a").alias("u"), F.col("vec_b").alias("v"),
+        _symmetric(sim_lsh_banded(spark, sf_dir))
+        .select(
+            F.col("a").alias("u"), F.col("b").alias("v"),
             F.floor(F.col("cos") * 1_000_000).cast("bigint").alias("w"),
-        )
-        .union(
-            pairs.select(
-                F.col("vec_b").alias("u"), F.col("vec_a").alias("v"),
-                F.floor(F.col("cos") * 1_000_000).cast("bigint").alias("w"),
-            )
         )
         .union(
             e.select(
@@ -2362,11 +2333,9 @@ b{r} AS (
 
 CORPUS_SUBMODULAR_SELECT_SQL = (
     f"""
-WITH {_BANDED_CTES},
+WITH {_KNN_CTES},
 edges AS (
-  SELECT vec_a AS u, vec_b AS v, CAST(floor(cos * 1000000) AS BIGINT) AS w FROM banded_pairs
-  UNION ALL
-  SELECT vec_b, vec_a, CAST(floor(cos * 1000000) AS BIGINT) FROM banded_pairs
+  SELECT a AS u, b AS v, CAST(floor(cos * 1000000) AS BIGINT) AS w FROM sym
   UNION ALL
   SELECT vec_id, vec_id, CAST(1000000 AS BIGINT) FROM embeddings
 ),
@@ -2555,18 +2524,7 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ML_KNN_CLASSIFIER_EVAL_SQL = f"""
-WITH {_BANDED_CTES},
-sym AS (
-  SELECT vec_a AS a, vec_b AS b, cos FROM banded_pairs
-  UNION ALL
-  SELECT vec_b AS a, vec_a AS b, cos FROM banded_pairs
-),
-knn AS (
-  SELECT a, b, cos,
-         CAST(ROW_NUMBER() OVER (PARTITION BY a ORDER BY cos DESC, b ASC) AS INT) AS rk
-  FROM sym
-  QUALIFY rk <= {K_NN}
-),
+WITH {_KNN_CTES},
 mutual AS (
   SELECT x.a AS vec_a, x.b AS vec_b
   FROM knn x JOIN knn y ON x.a = y.b AND x.b = y.a
@@ -2699,13 +2657,9 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
         )
     )
-    pairs = sim_lsh_banded(spark, sf_dir).select("vec_a", "vec_b")
-    sym = pairs.union(
-        pairs.select(F.col("vec_b").alias("vec_a"), F.col("vec_a").alias("vec_b"))
-    )
-    ids = sym.select(
-        (F.col("vec_a") / MV_GROUP).cast("long").alias("q_id"),
-        (F.col("vec_b") / MV_GROUP).cast("long").alias("d_id"),
+    ids = _symmetric(sim_lsh_banded(spark, sf_dir)).select(
+        (F.col("a") / MV_GROUP).cast("long").alias("q_id"),
+        (F.col("b") / MV_GROUP).cast("long").alias("d_id"),
     )
     cand = (
         ids.filter(
@@ -2752,17 +2706,12 @@ def sim_maxsim_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIM_MAXSIM_PRUNED_SQL = f"""
-WITH {_BANDED_CTES},
-sym AS (
-  SELECT vec_a, vec_b FROM banded_pairs
-  UNION ALL
-  SELECT vec_b AS vec_a, vec_a AS vec_b FROM banded_pairs
-),
+WITH {_KNN_CTES},
 mcand AS (
-  SELECT DISTINCT vec_a // {MV_GROUP} AS q_id, vec_b // {MV_GROUP} AS d_id
+  SELECT DISTINCT a // {MV_GROUP} AS q_id, b // {MV_GROUP} AS d_id
   FROM sym
-  WHERE vec_a // {MV_GROUP} < {MV_N_QUERIES}
-    AND vec_b // {MV_GROUP} >= {MV_N_QUERIES}
+  WHERE a // {MV_GROUP} < {MV_N_QUERIES}
+    AND b // {MV_GROUP} >= {MV_N_QUERIES}
 ),
 mv AS (
   SELECT vec_id // {MV_GROUP} AS mv_id, vec_id, embedding FROM embeddings

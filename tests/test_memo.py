@@ -105,6 +105,10 @@ def test_reset_frees_every_memo_storage(spark):
         _verified_jaccard_pairs,
         _verified_simhash_pairs,
     )
+    from nzwirelessmap_fetch_spark.operators.similarity import (
+        _knn_ranked,
+        sim_lsh_banded,
+    )
     from nzwirelessmap_fetch_spark.operators.sketches import _top2_components
     from nzwirelessmap_fetch_spark.operators.text import _winnow_pairs
 
@@ -115,6 +119,8 @@ def test_reset_frees_every_memo_storage(spark):
         _verified_simhash_pairs(spark, SF_SMOKE),
         _winnow_pairs(spark, SF_SMOKE, max_df=None),
         *_top2_components(spark, SF_SMOKE),
+        sim_lsh_banded(spark, SF_SMOKE),
+        _knn_ranked(spark, SF_SMOKE),
     ]
     for frame in frames:
         frame.count()
@@ -131,7 +137,9 @@ def test_reset_frees_every_memo_storage(spark):
     ]
     assert fp.is_cached
     memo.reset()
-    assert all(memo.entries(f) == {} for f in ("jaccard_pairs", "pc_top2"))
+    assert all(
+        memo.entries(f) == {} for f in ("jaccard_pairs", "pc_top2", "lsh_banded")
+    )
     assert _eventually(lambda: not (held & _live_rdd_ids(spark)))
     assert not fp.is_cached
 

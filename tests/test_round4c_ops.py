@@ -32,7 +32,7 @@ from nzwirelessmap_fetch_spark.plans.stats import (
     agg_t_closeness,
     parts_croston_demand,
 )
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _cents(x: float) -> int:
@@ -449,6 +449,29 @@ def test_knn_classifier_eval_matches_graph_replay(spark):
         row = got[lbl]
         assert row["n_nodes"] == n and row["n_correct"] == c
         assert row["acc_ppm"] == c * 1_000_000 // n
+
+
+def test_lsh_banded_family_leaves_no_unowned_cache(spark):
+    """Run driver-style (toPandas, no clearCache between entries), the
+    eight entries on the banded-LSH substrate leave the cache manager
+    empty: the substrate is memo-owned checkpoints, and its builder
+    releases the one frame it persists."""
+    from nzwirelessmap_fetch_spark.plans import registry
+
+    entries = registry.queries()
+    spark.catalog.clearCache()
+    for name in (
+        "sim_lsh_banded",
+        "sim_knn_graph",
+        "embedding_knn_outliers",
+        "sim_graph_greedy_search",
+        "sim_graph_beam_search",
+        "corpus_submodular_select",
+        "sim_maxsim_pruned",
+        "ml_knn_classifier_eval",
+    ):
+        assert len(entries[name](spark, SF_SMOKE).toPandas()) > 0, name
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_window_cume_nth_matches_python_replay(spark):

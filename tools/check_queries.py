@@ -99,6 +99,7 @@ def main(names: list[str]) -> int:
     shared_builds: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_ATTR_SHARED") == "1":
         from nzwirelessmap_fetch_spark.operators import dedup as _dd
+        from nzwirelessmap_fetch_spark.operators import similarity as _sim
         from nzwirelessmap_fetch_spark.operators import sketches as _sk
         from nzwirelessmap_fetch_spark.operators import text as _tx
 
@@ -126,6 +127,8 @@ def main(names: list[str]) -> int:
         _attr_wrap(_dd, "_verified_simhash_pairs", "shared_simhash_pair_build")
         _attr_wrap(_tx, "_winnow_pairs", "shared_winnow_build")
         _attr_wrap(_sk, "_top2_components", "shared_pc_build")
+        # the miss-only builder: the registry holds the unwrapped entry
+        _attr_wrap(_sim, "_build_lsh_banded", "shared_lsh_banded_build")
 
     # admission-budget header (r10 ADVICE): snapshot at run START —
     # the budget derives from free disk, which mid-run spill churn

@@ -122,6 +122,17 @@ MEMO_FAMILIES: list[set[str]] = [
         "graph_community_label_prop",
         "graph_random_walks",
     },
+    {  # memo family "lsh_banded" (operators/similarity.py): the verified
+        # pair stream and the ranked kNN adjacency built over it
+        "sim_lsh_banded",
+        "sim_knn_graph",
+        "embedding_knn_outliers",
+        "sim_graph_greedy_search",
+        "sim_graph_beam_search",
+        "corpus_submodular_select",
+        "sim_maxsim_pruned",
+        "ml_knn_classifier_eval",
+    },
 ]
 
 
