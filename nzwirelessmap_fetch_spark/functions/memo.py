@@ -18,7 +18,9 @@ plan reads — ``unpersist()`` and ``clearCache()`` both leave those
 blocks in storage — removes a :func:`temp_dir` root, and recurses into
 tuples. An entry from a stopped application is dropped without a JVM
 call. Release never raises. ``reset(family)`` releases one family,
-``reset()`` every family.
+``reset()`` every family. ``release(frame)`` frees one frame's storage
+the same way, for an iterative builder whose next checkpoint
+supersedes its last.
 """
 
 from __future__ import annotations
@@ -79,11 +81,16 @@ def _release(app: str, value: Any) -> None:
         try:
             if sc is None or sc.applicationId != app:
                 return  # the application stopped; its storage went with it
-            value.unpersist()
-            leaves = value._jdf.queryExecution().analyzed().collectLeaves()
-            for i in range(leaves.size()):
-                leaf = leaves.apply(i)
-                if leaf.getClass().getSimpleName() == "LogicalRDD":
-                    leaf.rdd().unpersist(False)
+            release(value)
         except Exception:
             pass
+
+
+def release(frame: DataFrame) -> None:
+    """Unpersist ``frame`` and free the localCheckpoint RDDs its plan reads."""
+    frame.unpersist()
+    leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)

@@ -30,6 +30,7 @@ from ..catalog import Catalog
 from ..functions.hashing import MERSENNE_P, md5_long
 from ..functions.memo import memo
 from ..functions.vectors import dot, norm
+from ..session import session_conf
 
 # MinHash configuration: 16 permutations in 4 bands of 4 rows. Band-match
 # probability ~ 1-(1-j^4)^4 — the classic S-curve centered near j≈0.7.
@@ -866,12 +867,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     full width. Like the streaming state knob, frontier partitioning
     follows FRONTIER volume, not core count."""
     edges = _jaccard_edges(spark, sf_dir)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with session_conf(spark, "spark.sql.shuffle.partitions", "8"):
         return _label_propagation(spark, edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _label_propagation(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -962,12 +959,8 @@ def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _jaccard_edges(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with session_conf(spark, "spark.sql.shuffle.partitions", "8"):
         return _star_contraction(spark, edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -1808,8 +1801,8 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(d.select("doc_id", "source"), "doc_id")
         .select("source", md5_long60("shingle").alias("h"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    sh = sh.persist()
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     pairs = (
@@ -2399,8 +2392,7 @@ def dedup_snm_multipass_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratio("n_hits", "n_true_pairs").alias("recall"),
     ).localCheckpoint(eager=True)  # stats-sized (one row per pass + union)
     # release the three per-pass candidate persists now that the stats
-    # are materialized — they otherwise leak executor storage until the
-    # caller's clearCache() (r6 ADVICE)
+    # are materialized
     for _name, c in frames:
         if _name != "union":
             c.unpersist()

@@ -1209,7 +1209,8 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout — the corpus is touched once."""
     e = Catalog(spark, sf_dir).table("events")
     h = F.floor(F.unix_micros(F.col("ts")) / 3_600_000_000).cast("long")
-    hourly = e.groupBy(h.alias("h")).agg(F.count(F.lit(1)).alias("x")).persist()
+    hourly = e.groupBy(h.alias("h")).agg(F.count(F.lit(1)).alias("x"))
+    hourly = hourly.localCheckpoint(eager=True)
     out = None
     for k in ACF_LAGS:
         a = hourly.select(F.col("h").alias("ha"), F.col("x").alias("xa"))
@@ -1611,7 +1612,7 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (k rows). Union via |A|+|B|−|A∩B| — no second join.
     """
     e = Catalog(spark, sf_dir).table("events")
-    tu = e.select("event_type", "user_id").distinct().persist()
+    tu = e.select("event_type", "user_id").distinct()
     sizes = tu.groupBy("event_type").agg(F.count(F.lit(1)).alias("nu"))
     a, b = tu.alias("a"), tu.alias("b")
     inter = (
@@ -2065,7 +2066,7 @@ def events_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily.crossJoin(
         F.broadcast(daily.agg(F.min("d").alias("d0")))
     ).select((F.col("d") - F.col("d0")).alias("dr"), "v")
-    daily = daily.persist()
+    daily = daily.localCheckpoint(eager=True)
     out = None
     for lvl in range(1, HAAR_LEVELS + 1):
         half = 2 ** (lvl - 1)

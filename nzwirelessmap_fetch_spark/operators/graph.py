@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..session import session_conf
 from .dedup import _jaccard_edges
 
 N_ITERATIONS = 2
@@ -546,7 +547,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= COPURCHASE_MIN_W)
         .select("src", "dst")
-        .persist()
+        .localCheckpoint(eager=True)
     )
     ab = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
@@ -715,14 +716,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("t").alias("min_nbr"))
         .select("node", F.least(F.col("node"), F.col("min_nbr")).alias("c"))
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with session_conf(spark, "spark.sql.shuffle.partitions", "8"):
         comp = _label_propagation(spark, sym).select(
             F.col("doc_id").alias("node"), F.col("component_id").alias("c")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     return _modularity_ladder(
         edges, [("star", star, 0), ("components", comp, 0)]

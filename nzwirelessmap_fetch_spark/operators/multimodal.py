@@ -589,12 +589,12 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append({"doc_id": doc_id, "phash": phash_dhash(data)})
             yield pd.DataFrame(rows, columns=["doc_id", "phash"])
 
-    # persist: the hash build feeds both sides of the band self-join
+    # the hash build feeds both sides of the band self-join
     hashed = (
         media.filter(F.length("media") >= PHASH_BUCKETS)
         .select("doc_id", "media")
         .mapInPandas(hash_batch, "doc_id long, phash long")
-        .persist()
+        .localCheckpoint(eager=True)
     )
     mask = (1 << PHASH_BAND_BITS) - 1
     bands = hashed.select(

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..functions.memo import memo
+from ..functions.memo import memo, release
 from ..functions.vectors import cosine, dot, norm
 
 TOP_K = 10
@@ -169,9 +169,9 @@ def sim_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     group count, replayed identically by the oracle — at fixture scale
     no bucket exceeds the cap, so results equal the unvalved measure."""
     e = Catalog(spark, sf_dir).table("embeddings")
-    # persist: the 8-plane code (a 512-term fold per row) feeds both
-    # sides of the self-join — without it Spark evaluates it twice
-    bucketed = e.withColumn("bucket", _bucket_expr().cast("int")).persist()
+    # the 8-plane code (a 512-term fold per row) feeds both sides of the
+    # self-join — read live, Spark evaluates it twice
+    bucketed = e.withColumn("bucket", _bucket_expr().cast("int")).localCheckpoint(eager=True)
     keep = (
         bucketed.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("bsz"))
@@ -513,8 +513,8 @@ def sim_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates are ≤ 9·n·cap — linear in the corpus. Deterministic and
     replayed by the oracle; at fixture scale no bucket exceeds the cap."""
     e = Catalog(spark, sf_dir).table("embeddings")
-    # persist: home codes feed the probe fan-out AND the index side
-    home = e.withColumn("bucket", _bucket_expr().cast("int")).persist()
+    # home codes feed the probe fan-out AND the index side
+    home = e.withColumn("bucket", _bucket_expr().cast("int")).localCheckpoint(eager=True)
     keep = (
         home.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("bsz"))
@@ -945,10 +945,10 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(KMEANS_ITERATIONS):
         cents = _update_centroids(_assign_cells(train, cents))
-    # persist: the trained K-row centroid table is consumed by the final
-    # assignment AND the query-probe ranking — without it each consumer
+    # the trained K-row centroid table is consumed by the final
+    # assignment AND the query-probe ranking — read live, each consumer
     # re-runs both Lloyd iterations
-    cents = cents.persist()
+    cents = cents.localCheckpoint(eager=True)
     assigned = _assign_cells(e, cents)
 
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -2144,7 +2144,7 @@ def sim_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e.select(F.col("vec_id").alias("node"), F.col("embedding").alias("n_emb")), "node")
         .select("q_id", "q_emb", "node", cosine(F.col("q_emb"), F.col("n_emb")).alias("cos"))
     )
-    for _ in range(GREEDY_HOPS):
+    for hop in range(GREEDY_HOPS):
         expanded = (
             frontier.join(adj, frontier.node == adj.a)
             .select("q_id", "q_emb", F.col("nb").alias("node"))
@@ -2161,12 +2161,14 @@ def sim_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # but an un-truncated 3-hop unroll re-derives the whole LSH pair
         # build inside every hop's window (the power-iteration lineage
         # lesson, PLANS.md) — measured 20 s → ~12 s at sf0.01
-        frontier = (
+        prev, frontier = frontier, (
             expanded.withColumn("rk", F.row_number().over(wq))
             .filter(F.col("rk") <= BEAM_WIDTH)
             .select("q_id", "q_emb", "node", "cos")
             .localCheckpoint(eager=True)
         )
+        if hop:
+            release(prev)  # the previous hop's checkpoint
     wq = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("node"))
     return (
         frontier.withColumn("rk", F.row_number().over(wq).cast("int"))
@@ -2283,15 +2285,22 @@ def corpus_submodular_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         picks.append(sel.select(F.lit(r + 1).alias("round"), "sel", "gain"))
+        if r + 1 == SUBMOD_ROUNDS:
+            break  # no later round reads the coverage state
         cover = (
             edges.join(F.broadcast(sel), edges.u == F.col("sel"))
             .select(F.col("v").alias("node"), F.col("w").alias("nw"))
         )
-        best = (
+        prev, best = best, (
             best.join(cover, "node", "left")
             .select("node", F.greatest(F.col("best"), F.coalesce(F.col("nw"), F.lit(0))).alias("best"))
             .localCheckpoint(eager=True)
         )
+        if r:
+            release(prev)  # the previous round's checkpoint
+    # the returned plan reads only the picks' checkpoints
+    release(edges)
+    release(best)
     out = picks[0]
     for pdf in picks[1:]:
         out = out.unionAll(pdf)

@@ -776,12 +776,11 @@ def corpus_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently shrink the corpus). At 100 TB the dup-span set takes the
     same df-cap valve as every hot-key family member."""
     d = Catalog(spark, sf_dir).table("documents")
-    # persisted: `w` feeds the span explode, the word explode AND the
+    # checkpointed: `w` feeds the span explode, the word explode AND the
     # final doc spine; `pos` feeds the dup agg and the coverage semi-join
-    # — without the persists the md5-span subtree evaluates 3× (measured
-    # 11.3 s → ~4 s at sf0.01). Both frames are corpus-row / span-row
-    # sized with bounded payloads.
-    w = d.select("doc_id", F.split("text", " ").alias("w")).persist()
+    # — read live, the md5-span subtree evaluates 3×. Both frames are
+    # corpus-row / span-row sized with bounded payloads.
+    w = d.select("doc_id", F.split("text", " ").alias("w")).localCheckpoint(eager=True)
     spans_arr = F.expr(
         f"""CASE WHEN size(w) >= {SPAN_W}
              THEN transform(sequence(1, size(w) - {SPAN_W} + 1),
@@ -794,7 +793,7 @@ def corpus_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = (
         w.select("doc_id", F.explode(spans_arr).alias("s"))
         .select("doc_id", F.col("s.i").alias("i"), F.col("s.h").alias("h"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     # one shuffle (partial-agg COUNT DISTINCT) instead of distinct +
     # groupBy stacking two exchanges on different keys
@@ -1783,9 +1782,8 @@ def _winnow_pairs_array_verify(
         # slice length n_fp - alpha + 1 NEGATIVE (alpha floors at
         # MIN_SHARED; Spark's slice() throws on negative length).
         .filter(F.col("n_fp") >= WINNOW_MIN_SHARED)
-        .persist()
+        .localCheckpoint(eager=True)  # three consumers below
     )
-    sets.count()  # eager fill: three consumers below
     alpha = F.greatest(
         F.lit(WINNOW_MIN_SHARED), F.ceil(F.col("n_fp") / 2)
     ).cast("int")
@@ -1875,7 +1873,7 @@ def _winnow_base_fingerprints(
     memoized in the ``winnow_fingerprints`` family: the md5-per-kgram
     extraction is the dominant shared stage (6.8 s of the 15 s capped
     build at sf0.1) and THREE registry entries consume it (exact,
-    capped, cap_eval). Value is (persisted fp frame, n_docs)."""
+    capped, cap_eval). Value is (checkpointed fp frame, n_docs)."""
     return memo(
         "winnow_fingerprints", spark, sf_dir, (),
         lambda: _build_winnow_base_fingerprints(spark, sf_dir),
@@ -1914,9 +1912,8 @@ def _build_winnow_base_fingerprints(
     fp = (
         d.select("doc_id", grams.alias("g"))
         .select("doc_id", F.explode(fps).alias("fp"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    fp.count()  # eager fill: every consumer below reads the cache
     return fp, d.count()
 
 
@@ -1938,10 +1935,8 @@ def _winnow_fingerprints(
         if max_df == WINNOW_ADAPTIVE:
             max_df = _winnow_adaptive_cap(dfs, n_docs)
         keep = dfs.filter(F.col("df") <= max_df).select("fp")
-        capped = fp.join(keep, "fp").select("doc_id", "fp").persist()
-        capped.count()
+        fp = fp.join(keep, "fp").select("doc_id", "fp").localCheckpoint(eager=True)
         dfs.unpersist()
-        fp = capped
     return fp
 
 
@@ -1962,15 +1957,13 @@ def _winnow_pairs(
 def _build_winnow_pairs(
     spark: SparkSession, sf_dir: str, max_df: int | None | str
 ) -> DataFrame:
-    # Fingerprint extraction shared with the array-verify variant
-    # (round-robin pre-split + persist + optional df-cap all live in
-    # `_winnow_fingerprints` — the one-file-scan lesson and the r4
-    # unpersist ADVICE are documented there).
+    # Fingerprint extraction (and the optional df-cap) shared with the
+    # array-verify variant: `_winnow_fingerprints`.
     width = max(4 * int(spark.conf.get("spark.sql.shuffle.partitions")), 128)
     fp = _winnow_fingerprints(spark, sf_dir, max_df)
     if max_df is None:
         # Pre-flight the EXACT measure: Σdf² IS the pair-join output
-        # row count; computing it from the (persisted) fp table costs
+        # row count; computing it from the (checkpointed) fp table costs
         # one vocab-sized agg, vs. filling local disk mid-shuffle when
         # the measure is infeasible (r7 sf1 gate: ~1.9G pair rows vs
         # ~79 GB scratch). Both sf1 fixtures exceed the default budget
@@ -2275,7 +2268,7 @@ def text_lm_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # doc_pairs feeds the corpus count AND the per-doc join — one
     # tokenization, two consumers
-    doc_pairs = doc_pairs.persist()
+    doc_pairs = doc_pairs.localCheckpoint(eager=True)
     counts = doc_pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cn"))
     return (
         doc_pairs.join(counts, ["w1", "w2"])
@@ -2350,7 +2343,6 @@ def text_collocations_dice(spark: SparkSession, sf_dir: str) -> DataFrame:
             "i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2))"
         ),
     ).otherwise(F.expr("array()").cast("array<struct<w1:string,w2:string>>"))
-    tokd = tokd.persist()
     bi = (
         tokd.select(F.explode(pairs_expr).alias("p"))
         .select("p.w1", "p.w2")
@@ -2501,7 +2493,6 @@ def corpus_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = Catalog(spark, sf_dir).table("documents")
     words = d.select("doc_id", F.explode(_words()).alias("w"))
-    words = words.persist()
     counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
     wrk = Window.orderBy(F.desc("cw"), F.asc("w"))
     vocab = (
@@ -2797,15 +2788,14 @@ def corpus_dsir_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "source", (md5_long("bg") % DSIR_BUCKETS).alias("bucket")
         )
-        # persist: FIVE consumers read the exploded+hashed bigram stream
-        # (two totals, two bucket aggs, the scoring join) — without it
-        # the corpus-wide explode+md5 re-ran per consumer (measured ~5×
-        # the scan work; bench clearCache frees it between queries)
-        .persist()
+        # checkpointed: FIVE consumers read the exploded+hashed bigram
+        # stream (two totals, two bucket aggs, the scoring join) — read
+        # live, the corpus-wide explode+md5 re-ran per consumer
+        .localCheckpoint(eager=True)
     )
     target = posts.filter(F.col("source") == BENCHMARK_SOURCE)
     raw = posts.filter(F.col("source") != BENCHMARK_SOURCE)
-    # both corpus totals in ONE pass over the persisted stream (two
+    # both corpus totals in ONE pass over the checkpointed stream (two
     # bounded scalars on the driver, not two corpus jobs)
     tot_rows = {
         r.is_t: r["count"]
@@ -3089,7 +3079,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     left = big.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("fanout")

@@ -634,13 +634,10 @@ def agg_histogram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin_ = F.greatest(F.lit(0), F.least(F.lit(HIST_BINS - 1), raw)).cast("int")
     # month index = months since epoch — integer, lag-safe across years
     midx = (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).cast("int")
-    # persist: the binned counts feed the span probe AND the dense grid
-    # join — without it the orders scan+shuffle runs twice
     counts = (
         o.select(midx.alias("m"), bin_.alias("bin"))
         .groupBy("m", "bin")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
     span = counts.agg(
         F.min("m").alias("m_lo"), F.max("m").alias("m_hi")

@@ -20,7 +20,9 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from pathlib import Path
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -65,3 +67,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one runtime conf for the block, then restore its prior value,
+    or unset it if it had none."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

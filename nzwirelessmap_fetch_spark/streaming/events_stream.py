@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import session_conf
+
 WATERMARK = "10 minutes"
 WINDOW = "5 minutes"
 _query_counter = itertools.count()
@@ -122,12 +124,11 @@ def _run_to_completion(
     state_partitions: int | None = None,
 ) -> DataFrame:
     name = f"stream_out_{next(_query_counter)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
+    with session_conf(
+        spark,
         "spark.sql.shuffle.partitions",
         str(state_partitions or STREAM_STATE_PARTITIONS),
-    )
-    try:
+    ):
         q = (
             agg.writeStream.outputMode(mode)
             .format("memory")
@@ -140,8 +141,6 @@ def _run_to_completion(
             progress = [p for p in (q.recentProgress or []) if p]
             last = q.lastProgress or {}
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # recentProgress retains only the newest
     # spark.sql.streaming.numRecentProgressUpdates (default 100)
     # batches; on longer runs record how many fell off rather than
@@ -1215,12 +1214,11 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
+    with session_conf(
+        spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    ):
         agg = (
             _event_stream(spark, sf_dir)
             .groupBy("user_id")
@@ -1231,13 +1229,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeMode="None",
             )
         )
-        out = _run_to_completion(agg, spark, mode="update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return out
+        return _run_to_completion(agg, spark, mode="update")
 
 
 STREAM_TRANSFORM_WITH_STATE_SQL = """
@@ -1348,9 +1340,9 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_user_stats_batch(sink, batch, batch_id)
 
     stream = _event_stream(spark, sf_dir).select("user_id", "value")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with session_conf(
+        spark, "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    ):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option(
@@ -1360,8 +1352,6 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return sink.read_version(spark, "user_stats", "latest")
 
 

@@ -131,17 +131,18 @@ def test_reset_frees_every_memo_storage(spark):
             leaf = leaves.apply(i)
             if leaf.getClass().getSimpleName() == "LogicalRDD":
                 held.add(leaf.rdd().id())
-    assert held <= _live_rdd_ids(spark)
+    # the winnow fingerprints are a checkpoint too, read by the pair build
     fp, _n_docs = memo.entries("winnow_fingerprints")[
         (spark.sparkContext.applicationId, SF_SMOKE, ())
     ]
-    assert fp.is_cached
+    held.add(_checkpoint_id(fp))
+    assert held <= _live_rdd_ids(spark)
     memo.reset()
     assert all(
-        memo.entries(f) == {} for f in ("jaccard_pairs", "pc_top2", "lsh_banded")
+        memo.entries(f) == {}
+        for f in ("jaccard_pairs", "pc_top2", "lsh_banded", "winnow_fingerprints")
     )
     assert _eventually(lambda: not (held & _live_rdd_ids(spark)))
-    assert not fp.is_cached
 
 
 def test_stopped_application_entry_dropped_without_jvm_call(spark):

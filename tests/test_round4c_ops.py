@@ -453,9 +453,10 @@ def test_knn_classifier_eval_matches_graph_replay(spark):
 
 def test_lsh_banded_family_leaves_no_unowned_cache(spark):
     """Run driver-style (toPandas, no clearCache between entries), the
-    eight entries on the banded-LSH substrate leave the cache manager
-    empty: the substrate is memo-owned checkpoints, and its builder
-    releases the one frame it persists."""
+    eight entries on the banded-LSH substrate and every entry that reads
+    a frame more than once leave the cache manager empty: shared frames
+    are eager checkpoints or memo-owned, and a builder that persists
+    releases the frame before it returns."""
     from nzwirelessmap_fetch_spark.plans import registry
 
     entries = registry.queries()
@@ -469,9 +470,26 @@ def test_lsh_banded_family_leaves_no_unowned_cache(spark):
         "corpus_submodular_select",
         "sim_maxsim_pruned",
         "ml_knn_classifier_eval",
+        "agg_histogram_drift",
+        "corpus_source_overlap",
+        "corpus_span_scrub",
+        "corpus_winnowing_cap_eval",
+        "text_lm_novelty",
+        "text_collocations_dice",
+        "corpus_oov_rate",
+        "corpus_dsir_affinity",
+        "text_kneser_ney_bigram",
+        "multimodal_phash_dedup",
+        "graph_link_prediction",
+        "events_autocorrelation",
+        "events_audience_overlap",
+        "events_haar_energy",
+        "sim_lsh_bucketed",
+        "sim_lsh_multiprobe",
+        "sim_ivf_kmeans",
     ):
         assert len(entries[name](spark, SF_SMOKE).toPandas()) > 0, name
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
 
 
 def test_window_cume_nth_matches_python_replay(spark):

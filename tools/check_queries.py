@@ -2,8 +2,11 @@
 
 Runs registry queries at sf0.01 against their DuckDB oracles with
 per-query wall-clock, mirroring CORRECTNESS_r{N}.json (row count +
-sorted column names + order-insensitive value hash). Use to pre-flight
-a round:
+sorted column names + order-insensitive value hash). Like the driver, it
+never clears the cache between entries: an entry after which Spark's
+cache manager is not empty left a frame no code releases, and is
+recorded ``unowned_cache: true`` and counted as failing. Use to
+pre-flight a round:
 
     python tools/check_queries.py                 # whole registry
     python tools/check_queries.py multimodal_features stream_dedup_events
@@ -25,6 +28,16 @@ from nzwirelessmap_fetch_spark.session import get_spark
 from tests.oracle import frame_fingerprint
 
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF", "/root/testdata/sf0.01")
+
+
+def _unowned_cache(spark, row: dict) -> bool:
+    """Flag ``row`` if the entry left a frame in the cache manager, then
+    clear it so the next entry is judged on its own frames."""
+    if spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        return False
+    row["unowned_cache"] = True
+    spark.catalog.clearCache()
+    return True
 
 
 def main(names: list[str]) -> int:
@@ -245,8 +258,10 @@ def main(names: list[str]) -> int:
                 # was computed (r9 ADVICE: a column-rename-only
                 # divergence that keeps sorted-name positions must not
                 # pass the content-hash path green)
+                leaked = _unowned_cache(spark, row)
                 if (
-                    not row.get("rows_match", True)
+                    leaked
+                    or not row.get("rows_match", True)
                     or not row.get("content_hash_match", True)
                     or not row.get("schema_match", True)
                 ):
@@ -307,16 +322,19 @@ def main(names: list[str]) -> int:
             else:
                 row = {"err": f"{type(e).__name__}: {e}"[:300],
                        "total_sec": round(time.monotonic() - t0, 2)}
+        leaked = _unowned_cache(spark, row)
         ok = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
-        if not ok and not row.get("rows_only") and not row.get("bounded"):
+        if leaked or (not ok and not row.get("rows_only") and not row.get("bounded")):
             failures += 1
         results[name] = row
         print(f"{name}: {json.dumps(row)}", flush=True)
 
     bounded = sum(1 for r in results.values() if r.get("bounded"))
+    unowned = sum(1 for r in results.values() if r.get("unowned_cache"))
     print(
         f"\n{len(names)} checked, {failures} failing"
         + (f", {bounded} budget-bounded (twin-adjudicated)" if bounded else "")
+        + (f", {unowned} with unowned_cache" if unowned else "")
     )
     out = os.environ.get("SPARK_GRAFT_CHECK_OUT")
     if out:
