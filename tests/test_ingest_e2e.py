@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import datetime
 import sqlite3
+import sys
 import threading
 import zipfile
+from contextlib import closing
 from functools import partial
 from http.server import SimpleHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
@@ -31,6 +33,7 @@ from nzwirelessmap_fetch_spark.pipeline import (
     run_pipeline_from_url,
 )
 from nzwirelessmap_fetch_spark.plans.flagship import FLAGSHIP_ORACLE_SQL, flagship
+from nzwirelessmap_fetch_spark.sinks.writers import collect_all_strings
 from nzwirelessmap_fetch_spark.sources.acquire import (
     fetch_artifact,
     rfc1123_to_rfc3339,
@@ -159,11 +162,94 @@ def test_read_sqlite_table_roundtrip(spark, prism_db, tmp_path):
 
 
 def test_flagship_sql_over_sqlite_matches_parquet(spark, prism_db, tmp_path):
+    """Row content, not just row count: a view bound to the wrong staged
+    file cannot pass."""
     views = register_sqlite_database(spark, prism_db, staging_dir=tmp_path)
     assert set(views) == set(FLAGSHIP_TABLES)
-    got = spark.sql(FLAGSHIP_ORACLE_SQL).count()
-    want = flagship(spark, SF_SMOKE).count()
-    assert got == want and got > 0
+    got = sorted(collect_all_strings(spark.sql(FLAGSHIP_ORACLE_SQL)))
+    want = sorted(collect_all_strings(flagship(spark, SF_SMOKE)))
+    assert got == want and got
+
+
+def _spark_quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def test_register_odd_table_names_and_staging_path(spark, tmp_path):
+    """Quotes in table names and a staging path holding a space, a quote
+    and a backslash reach SQLite, the staged file and the view intact."""
+    db = tmp_path / "odd.sqlite3"
+    counts = {'it\'s a "table"': 3, "back`tick": 2, "plain": 1}
+    with closing(sqlite3.connect(db)) as conn:
+        for name, n in counts.items():
+            quoted = '"' + name.replace('"', '""') + '"'
+            conn.execute(f'CREATE TABLE {quoted} ("k" INTEGER, "it\'s" TEXT)')
+            conn.executemany(
+                f"INSERT INTO {quoted} VALUES (?, ?)", [(i, f"v{i}") for i in range(n)]
+            )
+        conn.commit()
+    staging = tmp_path / "stage 'q' \\ dir"
+    views = register_sqlite_database(spark, db, prefix="odd_", staging_dir=staging)
+    assert set(views) == set(counts)
+    for name, n in counts.items():
+        view = _spark_quoted(f"odd_{name}")
+        assert spark.sql(f"SELECT count(*) FROM {view}").first()[0] == n
+        assert views[name].count() == n
+        assert sorted(spark.table(view).columns) == ["it's", "k"]
+
+
+def test_register_many_tables_under_thread_contention(spark, tmp_path):
+    """More tables than registration threads, with the interpreter
+    switching threads as often as it can: every view still reads its own
+    table's staged file."""
+    db = tmp_path / "many.sqlite3"
+    counts = {f"t{i:02d}": i + 1 for i in range(24)}
+    with closing(sqlite3.connect(db)) as conn:
+        for name, n in counts.items():
+            conn.execute(f"CREATE TABLE {name} (k INTEGER)")
+            conn.executemany(f"INSERT INTO {name} VALUES (?)", [(i,) for i in range(n)])
+        conn.commit()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        views = register_sqlite_database(spark, db, prefix="many_", staging_dir=tmp_path / "s")
+    finally:
+        sys.setswitchinterval(interval)
+    assert list(views) == sorted(counts)
+    union = " UNION ALL ".join(
+        f"SELECT '{name}' AS t, count(*) AS n FROM many_{name}" for name in counts
+    )
+    assert dict(spark.sql(union).collect()) == counts
+
+
+def _jvm_threads(sc) -> int:
+    """Live JVM threads, less Spark's block-manager pools: the
+    ContextCleaner grows those on its own schedule as broadcasts that
+    earlier tests left behind are freed."""
+    threads = sc._jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
+    return sum(not t.getName().startswith("block-manager-") for t in threads)
+
+
+def test_register_runs_no_job_and_leaks_no_thread(spark, prism_db, tmp_path):
+    """Registration is schema-explicit, so it issues no Spark job; its
+    worker threads end with each call, on the Python and the JVM side."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "register_sqlite_database_no_jobs"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    threads_before = _jvm_threads(sc)
+    sc.setJobGroup(group, "ingest only")
+    try:
+        for i in range(20):
+            register_sqlite_database(spark, prism_db, staging_dir=tmp_path / str(i))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    # a leak would keep at least one JVM thread per call, 20 here
+    assert _jvm_threads(sc) - threads_before <= 8
+    assert not [t for t in threading.enumerate() if t.name.startswith("sqlite_register")]
 
 
 # --- P1/P2: HTTP acquisition with Last-Modified keying ------------------

@@ -2,11 +2,11 @@
 steady state (r10 verdict directive #5).
 
 The byte/dirent growth laws were probe-measured by
-scaling_checkpoint_bytes.py against the raw protocol; this tool drives
-the LIVE path instead: a Structured Streaming query (rate-micro-batch
-source → foreachBatch → merge_user_stats_batch → merge_into →
-write_version → _maybe_checkpoint) commits ≥10³ MERGE versions into one
-table, with
+scaling_checkpoint_bytes.py (deleted; it is in git history) against the
+raw protocol; this tool drives the LIVE path instead: a Structured
+Streaming query (rate-micro-batch source → foreachBatch →
+merge_user_stats_batch → merge_into → write_version → _maybe_checkpoint)
+commits ≥10³ MERGE versions into one table, with
 
   - read-cost flatness sampled from a FRESH reader every 100 commits
     (resolve('latest') + one version_as_of — cold state reconstruction,
