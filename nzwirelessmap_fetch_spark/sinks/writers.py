@@ -245,32 +245,27 @@ class SnapshotParquetTable:
     def _log_dir(self, table: str) -> Path:
         return self.root / table / "_log"
 
-    # Checkpoint every N commits (r8 verdict directive #6): without it
-    # every read-path replay is O(versions) FILE READS — at the 10⁵-
-    # commit steady state of a streaming MERGE sink that makes the
-    # driver-side log scan the bottleneck. Delta's shape: a snapshot of
-    # the reader-visible STATE every interval + tail replay, so a read
-    # costs pointer + checkpoint + ≤interval tail files, FLAT in version
-    # count (growth row in SCALING.md). Checkpoints are written through
-    # the same tmp + os.link O_EXCL protocol as commits; the
-    # `_last_checkpoint` pointer is a read cache like `_latest` (stale
-    # pointer = longer tail probe, never wrong data).
+    # Checkpoint every N commits. Without one, every read replays the
+    # log from seq 0: O(versions) file reads, which at the 10⁵-commit
+    # steady state of a streaming MERGE sink makes the driver-side log
+    # read the bottleneck. Delta's shape: a snapshot of the
+    # reader-visible STATE every interval plus a tail replay, so a read
+    # costs pointer + checkpoint + ≤interval tail files (growth rows in
+    # SCALING.md).
     #
-    # MULTI-PART since r10 (r9 verdict directive #1): the r9 monolithic
-    # checkpoint re-wrote the FULL index every interval — O(versions)
-    # bytes per write, O(V²/interval) cumulative, the write-side twin of
-    # the read bottleneck r9 fixed. A checkpoint is now a small MANIFEST
-    # naming immutable PART files ('<lo>-<hi>.cppart', index rows for
-    # seqs in (lo, hi]); each checkpoint writes one new interval-sized
-    # part and then merges equal-span neighbors (the classic logarithmic
-    # / binary-counter method, same discipline as an LSM level merge),
-    # so a row is rewritten ≤ log₂(V/interval) times — cumulative bytes
-    # O(V·log V) ≈ linear (measured vs the quadratic r9 law in
-    # SCALING.md r10) and parts per manifest ≤ log₂(V/interval).
+    # A checkpoint is a small MANIFEST naming immutable PART files
+    # ('<lo>-<hi>.cppart', index rows for seqs in (lo, hi]). Each
+    # checkpoint writes one new interval-sized part and then merges
+    # equal-span neighbors (the binary-counter method, the same
+    # discipline as an LSM level merge), so a row is rewritten
+    # ≤ log₂(V/interval) times: cumulative bytes O(V·log V) and parts per
+    # manifest ≤ log₂(V/interval). Manifests, parts and the
+    # `_last_checkpoint` pointer are published through the same tmp +
+    # os.link O_EXCL protocol as commits. The pointer is a read cache like
+    # `_latest`: a stale one costs a longer tail replay, never wrong data.
     # Superseded manifests and the parts only they reference are reaped
-    # past CHECKPOINT_KEEP; a reader holding a reaped manifest gets
-    # FileNotFoundError and falls back to the full audit scan — the
-    # same torn-pointer degradation path, never a wrong answer.
+    # past CHECKPOINT_KEEP; a reader whose manifest or part was reaped
+    # under it replays from seq 0, as when there is no checkpoint yet.
     CHECKPOINT_INTERVAL = 10
     CHECKPOINT_KEEP = 2  # manifests retained (current + 1 for in-flight readers)
 
@@ -281,16 +276,17 @@ class SnapshotParquetTable:
         see partial JSON.
 
         This is the full-fidelity AUDIT scan — deliberately O(versions)
-        (every entry, every field). Hot read paths (resolve /
-        version_as_of / is_committed / schema_of / vacuum) go through
-        the checkpointed ``_state`` instead."""
+        (every entry, every field) — behind ``commit_log``, the
+        ``VacuumedVersionError`` message, tools and tests. Every other
+        read (version_as_of / is_committed / schema_of / vacuum / the
+        log tail) goes through ``_state``."""
         ldir = self._log_dir(table)
         if not ldir.exists():
             return []
         return [
             json.loads(p.read_text())
             for p in sorted(ldir.iterdir())
-            if p.suffix == ".json" and not p.name.endswith(".checkpoint.json")
+            if p.suffix == ".json"
         ]
 
     def _checkpoint_pointer(self, table: str) -> Path:
@@ -306,22 +302,11 @@ class SnapshotParquetTable:
         per-checkpoint directory scan re-introduces at the syscall
         level the quadratic cumulative cost the multi-part redesign
         removed at the byte level (10⁴ reaps × 10⁵ dirents at the
-        streaming-MERGE steady state). r9-era monolithic manifests
-        were written flat in the log dir; reads fall back there."""
+        streaming-MERGE steady state)."""
         return self._log_dir(table) / "_checkpoints"
 
     def _manifest_path(self, table: str, seq: int) -> Path:
         return self._checkpoint_dir(table) / f"{seq:08d}.checkpoint.json"
-
-    def _read_manifest(self, table: str, seq: int) -> dict:
-        """Manifest by seq; falls back to the r9-era flat location."""
-        try:
-            return json.loads(self._manifest_path(table, seq).read_text())
-        except FileNotFoundError:
-            return json.loads(
-                (self._log_dir(table) / f"{seq:08d}.checkpoint.json")
-                .read_text()
-            )
 
     def _part_path(self, table: str, name: str) -> Path:
         return self._checkpoint_dir(table) / name
@@ -331,36 +316,31 @@ class SnapshotParquetTable:
         lo, hi = name.removesuffix(".cppart").split("-")
         return int(lo), int(hi)
 
-    def _state(self, table: str) -> dict | None:
-        """Reader-visible log state via checkpoint + tail replay:
-        ``{"seq", "index": [[seq, version, commit_ts, op], ...],
-        "schema", "latest"}``. Returns None when no checkpoint exists
-        yet (callers fall back to the full scan). Cost: one pointer
-        read + one manifest read + ≤log₂(V/interval) part reads + the
-        tail files past the checkpoint (≤ CHECKPOINT_INTERVAL when the
-        pointer is fresh) — flat-to-logarithmic in total version
-        count."""
-        ptr = self._checkpoint_pointer(table)
-        if not ptr.exists():
-            return None
+    def _state(self, table: str) -> dict:
+        """Reader-visible log state ``{"seq", "index": [[seq, version,
+        commit_ts, op], ...], "schema", "latest"}``, plus the checkpoint
+        it started from: ``"base"`` (its seq) and ``"parts"`` (0 and []
+        without one). Starts from the checkpoint when its pointer,
+        manifest and parts are readable, and otherwise from seq 0 (no
+        checkpoint yet, a torn pointer, a manifest or part reaped under
+        a stale reader, a malformed file); either way the entries past
+        it are replayed by the same sequential probe, with no directory
+        listing. Cost from a checkpoint: one pointer read + one manifest
+        read + ≤log₂(V/interval) part reads + the tail past it
+        (≤ CHECKPOINT_INTERVAL when the pointer is fresh)."""
         try:
-            cp_seq = int(ptr.read_text().strip())
-            cp = self._read_manifest(table, cp_seq)
-            if "parts" in cp:
-                index: list[list] = []
-                for pname in cp["parts"]:
-                    part = json.loads(self._part_path(table, pname).read_text())
-                    index.extend(list(r) for r in part["index"])
-            else:
-                # r9 monolithic checkpoint — still readable in place
-                index = [list(r) for r in cp["index"]]
-        except (ValueError, FileNotFoundError, KeyError):
-            # torn pointer, reaped manifest/part under a stale reader,
-            # or a malformed file: fall back to the full scan
-            return None
-        schema = cp.get("schema")
-        latest = cp.get("latest")
-        seq = int(cp["seq"])
+            cp_seq = int(self._checkpoint_pointer(table).read_text())
+            cp = json.loads(self._manifest_path(table, cp_seq).read_text())
+            index = [
+                list(r)
+                for pname in cp["parts"]
+                for r in json.loads(self._part_path(table, pname).read_text())["index"]
+            ]
+            base, parts = int(cp["seq"]), list(cp["parts"])
+            schema, latest = cp.get("schema"), cp.get("latest")
+        except (ValueError, FileNotFoundError, KeyError, TypeError):
+            base, parts, index, schema, latest = 0, [], [], None, None
+        seq = base
         while True:  # tail replay: sequential probe, no directory listing
             nxt = self._entry_path(table, seq + 1)
             if not nxt.exists():
@@ -370,7 +350,8 @@ class SnapshotParquetTable:
             schema = e.get("schema", schema)
             latest = e["version"]
             seq += 1
-        return {"seq": seq, "index": index, "schema": schema, "latest": latest}
+        return {"seq": seq, "index": index, "schema": schema, "latest": latest,
+                "base": base, "parts": parts}
 
     def _link_atomic(self, table: str, payload: dict, dest_name: str) -> None:
         """tmp-write + os.link O_EXCL publish into the checkpoint
@@ -435,67 +416,27 @@ class SnapshotParquetTable:
 
     def _maybe_checkpoint(self, table: str, entry: dict) -> None:
         """After committing ``entry``: if its seq hits the interval,
-        write one new interval-sized part (delta since the previous
-        checkpoint — direct entry reads, never a full log scan), merge
-        equal-span parts, publish the '<seq>.checkpoint.json' manifest,
-        advance the pointer, and reap superseded manifests/parts past
+        write one new part holding the index rows past ``_state``'s
+        checkpoint (all of them when it replayed from seq 0, which
+        self-heals an unreadable checkpoint), merge equal-span parts,
+        publish the '<seq>.checkpoint.json' manifest, advance the
+        pointer, and reap superseded manifests/parts past
         CHECKPOINT_KEEP."""
         seq = entry["seq"]
         if seq % self.CHECKPOINT_INTERVAL:
             return
-        ldir = self._log_dir(table)
-        prev_seq, prev_parts, schema = 0, [], None
-        ptr = self._checkpoint_pointer(table)
-        if ptr.exists():
-            try:
-                p_seq = int(ptr.read_text().strip())
-                cp = self._read_manifest(table, p_seq)
-                if p_seq >= seq:
-                    return  # a later committer already checkpointed past us
-                prev_seq, schema = p_seq, cp.get("schema")
-                if "parts" in cp:
-                    prev_parts = list(cp["parts"])
-                    if not all(
-                        self._part_path(table, p).exists() for p in prev_parts
-                    ):
-                        # a racing reaper caught a part between our merge
-                        # and manifest publish: self-heal by rebuilding
-                        # from seq 0 (direct entry reads below)
-                        prev_seq, prev_parts, schema = 0, [], None
-                else:
-                    # r9 monolithic checkpoint: re-home its index as the
-                    # seed part once; later checkpoints build on it. The
-                    # flat file is deleted here (one-time): a reader
-                    # holding the old pointer degrades to the full scan
-                    # until the pointer advances below — the standard
-                    # reaped-manifest contract, paid once per migration.
-                    prev_parts = [
-                        self._write_part(
-                            table, 0, p_seq, [list(r) for r in cp["index"]]
-                        )
-                    ]
-                    (
-                        self._log_dir(table) / f"{p_seq:08d}.checkpoint.json"
-                    ).unlink(missing_ok=True)
-            except (ValueError, FileNotFoundError, KeyError):
-                prev_seq, prev_parts, schema = 0, [], None
-        # delta rows (prev_seq, seq] by direct entry reads: ≤ interval
-        # files when the pointer is fresh, bounded by the gap otherwise
-        rows, latest = [], None
-        for s in range(prev_seq + 1, seq + 1):
-            try:
-                e = json.loads(self._entry_path(table, s).read_text())
-            except (FileNotFoundError, ValueError):
-                return  # racing a concurrent writer's torn window: skip
-            rows.append([e["seq"], e["version"], e["commit_ts"], e["op"]])
-            schema = e.get("schema", schema)
-            latest = e["version"]
+        state = self._state(table)
+        base = state["base"]
+        if base >= seq:
+            return  # a later committer already checkpointed past us
+        rows = [r for r in state["index"] if base < r[0] <= seq]
         parts = self._merge_parts(
-            table, prev_parts + [self._write_part(table, prev_seq, seq, rows)]
+            table, state["parts"] + [self._write_part(table, base, seq, rows)]
         )
         self._link_atomic(
             table,
-            {"seq": seq, "parts": parts, "schema": schema, "latest": latest},
+            {"seq": seq, "parts": parts, "schema": entry["schema"],
+             "latest": entry["version"]},
             f"{seq:08d}.checkpoint.json",
         )
         self._advance_checkpoint_pointer(table, seq)
@@ -504,22 +445,19 @@ class SnapshotParquetTable:
     # Parts younger than this survive reaping even when unreferenced: a
     # racing committer may have published its parts but not yet its
     # manifest — deleting them would orphan that manifest's references
-    # (readers degrade to the full scan and the next checkpoint
-    # self-heals, but the grace avoids the churn entirely).
+    # (readers replay from seq 0 and the next checkpoint self-heals, but
+    # the grace avoids the churn entirely).
     CHECKPOINT_REAP_GRACE_SEC = 300.0
 
     def _reap_checkpoints(self, table: str) -> None:
-        """Bounded retention (r9 verdict directive #1): keep the newest
-        CHECKPOINT_KEEP manifests and every part they reference; delete
-        older manifests and now-unreferenced parts past the grace window
-        (including merge sources). A reader that raced us into a reaped
-        manifest falls back to the full scan via _state's
-        FileNotFoundError path. Lists only the checkpoint SUBDIRECTORY —
+        """Bounded retention: keep the newest CHECKPOINT_KEEP manifests
+        and every part they reference; delete older manifests and
+        now-unreferenced parts past the grace window (including merge
+        sources). A reader that raced us into a reaped manifest replays
+        from seq 0 (``_state``). Lists only the checkpoint SUBDIRECTORY —
         O(manifests + parts) dirents per reap, independent of commit
         count (a flat listing here would be O(V) per reap, quadratic
-        cumulative). An r9-era flat manifest is superseded the moment
-        its index is re-homed as a seed part; the flat file itself is
-        one orphaned read-only file per migrated table, swept here too."""
+        cumulative)."""
         import time as _time
 
         cdir = self._checkpoint_dir(table)
@@ -552,7 +490,7 @@ class SnapshotParquetTable:
         concurrent committer (the pointer is only a read CACHE — a
         stale pointer costs a longer tail probe, never wrong data), so
         after replacing we re-read and retry once if a slower writer
-        moved it backward past us (r9 ADVICE)."""
+        moved it backward past us."""
         ldir = self._log_dir(table)
         ptr = self._checkpoint_pointer(table)
         for _ in range(2):
@@ -569,36 +507,19 @@ class SnapshotParquetTable:
                 if int(ptr.read_text().strip()) >= seq:
                     return  # our advance (or a later one) stuck
             except (ValueError, FileNotFoundError):
-                return  # torn mid-rewrite: readers fall back to full scan
+                return  # torn mid-rewrite: readers replay from seq 0
 
     def _log_tail(self, table: str) -> dict | None:
-        """The max-seq log entry (None for an empty log). With a
-        checkpoint present this is pointer + tail probe (no directory
-        listing — flat in version count); otherwise one listing."""
-        state = self._state(table)
-        if state is not None:
-            return json.loads(self._entry_path(table, state["seq"]).read_text())
-        ldir = self._log_dir(table)
-        if not ldir.exists():
-            return None
-        names = [
-            p
-            for p in ldir.iterdir()
-            if p.suffix == ".json" and not p.name.endswith(".checkpoint.json")
-            and not p.name.startswith(".")
-        ]
-        if not names:
-            return None
-        return json.loads(max(names, key=lambda p: p.name).read_text())
+        """The max-seq log entry (None for an empty log): ``_state``'s
+        seq, then that one entry file."""
+        seq = self._state(table)["seq"]
+        return json.loads(self._entry_path(table, seq).read_text()) if seq else None
 
     def is_committed(self, table: str, version: str) -> bool:
         """True iff ``version`` has a log entry — the log append IS the
         commit point (r6 verdict directive #5: the log is the single
         commit protocol; the ``_latest`` pointer is a read cache)."""
-        state = self._state(table)
-        if state is not None:
-            return any(r[1] == version for r in state["index"])
-        return any(e["version"] == version for e in self.log_entries(table))
+        return any(r[1] == version for r in self._state(table)["index"])
 
     def recover(self, table: str) -> str | None:
         """Reconcile the ``_latest`` pointer with the log tail. A crash
@@ -619,20 +540,13 @@ class SnapshotParquetTable:
 
     def schema_of(self, table: str, version: str = "latest") -> list[list[str]] | None:
         """The [name, type] field list the given version's commit
-        logged (None for pre-schema-tracking log entries). With a
-        checkpoint: index lookup → ONE entry-file read."""
+        logged (None for pre-schema-tracking log entries): index
+        lookup → ONE entry-file read."""
         v = self.resolve(table, version)
-        state = self._state(table)
-        if state is not None:
-            for r in state["index"]:
-                if r[1] == v:
-                    return json.loads(
-                        self._entry_path(table, r[0]).read_text()
-                    ).get("schema")
-            return None
-        for e in self.log_entries(table):
-            if e["version"] == v:
-                return e.get("schema")
+        for r in self._state(table)["index"]:
+            if r[1] == v:
+                entry = json.loads(self._entry_path(table, r[0]).read_text())
+                return entry.get("schema")
         return None
 
     def write_version(
@@ -899,7 +813,7 @@ class SnapshotParquetTable:
     # Orphan retention: a data dir with NO log entry is either failed-
     # commit garbage or a commit IN FLIGHT (data files land before the
     # log append — the documented commit order). Deleting young orphans
-    # races in-flight writers: the r9 multiprocess stress caught vacuum
+    # races in-flight writers: the multiprocess stress test caught vacuum
     # unlinking a concurrent committer's just-written files. Real table
     # formats gate exactly this with a file-age retention threshold
     # (Delta's VACUUM RETAIN n HOURS); orphans younger than the grace
@@ -933,11 +847,7 @@ class SnapshotParquetTable:
         now = _time.time()
 
         tdir = self.root / table
-        state = self._state(table)
-        if state is not None:
-            committed = [r[1] for r in state["index"]]
-        else:
-            committed = [e["version"] for e in self.log_entries(table)]
+        committed = [r[1] for r in self._state(table)["index"]]
         latest = self.resolve(table)
         keep = set(committed[-keep_latest:]) | {latest}
         removed_orphans, removed_expired, kept = [], [], []
@@ -968,8 +878,8 @@ class SnapshotParquetTable:
 
         # sweep stale tombstones first: a process that died between
         # os.rename and rmtree left a '.v=X.vacuum.<pid>' directory no
-        # later glob('v=*') would ever revisit — permanent disk leak
-        # (r9 ADVICE). Same grace window as orphans so we never race a
+        # later glob('v=*') would ever revisit — permanent disk leak.
+        # Same grace window as orphans so we never race a
         # LIVE vacuum mid-delete.
         for t in tdir.glob(".v=*.vacuum.*"):
             try:
@@ -1001,18 +911,10 @@ class SnapshotParquetTable:
         }
 
     def version_as_of(self, table: str, ts: str) -> str:
-        state = self._state(table)
-        if state is not None:
-            hits = [r for r in state["index"] if r[2] <= ts]
-            if not hits:
-                raise FileNotFoundError(
-                    f"no commit of {table!r} at or before {ts}"
-                )
-            return hits[-1][1]
-        hits = [e for e in self.log_entries(table) if e["commit_ts"] <= ts]
+        hits = [r for r in self._state(table)["index"] if r[2] <= ts]
         if not hits:
             raise FileNotFoundError(f"no commit of {table!r} at or before {ts}")
-        return hits[-1]["version"]
+        return hits[-1][1]
 
     def resolve(self, table: str, version: str = "latest") -> str:
         if version == "latest":

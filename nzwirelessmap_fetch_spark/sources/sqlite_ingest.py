@@ -84,13 +84,16 @@ def _spark_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _spark_path_literal(path: Path) -> str:
-    """A Spark SQL string literal naming exactly ``path``.
+def _glob_escaped(path: Path) -> str:
+    """``path`` as a Spark data source path naming exactly that file:
+    Spark globs such a path, so Hadoop glob metacharacters are escaped."""
+    return "".join("\\" + c if c in "\\{}[]*?" else c for c in str(path))
 
-    Spark globs a data source path, so Hadoop glob metacharacters are
-    escaped first; then the SQL literal escapes backslashes, then ``'``."""
-    glob = "".join("\\" + c if c in "\\{}[]*?" else c for c in str(path))
-    return "'" + glob.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+def _spark_path_literal(path: Path) -> str:
+    """A Spark SQL string literal naming exactly ``path``: the glob
+    escape, then the SQL literal escapes backslashes, then ``'``."""
+    return "'" + _glob_escaped(path).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def discover_tables(db_path: str | Path) -> list[str]:
@@ -175,7 +178,7 @@ def read_sqlite_table(
     relation."""
     staging = Path(staging_dir) if staging_dir else Path(tempfile.mkdtemp(prefix="sqlite_stage_"))
     dest, schema = stage_sqlite_table_to_parquet(db_path, table, staging)
-    return spark.read.schema(schema).parquet(str(dest))
+    return spark.read.schema(schema).parquet(_glob_escaped(dest))
 
 
 def register_sqlite_database(

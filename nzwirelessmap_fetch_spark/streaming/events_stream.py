@@ -174,7 +174,11 @@ def _run_to_completion(
             ],
         }
     )
-    return spark.table(name)
+    # the frame keeps the memory sink it reads; the view would keep every
+    # run's output on the driver for the whole session
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

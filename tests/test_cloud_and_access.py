@@ -1,12 +1,11 @@
-"""Source/sink additions: the feature-gated direct-.mdb JDBC branch and
-the snapshot-versioned parquet table helper. The versioned-artifact sink
-and DataSource tests live in ``tests/test_artifacts.py``.
+"""The feature-gated direct-.mdb JDBC branch. The versioned-artifact
+sink and DataSource tests live in ``tests/test_artifacts.py``, the
+snapshot-versioned parquet table tests in ``tests/test_txn_log.py``.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from nzwirelessmap_fetch_spark.sources.readers import (
     UCANACCESS_RECIPE,
@@ -14,7 +13,6 @@ from nzwirelessmap_fetch_spark.sources.readers import (
     read_access_jdbc,
     ucanaccess_available,
 )
-from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
 
 
 # ─── direct .mdb ingest (UCanAccess JDBC, feature-gated) ────────────────────
@@ -79,22 +77,3 @@ def test_access_jdbc_gated_with_recipe(spark, tmp_path):
     with pytest.raises(RuntimeError, match="ucanaccess.jar"):
         read_access_jdbc(spark, str(tmp_path / "x.mdb"), "t", {"id": "LONG"})
     assert "sqlite" in UCANACCESS_RECIPE.lower()
-
-
-# ─── snapshot-versioned parquet tables (@version reads) ─────────────────────
-
-
-def test_snapshot_table_versions_and_latest(spark, tmp_path):
-    sink = SnapshotParquetTable(tmp_path / "snap")
-    with pytest.raises(FileNotFoundError):
-        sink.resolve("orders")
-    v1 = spark.range(5).select(F.col("id"), F.lit("a").alias("tag"))
-    v2 = spark.range(7).select(F.col("id"), F.lit("b").alias("tag"))
-    sink.write_version(v1, "orders", "1")
-    sink.write_version(v2, "orders", "2")
-    assert sink.versions("orders") == ["1", "2"]
-    assert sink.resolve("orders") == "2"
-    assert sink.read_version(spark, "orders", "1").count() == 5
-    latest = sink.read_version(spark, "orders", "latest")
-    assert latest.count() == 7
-    assert latest.select("tag").distinct().collect()[0].tag == "b"

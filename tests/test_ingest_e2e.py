@@ -149,13 +149,17 @@ def test_sqlite_type_map_closed(prism_db):
 
 
 def test_read_sqlite_table_roundtrip(spark, prism_db, tmp_path):
-    df = read_sqlite_table(spark, prism_db, "orders", tmp_path)
+    """Staging directories whose names hold Hadoop glob metacharacters
+    read back as exactly the staged file."""
     expected = pq.read_table(f"{SF_SMOKE}/orders.parquet").num_rows
-    assert df.count() == expected
-    # The scan must be a real parquet FileScan (pushdown-capable), not a
-    # driver-resident LocalTableScan.
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" in plan and "LocalTableScan" not in plan
+    for staging in (tmp_path, tmp_path / "back\\slash", tmp_path / "br[a]ck"):
+        staging.mkdir(exist_ok=True)
+        df = read_sqlite_table(spark, prism_db, "orders", staging)
+        assert df.count() == expected
+        # The scan must be a real parquet FileScan (pushdown-capable), not
+        # a driver-resident LocalTableScan.
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" in plan and "LocalTableScan" not in plan
 
 
 # --- P10 + P15: register views, run the flagship through spark.sql ------

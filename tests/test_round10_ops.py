@@ -6,8 +6,9 @@
   distinct rows hash identically — r9 ADVICE).
 - #6: exact-measure refusal budget derived from the host (free spill
   disk / available RAM) instead of a tuned constant.
-- ADVICE: vacuum sweeps stale '.v=X.vacuum.<pid>' tombstones; the
-  checkpoint-pointer advance re-checks after replace.
+
+The vacuum and multi-part checkpoint tests live in
+``tests/test_txn_log.py``.
 """
 
 from __future__ import annotations
@@ -203,256 +204,6 @@ def test_spoofed_small_host_refuses_earlier(spark, monkeypatch):
         memo.reset("winnow_pairs")
 
 
-# ---------------------------------------------------------------- vacuum
-
-
-def test_vacuum_sweeps_stale_tombstones(spark, tmp_path):
-    """A crash between os.rename and rmtree leaves a
-    '.v=X.vacuum.<pid>' tombstone no 'v=*' glob revisits; vacuum now
-    reaps tombstones older than the grace window (r9 ADVICE)."""
-    import os
-    import time
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    t = SnapshotParquetTable(tmp_path)
-    df = spark.range(5).toDF("x")
-    t.write_version(df, "tbl", "v1")
-    t.write_version(df, "tbl", "v2")
-
-    tomb = tmp_path / "tbl" / ".v=dead.vacuum.99999"
-    tomb.mkdir()
-    (tomb / "junk.parquet").write_bytes(b"x")
-    old = time.time() - 7200
-    os.utime(tomb, (old, old))
-
-    fresh = tmp_path / "tbl" / ".v=young.vacuum.88888"
-    fresh.mkdir()  # inside the grace window: a LIVE vacuum mid-delete
-
-    t.vacuum("tbl", keep_latest=2, orphan_grace_sec=3600)
-    assert not tomb.exists()
-    assert fresh.exists()
-
-
-def test_vacuum_tombstone_of_old_dir_is_grace_protected(spark, tmp_path):
-    """os.rename preserves the version dir's old mtime, so a LIVE
-    vacuum's just-renamed tombstone of an hours-old directory would
-    look past-grace to a concurrent stale sweep and be deleted under
-    its feet; _remove must touch the tombstone after the rename so the
-    grace window measures time-since-rename."""
-    import os
-    import time
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    t = SnapshotParquetTable(tmp_path)
-    df = spark.range(5).toDF("x")
-    for v in ("v1", "v2", "v3"):
-        t.write_version(df, "tbl", v)
-
-    # age v1's data dir far past the grace window, as a long-lived
-    # table's expired versions always are
-    old = time.time() - 7200
-    d = tmp_path / "tbl" / "v=v1"
-    os.utime(d, (old, old))
-
-    captured = {}
-    orig_rmtree = __import__("shutil").rmtree
-
-    def spying_rmtree(path, *a, **kw):
-        p = str(path)
-        if ".vacuum." in p and "v=v1" in p:
-            captured["age"] = time.time() - os.stat(p).st_mtime
-        return orig_rmtree(path, *a, **kw)
-
-    import shutil as _shutil
-
-    _shutil.rmtree, restore = spying_rmtree, orig_rmtree
-    try:
-        t.vacuum("tbl", keep_latest=2, orphan_grace_sec=3600)
-    finally:
-        _shutil.rmtree = restore
-
-    # the tombstone observed at delete time was FRESH (touched after
-    # rename), not carrying the 2 h-old dir mtime a concurrent sweep
-    # would have reaped
-    assert captured["age"] < 60
-    assert not d.exists()
-
-
-# ------------------------------------------------- multi-part checkpoints
-
-
-def _commit_n(sink, table, n, start=0):
-    """n raw commits (no data files — _commit_logged is the arbiter and
-    the write-cost probe needs volume, not parquet)."""
-    for i in range(start, start + n):
-        sink._commit_logged(
-            table, f"v{i}", [["k", "bigint"]],
-            commit_ts=(
-                f"2024-01-01T{i // 3600:02d}:{(i // 60) % 60:02d}:"
-                f"{i % 60:02d}.000000Z"
-            ),
-        )
-
-
-def test_checkpoint_cumulative_write_cost_is_subquadratic(tmp_path, monkeypatch):
-    """r9 verdict directive #1: cumulative checkpoint bytes over V
-    commits must be ~linear (O(V·logV)), not the r9 monolithic
-    O(V²/interval). Measured by instrumenting every checkpoint-file
-    publish across 1000 commits and comparing against BOTH growth
-    models."""
-    import math
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    written = {"bytes": 0}
-    orig = SnapshotParquetTable._link_atomic
-
-    def counting_link(self, table, payload, dest_name):
-        import json as _json
-
-        written["bytes"] += len(_json.dumps(payload, sort_keys=True))
-        return orig(self, table, payload, dest_name)
-
-    monkeypatch.setattr(SnapshotParquetTable, "_link_atomic", counting_link)
-    V = 1000
-    _commit_n(sink, "t", V)
-
-    interval = sink.CHECKPOINT_INTERVAL
-    n_cp = V // interval
-    row_bytes = 60  # ~[seq, "vN", ts, "write"] serialized
-    quadratic_model = row_bytes * interval * n_cp * (n_cp + 1) // 2  # r9 law
-    loglinear_model = row_bytes * V * (math.log2(n_cp) + 2)
-    assert written["bytes"] < quadratic_model / 4, (
-        written["bytes"], quadratic_model)
-    assert written["bytes"] < loglinear_model * 3, (
-        written["bytes"], loglinear_model)
-
-    # part count stays logarithmic and the state is exact
-    cdir = sink._checkpoint_dir("t")
-    state = sink._state("t")
-    assert state["seq"] == V
-    assert [r[0] for r in state["index"]] == list(range(1, V + 1))
-    manifests = [p for p in cdir.iterdir() if p.name.endswith(".checkpoint.json")]
-    assert len(manifests) <= sink.CHECKPOINT_KEEP
-    import json as _json
-
-    newest = max(manifests, key=lambda p: p.name)
-    parts = _json.loads(newest.read_text())["parts"]
-    assert len(parts) <= math.log2(n_cp) + 1
-
-
-def test_checkpoint_retention_reaps_manifests_and_parts(tmp_path, monkeypatch):
-    """Superseded manifests and merge-source parts are deleted past the
-    grace window; live manifests keep every part they reference."""
-    import json as _json
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    monkeypatch.setattr(SnapshotParquetTable, "CHECKPOINT_REAP_GRACE_SEC", 0.0)
-    sink = SnapshotParquetTable(tmp_path)
-    _commit_n(sink, "t", 100)
-    cdir = sink._checkpoint_dir("t")
-    manifests = sorted(
-        p.name for p in cdir.iterdir() if p.name.endswith(".checkpoint.json")
-    )
-    assert manifests == ["00000090.checkpoint.json", "00000100.checkpoint.json"]
-    on_disk = {p.name for p in cdir.iterdir() if p.name.endswith(".cppart")}
-    referenced = set()
-    for m in manifests:
-        referenced.update(_json.loads((cdir / m).read_text())["parts"])
-    assert referenced <= on_disk  # every referenced part exists
-    assert on_disk == referenced  # nothing unreferenced survives at grace 0
-
-
-def test_checkpoint_reads_monolithic_r9_format(tmp_path):
-    """Back-compat: an r9-era monolithic checkpoint ('index' inline) is
-    still readable, and the NEXT checkpoint re-homes it as a part."""
-    import json as _json
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    _commit_n(sink, "t", 10)
-    ldir = sink._log_dir("t")
-    cdir = sink._checkpoint_dir("t")
-    # rewrite the manifest in the r9 monolithic shape, FLAT in the log
-    # dir where r9 wrote it (exercises the legacy-location fallback)
-    m = ldir / "00000010.checkpoint.json"
-    state = sink._state("t")
-    mono = {
-        "seq": 10,
-        "index": state["index"],
-        "schema": state["schema"],
-        "latest": state["latest"],
-    }
-    for p in cdir.iterdir():
-        if p.name.endswith(".cppart") or p.name.endswith(".checkpoint.json"):
-            p.unlink()
-    m.write_text(_json.dumps(mono, sort_keys=True))
-    got = sink._state("t")
-    assert got is not None and [r[0] for r in got["index"]] == list(range(1, 11))
-
-    _commit_n(sink, "t", 10, start=10)  # next checkpoint at seq 20
-    got = sink._state("t")
-    assert got["seq"] == 20
-    newest = _json.loads((cdir / "00000020.checkpoint.json").read_text())
-    assert "parts" in newest
-    assert got["latest"] == "v19"
-    assert not m.exists()  # migration leaves no flat manifest behind
-
-
-def test_checkpoint_missing_part_degrades_then_self_heals(tmp_path):
-    """A reaped/lost part under a live manifest degrades _state to the
-    full-scan fallback (never a wrong answer); the next checkpoint
-    rebuilds from the entries and reads recover."""
-    import json as _json
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    _commit_n(sink, "t", 20)
-    cdir = sink._checkpoint_dir("t")
-    newest = _json.loads((cdir / "00000020.checkpoint.json").read_text())
-    (cdir / newest["parts"][0]).unlink()
-
-    assert sink._state("t") is None  # loud degradation, not wrong data
-    assert sink.resolve("t") == "v19"  # full-scan paths still correct
-    assert sink.version_as_of("t", "2024-01-01T00:00:05.000000Z") == "v5"
-
-    _commit_n(sink, "t", 10, start=20)  # checkpoint at 30 self-heals
-    state = sink._state("t")
-    assert state is not None and state["seq"] == 30
-    assert [r[0] for r in state["index"]] == list(range(1, 31))
-
-
-def test_checkpoint_read_cost_logarithmic_in_commits(tmp_path, monkeypatch):
-    """Read cost after V=430 commits: pointer + manifest + ≤log parts +
-    ≤interval tail — nowhere near O(V) file reads."""
-    from nzwirelessmap_fetch_spark.sinks import writers as W
-
-    sink = W.SnapshotParquetTable(tmp_path)
-    _commit_n(sink, "t", 433)
-
-    reads = {"n": 0}
-    orig = W.Path.read_text
-
-    def counting_read_text(self, *a, **kw):
-        if self.suffix in (".json", ".cppart"):
-            reads["n"] += 1
-        return orig(self, *a, **kw)
-
-    monkeypatch.setattr(W.Path, "read_text", counting_read_text)
-    monkeypatch.setattr(
-        sink, "log_entries",
-        lambda table: (_ for _ in ()).throw(AssertionError("audit scan on hot path")),
-    )
-    assert sink.is_committed("t", "v431")
-    assert reads["n"] <= sink.CHECKPOINT_INTERVAL + 2 + 8  # 8 ≥ log2(43)
-
-
 # ---------------------------------------------------- sampled Lloyd training
 
 
@@ -587,133 +338,6 @@ def test_merge_adjudication_rules(tmp_path):
     assert run2({"p2p_links": green},
                 {"p2p_links": {"rows_match": False, "schema_match": True,
                                "hash_match": False}}) == 1
-
-
-# ------------------------------------- multi-part checkpoint under races
-
-
-def _cp_commit_worker(root, wid, n_rounds, q):
-    """Commit-only worker for the multi-part checkpoint stress: raw
-    protocol commits with reap grace forced to 0 so retention races the
-    other workers' merges as hard as possible."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    SnapshotParquetTable.CHECKPOINT_REAP_GRACE_SEC = 0.0
-    sink = SnapshotParquetTable(root)
-    for r in range(n_rounds):
-        sink._commit_logged(
-            "t", f"w{wid}r{r}", [["k", "bigint"]],
-        )
-    q.put(("w", wid))
-
-
-def _cp_reader_worker(root, wid, n_iters, q):
-    """Reader racing checkpoint writes/merges/reaps: every _state must
-    be either None (degradation to the full scan — allowed) or an EXACT
-    prefix-consistent index (seqs 1..state.seq with unique versions).
-    Time-boxed rather than iteration-boxed: it keeps probing until it
-    has observed ≥n_iters checkpoint-backed states (or 20 s), so the
-    liveness assertion cannot flake on spawn-startup jitter racing the
-    first checkpoint."""
-    import time
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(root)
-    states = degraded = bad = 0
-    deadline = time.monotonic() + 20.0
-    while states < n_iters and time.monotonic() < deadline:
-        state = sink._state("t")
-        if state is None:
-            degraded += 1
-            continue
-        states += 1
-        seqs = [r[0] for r in state["index"]]
-        if seqs != list(range(1, state["seq"] + 1)):
-            bad += 1
-        if len({r[1] for r in state["index"]}) != len(state["index"]):
-            bad += 1
-    q.put(("r", wid, states, degraded, bad))
-
-
-def test_multipart_checkpoint_multiprocess_consistent(tmp_path):
-    """4 committers × 25 commits with grace-0 reaping racing 2 readers:
-    every reader-observed state is exact and gap-free (or a loud
-    full-scan degradation, never wrong), the final checkpoint equals
-    the audit scan, retention holds, and no scratch files leak."""
-    import multiprocessing as mp
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    root = str(tmp_path)
-    n_workers, n_rounds, n_readers, n_iters = 4, 25, 2, 150
-    ctx = mp.get_context("spawn")
-    q = ctx.Queue()
-    procs = [
-        ctx.Process(target=_cp_commit_worker, args=(root, w, n_rounds, q))
-        for w in range(n_workers)
-    ] + [
-        ctx.Process(target=_cp_reader_worker, args=(root, w, n_iters, q))
-        for w in range(n_readers)
-    ]
-    for p in procs:
-        p.start()
-    stats = [q.get(timeout=300) for _ in procs]
-    for p in procs:
-        p.join(timeout=300)
-        assert p.exitcode == 0
-
-    sink = SnapshotParquetTable(root)
-    entries = sink.log_entries("t")
-    assert len(entries) == n_workers * n_rounds
-    state = sink._state("t")
-    assert state is not None and state["seq"] == entries[-1]["seq"]
-    assert [r[1] for r in state["index"]] == [e["version"] for e in entries]
-
-    readers = [s for s in stats if s[0] == "r"]
-    assert sum(s[4] for s in readers) == 0, "reader saw an inconsistent index"
-    assert sum(s[2] for s in readers) > 0  # some reads used the checkpoint
-
-    ldir = sink._log_dir("t")
-    cdir = sink._checkpoint_dir("t")
-    manifests = [p for p in cdir.iterdir() if p.name.endswith(".checkpoint.json")]
-    assert len(manifests) <= SnapshotParquetTable.CHECKPOINT_KEEP
-    scratch = list(ldir.iterdir()) + list(cdir.iterdir())
-    assert not [p for p in scratch if p.name.endswith(".tmp")], (
-        "leaked tmp files"
-    )
-
-
-def test_reap_grace_protects_unmanifested_parts(tmp_path, monkeypatch):
-    """A committer that dies between part publish and manifest publish
-    leaves an unreferenced .cppart; the grace window must keep it (so a
-    slow committer's manifest is never orphaned by a racing reaper) and
-    a past-grace reap must sweep it. Live referenced parts survive even
-    a grace-0 reap."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    _commit_n(sink, "t", 20)
-
-    # simulate the mid-crash: part published, manifest never written
-    orphan = sink._write_part(
-        "t", 20, 30,
-        [[21, "vX", "2024-01-01T00:00:21.000000Z", "write"]],
-    )
-    opath = sink._part_path("t", orphan)
-    assert opath.exists()
-
-    sink._reap_checkpoints("t")  # default 300 s grace: young orphan survives
-    assert opath.exists()
-
-    monkeypatch.setattr(SnapshotParquetTable, "CHECKPOINT_REAP_GRACE_SEC", 0.0)
-    sink._reap_checkpoints("t")  # past grace: swept
-    assert not opath.exists()
-
-    # referenced parts are untouched by the grace-0 reap and reads work
-    state = sink._state("t")
-    assert state is not None and state["seq"] == 20
-    assert [r[0] for r in state["index"]] == list(range(1, 21))
 
 
 def test_content_hash_adversarial_values_cross_engine(spark):
@@ -872,87 +496,3 @@ def test_extract_bench_sf1_shapes(tmp_path, capsys):
     assert shape["headline"] == {"p2p_links": 1.5, "dedup_exact": 2.0}
     assert shape["headline_total_sec"] == 3.5
     assert shape["untimed"] == ["corpus_winnowing"]
-
-
-def test_checkpoint_crash_at_every_publish_point(tmp_path):
-    """Crash-safety sweep: simulate a committer dying immediately
-    before EACH file operation inside the checkpoint path (part writes,
-    manifest publish, pointer advance, reap) in turn. After every
-    injected death a fresh reader must agree with the audit-scan truth
-    — checkpoint-backed or loudly degraded, never wrong — and the next
-    interval's checkpoint self-heals."""
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    class _Crash(BaseException):
-        pass
-
-    hooks = (
-        "_write_part", "_link_atomic",
-        "_advance_checkpoint_pointer", "_reap_checkpoints",
-    )
-
-    def sweep(k: int, root) -> bool:
-        """Returns True if the k-th checkpoint op exists (else the sweep
-        is past the end of the op sequence)."""
-        state = {"armed": False, "n": 0, "crashed": False}
-        orig = {h: getattr(SnapshotParquetTable, h) for h in hooks}
-        orig_cp = SnapshotParquetTable._maybe_checkpoint
-
-        def wrap(fn):
-            def inner(self, *a, **kw):
-                if state["armed"]:
-                    if state["n"] == k:
-                        state["crashed"] = True
-                        raise _Crash()
-                    state["n"] += 1
-                return fn(self, *a, **kw)
-            return inner
-
-        def armed_cp(self, table, entry):
-            state["armed"] = True
-            try:
-                return orig_cp(self, table, entry)
-            finally:
-                state["armed"] = False
-
-        for h in hooks:
-            setattr(SnapshotParquetTable, h, wrap(orig[h]))
-        SnapshotParquetTable._maybe_checkpoint = armed_cp
-        try:
-            sink = SnapshotParquetTable(root)
-            try:
-                _commit_n(sink, "t", 10)  # checkpoint fires at seq 10
-            except _Crash:
-                pass
-        finally:
-            for h in hooks:
-                setattr(SnapshotParquetTable, h, orig[h])
-            SnapshotParquetTable._maybe_checkpoint = orig_cp
-
-        # the dying committer still committed entry 10 before the
-        # checkpoint path began — that is the truth a reader must see
-        reader = SnapshotParquetTable(root)
-        entries = reader.log_entries("t")
-        assert len(entries) == 10
-        assert reader.resolve("t") == "v9"
-        assert reader.version_as_of("t", "2024-01-01T00:00:05.000000Z") == "v5"
-        st = reader._state("t")
-        if st is not None:  # checkpoint-backed read must be exact
-            assert st["seq"] == 10
-            assert [r[0] for r in st["index"]] == list(range(1, 11))
-            assert st["latest"] == "v9"
-
-        # survivors keep committing: the next interval self-heals
-        _commit_n(reader, "t", 10, start=10)
-        healed = reader._state("t")
-        assert healed is not None and healed["seq"] == 20
-        assert [r[0] for r in healed["index"]] == list(range(1, 21))
-        assert reader.resolve("t") == "v19"
-        return state["crashed"]
-
-    k = 0
-    while sweep(k, tmp_path / f"k{k}"):
-        k += 1
-        assert k < 64, "runaway op count in the checkpoint path"
-    assert k >= 4, f"expected >=4 crash points, swept {k}"

@@ -1,6 +1,5 @@
 """Round-11 operator tests: SimHash pair-stream memoization, the
-grid-bucketed events_attribution re-plan, and checkpoint-from-consumer
-certification helpers."""
+grid-bucketed events_attribution re-plan, and shard-layout helpers."""
 
 from __future__ import annotations
 
@@ -147,25 +146,6 @@ def test_stream_join_cells_cover_band_once(spark):
     )
     assert covered.filter(F.col("n_match") != 1).count() == 0
     assert covered.count() > 0
-
-
-def test_link_atomic_loser_refreshes_mtime(tmp_path):
-    """r10 ADVICE: the os.link loser must os.utime the surviving file so
-    the reap grace window measures time since the LATEST publish
-    attempt — else a re-published identical part keeps a stale mtime
-    and a racing reaper can delete it before its manifest publishes."""
-    import os
-    import time
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    name = sink._write_part("t", 0, 10, [[1, "v0", "2024-01-01", "write"]])
-    path = sink._part_path("t", name)
-    stale = time.time() - 3600
-    os.utime(path, (stale, stale))
-    sink._write_part("t", 0, 10, [[1, "v0", "2024-01-01", "write"]])
-    assert path.stat().st_mtime > stale + 3000
 
 
 def test_shard_layout_never_empty():

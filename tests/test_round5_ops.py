@@ -1,5 +1,6 @@
 """Round-5 operator tests: capped-containment twin, scale-profile
-registry metadata, merge-into writer, and ADVICE fixes."""
+registry metadata, and ADVICE fixes. The merge-into writer tests live
+in ``tests/test_txn_log.py``."""
 
 from __future__ import annotations
 
@@ -100,27 +101,6 @@ def test_jdbc_ingest_live_roundtrip(spark, tmp_path):
     assert rows[1].fee == "150.2500"  # MONEY → string, 4dp wire format
     assert rows[1].active == 1 and rows[2].active == 0  # BOOLEAN → 0/1 int
     assert dict(out.dtypes)["licenceid"] == "int"
-
-
-def test_snapshot_merge_into(spark, tmp_path):
-    """merge_into semantics at rest: matched rows replaced, unmatched
-    inserted, deletes dropped, pointer flipped marker-last, and v1
-    untouched (time travel still sees pre-merge data)."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path / "snap")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    sink.write_version(base, "t", "1")
-    changes = spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string")
-    deletes = spark.createDataFrame([(3,)], "k long")
-    sink.merge_into(spark, "t", changes, "k", "2", deletes=deletes)
-    assert sink.resolve("t") == "2"
-    v2 = {r.k: r.v for r in sink.read_version(spark, "t").collect()}
-    assert v2 == {1: "a", 2: "B", 4: "d"}  # update, keep, insert, delete
-    v1 = {r.k: r.v for r in sink.read_version(spark, "t", "1").collect()}
-    assert v1 == {1: "a", 2: "b", 3: "c"}  # history immutable
 
 
 def test_kmv_sketch_properties(spark):

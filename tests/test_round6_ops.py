@@ -1,10 +1,9 @@
-"""Round-6 tests: ADVICE fixes (MERGE unique-key
-contract, foreachBatch retry idempotence) plus round-6 operators."""
+"""Round-6 operator tests. The MERGE unique-key and foreachBatch retry
+tests live in ``tests/test_txn_log.py``."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _test_image(w: int = 30, h: int = 20, channels: int = 3) -> bytes:
@@ -152,24 +151,6 @@ def test_image_pipelines_real_pixels(spark):
     assert ham(hashes[0], hashes[2]) > 10  # unrelated image far
 
 
-def test_merge_into_rejects_duplicate_source_keys(spark, tmp_path):
-    """Real MERGE INTO raises when one target row matches multiple source
-    rows; merge_into enforces the same unique-source-key contract instead
-    of silently writing duplicate keys into the snapshot."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path / "snap")
-    sink.write_version(
-        spark.createDataFrame([(1, "a")], "k long, v string"), "t", "1"
-    )
-    dup_changes = spark.createDataFrame(
-        [(2, "x"), (2, "y")], "k long, v string"
-    )
-    with pytest.raises(ValueError, match="duplicate"):
-        sink.merge_into(spark, "t", dup_changes, "k", "2")
-    assert sink.resolve("t") == "1"  # failed merge left the pointer alone
-
-
 def test_winnow_array_verify_variant_exact(spark):
     """The measurable array-verify winnowing plan emits EXACTLY the
     count-agg plan's rows (smaller-side prefix lemma, both orders of
@@ -222,100 +203,3 @@ def test_state_partitions_volume_rule():
 
     assert _state_partitions_for("/root/testdata/sf0.1") == 8  # 2 MB
     assert _state_partitions_for("/root/testdata/sf0.01") == 8
-
-
-def test_txn_log_conflict_abort_and_time_travel(spark, tmp_path):
-    """Optimistic concurrency on the transaction log: a merge that read
-    v1 must ABORT (no log entry, no pointer move past the interloper)
-    when a concurrent writer committed v2 in between; the log records
-    parent chain + read-set; timestamp as-of resolves mid-instants."""
-    from nzwirelessmap_fetch_spark.sinks.writers import (
-        SnapshotConflictError,
-        SnapshotParquetTable,
-    )
-
-    sink = SnapshotParquetTable(tmp_path / "snap")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    sink.write_version(base, "t", "1", commit_ts="2024-01-01T00:00:00.000000Z")
-
-    # transaction A reads latest (v1) ...
-    read_version = sink.resolve("t")
-    changes = spark.createDataFrame([(2, "B")], "k long, v string")
-    merged = (
-        sink.read_version(spark, "t", read_version)
-        .join(changes.select("k"), "k", "left_anti")
-        .unionByName(changes)
-    )
-    # ... but a concurrent writer commits v2 first
-    sink.write_version(
-        base.withColumn("v", F.upper("v")),
-        "t",
-        "2",
-        commit_ts="2024-01-02T00:00:00.000000Z",
-    )
-    with pytest.raises(SnapshotConflictError, match="latest moved"):
-        sink.write_version(
-            merged, "t", "3", op="merge",
-            read_set=[f"t@{read_version}"], expect_parent=read_version,
-        )
-    # aborted commit left no trace: pointer and log unchanged
-    assert sink.resolve("t") == "2"
-    log = sink.log_entries("t")
-    assert [e["version"] for e in log] == ["1", "2"]
-    assert log[1]["parent"] == "1"
-
-    # retry on the new base succeeds and records its read-set
-    sink.merge_into(
-        spark, "t", changes, "k", "3",
-        commit_ts="2024-01-03T00:00:00.000000Z",
-    )
-    log = sink.log_entries("t")
-    assert log[2]["op"] == "merge" and log[2]["read_set"] == ["t@2"]
-    assert log[2]["parent"] == "2"
-
-    # timestamp time travel: mid-instant resolves to the version live then
-    assert sink.version_as_of("t", "2024-01-01T12:00:00.000000Z") == "1"
-    assert sink.version_as_of("t", "2024-01-02T12:00:00.000000Z") == "2"
-    asof = {
-        r.k: r.v
-        for r in sink.read_as_of(spark, "t", "2024-01-02T12:00:00.000000Z").collect()
-    }
-    assert asof == {1: "A", 2: "B"}
-    with pytest.raises(FileNotFoundError):
-        sink.version_as_of("t", "2023-12-31T00:00:00.000000Z")
-
-
-def test_foreach_batch_merge_retry_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering a micro-batch must be
-    a no-op (the committed version name is the idempotence token), and a
-    LATER batch must still apply."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-    from nzwirelessmap_fetch_spark.streaming.events_stream import (
-        merge_user_stats_batch,
-    )
-
-    sink = SnapshotParquetTable(tmp_path / "snap")
-    schema = "user_id long, n bigint, total_cents bigint"
-    sink.write_version(spark.createDataFrame([], schema), "user_stats", "0")
-
-    batch0 = spark.createDataFrame(
-        [(7, 1.50), (7, 0.25), (9, 2.00)], "user_id long, value double"
-    )
-    merge_user_stats_batch(sink, batch0, 0)
-    state = {r.user_id: (r.n, r.total_cents) for r in
-             sink.read_version(spark, "user_stats").collect()}
-    assert state == {7: (2, 175), 9: (1, 200)}
-
-    # retry of the SAME batch: must not double-count
-    merge_user_stats_batch(sink, batch0, 0)
-    assert sink.resolve("user_stats") == "1"
-    state2 = {r.user_id: (r.n, r.total_cents) for r in
-              sink.read_version(spark, "user_stats").collect()}
-    assert state2 == state
-
-    # a later batch still applies on top
-    batch1 = spark.createDataFrame([(7, 1.00)], "user_id long, value double")
-    merge_user_stats_batch(sink, batch1, 1)
-    state3 = {r.user_id: (r.n, r.total_cents) for r in
-              sink.read_version(spark, "user_stats").collect()}
-    assert state3 == {7: (3, 275), 9: (1, 200)}

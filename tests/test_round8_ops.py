@@ -1,6 +1,6 @@
 """Round-8 tests: r7 ADVICE regressions (empty-corpus order probe, tRNS
-fail-loud, atomic commit admission, pinned-base streaming merge) and the
-round-8 operators (adaptive winnowing cap)."""
+fail-loud) and the round-8 operators (adaptive winnowing cap). The
+commit-admission and vacuum tests live in ``tests/test_txn_log.py``."""
 
 from __future__ import annotations
 
@@ -107,137 +107,6 @@ def test_winnow_adaptive_capped_subset_of_exact(spark):
     assert capped <= exact
     assert [k[1] for k in memo.entries("winnow_fingerprints")] == [SF_SMOKE]
     assert [k[1] for k in memo.entries("winnow_pairs")] == [SF_SMOKE, SF_SMOKE]
-
-
-def _txn_stress_worker(root: str, wid: int, n_rounds: int, q) -> None:
-    """Child-process body for the commit-admission stress: each round
-    writes a pyarrow data dir, then races `_commit_logged` with
-    expect_parent pinned to the base it resolved — retrying on
-    SnapshotConflictError like any real writer. No SparkSession: the
-    commit protocol is pure filesystem, which is exactly why it is
-    stress-testable across PROCESSES (r7 verdict directive #4)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from nzwirelessmap_fetch_spark.sinks.writers import (
-        SnapshotConflictError,
-        SnapshotParquetTable,
-    )
-
-    sink = SnapshotParquetTable(root)
-    conflicts = 0
-    for r in range(n_rounds):
-        version = f"w{wid}r{r}"
-        d = sink._dir("t", version)
-        d.mkdir(parents=True, exist_ok=True)
-        pq.write_table(pa.table({"k": [wid], "r": [r]}), d / "part-0.parquet")
-        while True:
-            base = sink.resolve("t")
-            try:
-                sink._commit_logged(
-                    "t",
-                    version,
-                    [["k", "bigint"], ["r", "bigint"]],
-                    op="write",
-                    read_set=[f"t@{base}"],
-                    expect_parent=base,
-                )
-                break
-            except SnapshotConflictError:
-                conflicts += 1
-    q.put((wid, conflicts))
-
-
-def test_txn_commit_admission_multiprocess_linearizable(tmp_path):
-    """r7 ADVICE (writers.py:307) + verdict directive #4: N real
-    PROCESSES racing expect_parent-checked commits on one table.
-    Exactly one writer wins each seq slot; losers get
-    SnapshotConflictError and retry on the new base; the final log is
-    a LINEAR history (entry N's parent == entry N-1's version,
-    contiguous seqs, no duplicate versions) and the pointer equals the
-    log tail."""
-    import multiprocessing as mp
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    root = str(tmp_path)
-    sink = SnapshotParquetTable(root)
-    d = sink._dir("t", "0")
-    d.mkdir(parents=True, exist_ok=True)
-    pq.write_table(pa.table({"k": [0], "r": [0]}), d / "part-0.parquet")
-    sink._commit_logged(
-        "t", "0", [["k", "bigint"], ["r", "bigint"]], expect_parent=None
-    )
-
-    n_workers, n_rounds = 4, 12
-    ctx = mp.get_context("spawn")  # no JVM/fork hazards in children
-    q = ctx.Queue()
-    procs = [
-        ctx.Process(target=_txn_stress_worker, args=(root, w, n_rounds, q))
-        for w in range(n_workers)
-    ]
-    for p in procs:
-        p.start()
-    stats = [q.get(timeout=300) for _ in procs]
-    for p in procs:
-        p.join(timeout=300)
-        assert p.exitcode == 0
-
-    entries = sink.log_entries("t")
-    # every commit landed exactly once
-    assert len(entries) == 1 + n_workers * n_rounds
-    versions = [e["version"] for e in entries]
-    assert len(set(versions)) == len(versions)
-    # contiguous seqs + linear parent chain across processes
-    assert [e["seq"] for e in entries] == list(range(1, len(entries) + 1))
-    for prev, cur in zip(entries, entries[1:]):
-        assert cur["parent"] == prev["version"], (
-            f"non-linear history at seq {cur['seq']}"
-        )
-    # pointer is reconciled to the log tail
-    assert sink.resolve("t") == entries[-1]["version"]
-    # with 4 writers genuinely racing, SOME admission conflicts occurred
-    # (not asserted per-worker: scheduling is nondeterministic)
-    assert sum(c for _, c in stats) >= 1
-
-
-def test_vacuum_vs_time_travel_named_error(tmp_path, spark):
-    """r7 verdict directive #4: read_as_of / read_version of a vacuumed
-    version fails with VacuumedVersionError (naming the earliest
-    readable version), never a silent empty read; latest stays
-    readable; an uncommitted version still raises plain
-    FileNotFoundError."""
-    import pytest as _pytest
-    from pyspark.sql import functions as SF
-
-    from nzwirelessmap_fetch_spark.sinks.writers import (
-        SnapshotParquetTable,
-        VacuumedVersionError,
-    )
-
-    sink = SnapshotParquetTable(tmp_path)
-    for i, v in enumerate(("1", "2", "3")):
-        sink.write_version(
-            spark.range(3).select((SF.col("id") + i).alias("k")),
-            "t",
-            v,
-            commit_ts=f"2024-01-0{i + 1}T00:00:00.000000Z",
-        )
-    out = sink.vacuum("t", keep_latest=1)
-    assert out["removed_expired"] == ["1", "2"]
-
-    with _pytest.raises(VacuumedVersionError, match="earliest readable"):
-        sink.read_version(spark, "t", "1")
-    with _pytest.raises(VacuumedVersionError):
-        sink.read_as_of(spark, "t", "2024-01-02T12:00:00.000000Z")
-    # log entries survive vacuum (audit metadata) and latest is readable
-    assert [e["version"] for e in sink.log_entries("t")] == ["1", "2", "3"]
-    assert sink.read_version(spark, "t", "latest").count() == 3
-    with _pytest.raises(FileNotFoundError, match="no snapshot"):
-        sink.read_version(spark, "t", "never-committed")
 
 
 def test_winnow_exact_measure_budget_guard(spark, monkeypatch):

@@ -1,6 +1,7 @@
 """Round-9 operator tests: adaptive IVF/SemDeDup cell counts (r8 verdict
 directive #1), exact-measure admission guards (#2), in-engine content
-hash (#4), txn-log checkpointing (#6/#7)."""
+hash (#4). The txn-log checkpointing tests (#6/#7) live in
+``tests/test_txn_log.py``."""
 
 from __future__ import annotations
 
@@ -248,250 +249,6 @@ def test_content_fingerprint_unsupported_type_is_loud(spark):
         content_fingerprint(df)
     with pytest.raises(ContentHashUnsupported):
         content_fingerprint_sql("SELECT 1", [("m", "MAP(VARCHAR, INTEGER)")])
-
-
-# ─── r8 verdict directive #6: txn-log checkpointing ─────────────────────────
-
-
-def _mk_table(sink, table, n_commits, spark=None):
-    """Commit n versions through the raw protocol (no Spark needed)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for i in range(n_commits):
-        v = f"v{i}"
-        d = sink._dir(table, v)
-        d.mkdir(parents=True, exist_ok=True)
-        pq.write_table(pa.table({"k": [i]}), d / "part-0.parquet")
-        sink._commit_logged(
-            table, v, [["k", "bigint"]],
-            commit_ts=f"2024-01-01T00:00:{i:02d}.000000Z",
-        )
-
-
-def test_txn_log_checkpoint_written_and_read(tmp_path):
-    """Every CHECKPOINT_INTERVAL commits a checkpoint lands through the
-    O_EXCL protocol; reads resolve via checkpoint + tail replay and
-    agree with the full audit scan on every surface."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    n = 25
-    _mk_table(sink, "t", n)
-    cdir = sink._checkpoint_dir("t")
-    cps = sorted(p.name for p in cdir.iterdir() if p.name.endswith(".checkpoint.json"))
-    assert cps == ["00000010.checkpoint.json", "00000020.checkpoint.json"]
-    assert sink._checkpoint_pointer("t").read_text().strip() == "20"
-
-    state = sink._state("t")
-    assert state is not None
-    assert state["seq"] == n  # tail replay reaches past the checkpoint
-    entries = sink.log_entries("t")  # full audit scan
-    assert [r[0] for r in state["index"]] == [e["seq"] for e in entries]
-    assert [r[1] for r in state["index"]] == [e["version"] for e in entries]
-    # every read surface agrees with the audit scan
-    assert sink.version_as_of("t", "2024-01-01T00:00:14.500000Z") == "v14"
-    assert sink.is_committed("t", "v7") and not sink.is_committed("t", "nope")
-    assert sink.schema_of("t", "v3") == [["k", "bigint"]]
-    assert sink.resolve("t") == f"v{n - 1}"
-
-
-def test_txn_log_reads_flat_in_version_count(tmp_path, monkeypatch):
-    """The directive's contract: version_as_of cost is checkpoint + tail,
-    FLAT in total commits — pinned by counting entry-file reads (must be
-    ≤ interval + 2, not O(n)) and by forbidding the full audit scan on
-    the hot path."""
-    from nzwirelessmap_fetch_spark.sinks import writers as W
-
-    sink = W.SnapshotParquetTable(tmp_path)
-    n = 43  # 4 checkpoints + 3-entry tail
-    _mk_table(sink, "t", n)
-
-    reads = {"n": 0}
-    orig = W.Path.read_text
-
-    def counting_read_text(self, *a, **kw):
-        if self.suffix == ".json":
-            reads["n"] += 1
-        return orig(self, *a, **kw)
-
-    monkeypatch.setattr(W.Path, "read_text", counting_read_text)
-    monkeypatch.setattr(
-        sink, "log_entries",
-        lambda table: (_ for _ in ()).throw(AssertionError("audit scan on hot path")),
-    )
-    assert sink.version_as_of("t", "2024-01-01T00:00:05.000000Z") == "v5"
-    assert reads["n"] <= sink.CHECKPOINT_INTERVAL + 2
-    reads["n"] = 0
-    assert sink.is_committed("t", "v41")
-    assert reads["n"] <= sink.CHECKPOINT_INTERVAL + 2
-
-
-def test_txn_log_checkpoint_torn_pointer_falls_back(tmp_path):
-    """A torn/garbage _last_checkpoint pointer degrades to the full scan
-    (correct answers, just slower), never to a wrong answer."""
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    sink = SnapshotParquetTable(tmp_path)
-    _mk_table(sink, "t", 15)
-    sink._checkpoint_pointer("t").write_text("garbage")
-    assert sink._state("t") is None
-    assert sink.version_as_of("t", "2024-01-01T00:00:12.000000Z") == "v12"
-    assert sink.resolve("t") == "v14"
-
-
-# ─── r8 verdict directive #7: maintenance ops in the multiprocess race ──────
-
-
-def _txn_maint_worker(root, wid, n_rounds, q):
-    """Mixed-op committer: write / optimize-like / restore-like commits
-    through the shared admission protocol, plus periodic vacuum — the
-    maintenance ops share the conflict check; this proves they share its
-    linearizability under real process races."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from nzwirelessmap_fetch_spark.sinks.writers import (
-        SnapshotConflictError,
-        SnapshotParquetTable,
-    )
-
-    sink = SnapshotParquetTable(root)
-    conflicts = vacuums = 0
-    for r in range(n_rounds):
-        op = ("write", "optimize", "restore")[(wid + r) % 3]
-        version = f"w{wid}r{r}"
-        d = sink._dir("t", version)
-        d.mkdir(parents=True, exist_ok=True)
-        for f in range(3):  # 3 files: a partial read would count 1-2
-            pq.write_table(
-                pa.table({"k": [wid], "r": [r], "f": [f]}), d / f"part-{f}.parquet"
-            )
-        while True:
-            base = sink.resolve("t")
-            try:
-                sink._commit_logged(
-                    "t",
-                    version,
-                    [["k", "bigint"], ["r", "bigint"], ["f", "bigint"]],
-                    op=op,
-                    read_set=[f"t@{base}"],
-                    expect_parent=base,
-                )
-                break
-            except SnapshotConflictError:
-                conflicts += 1
-        if r % 5 == 4:
-            sink.vacuum("t", keep_latest=4)
-            vacuums += 1
-    q.put(("w", wid, conflicts, vacuums))
-
-
-def _txn_vacuum_reader_worker(root, wid, n_iters, q):
-    """Reader racing committers AND vacuums: every observed state must be
-    (a) the complete 3-file data, (b) the NAMED vacuumed error, or (c) a
-    loud I/O error from a file vanishing mid-read — never a silent
-    partial row set."""
-    import random
-
-    import duckdb
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    rng = random.Random(wid)
-    sink = SnapshotParquetTable(root)
-    full = named = loud = partial = 0
-    for _ in range(n_iters):
-        state = sink._state("t")
-        versions = [r[1] for r in state["index"]] if state else ["0"]
-        v = rng.choice(versions)
-        d = sink._dir("t", v)
-        if not d.exists():
-            # read_version's contract: committed-but-gone == the NAMED
-            # vacuum error (is_committed consults the log, not the dir)
-            assert sink.is_committed("t", v), f"{v} neither data nor log"
-            named += 1
-            continue
-        try:
-            n = duckdb.sql(
-                f"SELECT COUNT(*) FROM read_parquet('{d}/*.parquet')"
-            ).fetchone()[0]
-        except Exception:  # noqa: BLE001 — vanished mid-read: loud, OK
-            loud += 1
-            continue
-        expected = 1 if v == "0" else 3
-        if n == expected:
-            full += 1
-        else:
-            partial += 1
-    q.put(("r", wid, full, named, loud, partial))
-
-
-def test_txn_maintenance_ops_multiprocess_linearizable(tmp_path):
-    """r8 verdict directive #7: the r8 stress raced write/merge only;
-    this races write + optimize + restore commits AND vacuum across 4
-    real processes with 2 concurrent readers. Asserts the same
-    linearizability invariants, checkpoint integrity, permanent log
-    entries for vacuumed versions, and the reader contract (full data |
-    named error | loud error — zero silent partials)."""
-    import multiprocessing as mp
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from nzwirelessmap_fetch_spark.sinks.writers import SnapshotParquetTable
-
-    root = str(tmp_path)
-    sink = SnapshotParquetTable(root)
-    d = sink._dir("t", "0")
-    d.mkdir(parents=True, exist_ok=True)
-    pq.write_table(pa.table({"k": [0], "r": [0], "f": [0]}), d / "part-0.parquet")
-    sink._commit_logged(
-        "t", "0", [["k", "bigint"], ["r", "bigint"], ["f", "bigint"]],
-        expect_parent=None,
-    )
-
-    n_workers, n_rounds, n_readers, n_iters = 4, 12, 2, 60
-    ctx = mp.get_context("spawn")
-    q = ctx.Queue()
-    procs = [
-        ctx.Process(target=_txn_maint_worker, args=(root, w, n_rounds, q))
-        for w in range(n_workers)
-    ] + [
-        ctx.Process(target=_txn_vacuum_reader_worker, args=(root, w, n_iters, q))
-        for w in range(n_readers)
-    ]
-    for p in procs:
-        p.start()
-    stats = [q.get(timeout=300) for _ in procs]
-    for p in procs:
-        p.join(timeout=300)
-        assert p.exitcode == 0
-
-    entries = sink.log_entries("t")
-    assert len(entries) == 1 + n_workers * n_rounds
-    versions = [e["version"] for e in entries]
-    assert len(set(versions)) == len(versions)
-    assert [e["seq"] for e in entries] == list(range(1, len(entries) + 1))
-    for prev, cur in zip(entries, entries[1:]):
-        assert cur["parent"] == prev["version"]
-    assert {e["op"] for e in entries[1:]} == {"write", "optimize", "restore"}
-    assert sink.resolve("t") == entries[-1]["version"]
-    # checkpoints landed at every interval despite the races, and the
-    # checkpointed state equals the audit scan
-    state = sink._state("t")
-    assert state is not None and state["seq"] == entries[-1]["seq"]
-    assert [r[1] for r in state["index"]] == versions
-    # vacuumed data is gone but its log entries are permanent
-    on_disk = {p.name[2:] for p in (tmp_path / "t").glob("v=*")}
-    assert on_disk <= set(versions)
-    assert len(on_disk) < len(versions)  # vacuums actually removed data
-    # reader contract: zero silent partials; some reads saw live data
-    readers = [s for s in stats if s[0] == "r"]
-    assert sum(s[2] for s in readers) > 0          # full reads happened
-    assert sum(s[5] for s in readers) == 0, "silent partial read"
-    writers = [s for s in stats if s[0] == "w"]
-    assert sum(s[3] for s in writers) >= 1         # vacuums ran
 
 
 def test_frame_fingerprint_vectorization_identical():

@@ -88,6 +88,25 @@ def test_foreachbatch_upsert_conserves_mass(spark):
     assert (u.last_event_id, u.last_type) == (last.event_id, last.event_type)
 
 
+
+def test_memory_sink_views_do_not_pile_up(spark):
+    """Each run's memory-sink view is dropped once its frame is taken:
+    the frame still answers, and the session lists no ``stream_out_*``
+    view holding a finished run's output on the driver."""
+    from nzwirelessmap_fetch_spark.streaming.events_stream import (
+        stream_complete_totals,
+    )
+    from tests.conftest import SF_SMOKE
+
+    first = stream_complete_totals(spark, SF_SMOKE)
+    second = stream_complete_totals(spark, SF_SMOKE)
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")]
+    assert left == []
+    rows = first.collect()
+    assert rows and second.collect() == rows
+    assert first.groupBy("event_type").count().count() == len(rows)
+    assert len(second.toPandas()) == len(rows)
+
 def test_transform_with_state_gated_or_green(spark):
     """Spark 4 transformWithStateInPandas: environment-gated on
     google.protobuf (the state-server wire protocol). Where the dep
