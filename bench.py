@@ -97,12 +97,9 @@ def main() -> None:
             "shared_containment_build_capped",
             lambda: _containment_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF),
         ),
-        # Gram accumulation + both power-iteration trajectories: one corpus
-        # pass + two dim²-grain iterate chains, four consumers
-        (
-            "shared_pc_build",
-            lambda: [frame.count() for frame in _top2_components(spark, sf_dir)],
-        ),
+        # Gram accumulation (one corpus pass) + both power iterations on
+        # the driver, four consumers
+        ("shared_pc_build", lambda: _top2_components(spark, sf_dir)),
         ("shared_winnow_build", lambda: _winnow_pairs(spark, sf_dir, max_df=None)),
         (
             "shared_winnow_build_capped",

@@ -1,6 +1,6 @@
 """Session memo for substrates that several registry entries share.
 
-The verified pair checkpoints, the PCA trajectories and the snapshot
+The verified pair checkpoints, the PCA components and the snapshot
 tables are each expensive to build and read by more than one entry.
 ``memo(family, spark, sf_dir, params, build)`` builds such a substrate
 once and hands the stored object to every later caller:

@@ -1464,6 +1464,10 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     {WALK_LENGTH} steps is one keyed join against that index plus a
     row-local hash pick. State is |nodes|·{WALKS_PER_NODE} walk rows —
     never edge-sized — and the loop is unrolled, no lineage growth.
+
+    The path ships as its comma-joined node ids ('12,40,12,7') on both
+    sides (``array_join`` / DuckDB ``array_to_string``): an
+    ``array<bigint>`` cell is unhashable for a pandas row canonicalizer.
     """
     edges = _jaccard_edges(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -1509,7 +1513,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return walks.select(
         "start",
         F.col("w").cast("int").alias("walk_no"),
-        F.col("path").cast("array<bigint>").alias("path"),
+        F.array_join(F.col("path").cast("array<string>"), ",").alias("path"),
         F.col("cur").alias("end_node"),
     ).orderBy("start", "walk_no")
 
@@ -1560,6 +1564,7 @@ w3 AS (
          list_append(path, nbrs[CAST(('0x' || substr(md5(CAST(w2.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':2'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1]) AS path
   FROM w2 JOIN adj ON w2.cur = adj.src
 )
-SELECT start, CAST(w AS INT) AS walk_no, path, cur AS end_node
+SELECT start, CAST(w AS INT) AS walk_no, array_to_string(path, ',') AS path,
+       cur AS end_node
 FROM w3 ORDER BY start, walk_no
 """

@@ -16,6 +16,8 @@ arithmetic only in pinned outputs.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -532,7 +534,7 @@ WHERE rank <= {BM25_TOP_K}
 
 
 # ---------------------------------------------------------------------------
-# Principal component (power iteration on the Gram matrix)
+# Principal components (power iteration on the Gram matrix)
 # ---------------------------------------------------------------------------
 
 _PC_DIM = 64
@@ -565,51 +567,51 @@ def embedding_principal_component(spark: SparkSession, sf_dir: str) -> DataFrame
     bit-exact and the oracle replays the full trajectory, loadings and
     eigenvalue.
 
-    Two-phase plan, each phase the right scale shape:
-    1. GRAM ACCUMULATION (the only corpus-sized work): every vector
-       fans out its 64×64 products map-side; one partial-aggregated
-       shuffle over the FIXED 4096 (i,j) cells — state is dim², never
-       corpus-sized, the same mergeable-sketch discipline as the CMS.
-       Products are quantized floor(xᵢ·xⱼ·10¹²) BIGINT *before* the sum
-       (double multiply + floor is bit-identical in any IEEE engine, and
-       integer sums are order-free) — the float-sum-order trap cannot
-       touch the hash.
-    2. POWER ITERATION on the 4096-row Gram table: w = G·v as an
-       equi-join on j with a j-ordered fold per row of G; normalization
-       via a single-row sqrt fold (sqrt is IEEE-correctly-rounded).
-       _PC_ITERS G·v products: _PC_ITERS-1 normalized steps from the
-       all-ones start, then the Rayleigh quotient λ = v·(G·v) on the
-       last. Every fold order is pinned, so the DuckDB oracle replays
-       loadings AND eigenvalue bit-for-bit.
+    Two-phase plan (``_top2_components``):
+    1. GRAM ACCUMULATION (the only corpus-sized work and the only Spark
+       work): every vector fans out its 64×64 products map-side; one
+       partial-aggregated shuffle over the FIXED 4096 (i,j) cells —
+       state is dim², never corpus-sized, the same mergeable-sketch
+       discipline as the CMS. Products are quantized floor(xᵢ·xⱼ·10¹²)
+       BIGINT *before* the sum (double multiply + floor is bit-identical
+       in any IEEE engine, and integer sums are order-free) — the
+       float-sum-order trap cannot touch the hash. The 4096 cells are
+       collected to the driver: bounded by construction at any corpus
+       size.
+    2. POWER ITERATION on the driver over the collected matrix: w = G·v
+       as a j-ordered left fold per row, normalization as an i-ordered
+       fold of w² under one sqrt (IEEE-correctly-rounded), then the
+       Rayleigh quotient λ = v·(G·v) on the last product. Each fold and
+       each product keeps the order and operands of the DuckDB chain
+       (``_ddb_power``), so the oracle replays loadings AND eigenvalue
+       bit-for-bit.
 
     Output: one row per dimension (dim, loading of the unit principal
-    vector, shared eigval column).
+    vector, shared eigval column) — literal rows from the memoized value.
     """
-    principal, lam = _pc_trajectory(spark, sf_dir)
-    return principal.crossJoin(F.broadcast(lam)).select(
-        F.col("j").cast("int").alias("dim"),
-        F.col("v").alias("loading"),
-        "eigval",
-    )
+    v1, lam1, _, _ = _top2_components(spark, sf_dir)
+    return _loadings(spark, v1, lam1)
 
 
-def _pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantized-exact Gram accumulation — the only corpus-sized pass.
+def _top2_components(spark: SparkSession, sf_dir: str):
+    """The top two principal components as driver values ``(v1, lam1,
+    v2, lam2)``: unit loadings in dim order and their eigenvalues.
 
-    Memoized as an eager localCheckpoint in the ``pc_gram`` family
-    (functions.memo): FOUR registry queries consume this matrix
-    (principal component, ABTT residual, PCA top-2, whitening) and each
-    used to re-run the corpus fan-out; the checkpointed state is dim²
-    rows — trivial at any corpus size. bench.py times the build as its
-    own `shared_gram_build` line so no consumer absorbs it.
+    Memoized in the ``pca`` family (functions.memo), the one substrate of
+    the four PC entries (principal component, ABTT residual, PCA top-2,
+    whitening): the corpus is scanned once per session and a hit runs no
+    job. The value is plain Python floats, so it holds no Spark storage.
+    bench.py times the build as its ``shared_pc_build`` line."""
+    return memo("pca", spark, sf_dir, (), lambda: _build_top2(spark, sf_dir))
+
+
+def _build_top2(spark: SparkSession, sf_dir: str):
+    """Gram pass, then component 1 by power iteration and component 2 by
+    Hotelling deflation G₂ = G − λ₁·v₁v₁ᵀ and a second iteration.
 
     Round-robin pre-split: the embeddings table is one parquet file at
     bench SF and the dim² fan-out (4096 rows per vector) would
     otherwise run on a single task (the one-file-scan lesson)."""
-    return memo("pc_gram", spark, sf_dir, (), lambda: _build_pc_gram(spark, sf_dir))
-
-
-def _build_pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = Catalog(spark, sf_dir).table("embeddings").repartition(width)
     pairs = (
@@ -627,93 +629,64 @@ def _build_pc_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("q"),
         )
     )
-    return (
+    cells = (
         pairs.groupBy("i", "j")
         .agg(F.sum("q").alias("gq"))
         .select("i", "j", (F.col("gq").cast("double") / F.lit(_PC_SCALE)).alias("g"))
-        .localCheckpoint(eager=True)
+        .collect()
     )
+    if not cells:  # empty corpus: no component, as the oracle's empty joins
+        return [], 0.0, [], 0.0
+    g = [[0.0] * _PC_DIM for _ in range(_PC_DIM)]
+    for i, j, gij in cells:
+        g[i][j] = gij
+    v1, lam1 = _power_iterate(g)
+    # the oracle's deflation expression g − λ·vᵢ·vⱼ, left to right
+    g2 = [
+        [gij - lam1 * v1[i] * v1[j] for j, gij in enumerate(row)]
+        for i, row in enumerate(g)
+    ]
+    v2, lam2 = _power_iterate(g2)
+    return v1, lam1, v2, lam2
 
 
-def _pc_iterate(spark: SparkSession, gram: DataFrame):
-    """_PC_ITERS G·v products on an (i, j, g) matrix table from the
-    all-ones start: returns (principal (j, v) unit vector, lam 1-row
-    Rayleigh quotient). Works on the raw Gram (component 1) or any
-    deflated matrix (later components).
+def _fold(terms) -> float:
+    """Left fold from 0.0 in the given order — the driver twin of
+    ``list_reduce(list_prepend(0.0, list(... ORDER BY k)), (a, b) -> a + b)``
+    (``sum`` is not: Python 3.12 made it a compensated sum)."""
+    acc = 0.0
+    for t in terms:
+        acc += t
+    return acc
 
-    Lineage discipline (the CC-loop lesson, dedup.py:622): the Gram and
-    every per-round iterate are EAGERLY localCheckpoint'd. Each matvec
-    references the matrix plus the previous v, so without truncation the
-    logical plan nests the whole corpus subtree once per round per
-    consumer — a second (deflated) trajectory then multiplies it and
-    Catalyst optimization time explodes (measured: 350 s at sf0.01 for
-    embedding_pca_top2, vs ~2 s truncated). The checkpointed state is
-    dim² + dim rows — trivial at any corpus size."""
-    gram = gram.localCheckpoint(eager=True)
 
-    def matvec(v: DataFrame) -> DataFrame:
-        """w = G·v with a j-ordered fold per output row."""
-        return (
-            gram.join(v, "j")
-            .select("i", "j", (F.col("g") * F.col("v")).alias("t"))
-            .groupBy("i")
-            .agg(F.array_sort(F.collect_list(F.struct("j", "t"))).alias("s"))
-            .select(
-                "i",
-                F.expr(
-                    "aggregate(s, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.t)"
-                ).alias("w"),
-            )
-        )
+def _power_iterate(g: list[list[float]]) -> tuple[list[float], float]:
+    """_PC_ITERS G·v products on a dense dim×dim matrix from the all-ones
+    start: returns (unit vector in dim order, Rayleigh quotient)."""
 
-    def normalized(w: DataFrame) -> DataFrame:
-        nrm = w.agg(
-            F.array_sort(F.collect_list(F.struct("i", "w"))).alias("s")
-        ).select(
-            F.sqrt(
-                F.expr(
-                    "aggregate(s, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.w * x.w)"
-                )
-            ).alias("nrm")
-        )
-        return w.crossJoin(F.broadcast(nrm)).select(
-            F.col("i").alias("j"), (F.col("w") / F.col("nrm")).alias("v")
-        )
+    def matvec(v: list[float]) -> list[float]:
+        return [_fold(gij * vj for gij, vj in zip(row, v)) for row in g]
 
-    v = spark.range(_PC_DIM).select(F.col("id").cast("int").alias("j"), F.lit(1.0).alias("v"))
-    # checkpoint every SECOND round: each eager checkpoint is a full job
-    # (~0.2-0.3 s of scheduling on dim-sized data), and two rounds of
-    # matvec+normalize nest the plan only ~4 joins deep — shallow enough
-    # for Catalyst, half the job count (measured: the 6-iter trajectory
-    # family cost ~+5 s/suite at every-round cadence)
-    for i in range(_PC_ITERS - 1):
+    def normalized(w: list[float]) -> list[float]:
+        nrm = math.sqrt(_fold(wi * wi for wi in w))
+        return [wi / nrm for wi in w]
+
+    v = [1.0] * _PC_DIM
+    for _ in range(_PC_ITERS - 1):
         v = normalized(matvec(v))
-        if i % 2 == 1 or i == _PC_ITERS - 2:
-            v = v.localCheckpoint(eager=True)
-    # unnormalized G·v with unit v → Rayleigh numerator; feeds lam AND the
-    # returned normalized vector, so truncate before fan-out
-    w_last = matvec(v).localCheckpoint(eager=True)
-    lam = (
-        w_last.join(v.select(F.col("j").alias("i"), "v"), "i")
-        .agg(F.array_sort(F.collect_list(F.struct("i", (F.col("v") * F.col("w")).alias("t")))).alias("s"))
-        .select(
-            F.expr("aggregate(s, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.t)").alias(
-                "eigval"
-            )
-        )
-    )
-    return normalized(w_last), lam
+    w = matvec(v)
+    return normalized(w), _fold(vi * wi for vi, wi in zip(v, w))
 
 
-def _pc_trajectory(spark: SparkSession, sf_dir: str):
-    """The shared power-iteration trajectory on the corpus Gram matrix.
-    Consumed by ``embedding_principal_component``, the ABTT residual
-    projection, and (as component 1) ``_top2_components``. Memoized in
-    the ``pc_trajectory`` family: every iterate is already an eager
-    localCheckpoint of ≤ dim² rows, so reuse is free and exact."""
-    return memo(
-        "pc_trajectory", spark, sf_dir, (),
-        lambda: _pc_iterate(spark, _pc_gram(spark, sf_dir)),
+def _loadings(spark: SparkSession, v: list[float], lam: float) -> DataFrame:
+    """(dim, loading, eigval) literal rows from a generator over one
+    literal array: building them runs no job, and reading them starts no
+    Python worker (``createDataFrame`` does). The cast types the empty
+    corpus's element-less array."""
+    return (
+        spark.range(1)
+        .select(F.posexplode(F.array(*map(F.lit, v))).alias("dim", "loading"))
+        .select("dim", F.col("loading").cast("double").alias("loading"), F.lit(lam).alias("eigval"))
     )
 
 
@@ -724,8 +697,7 @@ def _ddb_matvec(gram: str, v: str, out: str) -> str:
     the trajectory chain references each iterate twice (norm + output) —
     at _PC_ITERS=6 that inlining is 2^12 scans of the parquet source
     (observed as "Too many open files"). Materializing pins each
-    64-row iterate once, the analogue of the Spark side's eager
-    localCheckpoint per round."""
+    64-row iterate once."""
     return f"""{out} AS MATERIALIZED (
   SELECT g.i,
          list_reduce(list_prepend(0.0::DOUBLE, list(g.g * {v}.v ORDER BY g.j)),
@@ -750,7 +722,7 @@ def _ddb_power(gram: str, tag: str) -> str:
     """Full ``_PC_ITERS``-product trajectory CTE chain over matrix table
     ``gram``: defines ``v0{tag}..v{_PC_ITERS}{tag}`` and ``lam{tag}``
     (Rayleigh quotient from the last unnormalized product). Generated
-    from the same constant the Spark loop uses, so the iteration knob
+    from the same constant the driver loop uses, so the iteration knob
     moves both engines in lockstep."""
     n = _PC_ITERS
     parts = [
@@ -776,9 +748,7 @@ def _ddb_power(gram: str, tag: str) -> str:
 # Name of the final (unit) trajectory vector CTE — "v6" at 6 products.
 _VL = f"v{_PC_ITERS}"
 
-
-EMBEDDING_PRINCIPAL_COMPONENT_SQL = f"""
-WITH pairs AS (
+_DDB_PC_GRAM = f"""pairs AS (
   SELECT ii.i, jj.j,
          CAST(floor(CAST(e.embedding[ii.i + 1] AS DOUBLE)
                     * CAST(e.embedding[jj.j + 1] AS DOUBLE)
@@ -792,7 +762,24 @@ gram AS MATERIALIZED (
          CAST(CAST(SUM(q) AS BIGINT) AS DOUBLE)
            / CAST(1000000000000 AS DOUBLE) AS g
   FROM pairs GROUP BY i, j
+)"""
+
+# Both components: trajectory ``a`` on the Gram, the deflated matrix,
+# trajectory ``b`` on it (``embedding_pca_top2`` and whitening).
+_DDB_PC_TOP2 = f"""{_DDB_PC_GRAM},
+{_ddb_power('gram', 'a')},
+gram2 AS MATERIALIZED (
+  SELECT g.i, g.j, g.g - lama.eigval * a.v * b.v AS g
+  FROM gram g
+  JOIN {_VL}a a ON a.j = g.i
+  JOIN {_VL}a b ON b.j = g.j
+  CROSS JOIN lama
 ),
+{_ddb_power('gram2', 'b')}"""
+
+
+EMBEDDING_PRINCIPAL_COMPONENT_SQL = f"""
+WITH {_DDB_PC_GRAM},
 {_ddb_power('gram', '')}
 SELECT CAST({_VL}.j AS INT) AS dim, {_VL}.v AS loading, lam.eigval
 FROM {_VL}, lam
@@ -804,26 +791,21 @@ def embedding_abtt_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the corpus principal direction and report the residual — the
     standard post-processing that strips the dominant common component
     from embedding spaces (Mu & Viswanath, ICLR 2018) before similarity
-    search. Composes ``_pc_trajectory``: the expensive Gram pass is the
-    SAME one shuffle; the per-vector projection is a row-local fold
-    against the broadcast unit vector (one row, 64 doubles).
+    search. Composes ``_top2_components``: the Gram pass is the SAME one
+    shuffle; the per-vector projection is a row-local fold against the
+    unit vector as a literal array (64 doubles).
 
     Per-vector scalars only (projection coefficient, norm before/after)
     — the cleaned vectors themselves would be written columnar at rest;
     emitting scalars keeps the audit (and the oracle) change-sized.
     All folds run in dim order on both engines: bit-exact doubles.
     """
-    principal, _ = _pc_trajectory(spark, sf_dir)
-    pvec = principal.agg(
-        F.array_sort(F.collect_list(F.struct("j", "v"))).alias("s")
-    ).select(F.expr("transform(s, x -> x.v)").alias("pv"))
-
+    v1, _, _, _ = _top2_components(spark, sf_dir)
     e = Catalog(spark, sf_dir).table("embeddings")
     x_d = "CAST(element_at(embedding, d + 1) AS DOUBLE)"
     pv_d = "element_at(pv, d + 1)"
     base = (
-        e.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(pvec))
+        e.select("vec_id", "embedding", F.array(*map(F.lit, v1)).alias("pv"))
         .withColumn(
             "proj_coeff",
             F.expr(
@@ -856,21 +838,7 @@ def embedding_abtt_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_ABTT_RESIDUAL_SQL = f"""
-WITH pairs AS (
-  SELECT ii.i, jj.j,
-         CAST(floor(CAST(e.embedding[ii.i + 1] AS DOUBLE)
-                    * CAST(e.embedding[jj.j + 1] AS DOUBLE)
-                    * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS q
-  FROM embeddings e,
-       generate_series(0, {_PC_DIM - 1}) ii(i),
-       generate_series(0, {_PC_DIM - 1}) jj(j)
-),
-gram AS MATERIALIZED (
-  SELECT i, j,
-         CAST(CAST(SUM(q) AS BIGINT) AS DOUBLE)
-           / CAST(1000000000000 AS DOUBLE) AS g
-  FROM pairs GROUP BY i, j
-),
+WITH {_DDB_PC_GRAM},
 {_ddb_power('gram', '')},
 pvec AS (SELECT list(v ORDER BY j) AS pv FROM {_VL}),
 base AS (
@@ -896,40 +864,6 @@ FROM base
 """
 
 
-def _top2_components(spark: SparkSession, sf_dir: str):
-    """Shared top-2 trajectory: power-iterate the Gram matrix, deflate
-    (G₂ = G − λ₁·v₁v₁ᵀ), iterate again. Returns (v1, lam1, v2, lam2) —
-    per-dim loading frames and 1-row eigenvalue frames. Component 1 comes
-    FROM the ``pc_trajectory`` memo, so the two PCA-family consumers and
-    the two trajectory consumers share one physical iteration history;
-    the ``pc_top2`` family stores only component 2, so releasing it
-    never frees component 1's checkpoints."""
-    v1, lam1 = _pc_trajectory(spark, sf_dir)
-    v2, lam2 = memo(
-        "pc_top2", spark, sf_dir, (), lambda: _deflated_component(spark, sf_dir)
-    )
-    return v1, lam1, v2, lam2
-
-
-def _deflated_component(spark: SparkSession, sf_dir: str):
-    gram = _pc_gram(spark, sf_dir)
-    v1, lam1 = _pc_trajectory(spark, sf_dir)
-    vi = v1.select(F.col("j").alias("i"), F.col("v").alias("vi"))
-    vj = v1.select("j", F.col("v").alias("vj"))
-    gram2 = (
-        gram.join(vi, "i")
-        .join(vj, "j")
-        .crossJoin(F.broadcast(lam1))
-        .select(
-            "i",
-            "j",
-            (F.col("g") - F.col("eigval") * F.col("vi") * F.col("vj")).alias("g"),
-        )
-    )
-    # dim²-row deflated matrix; _pc_iterate checkpoints it on entry
-    return _pc_iterate(spark, gram2)
-
-
 def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 principal directions via Hotelling DEFLATION: component 1 is
     the plain power iterate; component 2 power-iterates the deflated
@@ -938,54 +872,22 @@ def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     route to k-component PCA/whitening when k is small.
 
     The corpus is touched ONCE (the shared Gram pass); deflation and the
-    second trajectory run entirely on the 4096-row matrix table — adding
-    components costs dim²-sized joins, never another corpus scan. The
+    second trajectory run on the driver over the collected 4096-cell
+    matrix — adding components never costs another corpus scan. The
     deflation expression g − λ·vᵢ·vⱼ and every fold keep pinned order, so
     the oracle replays BOTH trajectories bit-for-bit.
 
     Output: (component 1|2, dim, loading, eigval).
     """
     v1, lam1, v2, lam2 = _top2_components(spark, sf_dir)
-
-    def emit(comp: int, v: DataFrame, lam: DataFrame) -> DataFrame:
-        return v.crossJoin(F.broadcast(lam)).select(
-            F.lit(comp).alias("component"),
-            F.col("j").cast("int").alias("dim"),
-            F.col("v").alias("loading"),
-            "eigval",
-        )
-
-    return emit(1, v1, lam1).unionByName(emit(2, v2, lam2))
-
-
-_DDB_PC_GRAM = f"""pairs AS (
-  SELECT ii.i, jj.j,
-         CAST(floor(CAST(e.embedding[ii.i + 1] AS DOUBLE)
-                    * CAST(e.embedding[jj.j + 1] AS DOUBLE)
-                    * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS q
-  FROM embeddings e,
-       generate_series(0, {_PC_DIM - 1}) ii(i),
-       generate_series(0, {_PC_DIM - 1}) jj(j)
-),
-gram AS MATERIALIZED (
-  SELECT i, j,
-         CAST(CAST(SUM(q) AS BIGINT) AS DOUBLE)
-           / CAST(1000000000000 AS DOUBLE) AS g
-  FROM pairs GROUP BY i, j
-)"""
+    return (
+        _loadings(spark, v1, lam1).select(F.lit(1).alias("component"), "*")
+        .unionByName(_loadings(spark, v2, lam2).select(F.lit(2).alias("component"), "*"))
+    )
 
 
 EMBEDDING_PCA_TOP2_SQL = f"""
-WITH {_DDB_PC_GRAM},
-{_ddb_power('gram', 'a')},
-gram2 AS MATERIALIZED (
-  SELECT g.i, g.j, g.g - lama.eigval * a.v * b.v AS g
-  FROM gram g
-  JOIN {_VL}a a ON a.j = g.i
-  JOIN {_VL}a b ON b.j = g.j
-  CROSS JOIN lama
-),
-{_ddb_power('gram2', 'b')}
+WITH {_DDB_PC_TOP2}
 SELECT 1 AS component, CAST({_VL}a.j AS INT) AS dim, {_VL}a.v AS loading, lama.eigval
 FROM {_VL}a, lama
 UNION ALL
@@ -1054,25 +956,13 @@ def embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     outsized pull on distances (the retrieval twin of ABTT's removal).
 
     Composes ``_top2_components``: the corpus is touched once by the
-    shared Gram pass; both directions + eigenvalues broadcast as ONE row
-    of 2·dim+2 doubles, and the per-vector work is two row-local
+    shared Gram pass; both directions ride as literal arrays and both
+    eigenvalues as literals, and the per-vector work is two row-local
     dim-ordered folds — zero additional shuffles, output is one row per
     vector. sqrt is IEEE-correctly-rounded (allowed in pinned outputs);
     fold order pinned on both engines.
     """
     v1, lam1, v2, lam2 = _top2_components(spark, sf_dir)
-
-    def as_list(v: DataFrame, name: str) -> DataFrame:
-        return v.agg(
-            F.array_sort(F.collect_list(F.struct("j", "v"))).alias("s")
-        ).select(F.expr("transform(s, x -> x.v)").alias(name))
-
-    ctx = (
-        as_list(v1, "pv1")
-        .crossJoin(as_list(v2, "pv2"))
-        .crossJoin(lam1.select(F.col("eigval").alias("lam1")))
-        .crossJoin(lam2.select(F.col("eigval").alias("lam2")))
-    )
     e = Catalog(spark, sf_dir).table("embeddings")
     x_d = "CAST(element_at(embedding, d + 1) AS DOUBLE)"
 
@@ -1082,30 +972,22 @@ def embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(acc, d) -> acc + {x_d} * element_at({pv}, d + 1))"
         )
 
-    return (
-        e.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(ctx))
-        .select(
-            "vec_id",
-            F.expr(proj("pv1")).alias("proj1"),
-            F.expr(proj("pv2")).alias("proj2"),
-            (F.expr(proj("pv1")) / F.sqrt(F.col("lam1"))).alias("white1"),
-            (F.expr(proj("pv2")) / F.sqrt(F.col("lam2"))).alias("white2"),
-        )
+    return e.select(
+        "vec_id",
+        "embedding",
+        F.array(*map(F.lit, v1)).alias("pv1"),
+        F.array(*map(F.lit, v2)).alias("pv2"),
+    ).select(
+        "vec_id",
+        F.expr(proj("pv1")).alias("proj1"),
+        F.expr(proj("pv2")).alias("proj2"),
+        (F.expr(proj("pv1")) / F.sqrt(F.lit(lam1))).alias("white1"),
+        (F.expr(proj("pv2")) / F.sqrt(F.lit(lam2))).alias("white2"),
     )
 
 
 EMBEDDING_WHITENING_SQL = f"""
-WITH {_DDB_PC_GRAM},
-{_ddb_power('gram', 'a')},
-gram2 AS MATERIALIZED (
-  SELECT g.i, g.j, g.g - lama.eigval * a.v * b.v AS g
-  FROM gram g
-  JOIN {_VL}a a ON a.j = g.i
-  JOIN {_VL}a b ON b.j = g.j
-  CROSS JOIN lama
-),
-{_ddb_power('gram2', 'b')},
+WITH {_DDB_PC_TOP2},
 ctx AS (
   SELECT (SELECT list(v ORDER BY j) FROM {_VL}a) AS pv1,
          (SELECT list(v ORDER BY j) FROM {_VL}b) AS pv2,

@@ -66,15 +66,39 @@ def test_random_walks_follow_edges(spark):
     nodes = {a for a, _ in sym}
     assert len(walks) == len(nodes) * WALKS_PER_NODE
     for r in walks:
-        assert len(r.path) == WALK_LENGTH + 1
-        assert r.path[0] == r.start and r.path[-1] == r.end_node
-        for u, v in zip(r.path, r.path[1:]):
+        path = [int(x) for x in r.path.split(",")]
+        assert len(path) == WALK_LENGTH + 1
+        assert path[0] == r.start and path[-1] == r.end_node
+        for u, v in zip(path, path[1:]):
             assert (u, v) in sym  # every hop is a real edge
     # determinism: a second run yields the identical corpus
     again = graph_random_walks(spark, SF_SMOKE).collect()
     assert [(r.start, r.walk_no, r.path) for r in walks] == [
         (r.start, r.walk_no, r.path) for r in again
     ]
+
+
+def test_random_walks_ship_no_nested_cell(spark, ddb):
+    """The walk path ships comma-joined on both engines: a pandas row
+    canonicalizer (sort over every column, then hash) must take every
+    cell — an ``array<bigint>`` path raised ``TypeError: unhashable type:
+    'list'`` there."""
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    from nzwirelessmap_fetch_spark.operators.graph import (
+        GRAPH_RANDOM_WALKS_SQL,
+        graph_random_walks,
+    )
+
+    df = graph_random_walks(spark, SF_CORRECT)
+    nested = (ArrayType, MapType, StructType)
+    assert not [f.name for f in df.schema.fields if isinstance(f.dataType, nested)]
+    oracle = ddb.execute(f"DESCRIBE {GRAPH_RANDOM_WALKS_SQL}").fetchall()
+    assert dict((r[0], r[1]) for r in oracle)["path"] == "VARCHAR"
+    pdf = df.toPandas()
+    assert len(pdf)
+    pd.util.hash_pandas_object(pdf.sort_values(list(pdf.columns)), index=False)
 
 
 def test_jaccard_edges_symmetric_distinct_loop_free(spark):

@@ -109,7 +109,6 @@ def test_reset_frees_every_memo_storage(spark):
         _knn_ranked,
         sim_lsh_banded,
     )
-    from nzwirelessmap_fetch_spark.operators.sketches import _top2_components
     from nzwirelessmap_fetch_spark.operators.text import _winnow_pairs
 
     memo.reset()
@@ -118,7 +117,6 @@ def test_reset_frees_every_memo_storage(spark):
         _containment_pairs(spark, SF_SMOKE),
         _verified_simhash_pairs(spark, SF_SMOKE),
         _winnow_pairs(spark, SF_SMOKE, max_df=None),
-        *_top2_components(spark, SF_SMOKE),
         sim_lsh_banded(spark, SF_SMOKE),
         _knn_ranked(spark, SF_SMOKE),
     ]
@@ -140,10 +138,47 @@ def test_reset_frees_every_memo_storage(spark):
     memo.reset()
     assert all(
         memo.entries(f) == {}
-        for f in ("jaccard_pairs", "pc_top2", "lsh_banded", "winnow_fingerprints")
+        for f in ("jaccard_pairs", "containment_pairs", "lsh_banded", "winnow_fingerprints")
     )
     assert _eventually(lambda: not (held & _live_rdd_ids(spark)))
 
+
+
+def test_pca_family_owns_no_storage_and_stays_cheap(spark):
+    """The four PC entries share one ``pca`` entry of driver values: a
+    cold ``embedding_pca_top2`` is the Gram pass plus its action, the
+    entries leave no persisted RDD behind, and the entry holds no frame
+    (the Spark power iteration took ~88 jobs and kept its checkpoints)."""
+    from pyspark.sql import DataFrame
+
+    from nzwirelessmap_fetch_spark.operators import sketches
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    memo.reset()
+    before = _live_rdd_ids(spark)
+    jobs = {}
+    try:
+        for name in (
+            "embedding_pca_top2",
+            "embedding_principal_component",
+            "embedding_abtt_residual",
+            "embedding_whitening",
+        ):
+            group = f"pca_family_{name}"
+            sc.setJobGroup(group, name)
+            getattr(sketches, name)(spark, SF_SMOKE).toPandas()
+            jobs[name] = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["embedding_pca_top2"] <= 8, jobs
+    assert not (_live_rdd_ids(spark) - before)
+    (value,) = memo.entries("pca").values()
+    v1, lam1, v2, lam2 = value
+    assert not any(isinstance(x, DataFrame) for x in value)
+    assert all(type(x) is float for x in [*v1, lam1, *v2, lam2])
+    assert len(v1) == len(v2) == sketches._PC_DIM
 
 def test_stopped_application_entry_dropped_without_jvm_call(spark):
     """An entry keyed by another applicationId is dropped on the next

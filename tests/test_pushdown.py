@@ -95,13 +95,15 @@ def test_no_corpus_sized_broadcast_hints():
 
 def test_no_unguarded_driver_materialization():
     """Pin the README scale claim: `.collect()`/`.toPandas()` appear in the
-    engine exactly five times, all bounded — the row-budget-guarded
+    engine exactly six times, all bounded — the row-budget-guarded
     single-array JSON writer (P17 bug-compat), the N_QUERIES-row query-set
     fetch in the numpy top-k (the broadcast side of a top-k, not data),
     the |event-types|-row state-list fetch seeding the Markov power
     iteration (the matrix dimension, never data), the 2-row corpus-totals
     fetch in DSIR scoring (two scalars from ONE pass over the persisted
-    bigram stream — r4, replacing two full-corpus count() jobs), and the
+    bigram stream — r4, replacing two full-corpus count() jobs), the
+    dim² = 4,096-cell Gram matrix the PCA power iterations run on (fixed
+    by the embedding width, never corpus-sized), and the
     `.limit(n).collect()` display path of the run_query CLI. Any new
     driver-side materialization must be justified here by name."""
     import pathlib
@@ -120,6 +122,7 @@ def test_no_unguarded_driver_materialization():
     assert nonzero == {
         "operators/events_analytics.py": 1,
         "operators/similarity.py": 1,
+        "operators/sketches.py": 1,
         "operators/text.py": 1,
         "run_query.py": 1,
         "sinks/writers.py": 1,

@@ -1317,3 +1317,16 @@ def test_checkpoint_crash_at_every_publish_point(tmp_path):
         k += 1
         assert k < 64, "runaway op count in the checkpoint path"
     assert k >= 4, f"expected >=4 crash points, swept {k}"
+
+
+@pytest.mark.parametrize(
+    "n_batches, points",
+    [(1, {1}), (60, {15, 30, 45, 60}), (1000, {250, 500, 750, 1000})],
+)
+def test_checkpoint_live_tool_samples_short_and_long_runs(n_batches, points):
+    """``tools/scaling_checkpoint_live.py`` samples read cost at fixed
+    fractions of its run and always at the last batch, so a run of any
+    length certifies something (no Spark run here)."""
+    from tools.scaling_checkpoint_live import sample_points
+
+    assert sample_points(n_batches) == points

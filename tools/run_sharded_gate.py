@@ -89,7 +89,7 @@ MEMO_FAMILIES: list[set[str]] = [
         "corpus_containment_capped",
         "corpus_containment_cap_eval",
     },
-    {  # memo families "pc_gram", "pc_trajectory", "pc_top2" (operators/sketches.py)
+    {  # memo family "pca" (operators/sketches.py)
         "embedding_principal_component",
         "embedding_abtt_residual",
         "embedding_pca_top2",

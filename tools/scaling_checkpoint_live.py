@@ -8,9 +8,9 @@ Streaming query (rate-micro-batch source → foreachBatch →
 merge_user_stats_batch → merge_into → write_version → _maybe_checkpoint)
 commits ≥10³ MERGE versions into one table, with
 
-  - read-cost flatness sampled from a FRESH reader every 100 commits
-    (resolve('latest') + one version_as_of — cold state reconstruction,
-    checkpoint-backed);
+  - read-cost flatness sampled from a FRESH reader at ¼, ½ and ¾ of
+    the run and at its last batch (resolve('latest') + one
+    version_as_of — cold state reconstruction, checkpoint-backed);
   - cumulative checkpoint bytes accumulated from the live writes
     (every _link_atomic payload — parts, manifests, pointers);
   - ONE induced crash mid-stream: at commit CRASH_AT the checkpoint
@@ -49,7 +49,13 @@ from nzwirelessmap_fetch_spark.streaming.events_stream import (  # noqa: E402
 
 N_USERS = 500
 ROWS_PER_BATCH = 200
-SAMPLE_EVERY = 100
+
+
+def sample_points(n_batches: int) -> frozenset[int]:
+    """Commit counts (batch_id + 1) at which read cost is sampled: ¼, ½
+    and ¾ of the run and always its last batch, so a short run samples
+    too."""
+    return frozenset(n_batches * k // 4 for k in (1, 2, 3, 4)) - {0}
 
 
 class _InducedCrash(Exception):
@@ -98,10 +104,11 @@ def main() -> None:
     W.SnapshotParquetTable._write_part = crashing_part
 
     samples: list[dict] = []
+    sample_at = sample_points(n_batches)
     t_run0 = time.perf_counter()
 
     def maybe_sample(batch_id: int) -> None:
-        if (batch_id + 1) % SAMPLE_EVERY:
+        if batch_id + 1 not in sample_at:
             return
         reader = W.SnapshotParquetTable(root)  # cold: no in-process state
         t0 = time.perf_counter()
