@@ -78,7 +78,7 @@ def main() -> None:
         _verified_jaccard_pairs,
         _verified_simhash_pairs,
     )
-    from nzwirelessmap_fetch_spark.operators.similarity import _knn_ranked
+    from nzwirelessmap_fetch_spark.operators.similarity import _ivf_cells, _knn_ranked
     from nzwirelessmap_fetch_spark.operators.sketches import _top2_components
     from nzwirelessmap_fetch_spark.operators.text import (
         WINNOW_ADAPTIVE,
@@ -108,6 +108,8 @@ def main() -> None:
         ("shared_simhash_pair_build", lambda: _verified_simhash_pairs(spark, sf_dir)),
         # banded-LSH pair stream + ranked kNN adjacency, read by eight entries
         ("shared_lsh_banded_build", lambda: _knn_ranked(spark, sf_dir)),
+        # seed-centroid IVF cell assignment, read by five entries
+        ("shared_ivf_cells_build", lambda: _ivf_cells(spark, sf_dir)),
     ]
     for line, build in shared:
         start = time.perf_counter()

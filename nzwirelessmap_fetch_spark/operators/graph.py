@@ -1518,7 +1518,9 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("start", "walk_no")
 
 
-GRAPH_RANDOM_WALKS_SQL = f"""
+# The oracle's walk prefix: the Jaccard edge graph, the sorted adjacency
+# ``adj`` and the walk start rows ``w0``; ``_ddb_walk_step`` extends it.
+_DDB_WALK_START = f"""
 WITH
 w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 sh AS MATERIALIZED (
@@ -1545,26 +1547,31 @@ adj AS (SELECT src, list_sort(list(dst)) AS nbrs FROM edges GROUP BY src),
 w0 AS (
   SELECT a.src AS start, t.w, a.src AS cur, [a.src] AS path
   FROM adj a, (SELECT UNNEST(generate_series(0, {WALKS_PER_NODE - 1})) AS w) t
-),
-w1 AS (
-  SELECT start, w,
-         nbrs[CAST(('0x' || substr(md5(CAST(w0.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':0'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1] AS cur,
-         list_append(path, nbrs[CAST(('0x' || substr(md5(CAST(w0.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':0'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1]) AS path
-  FROM w0 JOIN adj ON w0.cur = adj.src
-),
-w2 AS (
-  SELECT start, w,
-         nbrs[CAST(('0x' || substr(md5(CAST(w1.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':1'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1] AS cur,
-         list_append(path, nbrs[CAST(('0x' || substr(md5(CAST(w1.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':1'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1]) AS path
-  FROM w1 JOIN adj ON w1.cur = adj.src
-),
-w3 AS (
-  SELECT start, w,
-         nbrs[CAST(('0x' || substr(md5(CAST(w2.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':2'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1] AS cur,
-         list_append(path, nbrs[CAST(('0x' || substr(md5(CAST(w2.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':2'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1]) AS path
-  FROM w2 JOIN adj ON w2.cur = adj.src
-)
+)"""
+
+
+def _ddb_walk_step(k: int) -> str:
+    """DuckDB CTE ``w{k}``: hop ``k`` of every walk from ``w{k-1}``. The
+    md5 pick (the twin of ``graph_random_walks``'s ``pick`` for step
+    ``k - 1``) is computed once per row, in the inner SELECT."""
+    return f"""w{k} AS (
+  SELECT start, w, nxt AS cur, list_append(path, nxt) AS path FROM (
+    SELECT start, w, path,
+           nbrs[CAST(('0x' || substr(md5(CAST(w{k - 1}.cur AS VARCHAR) || ':' || CAST(w AS VARCHAR) || ':{k - 1}'), 1, 8))::BIGINT % len(nbrs) AS INT) + 1] AS nxt
+    FROM w{k - 1} JOIN adj ON w{k - 1}.cur = adj.src)
+)"""
+
+
+def _graph_random_walks_sql(walk_length: int) -> str:
+    """The oracle for ``graph_random_walks`` at ``walk_length`` hops: one
+    generated step CTE per hop, so the oracle follows ``WALK_LENGTH``."""
+    steps = ",\n".join(_ddb_walk_step(k) for k in range(1, walk_length + 1))
+    return f"""{_DDB_WALK_START},
+{steps}
 SELECT start, CAST(w AS INT) AS walk_no, array_to_string(path, ',') AS path,
        cur AS end_node
-FROM w3 ORDER BY start, walk_no
+FROM w{walk_length} ORDER BY start, walk_no
 """
+
+
+GRAPH_RANDOM_WALKS_SQL = _graph_random_walks_sql(WALK_LENGTH)

@@ -20,6 +20,15 @@
   search, submodular selection, pruned MaxSim and the kNN classifier all
   read it, and their oracles share its SQL twin (``_KNN_CTES``).
 
+- sim_ivf              inverted-file ANN: every vector assigned to its
+  nearest of K = max(16, ⌊√n⌋) seed centroids, ⌊√K⌋ cells probed per
+  query, exact cosine re-rank inside them. The assignment is ONE
+  memoized substrate (``_ivf_cells``, family ``ivf_cells``): sim_ivf,
+  sim_ivf_pq and corpus_semdedup read it (sim_ivf_recall_eval and
+  sim_rrf_fusion through sim_ivf), and their oracles share its SQL twin
+  (``_IVF_CTES``). sim_ivf_kmeans trains its own centroids and shares
+  only the seed, assignment, probe and re-rank helpers.
+
 Hyperplanes are pseudo-random ±1 vectors derived from an LCG on (plane,
 dim) — integer arithmetic, so Spark and the DuckDB oracle build bit-equal
 planes without sharing code.
@@ -302,68 +311,92 @@ def _adaptive_n_probe(k: int) -> int:
     return max(N_PROBE_MIN, int(math.floor(math.sqrt(float(max(k, 0))))))
 
 
-def _ivf_params(e: DataFrame) -> tuple[int, int]:
-    """(K, n_probe) for the given embeddings frame. The count is a
-    parquet-metadata aggregate (one scalar to the driver — the bounded-
-    collect discipline), and both derived values are pure functions of
-    it, replayed by the oracle's kparam/pparam CTEs (``_DDB_IVF_PARAMS``)."""
-    n = e.count()
-    k = _adaptive_n_cells(n)
-    return k, _adaptive_n_probe(k)
-
-
-# Oracle twin of _ivf_params: K and n_probe derived from COUNT(*) with
-# the same floor/sqrt arithmetic (IEEE-identical for any feasible n).
-_DDB_IVF_PARAMS = f"""kparam AS (
-  SELECT GREATEST({IVF_MIN_CELLS},
-                  CAST(FLOOR(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS k
-  FROM embeddings
-),
-pparam AS (
-  SELECT GREATEST({N_PROBE_MIN},
-                  CAST(FLOOR(SQRT(CAST(k AS DOUBLE))) AS BIGINT)) AS p
-  FROM kparam
-)"""
-
-
-def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) ANN: assign every vector to its nearest of
-    K = max(16, ⌊√n⌋) deterministic centroids, probe the ⌊√K⌋ nearest
-    cells per query, exact cosine re-rank inside the probed cells.
-
-    The plan shape IS the scale path of a production IVF index:
-    - assignment: corpus ⨯ broadcast(centroids) → map-side partial
-      ``max_by`` — the shuffle carries |corpus| rows, not |corpus|·K;
-    - the candidate join is keyed by cell id (the "inverted file"), so the
-      only large exchange is corpus-partitioned-by-cell — exactly what a
-      materialized IVF index would store, and a natural `bucketBy(cell)`
-      layout at rest;
-    - K and n_probe are CORPUS-DERIVED (√n / √K — see IVF_MIN_CELLS):
-      with K frozen, per-probe scan cost n/K grows linearly in corpus
-      size; with K = √n it grows as √n and the probed fraction shrinks.
-    Centroids are fixture rows (vec_id < K) instead of k-means iterates so
-    the DuckDB oracle reproduces the index bit-for-bit; swapping in
-    learned centroids changes numbers, not the plan."""
-    e = _emb_parallel(spark, sf_dir)
-    n_cells, n_probe = _ivf_params(e)
-    cents = e.filter(F.col("vec_id") < n_cells).select(
+def _seed_cents(e: DataFrame, k: int) -> DataFrame:
+    """The K seed centroids ``(cell, c_emb)``: the rows ``vec_id < k`` of
+    a ``(vec_id, embedding)`` frame. Fixture rows instead of k-means
+    iterates, so the DuckDB oracle reproduces the index bit-for-bit."""
+    return e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
     )
-    # nearest-centroid assignment; ties (improbable with float cosines)
-    # break toward the smaller cell id via the (cos, -cell) struct order.
-    # r11: shared helper — norms hoisted out of the n·K pair grain.
-    assigned = _assign_cells(e, cents)
+
+
+def _assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment ``(vec_id, cell, embedding)``: cosine
+    argmax, ties → smaller cell via the (cos, -cell) struct order.
+
+    Corpus ⨯ broadcast(centroids) → map-side partial ``max_by``, so the
+    shuffle carries |corpus| rows, not |corpus|·K. Norms are computed
+    once per corpus row and once per centroid, outside the n·K pair
+    grain, so each pair pays one array fold (the dot product).
+    ``dot/(nrm·c_nrm)`` is the expression tree ``cosine`` evaluates per
+    pair (left-fold dot, then the same multiply/divide order), so every
+    ccos bit matches the oracle's."""
+    return (
+        e.withColumn("nrm", norm(F.col("embedding")))
+        .crossJoin(F.broadcast(cents.withColumn("c_nrm", norm(F.col("c_emb")))))
+        .withColumn(
+            "ccos",
+            dot(F.col("embedding"), F.col("c_emb"))
+            / (F.col("nrm") * F.col("c_nrm")),
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.max_by(
+                "cell", F.struct(F.col("ccos"), (-F.col("cell")).alias("nc"))
+            ).alias("cell"),
+            F.first("embedding").alias("embedding"),
+        )
+    )
+
+
+def _ivf_cells(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int, int]:
+    """The IVF cell substrate ``(assigned, n, K, n_probe)``: every vector
+    assigned to its nearest of the K = max(16, ⌊√n⌋) seed centroids
+    (``_seed_cents``), with n_probe = max(4, ⌊√K⌋).
+
+    ``assigned`` is an eager localCheckpoint ``(vec_id, cell,
+    embedding)`` — the inverted file a production index stores, and a
+    natural ``bucketBy(cell)`` layout at rest. Memoized in family
+    ``ivf_cells``: ``sim_ivf``, ``sim_ivf_pq``, ``corpus_semdedup`` and,
+    through ``sim_ivf``, ``sim_ivf_recall_eval`` and ``sim_rrf_fusion``
+    read one build, and a hit runs no Spark job. The count is one
+    scalar to the driver; K and n_probe are pure functions of it,
+    replayed by the oracle's ``_DDB_IVF_PARAMS``, and the whole frame by
+    ``_IVF_CTES``."""
+
+    def build() -> tuple[DataFrame, int, int, int]:
+        e = _emb_parallel(spark, sf_dir)
+        n = e.count()
+        k = _adaptive_n_cells(n)
+        assigned = _assign_cells(e, _seed_cents(e, k)).localCheckpoint(eager=True)
+        return assigned, n, k, _adaptive_n_probe(k)
+
+    return memo("ivf_cells", spark, sf_dir, (), build)
+
+
+def _probe_cells(e: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """``(q_id, q_emb, cell)``: for each query (``vec_id < N_QUERIES`` of
+    ``e``) the ``n_probe`` cells whose centroids are nearest by cosine,
+    ties → smaller cell. Queries ⨯ broadcast(centroids): a
+    N_QUERIES·K grain, free next to the corpus side."""
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    probe_w = Window.partitionBy("q_id").orderBy(F.desc("pcos"), F.asc("cell"))
-    probes = (
+    w = Window.partitionBy("q_id").orderBy(F.desc("pcos"), F.asc("cell"))
+    return (
         q.crossJoin(F.broadcast(cents))
         .withColumn("pcos", cosine(F.col("q_emb"), F.col("c_emb")))
-        .withColumn("pr", F.row_number().over(probe_w))
+        .withColumn("pr", F.row_number().over(w))
         .filter(F.col("pr") <= n_probe)
         .select("q_id", "q_emb", "cell")
     )
+
+
+def _ivf_rerank(assigned: DataFrame, probes: DataFrame) -> DataFrame:
+    """Exact cosine top-{TOP_K} ``(q_id, vec_id, cos, rank)`` over the
+    vectors in each query's probed cells: the candidate join is keyed
+    by cell (the inverted file) against the broadcast probe rows, ranks
+    pinned by (cos DESC, vec_id ASC)."""
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -375,6 +408,28 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("q_id", "vec_id", "cos", "rank")
     )
+
+
+def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF (inverted-file) ANN: assign every vector to its nearest of
+    K = max(16, ⌊√n⌋) deterministic centroids, probe the ⌊√K⌋ nearest
+    cells per query, exact cosine re-rank inside the probed cells.
+
+    The plan shape IS the scale path of a production IVF index:
+    - the assignment is the shared ``_ivf_cells`` substrate, built once
+      per session and corpus;
+    - the candidate join is keyed by cell id (the "inverted file"), so
+      the only large input is the corpus partitioned by cell;
+    - K and n_probe are CORPUS-DERIVED (√n / √K — see IVF_MIN_CELLS):
+      with K frozen, per-probe scan cost n/K grows linearly in corpus
+      size; with K = √n it grows as √n and the probed fraction shrinks.
+    Centroids are fixture rows (vec_id < K) instead of k-means iterates
+    so the DuckDB oracle reproduces the index bit-for-bit; swapping in
+    learned centroids (``sim_ivf_kmeans``) changes numbers, not the
+    plan. Queries and centroids are read from the substrate itself."""
+    assigned, _n, n_cells, n_probe = _ivf_cells(spark, sf_dir)
+    probes = _probe_cells(assigned, _seed_cents(assigned, n_cells), n_probe)
+    return _ivf_rerank(assigned, probes)
 
 
 _DDB_COS = """list_reduce(list_prepend(0.0::DOUBLE,
@@ -390,24 +445,45 @@ _DDB_COS = """list_reduce(list_prepend(0.0::DOUBLE,
                               i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE)),
              (x, y) -> x + y)))"""
 
-SIM_IVF_SQL = f"""
-WITH {_DDB_IVF_PARAMS},
-cents AS (
+# Oracle twin of the K / n_probe arithmetic in ``_ivf_cells``: both
+# derived from COUNT(*) with the same floor/sqrt (IEEE-identical for any
+# feasible n).
+_DDB_IVF_PARAMS = f"""kparam AS (
+  SELECT GREATEST({IVF_MIN_CELLS},
+                  CAST(FLOOR(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS k
+  FROM embeddings
+),
+pparam AS (
+  SELECT GREATEST({N_PROBE_MIN},
+                  CAST(FLOOR(SQRT(CAST(k AS DOUBLE))) AS BIGINT)) AS p
+  FROM kparam
+)"""
+
+
+def _ddb_seed_cents(out: str) -> str:
+    """DuckDB CTE: the seed centroids ``vec_id < k`` (``_seed_cents``)."""
+    return f"""{out} AS (
   SELECT vec_id AS cell, embedding AS c_emb FROM embeddings
   WHERE vec_id < (SELECT k FROM kparam)
-),
-assign_scored AS (
-  SELECT e.vec_id, e.embedding, c.cell,
-         {_DDB_COS.format(a='e.embedding', b='c.c_emb')} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
+)"""
+
+
+def _ddb_assign(cents_cte: str, out: str, src: str = "embeddings") -> str:
+    """DuckDB CTE: nearest-centroid assignment of ``src`` against
+    ``cents_cte`` (``src='train'`` for the sampled Lloyd iterations;
+    the final assignment keeps the full table)."""
+    return f"""{out} AS (
   SELECT vec_id, embedding, cell FROM (
-    SELECT vec_id, embedding, cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell ASC) AS rn
-    FROM assign_scored) WHERE rn = 1
-),
-q AS (
+    SELECT e.vec_id, e.embedding, c.cell,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+             {_DDB_COS.format(a='e.embedding', b='c.c_emb')} DESC, c.cell ASC) AS rn
+    FROM {src} e CROSS JOIN {cents_cte} c) WHERE rn = 1
+)"""
+
+
+def _ddb_probes(cents_cte: str) -> str:
+    """DuckDB CTEs ``q`` and ``probes``: the twin of ``_probe_cells``."""
+    return f"""q AS (
   SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 probes AS (
@@ -415,9 +491,19 @@ probes AS (
     SELECT q.q_id, q.q_emb, c.cell,
            ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
              {_DDB_COS.format(a='q.q_emb', b='c.c_emb')} DESC, c.cell ASC) AS pr
-    FROM q CROSS JOIN cents c) WHERE pr <= (SELECT p FROM pparam)
-),
-scored AS (
+    FROM q CROSS JOIN {cents_cte} c) WHERE pr <= (SELECT p FROM pparam)
+)"""
+
+
+# The oracle twin of ``_ivf_cells``: K/n_probe, the seed ``cents`` and
+# their ``assigned`` frame (vec_id, embedding, cell).
+_IVF_CTES = f"""{_DDB_IVF_PARAMS},
+{_ddb_seed_cents('cents')},
+{_ddb_assign('cents', 'assigned')}"""
+
+# The oracle twin of ``_ivf_rerank``: the CTE tail and final SELECT over
+# ``assigned`` and ``probes``.
+_DDB_IVF_RERANK = f"""scored AS (
   SELECT p.q_id, a.vec_id,
          {_DDB_COS.format(a='p.q_emb', b='a.embedding')} AS cos
   FROM assigned a JOIN probes p USING (cell)
@@ -429,6 +515,11 @@ SELECT q_id, vec_id, cos, CAST(rank AS INT) AS rank FROM (
   FROM scored)
 WHERE rank <= {TOP_K}
 """
+
+SIM_IVF_SQL = f"""
+WITH {_IVF_CTES},
+{_ddb_probes('cents')},
+{_DDB_IVF_RERANK}"""
 
 
 def sim_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,34 +954,6 @@ def _train_stride(n: int, k: int) -> int:
     return max(1, n // (k * KMEANS_TRAIN_PER_CELL))
 
 
-def _assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment (cosine argmax, ties → smaller cell).
-
-    r11 (guide §1.2 per-task work): norms are hoisted OUT of the n·K
-    pair grain — norm(embedding) once per corpus row, norm(c_emb) once
-    per centroid — so each pair pays ONE interpreted array fold (the
-    dot product) instead of three. ``dot/(nrm·c_nrm)`` is the same
-    expression tree as ``cosine`` evaluates per pair (left fold dot,
-    then the identical multiply/divide order), so every ccos bit is
-    unchanged and the oracle replays it verbatim."""
-    return (
-        e.withColumn("nrm", norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cents.withColumn("c_nrm", norm(F.col("c_emb")))))
-        .withColumn(
-            "ccos",
-            dot(F.col("embedding"), F.col("c_emb"))
-            / (F.col("nrm") * F.col("c_nrm")),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cell", F.struct(F.col("ccos"), (-F.col("cell")).alias("nc"))
-            ).alias("cell"),
-            F.first("embedding").alias("embedding"),
-        )
-    )
-
-
 def _update_centroids(assigned: DataFrame) -> DataFrame:
     """Per-cell element-wise mean, decimal-exact: each component sums in
     DECIMAL(20,10) (order-independent) and divides once in double
@@ -929,7 +992,9 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost law and the oracle-replayable slice arithmetic). The FINAL
     assignment and the query probes use the full corpus. Learned cells
     track data density, so probe recall at equal n_probe beats the
-    fixed-seed variant on clustered corpora."""
+    fixed-seed variant on clustered corpora. The trained centroids are
+    this entry's own, so it does not read the ``_ivf_cells`` substrate;
+    it shares the seed, assignment, probe and re-rank helpers."""
     e = _emb_parallel(spark, sf_dir)
     n = e.count()
     n_cells = _adaptive_n_cells(n)
@@ -940,52 +1005,14 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         % F.lit(stride)
         == 0
     )
-    cents = e.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
-    )
+    cents = _seed_cents(e, n_cells)
     for _ in range(KMEANS_ITERATIONS):
         cents = _update_centroids(_assign_cells(train, cents))
     # the trained K-row centroid table is consumed by the final
     # assignment AND the query-probe ranking — read live, each consumer
     # re-runs both Lloyd iterations
     cents = cents.localCheckpoint(eager=True)
-    assigned = _assign_cells(e, cents)
-
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("q_id").orderBy(F.desc("pcos"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("pcos", cosine(F.col("q_emb"), F.col("c_emb")))
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("q_id", "q_emb", "cell")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cosine(F.col("q_emb"), F.col("embedding")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
-
-
-def _ddb_assign(cents_cte: str, out: str, src: str = "embeddings") -> str:
-    """DuckDB CTE: nearest-centroid assignment of ``src`` against
-    ``cents_cte`` (``src='train'`` for the sampled Lloyd iterations;
-    the final assignment keeps the full table)."""
-    return f"""{out} AS (
-  SELECT vec_id, embedding, cell FROM (
-    SELECT e.vec_id, e.embedding, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             {_DDB_COS.format(a='e.embedding', b='c.c_emb')} DESC, c.cell ASC) AS rn
-    FROM {src} e CROSS JOIN {cents_cte} c) WHERE rn = 1
-)"""
+    return _ivf_rerank(_assign_cells(e, cents), _probe_cells(e, cents, n_probe))
 
 
 def _ddb_update(assigned_cte: str, out: str) -> str:
@@ -1014,37 +1041,14 @@ train AS (
   WHERE ((vec_id * {_TRAIN_MIX}) % {_TRAIN_MOD})
         % (SELECT s FROM sparam) = 0
 ),
-cents0 AS (
-  SELECT vec_id AS cell, embedding AS c_emb FROM embeddings
-  WHERE vec_id < (SELECT k FROM kparam)
-),
+{_ddb_seed_cents('cents0')},
 {_ddb_assign('cents0', 'assign1', src='train')},
 {_ddb_update('assign1', 'cents1')},
 {_ddb_assign('cents1', 'assign2', src='train')},
 {_ddb_update('assign2', 'cents2')},
 {_ddb_assign('cents2', 'assigned')},
-q AS (
-  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-probes AS (
-  SELECT q_id, q_emb, cell FROM (
-    SELECT q.q_id, q.q_emb, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-             {_DDB_COS.format(a='q.q_emb', b='c.c_emb')} DESC, c.cell ASC) AS pr
-    FROM q CROSS JOIN cents2 c) WHERE pr <= (SELECT p FROM pparam)
-),
-scored AS (
-  SELECT p.q_id, a.vec_id,
-         {_DDB_COS.format(a='p.q_emb', b='a.embedding')} AS cos
-  FROM assigned a JOIN probes p USING (cell)
-  WHERE a.vec_id <> p.q_id
-)
-SELECT q_id, vec_id, cos, CAST(rank AS INT) AS rank FROM (
-  SELECT q_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-  FROM scored)
-WHERE rank <= {TOP_K}
-"""
+{_ddb_probes('cents2')},
+{_DDB_IVF_RERANK}"""
 
 
 RANGE_TAU = 0.30  # cosine radius for range search
@@ -1361,15 +1365,11 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the one q_id exchange) are unchanged from sim_pq_adc. Determinism:
     same pinned folds/tie-breaks as the parents, so the oracle
     hash-matches distances, not just ranks. K and n_probe are
-    corpus-derived (√n / √K — see IVF_MIN_CELLS)."""
-    e = _emb_parallel(spark, sf_dir)
-    n_cells, n_probe = _ivf_params(e)
-    cents = e.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
-    )
-    # r11: shared helper — norms hoisted out of the n·K pair grain
-    assigned = _assign_cells(e, cents)
-    seeds = e.filter(F.col("vec_id") < PQ_K).select(
+    corpus-derived (√n / √K — see IVF_MIN_CELLS); the cell assignment
+    is the shared ``_ivf_cells`` substrate, which also supplies the
+    query, centroid and codebook-seed rows."""
+    assigned, _n, n_cells, n_probe = _ivf_cells(spark, sf_dir)
+    seeds = assigned.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("k"), F.col("embedding").alias("cemb")
     )
     cb_row = (
@@ -1393,17 +1393,7 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.crossJoin(F.broadcast(cb_row))
         .select("vec_id", "cell", F.expr(codes_expr).alias("codes"))
     )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("q_id").orderBy(F.desc("pcos"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("pcos", cosine(F.col("q_emb"), F.col("c_emb")))
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("q_id", "q_emb", "cell")
-    )
+    probes = _probe_cells(assigned, _seed_cents(assigned, n_cells), n_probe)
     lut_expr = (
         f"transform(sequence(0, {PQ_M - 1}), m -> "
         f"  transform(sequence(0, {PQ_K - 1}), k -> {_pq_sqdist('q_emb', 'm', 'k')}))"
@@ -1429,22 +1419,7 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIM_IVF_PQ_SQL = f"""
-WITH {_DDB_IVF_PARAMS},
-cents AS (
-  SELECT vec_id AS cell, embedding AS c_emb FROM embeddings
-  WHERE vec_id < (SELECT k FROM kparam)
-),
-assign_scored AS (
-  SELECT e.vec_id, c.cell,
-         {_DDB_COS.format(a='e.embedding', b='c.c_emb')} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell ASC) AS rn
-    FROM assign_scored) WHERE rn = 1
-),
+WITH {_IVF_CTES},
 seeds AS (
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k, embedding AS cemb
   FROM embeddings WHERE vec_id < {PQ_K}
@@ -1463,16 +1438,7 @@ codes AS (
            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dd ASC, k ASC) AS rn
     FROM dist) WHERE rn = 1
 ),
-q AS (
-  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-probes AS (
-  SELECT q_id, q_emb, cell FROM (
-    SELECT q.q_id, q.q_emb, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-             {_DDB_COS.format(a='q.q_emb', b='c.c_emb')} DESC, c.cell ASC) AS pr
-    FROM q CROSS JOIN cents c) WHERE pr <= (SELECT p FROM pparam)
-),
+{_ddb_probes('cents')},
 lut AS (
   SELECT q.q_id, cs.m, cs.k,
          {_ddb_pq_sqdist('q.q_emb', 'cs.m', 'cs.cemb')} AS dd
@@ -1816,9 +1782,10 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus puts most vectors in few cells) are bounded by the
     deterministic sub-shard valve above (SEMDEDUP_CELL_CAP_FACTOR).
 
-    Assignment reuses the IVF plan (corpus ⨯ broadcast centroids →
-    map-side max_by); the within-cell self-join is keyed by
-    (cell, sub-shard); a vector drops when SOME same-block partner has
+    The assignment is the shared ``_ivf_cells`` substrate (corpus ⨯
+    broadcast centroids → map-side max_by), read here with its n and K;
+    the within-cell self-join is keyed by (cell, sub-shard); a vector
+    drops when SOME same-block partner has
     cosine ≥ {SEMDEDUP_TAU} and a smaller vec_id (greedy min-id
     representative — the deterministic stand-in for SemDeDup's 'keep one
     per group'). Output is the drop list with its kept representative
@@ -1827,18 +1794,11 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    e = _emb_parallel(spark, sf_dir)
-    n_vecs = e.count()
-    n_cells = _adaptive_n_cells(n_vecs)
+    assigned, n_vecs, n_cells, _n_probe = _ivf_cells(spark, sf_dir)
     cell_cap = max(
         SEMDEDUP_CELL_CAP_MIN,
         SEMDEDUP_CELL_CAP_FACTOR * math.ceil(n_vecs / max(n_cells, 1)),
     )
-    cents = e.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
-    )
-    # r11: shared helper — norms hoisted out of the n·K pair grain
-    assigned = _assign_cells(e, cents)
     # cell-size valve: |cells| rows joined back (broadcast-sized — the
     # size table is K rows)
     sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("csz"))
@@ -1897,27 +1857,12 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CORPUS_SEMDEDUP_SQL = f"""
-WITH {_DDB_IVF_PARAMS},
+WITH {_IVF_CTES},
 capparam AS (
   SELECT GREATEST({SEMDEDUP_CELL_CAP_MIN},
                   {SEMDEDUP_CELL_CAP_FACTOR} * CAST(CEIL(
                     CAST((SELECT COUNT(*) FROM embeddings) AS DOUBLE)
                     / (SELECT k FROM kparam)) AS BIGINT)) AS cap
-),
-cents AS (
-  SELECT vec_id AS cell, embedding AS c_emb FROM embeddings
-  WHERE vec_id < (SELECT k FROM kparam)
-),
-assign_scored AS (
-  SELECT e.vec_id, e.embedding, c.cell,
-         {_DDB_COS.format(a='e.embedding', b='c.c_emb')} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, embedding, cell FROM (
-    SELECT vec_id, embedding, cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell ASC) AS rn
-    FROM assign_scored) WHERE rn = 1
 ),
 cellsz AS (SELECT cell, COUNT(*) AS csz FROM assigned GROUP BY cell),
 sharded AS (

@@ -62,30 +62,12 @@ def test_ivf_index_at_rest_aggregates_without_shuffle(spark):
     """The ANN story at 100 TB: the IVF assignment written
     ``bucketBy(cell)`` IS the inverted file — cell-keyed work (posting-
     list stats, per-cell probes) then runs with NO exchange, because the
-    bucketed scan already provides the hash distribution."""
-    from pyspark.sql import functions as F
+    bucketed scan already provides the hash distribution. The frame
+    bucketed is the shared ``_ivf_cells`` substrate the IVF entries
+    read."""
+    from nzwirelessmap_fetch_spark.operators.similarity import _ivf_cells
 
-    from nzwirelessmap_fetch_spark.catalog import Catalog
-    from nzwirelessmap_fetch_spark.operators.similarity import (
-        _ivf_params,
-        cosine,
-    )
-    from nzwirelessmap_fetch_spark.sinks.writers import write_bucketed_table
-
-    e = Catalog(spark, SF_CORRECT).table("embeddings")
-    n_cells, _ = _ivf_params(e)
-    cents = e.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
-    )
-    assigned = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("ccos", cosine(F.col("embedding"), F.col("c_emb")))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by("cell", F.struct(F.col("ccos"), -F.col("cell"))).alias("cell"),
-            F.first("embedding").alias("embedding"),
-        )
-    )
+    assigned, _n, _k, _p = _ivf_cells(spark, SF_CORRECT)
     spark.sql("DROP TABLE IF EXISTS ivf_at_rest")
     try:
         write_bucketed_table(assigned, "ivf_at_rest", N_BUCKETS, key="cell")

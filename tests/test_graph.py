@@ -101,6 +101,27 @@ def test_random_walks_ship_no_nested_cell(spark, ddb):
     pd.util.hash_pandas_object(pdf.sort_values(list(pdf.columns)), index=False)
 
 
+def test_random_walks_oracle_follows_walk_length(spark, monkeypatch):
+    """The oracle's step CTEs are generated from the walk length, so a
+    changed ``WALK_LENGTH`` moves both engines: at 2 and at 4 hops the
+    walk corpus hash-matches the oracle built for that length."""
+    import duckdb
+
+    from nzwirelessmap_fetch_spark.operators import graph
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    for walk_length in (2, 4):
+        monkeypatch.setattr(graph, "WALK_LENGTH", walk_length)
+        df = graph.graph_random_walks(spark, SF_SMOKE)
+        paths = [r.path for r in df.select("path").collect()]
+        assert paths and all(len(p.split(",")) == walk_length + 1 for p in paths)
+        compare(df, con, graph._graph_random_walks_sql(walk_length))
+    con.close()
+
+
 def test_jaccard_edges_symmetric_distinct_loop_free(spark):
     """The edge contract every graph consumer relies on, and the reason
     ``_jaccard_edges`` needs no distinct: the set is symmetric, has no

@@ -106,6 +106,7 @@ def test_reset_frees_every_memo_storage(spark):
         _verified_simhash_pairs,
     )
     from nzwirelessmap_fetch_spark.operators.similarity import (
+        _ivf_cells,
         _knn_ranked,
         sim_lsh_banded,
     )
@@ -119,6 +120,7 @@ def test_reset_frees_every_memo_storage(spark):
         _winnow_pairs(spark, SF_SMOKE, max_df=None),
         sim_lsh_banded(spark, SF_SMOKE),
         _knn_ranked(spark, SF_SMOKE),
+        _ivf_cells(spark, SF_SMOKE)[0],
     ]
     for frame in frames:
         frame.count()
@@ -138,9 +140,53 @@ def test_reset_frees_every_memo_storage(spark):
     memo.reset()
     assert all(
         memo.entries(f) == {}
-        for f in ("jaccard_pairs", "containment_pairs", "lsh_banded", "winnow_fingerprints")
+        for f in (
+            "jaccard_pairs",
+            "containment_pairs",
+            "lsh_banded",
+            "winnow_fingerprints",
+            "ivf_cells",
+        )
     )
     assert _eventually(lambda: not (held & _live_rdd_ids(spark)))
+
+
+def test_ivf_family_owns_one_checkpoint_and_a_hit_is_free(spark):
+    """The IVF consumers read one ``ivf_cells`` checkpoint. Run the way
+    the correctness gate runs them (registry call, then ``toPandas()``,
+    one job group each) from a reset memo: the family holds one entry, the
+    registry calls of ``sim_ivf`` and ``sim_ivf_pq`` run no Spark job
+    (each counted the corpus for K when it built its own assignment),
+    and no entry leaves a frame in the cache manager."""
+    from nzwirelessmap_fetch_spark.plans import registry
+
+    entries = registry.queries()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    memo.reset()
+    build_jobs = {}
+    try:
+        for name in (
+            "corpus_semdedup",
+            "sim_ivf",
+            "sim_ivf_pq",
+            "sim_ivf_recall_eval",
+        ):
+            group = f"ivf_family_{name}"
+            sc.setJobGroup(f"{group}:build", name)
+            df = entries[name](spark, SF_SMOKE)
+            build_jobs[name] = len(tracker.getJobIdsForGroup(f"{group}:build"))
+            sc.setJobGroup(group, name)
+            assert len(df.toPandas()) > 0, name
+            assert cache.isEmpty(), name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert build_jobs["sim_ivf"] == build_jobs["sim_ivf_pq"] == 0, build_jobs
+    (value,) = memo.entries("ivf_cells").values()
+    assert _checkpoint_id(value[0]) in _live_rdd_ids(spark)
+    memo.reset("ivf_cells")
 
 
 

@@ -99,10 +99,11 @@ def main(names: list[str]) -> int:
         )
 
     # Shared-build attribution (r10 verdict directive #4): the memoized
-    # substrates (jaccard/containment/winnow pair frames, PC power
-    # iteration, simhash pair stream) build inside whichever consumer
-    # the shard order runs FIRST, which forces family-sum diffs when
-    # comparing bars across rounds. With SPARK_GRAFT_ATTR_SHARED=1 the
+    # substrates (jaccard/containment/winnow pair frames, PCA
+    # components, simhash pair stream, banded-LSH kNN, IVF cells) build
+    # inside whichever consumer the shard order runs FIRST, which forces
+    # family-sum diffs when comparing bars across rounds. With
+    # SPARK_GRAFT_ATTR_SHARED=1 the
     # memo builders are wrapped with a timer that records every
     # cache-MISS build (calls ≥0.1 s; hits return in µs) into a
     # "_shared_builds" sidecar keyed by build name — no behavior
@@ -142,6 +143,7 @@ def main(names: list[str]) -> int:
         _attr_wrap(_sk, "_top2_components", "shared_pc_build")
         # the miss-only builder: the registry holds the unwrapped entry
         _attr_wrap(_sim, "_build_lsh_banded", "shared_lsh_banded_build")
+        _attr_wrap(_sim, "_ivf_cells", "shared_ivf_cells_build")
 
     # admission-budget header (r10 ADVICE): snapshot at run START —
     # the budget derives from free disk, which mid-run spill churn

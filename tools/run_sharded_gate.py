@@ -133,6 +133,14 @@ MEMO_FAMILIES: list[set[str]] = [
         "sim_maxsim_pruned",
         "ml_knn_classifier_eval",
     },
+    {  # memo family "ivf_cells" (operators/similarity.py): the seed-
+        # centroid cell assignment; the last two read it through sim_ivf
+        "sim_ivf",
+        "sim_ivf_pq",
+        "corpus_semdedup",
+        "sim_ivf_recall_eval",
+        "sim_rrf_fusion",
+    },
 ]
 
 

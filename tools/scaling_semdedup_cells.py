@@ -20,6 +20,9 @@ import sys
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from nzwirelessmap_fetch_spark.operators.similarity import _DDB_COS  # noqa: E402
 
 FIXTURES = [
     ("sf0.01", "/root/testdata/sf0.01"),
@@ -28,16 +31,6 @@ FIXTURES = [
     ("sf1-uniform", os.path.join(REPO, ".scaling_sf1")),
     ("sf1-zipf", os.path.join(REPO, ".skew_fixture_sf1")),
 ]
-
-_COS = """list_reduce(list_prepend(0.0::DOUBLE,
-    list_transform(generate_series(1, len({a})), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)),
-  (x, y) -> x + y)
-/ (sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-     list_transform(generate_series(1, len({a})), i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)),
-   (x, y) -> x + y))
- * sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-     list_transform(generate_series(1, len({b})), i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE)),
-   (x, y) -> x + y)))"""
 
 
 def probe(path: str, fixed_k: int | None = None) -> tuple[int, int, int, int]:
@@ -66,7 +59,7 @@ assigned AS (
   SELECT vec_id, cell FROM (
     SELECT e.vec_id, c.cell,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             {_COS.format(a='e.embedding', b='c.c_emb')} DESC, c.cell ASC) AS rn
+             {_DDB_COS.format(a='e.embedding', b='c.c_emb')} DESC, c.cell ASC) AS rn
     FROM embeddings e CROSS JOIN cents c) WHERE rn = 1
 ),
 cellsz AS (SELECT cell, COUNT(*) AS csz FROM assigned GROUP BY cell),
