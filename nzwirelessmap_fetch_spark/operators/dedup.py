@@ -23,6 +23,8 @@ integers.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -133,8 +135,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fewer 10⁷-row exchange at sf0.1.
 
     Admission-guarded (r8 verdict directive #2): the prefix join's exact
-    fan-out Σ_h cnt_prefix(h)² is pre-flighted from the persisted prefix
-    table (one vocab-sized agg) and an over-budget corpus refuses with
+    fan-out Σ_h cnt_prefix(h)² comes out of the action that fills the
+    shingle sets (``_fill_sets``), and an over-budget corpus refuses with
     ``ExactMeasureBoundError`` naming ``dedup_ngram_jaccard_capped``,
     instead of dying mid-shuffle. The guard is scoped to THIS entry (the
     registered exact measure): composite consumers of the shared pair
@@ -201,15 +203,26 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # df-ascending wins 30–34% on the Zipfian fixture (head shingles never
 # enter a prefix) but loses 9–19% on the saturated near-uniform fixture
 # (every df equal → the df join-back is pure overhead). `order="auto"`
-# turns the constant into a rule: build the df table (vocab-sized,
-# map-side-combinable groupBy), probe max(df)/p99(df) with one tiny
-# aggregate over it, and pick df-ascending iff the ratio crosses
-# DF_SKEW_ORDER_RATIO. Measured ratios: sf0.01 → 1.10, sf0.1 → 1.04,
-# Zipf fixture → 194 — two orders of magnitude of margin either side
-# of the threshold. On a skewed corpus the probed df table is REUSED
-# by the df path (zero waste); on a flat corpus the probe pays only
-# the df groupBy, not the join-back that made hash order win.
+# turns the constant into a rule: the action that fills the hash-ordered
+# sets also returns max(df)/p99(df) (``_fill_sets``), and the build picks
+# df-ascending iff the ratio crosses DF_SKEW_ORDER_RATIO. Measured
+# ratios: sf0.01 → 1.10, sf0.1 → 1.04, Zipf fixture → 194 — two orders
+# of magnitude of margin either side of the threshold. On a flat corpus
+# the probe costs no action of its own; on a skewed one the df-ordered
+# sets are derived from the filled hash sets.
 DF_SKEW_ORDER_RATIO = 8
+
+
+class _SetStats(NamedTuple):
+    """What one ``_fill_sets`` action learns about the shingle stream:
+    the df-skew probe's max and p99 document frequency, and the exact
+    raw match volume of each pair build's prefix join under the sets'
+    order (the admission guards' pre-flight)."""
+
+    mx: int
+    p99: int
+    jaccard_rows: int  # Σ_h c_j(h)², c_j = docs with h in their Jaccard prefix
+    containment_rows: int  # Σ_h c_c(h)·df(h), c_c = docs with h in their probe prefix
 
 
 def _hashed_shingles(spark: SparkSession, sf_dir: str, max_df: int | None) -> DataFrame:
@@ -225,83 +238,127 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str, max_df: int | None) -> Da
     )
 
 
-def _df_table(sh: DataFrame) -> DataFrame:
-    return sh.groupBy("h").agg(F.count(F.lit(1)).alias("dfc"))
+def _jaccard_prefix_len(n):
+    """p = n − ⌈t·n⌉ + 1; with t=0.5: ⌊n/2⌋+1."""
+    return (n - F.ceil(n * F.lit(JACCARD_THRESHOLD)) + 1).cast("int")
 
 
-def _probe_prefix_order(sh: DataFrame) -> str:
-    """The df-skew probe over a (doc_id, h) shingle stream. When it
-    picks "df" the probed df table stays persisted: the df path's
-    ``_df_table`` over an identical shingle plan reads it from Spark's
-    cache (zero waste) and unpersists it once ``sets`` is filled."""
-    df_tab = _df_table(sh).persist()
-    stats = df_tab.agg(
+def _containment_prefix_len(n):
+    """⌊n/5⌋+1 at t=4/5 = n − ⌈t·n⌉ + 1."""
+    return (F.floor(n / CONTAIN_DEN) + 1).cast("int")
+
+
+def _fill_sets(sets: DataFrame) -> tuple[DataFrame, _SetStats]:
+    """Persist a doc → (ordered shingle-hash array ``hs``, size ``n``)
+    table and fill it with the ONE action that also computes its
+    ``_SetStats``: posexplode(hs) grouped by h into df, the Jaccard
+    prefix count and the containment prefix count, then one global
+    aggregate. The CALLER unpersists the sets.
+
+    The order probe and the admission guards need those stats before
+    the pair join is planned, so this action runs first anyway; filling
+    the persisted sets in it means the build's readers (prefix join
+    sides, postings, both verify joins) all read the cache instead of
+    each recomputing the shingle aggregation."""
+    sets = sets.persist()
+    pos, n = F.col("pos"), F.col("n")
+    per_h = (
+        sets.select("n", F.posexplode("hs").alias("pos", "h"))
+        .groupBy("h")
+        .agg(
+            F.count(F.lit(1)).alias("dfc"),
+            F.count(F.when(pos < _jaccard_prefix_len(n), 1)).alias("cj"),
+            F.count(F.when(pos < _containment_prefix_len(n), 1)).alias("cc"),
+        )
+    )
+    row = per_h.agg(
         F.max("dfc").alias("mx"),
         F.percentile_approx("dfc", F.lit(0.99), F.lit(10000)).alias("p99"),
+        F.sum(F.col("cj") * F.col("cj")).alias("jaccard_rows"),
+        F.sum(F.col("cc") * F.col("dfc")).alias("containment_rows"),
     ).first()
-    p99 = max(int(stats["p99"] or 1), 1)
-    # mx is None on an EMPTY shingle table (every doc shorter
-    # than the shingle width) — `None >= int` raises TypeError.
-    # Default to hash order: there is nothing to skew (r7 ADVICE).
-    mx = int(stats["mx"] or 0)
-    if mx >= DF_SKEW_ORDER_RATIO * p99:
-        return "df"
-    df_tab.unpersist()
-    return "hash"
-
-
-def _resolve_prefix_order(
-    spark: SparkSession, sf_dir: str, max_df: int | None, order: str
-) -> str:
-    """``order="auto"`` → the probe's pick, memoized per (sf_dir, max_df)
-    in the ``prefix_order`` family (both pair builds share it). Resolving
-    BEFORE the pair memo lets an "auto" build and an explicit call for
-    the order it picked share one entry."""
-    if order != "auto":
-        return order
-    return memo(
-        "prefix_order", spark, sf_dir, max_df,
-        lambda: _probe_prefix_order(_hashed_shingles(spark, sf_dir, max_df)),
+    # every aggregate is NULL on an EMPTY shingle table (every doc
+    # shorter than the shingle width) — `None >= int` raises TypeError;
+    # nothing to skew, nothing to join (r7 ADVICE).
+    return sets, _SetStats(
+        mx=int(row["mx"] or 0),
+        p99=max(int(row["p99"] or 1), 1),
+        jaccard_rows=int(row["jaccard_rows"] or 0),
+        containment_rows=int(row["containment_rows"] or 0),
     )
 
 
-def _prefix_order_sets(sh: DataFrame, order: str) -> DataFrame:
-    """The doc → (globally-ordered shingle-hash array, size) table both
-    pair builds share, persisted and eagerly filled (the callers read it
-    from several subtrees; concurrently-scheduled consumers of a lazy
-    persist would each recompute the shingle aggregation — measured ~35 s
-    vs ~15 s at sf0.1). The CALLER unpersists it."""
+def _ordered_sets(sh: DataFrame, order: str) -> tuple[str, DataFrame, _SetStats]:
+    """``(resolved order, filled sets, stats)`` over a (doc_id, h)
+    shingle stream. The hash-ordered sets are filled first; ``"auto"``
+    resolves from their stats. For ``"df"`` the df-ascending sets
+    (canonical AllPairs/PPJoin: prefixes carry the rarest shingles;
+    (df, h) is a global total order, so the prefix + positional lemmas
+    hold unchanged) are derived from the filled hash sets, whose fill
+    action returns the df-order stats; the hash sets are then freed."""
+    sets, stats = _fill_sets(
+        sh.groupBy("doc_id").agg(
+            F.sort_array(F.collect_list("h")).alias("hs"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+    if order == "auto":
+        order = "df" if stats.mx >= DF_SKEW_ORDER_RATIO * stats.p99 else "hash"
     if order == "df":
-        # df-ascending global order (canonical AllPairs/PPJoin): prefixes
-        # carry the rarest shingles; (df, h) is a global total order so
-        # the prefix + positional lemmas hold unchanged.
-        tab = _df_table(sh)
-        sets = (
-            sh.join(tab, "h")
+        postings = sets.select("doc_id", F.explode("hs").alias("h"))
+        dfc = postings.groupBy("h").agg(F.count(F.lit(1)).alias("dfc"))
+        hashed = sets
+        sets, stats = _fill_sets(
+            postings.join(dfc, "h")
             .select("doc_id", F.struct("dfc", "h").alias("kh"))
             .groupBy("doc_id")
             .agg(
-                F.expr("transform(sort_array(collect_list(kh)), x -> x.h)").alias(
-                    "hs"
-                ),
+                F.expr("transform(sort_array(collect_list(kh)), x -> x.h)").alias("hs"),
                 F.count(F.lit(1)).alias("n"),
             )
-            .persist()
         )
-    else:
-        tab = None
-        sets = (
-            sh.groupBy("doc_id")
-            .agg(
-                F.sort_array(F.collect_list("h")).alias("hs"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .persist()
-        )
-    sets.count()
-    if tab is not None:
-        tab.unpersist()  # frees the probe's cached df table, if any
-    return sets
+        hashed.unpersist()
+    return order, sets, stats
+
+
+def _pair_memo(
+    family: str,
+    spark: SparkSession,
+    sf_dir: str,
+    max_df: int | None,
+    order: str,
+    build: Callable[[DataFrame, _SetStats], DataFrame],
+) -> DataFrame:
+    """The front both pair builds share: ``build(sets, stats)``
+    memoized in ``family``, keyed (sf_dir, max_df, resolved order).
+
+    ``order="auto"`` resolves through the ``prefix_order`` memo (per
+    (sf_dir, max_df), shared by both families). Resolving BEFORE the
+    pair memo lets an "auto" build and an explicit call for the order
+    it picked share one entry. On a ``prefix_order`` miss the probe's
+    own fill is handed to the build, so a cold "auto" build fills its
+    sets once. Every filled set is unpersisted once the build returns
+    or raises, or at once on a pair-memo hit."""
+    filled: list[tuple[DataFrame, _SetStats]] = []
+
+    def fill(o: str) -> str:
+        resolved, sets, stats = _ordered_sets(_hashed_shingles(spark, sf_dir, max_df), o)
+        filled.append((sets, stats))
+        return resolved
+
+    if order == "auto":
+        order = memo("prefix_order", spark, sf_dir, max_df, lambda: fill("auto"))
+
+    def build_pairs() -> DataFrame:
+        if not filled:
+            fill(order)
+        return build(*filled[0])
+
+    try:
+        return memo(family, spark, sf_dir, (max_df, order), build_pairs)
+    finally:
+        for sets, _ in filled:
+            sets.unpersist()
 
 
 def _verified_jaccard_pairs(
@@ -316,68 +373,44 @@ def _verified_jaccard_pairs(
     (sf_dir, max_df, resolved order). The guard never changes the
     RESULT, so it is not part of the key — a stored frame (built by any
     consumer) serves guarded callers."""
-    order = _resolve_prefix_order(spark, sf_dir, max_df, order)
-    return memo(
-        "jaccard_pairs", spark, sf_dir, (max_df, order),
-        lambda: _build_jaccard_pairs(spark, sf_dir, max_df, order, admission_guard),
+    return _pair_memo(
+        "jaccard_pairs", spark, sf_dir, max_df, order,
+        lambda sets, stats: _build_jaccard_pairs(sets, stats, admission_guard),
     )
 
 
 def _build_jaccard_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_df: int | None,
-    order: str,
-    admission_guard: bool,
+    sets: DataFrame, stats: _SetStats, admission_guard: bool
 ) -> DataFrame:
     # Prefix order: "auto" since r7 — the df-skew probe picks
     # df-ascending on Zipfian corpora (30–34% faster, r6 matrix) and
     # hash order on flat ones (no wasted join-back); both orders are
     # proven row-identical (any fixed global total order satisfies the
-    # prefix + positional lemmas). See _resolve_prefix_order.
-    # doc → (ordered shingle-hash set, set size): |docs| rows (~2 MB at
-    # sf0.1) with bounded arrays. Persisted (MEMORY_AND_DISK) because FOUR
-    # consumers read it — both prefix join sides and both verification
-    # joins — and without the persist each consumer re-runs the whole
-    # shingle aggregation (measured 20× slower). Unpersisted below once the
-    # checkpoint materializes.
-    sets = _prefix_order_sets(_hashed_shingles(spark, sf_dir, max_df), order)
-    # prefix length p = n - ceil(t·n) + 1; with t=0.5: floor(n/2)+1.
+    # prefix + positional lemmas). See _pair_memo.
+    # `sets` is doc → (ordered shingle-hash set, set size): |docs| rows
+    # (~2 MB at sf0.1) with bounded arrays, filled by _fill_sets and
+    # read here by both prefix join sides and both verification joins.
     # posexplode keeps the in-set position for the PPJoin positional filter.
     prefixes = sets.select(
         "doc_id",
         "n",
-        F.posexplode(
-            F.slice(
-                "hs",
-                F.lit(1),
-                (F.col("n") - F.ceil(F.col("n") * F.lit(JACCARD_THRESHOLD)) + 1).cast(
-                    "int"
-                ),
-            )
-        ).alias("pos", "h"),
+        F.posexplode(F.slice("hs", F.lit(1), _jaccard_prefix_len(F.col("n")))).alias(
+            "pos", "h"
+        ),
     )
     if admission_guard:
         # Pre-flight the EXACT measure (r8 verdict directive #2): the
-        # prefix self-join's raw match volume is Σ_h cnt_prefix(h)² —
-        # one vocab-sized agg over the (persisted-sets-derived) prefix
-        # stream, vs filling local disk mid-shuffle when infeasible.
+        # prefix self-join's raw match volume is Σ_h cnt_prefix(h)²,
+        # computed by the sets' fill action, vs filling local disk
+        # mid-shuffle when infeasible.
         from ..functions.admission import exact_pair_budget
         from .text import ExactMeasureBoundError
 
         budget = exact_pair_budget()
-        s2 = (
-            prefixes.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum(F.expr("c * c")).alias("s2"))
-            .first()["s2"]
-            or 0
-        )
-        if s2 > budget:
-            sets.unpersist()
+        if stats.jaccard_rows > budget:
             raise ExactMeasureBoundError(
-                f"dedup_ngram_jaccard exact measure needs {s2:,} prefix-"
-                f"join rows > budget {budget:,}; run the oracle-checked "
+                f"dedup_ngram_jaccard exact measure needs {stats.jaccard_rows:,} "
+                f"prefix-join rows > budget {budget:,}; run the oracle-checked "
                 "scale twin dedup_ngram_jaccard_capped instead, or raise "
                 "SPARK_GRAFT_EXACT_PAIR_BUDGET on a host with the disk"
             )
@@ -393,6 +426,8 @@ def _build_jaccard_pairs(
         (F.col("a.n") + F.col("b.n"))
         * F.lit(JACCARD_THRESHOLD / (1 + JACCARD_THRESHOLD))
     )
+    # Not persisted: the verification below reads the candidate set
+    # once, and the sets it joins are already filled.
     cand = (
         a.join(b, "h")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -408,14 +443,7 @@ def _build_jaccard_pairs(
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()  # verify each candidate pair once
-        # persisted: the verification below consumes the candidate set in a
-        # multi-join plan, and re-deriving the prefix join + distinct inside
-        # it measured ~10× the cost of the candidate build itself (26.9 s vs
-        # 2.6 s at sf0.1). |pairs|×16-byte rows, MEMORY_AND_DISK — spills,
-        # never OOMs, and is freed right after the checkpoint materializes.
-        .persist()
     )
-    cand.count()  # same eager-fill rationale as `sets` above
     sa = sets.select(
         F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("n").alias("na")
     )
@@ -428,7 +456,7 @@ def _build_jaccard_pairs(
     # fatal at 100 TB. Shuffling the candidate stream by doc_a then doc_b
     # against the persisted sets is the scale-safe physical plan (AQE still
     # elects a broadcast on its own when the ACTUAL size is tiny).
-    pairs = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("n_inter", F.size(F.array_intersect("hs_a", "hs_b")))
@@ -441,9 +469,6 @@ def _build_jaccard_pairs(
         .select("doc_a", "doc_b", "jaccard")
         .localCheckpoint(eager=True)
     )
-    sets.unpersist()
-    cand.unpersist()
-    return pairs
 
 
 DEDUP_NGRAM_JACCARD_SQL = """
@@ -1580,15 +1605,16 @@ def _containment_pairs(
     cap-eval) consume these builds, and the cap-eval consumes BOTH —
     without the memo the suite runs the inverted-index build up to twice
     per variant (r6: ~9 s duplicate work per bench run)."""
-    order = _resolve_prefix_order(spark, sf_dir, max_df, order)
-    return memo(
-        "containment_pairs", spark, sf_dir, (max_df, order),
-        lambda: _build_containment_pairs(spark, sf_dir, max_df, order),
+    return _pair_memo(
+        "containment_pairs", spark, sf_dir, max_df, order,
+        lambda sets, stats: _build_containment_pairs(
+            spark, sets, stats, admission_guard=max_df is None
+        ),
     )
 
 
 def _build_containment_pairs(
-    spark: SparkSession, sf_dir: str, max_df: int | None, order: str
+    spark: SparkSession, sets: DataFrame, stats: _SetStats, admission_guard: bool
 ) -> DataFrame:
     # Asymmetric prefix filter (SSJoin overlap/containment variant —
     # exact, no recall loss): for C(A→B) = |A∩B|/|A| ≥ t, an A that
@@ -1608,51 +1634,38 @@ def _build_containment_pairs(
     # Replaces the round-4
     # full df² self-join (18-33 s → 7.5 s best-of-3 on this host).
     # `sets` feeds three subtrees (prefix probes, full postings, verify
-    # arrays); see _prefix_order_sets for the eager fill.
-    sets = _prefix_order_sets(_hashed_shingles(spark, sf_dir, max_df), order)
-    # prefix length ⌊n/5⌋+1 at t=4/5 = n - ceil(t·n) + 1. Sizes ride
-    # along on the exploded streams so the SIZE bound — C(A→B) ≥ t needs
-    # |B| ≥ t·|A| because n_inter ≤ min — prunes candidate rows INSIDE
-    # the index join, before any downstream work.
+    # arrays); _fill_sets filled it.
+    # Sizes ride along on the exploded streams so the SIZE bound —
+    # C(A→B) ≥ t needs |B| ≥ t·|A| because n_inter ≤ min — prunes
+    # candidate rows INSIDE the index join, before any downstream work.
     probes = sets.select(
         F.col("doc_id").alias("doc_a"),
         F.col("n").alias("n_a"),
-        F.explode(
-            F.slice("hs", 1, (F.floor(F.col("n") / CONTAIN_DEN) + 1).cast("int"))
-        ).alias("h"),
+        F.explode(F.slice("hs", 1, _containment_prefix_len(F.col("n")))).alias("h"),
     )
     postings = sets.select(
         F.col("doc_id").alias("doc_b"),
         F.col("n").alias("n_b"),
         F.explode("hs").alias("h"),
     )
-    if max_df is None:
+    if admission_guard:
         # Pre-flight the EXACT measure (r8 verdict directive #2): the
         # asymmetric index join's raw match volume is
-        # Σ_h cnt_probe(h)·cnt_posting(h) — two vocab-sized aggs and a
-        # vocab-keyed join over frames derived from the persisted sets.
-        # BOTH registered consumers (corpus_containment and its cap
-        # eval) are tagged exact_measure with the capped twin, so the
+        # Σ_h cnt_probe(h)·cnt_posting(h), computed by the sets' fill
+        # action. BOTH registered consumers (corpus_containment and its
+        # cap eval) are tagged exact_measure with the capped twin, so the
         # builder-level guard mirrors the winnowing family exactly.
         from ..functions.admission import exact_pair_budget
         from .text import ExactMeasureBoundError
 
         budget = exact_pair_budget()
-        pc = probes.groupBy("h").agg(F.count(F.lit(1)).alias("ca"))
-        qc = postings.groupBy("h").agg(F.count(F.lit(1)).alias("cb"))
-        fanout = (
-            pc.join(qc, "h")
-            .agg(F.sum(F.col("ca") * F.col("cb")).alias("s"))
-            .first()["s"]
-            or 0
-        )
-        if fanout > budget:
-            sets.unpersist()
+        if stats.containment_rows > budget:
             raise ExactMeasureBoundError(
-                f"corpus_containment exact measure needs {fanout:,} "
-                f"index-join rows > budget {budget:,}; run the oracle-"
-                "checked scale twin corpus_containment_capped instead, or "
-                "raise SPARK_GRAFT_EXACT_PAIR_BUDGET on a host with the disk"
+                f"corpus_containment exact measure needs "
+                f"{stats.containment_rows:,} index-join rows > budget "
+                f"{budget:,}; run the oracle-checked scale twin "
+                "corpus_containment_capped instead, or raise "
+                "SPARK_GRAFT_EXACT_PAIR_BUDGET on a host with the disk"
             )
     # Explicit width on the index join: AQE sizes post-shuffle partitions
     # by INPUT bytes, but an inverted-index join's OUTPUT is Σ df_a·df_b —
@@ -1684,7 +1697,7 @@ def _build_containment_pairs(
     sb = sets.select(
         F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")
     )
-    out = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn(
@@ -1708,8 +1721,6 @@ def _build_containment_pairs(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    sets.unpersist()
-    return out
 
 
 CORPUS_CONTAINMENT_SQL = f"""

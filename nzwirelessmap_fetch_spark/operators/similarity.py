@@ -26,8 +26,9 @@
   memoized substrate (``_ivf_cells``, family ``ivf_cells``): sim_ivf,
   sim_ivf_pq and corpus_semdedup read it (sim_ivf_recall_eval and
   sim_rrf_fusion through sim_ivf), and their oracles share its SQL twin
-  (``_IVF_CTES``). sim_ivf_kmeans trains its own centroids and shares
-  only the seed, assignment, probe and re-rank helpers.
+  (``_IVF_CTES``). sim_ivf_kmeans trains its own centroids (memo family
+  ``ivf_kmeans``, one training per session and corpus) and shares only
+  the seed, assignment, probe and re-rank helpers.
 
 Hyperplanes are pseudo-random ±1 vectors derived from an LCG on (plane,
 dim) — integer arithmetic, so Spark and the DuckDB oracle build bit-equal
@@ -994,24 +995,32 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     track data density, so probe recall at equal n_probe beats the
     fixed-seed variant on clustered corpora. The trained centroids are
     this entry's own, so it does not read the ``_ivf_cells`` substrate;
-    it shares the seed, assignment, probe and re-rank helpers."""
+    it shares the seed, assignment, probe and re-rank helpers.
+
+    The trained centroids and n_probe are memoized per corpus in family
+    ``ivf_kmeans``: a second call in one session trains nothing and runs
+    no Spark job."""
+
+    def train() -> tuple[DataFrame, int]:
+        e = _emb_parallel(spark, sf_dir)
+        n = e.count()
+        n_cells = _adaptive_n_cells(n)
+        stride = _train_stride(n, n_cells)
+        sample = e if stride == 1 else e.filter(
+            ((F.col("vec_id") * F.lit(_TRAIN_MIX)) % F.lit(_TRAIN_MOD))
+            % F.lit(stride)
+            == 0
+        )
+        cents = _seed_cents(e, n_cells)
+        for _ in range(KMEANS_ITERATIONS):
+            cents = _update_centroids(_assign_cells(sample, cents))
+        # the trained K-row centroid table is consumed by the final
+        # assignment AND the query-probe ranking — read live, each
+        # consumer would re-run both Lloyd iterations
+        return cents.localCheckpoint(eager=True), _adaptive_n_probe(n_cells)
+
+    cents, n_probe = memo("ivf_kmeans", spark, sf_dir, (), train)
     e = _emb_parallel(spark, sf_dir)
-    n = e.count()
-    n_cells = _adaptive_n_cells(n)
-    n_probe = _adaptive_n_probe(n_cells)
-    stride = _train_stride(n, n_cells)
-    train = e if stride == 1 else e.filter(
-        ((F.col("vec_id") * F.lit(_TRAIN_MIX)) % F.lit(_TRAIN_MOD))
-        % F.lit(stride)
-        == 0
-    )
-    cents = _seed_cents(e, n_cells)
-    for _ in range(KMEANS_ITERATIONS):
-        cents = _update_centroids(_assign_cells(train, cents))
-    # the trained K-row centroid table is consumed by the final
-    # assignment AND the query-probe ranking — read live, each consumer
-    # re-runs both Lloyd iterations
-    cents = cents.localCheckpoint(eager=True)
     return _ivf_rerank(_assign_cells(e, cents), _probe_cells(e, cents, n_probe))
 
 

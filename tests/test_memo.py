@@ -108,6 +108,7 @@ def test_reset_frees_every_memo_storage(spark):
     from nzwirelessmap_fetch_spark.operators.similarity import (
         _ivf_cells,
         _knn_ranked,
+        sim_ivf_kmeans,
         sim_lsh_banded,
     )
     from nzwirelessmap_fetch_spark.operators.text import _winnow_pairs
@@ -121,6 +122,7 @@ def test_reset_frees_every_memo_storage(spark):
         sim_lsh_banded(spark, SF_SMOKE),
         _knn_ranked(spark, SF_SMOKE),
         _ivf_cells(spark, SF_SMOKE)[0],
+        sim_ivf_kmeans(spark, SF_SMOKE),
     ]
     for frame in frames:
         frame.count()
@@ -146,6 +148,7 @@ def test_reset_frees_every_memo_storage(spark):
             "lsh_banded",
             "winnow_fingerprints",
             "ivf_cells",
+            "ivf_kmeans",
         )
     )
     assert _eventually(lambda: not (held & _live_rdd_ids(spark)))
@@ -188,6 +191,37 @@ def test_ivf_family_owns_one_checkpoint_and_a_hit_is_free(spark):
     assert _checkpoint_id(value[0]) in _live_rdd_ids(spark)
     memo.reset("ivf_cells")
 
+
+def test_ivf_kmeans_trains_once_per_session(spark):
+    """``sim_ivf_kmeans`` memoizes its trained centroid checkpoint and
+    n_probe in family ``ivf_kmeans``: a second registry call in one
+    session runs no Spark job (the first trains: count, two Lloyd
+    iterations, the checkpoint), both calls return the same rows, and
+    the cache manager stays empty."""
+    from nzwirelessmap_fetch_spark.operators.similarity import sim_ivf_kmeans
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    memo.reset("ivf_kmeans")
+    build_jobs, rows = [], []
+    try:
+        for i in range(2):
+            group = f"ivf_kmeans_call{i}"
+            sc.setJobGroup(f"{group}:build", "sim_ivf_kmeans")
+            df = sim_ivf_kmeans(spark, SF_SMOKE)
+            build_jobs.append(len(tracker.getJobIdsForGroup(f"{group}:build")))
+            sc.setJobGroup(group, "sim_ivf_kmeans")
+            rows.append(sorted(map(tuple, df.collect())))
+            assert cache.isEmpty()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert build_jobs[0] > 0 and build_jobs[1] == 0, build_jobs
+    assert rows[0] == rows[1] and rows[0]
+    ((cents, n_probe),) = memo.entries("ivf_kmeans").values()
+    assert _checkpoint_id(cents) in _live_rdd_ids(spark) and n_probe >= 4
+    memo.reset("ivf_kmeans")
 
 
 def test_pca_family_owns_no_storage_and_stays_cheap(spark):

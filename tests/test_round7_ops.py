@@ -1,67 +1,10 @@
-"""Round-7 tests: adaptive prefix order and PNG palettes. The txn-log
-concurrency, compaction and schema-evolution tests live in
-``tests/test_txn_log.py``."""
+"""Round-7 tests: PNG palettes. The adaptive prefix-order test lives in
+``tests/test_pair_builds.py``; the txn-log concurrency, compaction and
+schema-evolution tests live in ``tests/test_txn_log.py``."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-def test_adaptive_prefix_order_probe_and_identity(spark):
-    """order="auto" (r6 directive #2): the df-skew probe picks hash
-    order on the flat smoke fixture (measured max/p99 ≈ 1.1, threshold
-    8), memoizes the decision per (app, corpus, max_df), and all three
-    orders produce row-identical pair sets."""
-    from nzwirelessmap_fetch_spark.functions import memo
-    from nzwirelessmap_fetch_spark.operators.dedup import (
-        _containment_pairs,
-        _verified_jaccard_pairs,
-    )
-
-    families = ("jaccard_pairs", "containment_pairs", "prefix_order")
-    for family in families:
-        memo.reset(family)
-    app = spark.sparkContext.applicationId
-
-    auto = {
-        tuple(r)
-        for r in _verified_jaccard_pairs(spark, SF_SMOKE, order="auto")
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    # flat synthetic corpus → hash order (no df join-back)
-    assert memo.entries("prefix_order") == {(app, SF_SMOKE, None): "hash"}
-    # the auto build is stored under its RESOLVED order key
-    assert list(memo.entries("jaccard_pairs")) == [(app, SF_SMOKE, (None, "hash"))]
-
-    for order in ("df", "hash"):
-        explicit = {
-            tuple(r)
-            for r in _verified_jaccard_pairs(spark, SF_SMOKE, order=order)
-            .select("doc_a", "doc_b")
-            .collect()
-        }
-        assert explicit == auto, f"order={order} changed the pair set"
-
-    c_auto = {
-        tuple(r)
-        for r in _containment_pairs(spark, SF_SMOKE, order="auto")
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    c_df = {
-        tuple(r)
-        for r in _containment_pairs(spark, SF_SMOKE, order="df")
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    assert c_auto == c_df
-    for family in families:
-        memo.reset(family)
 
 
 def test_png_palette_roundtrip_and_trns():

@@ -1,27 +1,11 @@
-"""Round-8 tests: r7 ADVICE regressions (empty-corpus order probe, tRNS
-fail-loud) and the round-8 operators (adaptive winnowing cap). The
-commit-admission and vacuum tests live in ``tests/test_txn_log.py``."""
+"""Round-8 tests: r7 ADVICE regressions (tRNS fail-loud) and the round-8
+operators (adaptive winnowing cap). The empty-corpus order-probe test
+lives in ``tests/test_pair_builds.py``; the commit-admission and vacuum
+tests live in ``tests/test_txn_log.py``."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-
-def test_prefix_order_probe_empty_corpus(spark):
-    """r7 ADVICE (dedup.py:217): order='auto' on an EMPTY shingle table
-    must resolve to hash order, not raise TypeError on max(df)=None."""
-    from nzwirelessmap_fetch_spark.operators.dedup import (
-        _prefix_order_sets,
-        _probe_prefix_order,
-    )
-
-    sh = spark.createDataFrame([], "doc_id long, h long")
-    order = _probe_prefix_order(sh)
-    assert order == "hash"
-    sets = _prefix_order_sets(sh, order)
-    assert sets.count() == 0
-    sets.unpersist()
 
 
 def test_png_trns_on_truecolor_fails_loud():

@@ -31,6 +31,9 @@ Usage:
     python tools/skew_fixture.py            # build + print corpus stats
     python tools/skew_fixture.py --measure  # build + time the plan-choice
                                             #   family at sf0.1 vs skew
+    python tools/skew_fixture.py --variants # build + time both pair builds
+                                            #   under hash/df/auto prefix
+                                            #   order; row sets must match
 """
 
 from __future__ import annotations
@@ -314,8 +317,9 @@ def measure() -> None:
 def variants() -> None:
     """The r6 re-adjudication proper: hash-order vs df-ascending prefix
     order for BOTH pair builds, on BOTH fixtures (near-uniform sf0.1 and
-    the Zipfian skew corpus). Best-of-2 per cell; the winner per fixture
-    goes to PLANS.md."""
+    the Zipfian skew corpus), plus the cold ``order="auto"`` build (df-skew
+    probe included) and the order it resolved to. Best-of-2 per cell;
+    the three orders must return the same row SET per build and fixture."""
     from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.dedup import (
         _containment_pairs,
@@ -326,43 +330,37 @@ def variants() -> None:
     spark = get_spark(
         "skew-variants", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     )
-
-    # Both pair builds are memoized per (app, sf, max_df, order): reset
-    # before each timed run so none of them is a ~0 s memo hit. reset()
-    # also frees the superseded localCheckpoint blocks, which
-    # clearCache() leaves in storage.
-    def jacc(sf, o):
-        memo.reset("jaccard_pairs")
-        return _verified_jaccard_pairs(spark, sf, order=o)
-
-    def contain(sf, o):
-        memo.reset("containment_pairs")
-        return _containment_pairs(spark, sf, order=o)
-
+    app = spark.sparkContext.applicationId
     builds = {
-        "containment": contain,
-        "jaccard": jacc,
+        "containment": ("containment_pairs", _containment_pairs),
+        "jaccard": ("jaccard_pairs", _verified_jaccard_pairs),
     }
-    print("| build | fixture | order | best-of-2 s | rows |")
-    print("|---|---|---|---|---|")
-    for bname, fn in builds.items():
+    print("| build | fixture | order | resolved | best-of-2 s | rows |")
+    print("|---|---|---|---|---|---|")
+    for bname, (family, fn) in builds.items():
         for tag, sf in (("sf0.1", SF01), ("skew", OUT)):
-            base_rows = {}
-            for order in ("hash", "df"):
-                best, rows_n = float("inf"), None
+            row_sets = {}
+            for order in ("hash", "df", "auto"):
+                best = float("inf")
                 for _ in range(2):
-                    spark.catalog.clearCache()
+                    # reset so no run is a ~0 s memo hit (and "auto"
+                    # re-probes); reset() also frees the superseded
+                    # localCheckpoint blocks
+                    memo.reset(family)
+                    memo.reset("prefix_order")
                     t0 = time.monotonic()
-                    rows_n = fn(sf, order).count()
+                    rows = set(map(tuple, fn(spark, sf, order=order).collect()))
                     best = min(best, time.monotonic() - t0)
-                base_rows[order] = rows_n
+                row_sets[order] = rows
+                resolved = memo.entries("prefix_order").get((app, sf, None), order)
                 print(
-                    f"| {bname} | {tag} | {order} | {best:.2f} | {rows_n} |",
+                    f"| {bname} | {tag} | {order} | {resolved} | {best:.2f} "
+                    f"| {len(rows)} |",
                     flush=True,
                 )
-            assert (
-                base_rows["hash"] == base_rows["df"]
-            ), f"order variant changed {bname}@{tag} results!"
+            if not row_sets["hash"] == row_sets["df"] == row_sets["auto"]:
+                raise SystemExit(f"order variant changed {bname}@{tag} results!")
+    memo.reset()
     spark.stop()
 
 
