@@ -13,6 +13,17 @@ once and hands the stored object to every later caller:
   time; other ``params`` under the current corpus stay live (exact and
   capped builds coexist).
 
+Each entry carries a :class:`Record` of the calls that touched it: the
+Spark job group (``spark.jobGroup.id``) whose call built it, the build
+seconds, whether the build ran inside another memo build, and the set of
+job groups whose calls hit it. The record lives and dies with its entry,
+so a long session stays bounded, and :func:`records` is its one reader.
+From it, :func:`build_lines` names each top-level build's seconds
+``shared_<family>_build`` (``_capped`` when ``params`` is a tuple whose
+first element, the df cap, is set), and :func:`touched` lists the keys a
+job group built or hit. That is how ``bench.py`` and the correctness
+gate attribute shared builds and co-shard the entries that share one.
+
 Release unpersists a DataFrame and frees the localCheckpoint RDDs its
 plan reads — ``unpersist()`` and ``clearCache()`` both leave those
 blocks in storage — removes a :func:`temp_dir` root, and recurses into
@@ -27,12 +38,24 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import time
+from dataclasses import dataclass, field
 from typing import Any, Callable, Hashable
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-_ENTRIES: dict[str, dict[tuple, Any]] = {}
+
+@dataclass
+class Record:
+    group: str | None
+    build_s: float
+    nested: bool
+    hits: set[str | None] = field(default_factory=set)
+
+
+_ENTRIES: dict[str, dict[tuple, tuple[Any, Record]]] = {}
+_building = 0  # memo builds in progress
 
 
 class TempDir(str):
@@ -47,26 +70,69 @@ def memo(
     family: str, spark: SparkSession, sf_dir: str, params: Hashable,
     build: Callable[[], Any],
 ) -> Any:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, params)
+    global _building
+    sc = spark.sparkContext
+    key = (sc.applicationId, sf_dir, params)
+    group = sc.getLocalProperty("spark.jobGroup.id")
     live = _ENTRIES.setdefault(family, {})
     if key in live:
-        return live[key]
-    for old in [k for k in live if k[:2] != (app, sf_dir)]:
-        _release(old[0], live.pop(old))
-    value = build()
-    live[key] = value
+        value, record = live[key]
+        record.hits.add(group)
+        return value
+    for old in [k for k in live if k[:2] != key[:2]]:
+        _release(old[0], live.pop(old)[0])
+    nested = _building > 0
+    _building += 1
+    start = time.perf_counter()
+    try:
+        value = build()
+    finally:
+        _building -= 1
+    live[key] = value, Record(group, time.perf_counter() - start, nested)
     return value
 
 
 def entries(family: str) -> dict[tuple, Any]:
     """A copy of one family's live entries, keyed (app, sf_dir, params)."""
-    return dict(_ENTRIES.get(family, {}))
+    return {k: value for k, (value, _) in _ENTRIES.get(family, {}).items()}
+
+
+def records() -> dict[tuple[str, tuple], Record]:
+    """Every live entry's record, keyed ``(family, (app, sf_dir, params))``."""
+    return {
+        (family, key): record
+        for family, live in _ENTRIES.items()
+        for key, (_, record) in live.items()
+    }
+
+
+def build_lines(since: dict[tuple[str, tuple], Record]) -> dict[str, float]:
+    """Seconds of the top-level builds recorded after the :func:`records`
+    snapshot ``since``, summed per ``shared_<family>_build[_capped]``."""
+    out: dict[str, float] = {}
+    for (family, key), record in records().items():
+        if record.nested or since.get((family, key)) is record:
+            continue
+        params = key[2]
+        capped = isinstance(params, tuple) and params and params[0] is not None
+        line = f"shared_{family}_build" + ("_capped" if capped else "")
+        out[line] = out.get(line, 0.0) + record.build_s
+    return out
+
+
+def touched(group: str) -> list[str]:
+    """``family:params`` of every live entry a call under ``group`` built
+    or hit."""
+    return sorted(
+        f"{family}:{key[2]!r}"
+        for (family, key), record in records().items()
+        if record.group == group or group in record.hits
+    )
 
 
 def reset(family: str | None = None) -> None:
     for fam in list(_ENTRIES) if family is None else [family]:
-        for (app, _sf_dir, _params), value in _ENTRIES.pop(fam, {}).items():
+        for (app, _sf_dir, _params), (value, _) in _ENTRIES.pop(fam, {}).items():
             _release(app, value)
 
 

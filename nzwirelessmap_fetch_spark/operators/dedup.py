@@ -369,12 +369,12 @@ def _verified_jaccard_pairs(
     admission_guard: bool = False,
 ) -> DataFrame:
     """Verified near-dup pairs (doc_a, doc_b, jaccard), memoized as an
-    eager localCheckpoint in the ``jaccard_pairs`` family, keyed
+    eager localCheckpoint in the ``jaccard_pair`` family, keyed
     (sf_dir, max_df, resolved order). The guard never changes the
     RESULT, so it is not part of the key — a stored frame (built by any
     consumer) serves guarded callers."""
     return _pair_memo(
-        "jaccard_pairs", spark, sf_dir, max_df, order,
+        "jaccard_pair", spark, sf_dir, max_df, order,
         lambda sets, stats: _build_jaccard_pairs(sets, stats, admission_guard),
     )
 
@@ -851,7 +851,7 @@ MAX_CC_ITERATIONS = 50
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric, distinct (doc_a, doc_b) edges at J ≥ 0.5, no self-loops.
 
-    Builds on the memoized verified-pair checkpoint (``jaccard_pairs``), so
+    Builds on the memoized verified-pair checkpoint (``jaccard_pair``), so
     the expensive similarity join runs once per (application, sf_dir) no
     matter how many consuming queries execute. The verified pairs are
     already unique with doc_a < doc_b (distinct candidates joined to
@@ -1223,7 +1223,7 @@ WHERE d.doc_id % {INCREMENTAL_BATCH_MOD} = 0
 HAMMING_MAX = 3  # ≤3 bit flips: 4-byte banding then has an intact band (pigeonhole)
 
 # Checkpointed verified Hamming-≤3 pair stream, memoized in the
-# ``simhash_pairs`` family (functions.memo, as the Jaccard pairs are;
+# ``simhash_pair`` family (functions.memo, as the Jaccard pairs are;
 # r10 verdict directive #1). THREE registry entries
 # consume substantially the same 78.8 M-pair result at sf1-Zipf
 # (dedup_simhash_hamming, its content-hash adjudicator, and the
@@ -1259,7 +1259,7 @@ def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     task, serializing the entire pair production.
     """
     return memo(
-        "simhash_pairs", spark, sf_dir, (), lambda: _build_simhash_pairs(spark, sf_dir)
+        "simhash_pair", spark, sf_dir, (), lambda: _build_simhash_pairs(spark, sf_dir)
     )
 
 
@@ -1600,13 +1600,13 @@ def _containment_pairs(
     order: str = "auto",
 ) -> DataFrame:
     """Containment pairs, memoized as an eager localCheckpoint in the
-    ``containment_pairs`` family, keyed (sf_dir, max_df, resolved order)
+    ``containment`` family, keyed (sf_dir, max_df, resolved order)
     like the Jaccard build: three registry entries (exact, capped,
     cap-eval) consume these builds, and the cap-eval consumes BOTH —
     without the memo the suite runs the inverted-index build up to twice
     per variant (r6: ~9 s duplicate work per bench run)."""
     return _pair_memo(
-        "containment_pairs", spark, sf_dir, max_df, order,
+        "containment", spark, sf_dir, max_df, order,
         lambda sets, stats: _build_containment_pairs(
             spark, sets, stats, admission_guard=max_df is None
         ),

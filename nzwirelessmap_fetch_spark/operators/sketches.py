@@ -597,12 +597,12 @@ def _top2_components(spark: SparkSession, sf_dir: str):
     """The top two principal components as driver values ``(v1, lam1,
     v2, lam2)``: unit loadings in dim order and their eigenvalues.
 
-    Memoized in the ``pca`` family (functions.memo), the one substrate of
+    Memoized in the ``pc`` family (functions.memo), the one substrate of
     the four PC entries (principal component, ABTT residual, PCA top-2,
     whitening): the corpus is scanned once per session and a hit runs no
     job. The value is plain Python floats, so it holds no Spark storage.
     bench.py times the build as its ``shared_pc_build`` line."""
-    return memo("pca", spark, sf_dir, (), lambda: _build_top2(spark, sf_dir))
+    return memo("pc", spark, sf_dir, (), lambda: _build_top2(spark, sf_dir))
 
 
 def _build_top2(spark: SparkSession, sf_dir: str):

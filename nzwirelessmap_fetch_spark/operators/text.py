@@ -1943,13 +1943,14 @@ def _winnow_fingerprints(
 def _winnow_pairs(
     spark: SparkSession, sf_dir: str, max_df: int | None | str
 ) -> DataFrame:
-    """Winnowing pair frame, memoized in the ``winnow_pairs`` family per
-    cap sentinel: the output is output-sized (tens to hundreds of rows at
-    gate SFs) and cap_eval re-reads both the exact and the capped pair
-    sets — the eager localCheckpoint truncates the 190M-pair lineage so
-    reuse costs a cached-frame read, not a rebuild."""
+    """Winnowing pair frame, memoized in the ``winnow`` family keyed
+    ``(max_df,)``, one entry per cap sentinel: the output is
+    output-sized (tens to hundreds of rows at gate SFs) and cap_eval
+    re-reads both the exact and the capped pair sets — the eager
+    localCheckpoint truncates the 190M-pair lineage so reuse costs a
+    cached-frame read, not a rebuild."""
     return memo(
-        "winnow_pairs", spark, sf_dir, max_df,
+        "winnow", spark, sf_dir, (max_df,),
         lambda: _build_winnow_pairs(spark, sf_dir, max_df),
     )
 

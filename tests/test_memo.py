@@ -76,8 +76,66 @@ def test_failed_build_stores_nothing(spark):
     with pytest.raises(RuntimeError):
         memo.memo("failing", spark, SF_SMOKE, (), boom)
     assert memo.entries("failing") == {}
+    assert not [k for k in memo.records() if k[0] == "failing"]
     assert memo.memo("failing", spark, SF_SMOKE, (), lambda: "ok") == "ok"
     memo.reset("failing")
+
+
+def _family_records(family: str) -> dict:
+    return {k: r for (fam, k), r in memo.records().items() if fam == family}
+
+
+def test_record_keeps_builder_and_hit_groups(spark):
+    """A build records its job group and seconds; 100 hits under one
+    group add that group and nothing else."""
+    sc = spark.sparkContext
+    memo.reset("recorded")
+    try:
+        sc.setJobGroup("builder", "builder")
+        memo.memo("recorded", spark, SF_SMOKE, (), lambda: time.sleep(0.05) or "v")
+        sc.setJobGroup("reader", "reader")
+        for _ in range(100):
+            assert memo.memo("recorded", spark, SF_SMOKE, (), lambda: "rebuilt") == "v"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    (record,) = _family_records("recorded").values()
+    assert record.group == "builder" and record.build_s >= 0.05
+    assert record.hits == {"reader"} and not record.nested
+    assert memo.touched("reader") == memo.touched("builder") == ["recorded:()"]
+    memo.reset("recorded")
+
+
+def test_nested_build_is_marked_and_gets_no_line(spark):
+    """``winnow_fingerprints`` builds inside the ``winnow`` build: it is
+    recorded nested, and only the outer build gets a shared line (its
+    seconds already hold the inner build's)."""
+    from nzwirelessmap_fetch_spark.operators.text import _winnow_pairs
+
+    memo.reset("winnow")
+    memo.reset("winnow_fingerprints")
+    before = memo.records()
+    _winnow_pairs(spark, SF_SMOKE, max_df=None)
+    (inner,) = _family_records("winnow_fingerprints").values()
+    (outer,) = _family_records("winnow").values()
+    assert inner.nested and not outer.nested
+    assert outer.build_s >= inner.build_s
+    lines = memo.build_lines(before)
+    assert lines == {"shared_winnow_build": outer.build_s}
+    memo.reset("winnow")
+    memo.reset("winnow_fingerprints")
+
+
+def test_record_goes_with_its_entry(spark):
+    """Eviction (a new corpus) and ``reset()`` drop the record with the
+    entry, so a long session keeps records for live entries only."""
+    memo.reset("bounded")
+    memo.memo("bounded", spark, "sfA", (1,), lambda: "a")
+    memo.memo("bounded", spark, "sfB", (1,), lambda: "b")
+    assert [k[1] for k in _family_records("bounded")] == ["sfB"]
+    assert memo.build_lines({}).get("shared_bounded_build_capped") is not None
+    memo.reset()
+    assert memo.records() == {}
 
 
 def test_two_aliases_leave_one_live_jaccard_checkpoint(spark, tmp_path):
@@ -94,7 +152,7 @@ def test_two_aliases_leave_one_live_jaccard_checkpoint(spark, tmp_path):
     ]
     assert ids[0] != ids[1]
     assert _eventually(lambda: _live_rdd_ids(spark) - before == {ids[1]})
-    assert len(memo.entries("jaccard_pairs")) == 1
+    assert len(memo.entries("jaccard_pair")) == 1
     memo.reset()
     assert _eventually(lambda: not (_live_rdd_ids(spark) - before))
 
@@ -143,8 +201,8 @@ def test_reset_frees_every_memo_storage(spark):
     assert all(
         memo.entries(f) == {}
         for f in (
-            "jaccard_pairs",
-            "containment_pairs",
+            "jaccard_pair",
+            "containment",
             "lsh_banded",
             "winnow_fingerprints",
             "ivf_cells",
@@ -225,7 +283,7 @@ def test_ivf_kmeans_trains_once_per_session(spark):
 
 
 def test_pca_family_owns_no_storage_and_stays_cheap(spark):
-    """The four PC entries share one ``pca`` entry of driver values: a
+    """The four PC entries share one ``pc`` entry of driver values: a
     cold ``embedding_pca_top2`` is the Gram pass plus its action, the
     entries leave no persisted RDD behind, and the entry holds no frame
     (the Spark power iteration took ~88 jobs and kept its checkpoints)."""
@@ -254,7 +312,7 @@ def test_pca_family_owns_no_storage_and_stays_cheap(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert jobs["embedding_pca_top2"] <= 8, jobs
     assert not (_live_rdd_ids(spark) - before)
-    (value,) = memo.entries("pca").values()
+    (value,) = memo.entries("pc").values()
     v1, lam1, v2, lam2 = value
     assert not any(isinstance(x, DataFrame) for x in value)
     assert all(type(x) is float for x in [*v1, lam1, *v2, lam2])
@@ -264,7 +322,11 @@ def test_stopped_application_entry_dropped_without_jvm_call(spark):
     """An entry keyed by another applicationId is dropped on the next
     miss, and its frame is not touched (the JVM it lived in is gone)."""
     frame = spark.range(10).localCheckpoint(eager=True)
-    stopped = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-stopped"))
+    stopped = SimpleNamespace(
+        sparkContext=SimpleNamespace(
+            applicationId="app-stopped", getLocalProperty=lambda _key: None
+        )
+    )
     memo.reset("stopped")
     memo.memo("stopped", stopped, SF_SMOKE, (), lambda: frame)
     memo.memo("stopped", spark, SF_SMOKE, (), lambda: "fresh")

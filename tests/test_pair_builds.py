@@ -26,7 +26,7 @@ def test_adaptive_prefix_order_probe_and_identity(spark):
         _verified_jaccard_pairs,
     )
 
-    families = ("jaccard_pairs", "containment_pairs", "prefix_order")
+    families = ("jaccard_pair", "containment", "prefix_order")
     for family in families:
         memo.reset(family)
     app = spark.sparkContext.applicationId
@@ -35,7 +35,7 @@ def test_adaptive_prefix_order_probe_and_identity(spark):
     # flat synthetic corpus → hash order (no df join-back)
     assert memo.entries("prefix_order") == {(app, SF_SMOKE, None): "hash"}
     # the auto build is stored under its RESOLVED order key
-    assert list(memo.entries("jaccard_pairs")) == [(app, SF_SMOKE, (None, "hash"))]
+    assert list(memo.entries("jaccard_pair")) == [(app, SF_SMOKE, (None, "hash"))]
 
     for order in ("df", "hash"):
         explicit = _pairs(_verified_jaccard_pairs(spark, SF_SMOKE, order=order))
@@ -164,7 +164,7 @@ def test_admission_guard_refuses_and_leaves_no_persisted_frame(spark, monkeypatc
             entry(spark, SF_SMOKE)
         assert cache.isEmpty(), entry.__name__
     assert len(memo.entries("prefix_order")) == 1
-    assert memo.entries("jaccard_pairs") == memo.entries("containment_pairs") == {}
+    assert memo.entries("jaccard_pair") == memo.entries("containment") == {}
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
     assert dedup_ngram_jaccard(spark, SF_SMOKE).count() > 0
     assert cache.isEmpty()

@@ -8,7 +8,8 @@
   disk / available RAM) instead of a tuned constant.
 
 The vacuum and multi-part checkpoint tests live in
-``tests/test_txn_log.py``.
+``tests/test_txn_log.py``, the gate-tool tests in
+``tests/test_gate_tools.py``.
 """
 
 from __future__ import annotations
@@ -196,12 +197,12 @@ def test_spoofed_small_host_refuses_earlier(spark, monkeypatch):
     adm._derived_budget.cache_clear()
     monkeypatch.setattr(adm, "MIN_BUDGET", 1)
     try:
-        memo.reset("winnow_pairs")
+        memo.reset("winnow")
         with pytest.raises(ExactMeasureBoundError, match="corpus_winnowing_capped"):
             tx.corpus_winnowing(spark, SF_CORRECT)
     finally:
         adm._derived_budget.cache_clear()
-        memo.reset("winnow_pairs")
+        memo.reset("winnow")
 
 
 # ---------------------------------------------------- sampled Lloyd training
@@ -264,80 +265,6 @@ def test_kmeans_training_cost_linear_in_corpus():
             assert fanout / prev < 15  # ~10x per decade = linear (±sqrt noise)
         prev = fanout
         assert sample <= KMEANS_TRAIN_PER_CELL * k * 2
-
-
-# -------------------------------------------------- sf1 merge adjudication
-
-
-def test_merge_adjudication_rules(tmp_path):
-    """r9 ADVICE: (a) a schema mismatch fails an output-bounded row even
-    when its content hash matches; (b) a bounded row's scale twin may
-    itself be adjudicated via the output-bounded content-hash path."""
-    import json
-    import subprocess
-    import sys
-
-    # real registry names, so the tool's name validation passes
-    def run(rows):
-        src = tmp_path / "shard.json"
-        out = tmp_path / "merged.json"
-        src.write_text(json.dumps(rows))
-        rc = subprocess.run(
-            [sys.executable, "tools/merge_sf1_artifacts.py", str(out), str(src)],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        return rc.returncode, rc.stdout
-
-    green = {"rows_match": True, "schema_match": True, "hash_match": True}
-    cb_green = {"output_bounded": True, "rows_match": True,
-                "schema_match": True, "content_hash_match": True}
-
-    # (a) rename-only divergence on the content-hash path must FAIL
-    rc, _ = run({"dedup_exact": {**cb_green, "schema_match": False},
-                 "p2p_links": green})
-    assert rc == 1
-    rc, _ = run({"dedup_exact": cb_green, "p2p_links": green})
-    assert rc == 0
-
-    # (b) a bounded row leaning on a content-hash-adjudicated twin passes
-    rc, _ = run({
-        "dedup_ngram_jaccard": {"bounded": True,
-                                "scale_twin": "dedup_ngram_jaccard_capped"},
-        "dedup_ngram_jaccard_capped": cb_green,
-    })
-    assert rc == 0
-    # ...but not on a twin whose own schema mismatched
-    rc, _ = run({
-        "dedup_ngram_jaccard": {"bounded": True,
-                                "scale_twin": "dedup_ngram_jaccard_capped"},
-        "dedup_ngram_jaccard_capped": {**cb_green, "schema_match": False},
-    })
-    assert rc == 1
-
-    # (c) a green row — by EITHER adjudication method — never loses to
-    # a later source's errored re-run
-    def run2(rows_a, rows_b):
-        a, b = tmp_path / "a.json", tmp_path / "b.json"
-        out = tmp_path / "merged.json"
-        a.write_text(json.dumps(rows_a))
-        b.write_text(json.dumps(rows_b))
-        rc = subprocess.run(
-            [sys.executable, "tools/merge_sf1_artifacts.py",
-             str(out), str(a), str(b)],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        return rc.returncode
-
-    assert run2({"p2p_links": green},
-                {"p2p_links": {"err": "OOM"}}) == 0
-    assert run2({"dedup_exact": cb_green, "p2p_links": green},
-                {"dedup_exact": {"err": "OOM"}}) == 0
-    # a NON-green prior row IS refreshed by the later source
-    assert run2({"p2p_links": {"rows_match": False}},
-                {"p2p_links": green}) == 0
-    assert run2({"p2p_links": green},
-                {"p2p_links": {"rows_match": False, "schema_match": True,
-                               "hash_match": False}}) == 1
 
 
 def test_content_hash_adversarial_values_cross_engine(spark):
@@ -417,82 +344,3 @@ def test_content_hash_adversarial_values_cross_engine(spark):
     dup_hash = int(str(got9["hash_sum"])) - int(str(got8["hash_sum"]))
     assert dup_hash == int(got8["hash_xor"]) ^ int(got9["hash_xor"])
     assert 0 <= dup_hash < 2**60
-
-
-# ------------------------------------------------- sharded gate tool hygiene
-
-
-def test_shard_layout_heavy_light_partition():
-    """Shard 0 gets exactly the inter-cache-eligible (quadratic oracle)
-    entries; the rest round-robin; the layout is a partition of the
-    input; n_shards=1 degenerates to one shard."""
-    from tools.oracle_cache import ELIGIBLE
-    from tools.run_sharded_gate import shard_layout
-
-    heavy = sorted(ELIGIBLE)[:3]
-    assert heavy, "fixture assumption: some eligible entries exist"
-    names = heavy + [f"light_{i}" for i in range(10)]
-
-    shards = shard_layout(names, 4)
-    assert shards[0] == heavy
-    flat = [n for s in shards for n in s]
-    assert sorted(flat) == sorted(names)  # partition: no dupes, no drops
-    assert all(n.startswith("light_") for s in shards[1:] for n in s)
-
-    assert shard_layout(names, 1) == [names]
-
-
-def test_reap_orphan_spill_dirs(tmp_path, monkeypatch):
-    """Dead-pid spill dirs are reaped; live-pid and non-numeric-suffix
-    dirs are kept."""
-    import subprocess
-    import sys as _sys
-
-    from tools import run_sharded_gate as G
-
-    dead = subprocess.Popen([_sys.executable, "-c", "pass"])
-    dead.wait()
-
-    d_dead = tmp_path / f"duckdb_spill_{dead.pid}"
-    d_live = tmp_path / f"duckdb_spill_{__import__('os').getpid()}"
-    d_junk = tmp_path / "duckdb_spill_manual"
-    for d in (d_dead, d_live, d_junk):
-        d.mkdir()
-        (d / "block").write_bytes(b"x")
-
-    monkeypatch.setattr(
-        G.glob, "glob", lambda pat: [str(d_dead), str(d_live), str(d_junk)]
-    )
-    reaped = G.reap_orphan_spill_dirs()
-    assert reaped == [str(d_dead)]
-    assert not d_dead.exists()
-    assert d_live.exists() and d_junk.exists()
-
-
-def test_extract_bench_sf1_shapes(tmp_path, capsys):
-    """The sf1 bench extractor lifts spark_sec per entry, computes the
-    headline subset by family prefix, and NAMES untimed rows (bounded
-    refusals) instead of dropping them silently."""
-    import json as _json
-
-    from tools.extract_bench_sf1 import main as extract
-
-    art = {
-        "p2p_links": {"spark_sec": 1.5, "total_sec": 9.0},
-        "dedup_exact": {"spark_sec": 2.0, "total_sec": 4.0},
-        "agg_rollup": {"spark_sec": 0.5, "total_sec": 1.0},
-        "corpus_winnowing": {"bounded": True, "total_sec": 0.1},  # refusal
-        "_meta": "not-a-dict-row-guard",
-    }
-    src = tmp_path / "uniform.json"
-    src.write_text(_json.dumps(art))
-    out = tmp_path / "BENCH_SF1.json"
-
-    assert extract(str(out), [f"uniform={src}"]) == 0
-    got = _json.loads(out.read_text())
-    shape = got["shapes"]["uniform"]
-    assert shape["n_timed"] == 3
-    assert shape["total_spark_sec"] == 4.0
-    assert shape["headline"] == {"p2p_links": 1.5, "dedup_exact": 2.0}
-    assert shape["headline_total_sec"] == 3.5
-    assert shape["untimed"] == ["corpus_winnowing"]

@@ -1,5 +1,6 @@
-"""Round-11 operator tests: SimHash pair-stream memoization, the
-grid-bucketed events_attribution re-plan, and shard-layout helpers."""
+"""Round-11 operator tests: SimHash pair-stream memoization and the
+grid-bucketed events_attribution re-plan. The shard-layout tests live in
+``tests/test_gate_tools.py``."""
 
 from __future__ import annotations
 
@@ -34,7 +35,7 @@ def test_simhash_memo_shares_one_frame(spark):
     b = dedup_simhash_hamming(spark, SF_SMOKE)
     assert a is b
     key = (spark.sparkContext.applicationId, SF_SMOKE, ())
-    assert memo.entries("simhash_pairs") == {key: a}
+    assert memo.entries("simhash_pair") == {key: a}
 
 
 def test_attribution_boundary_edges_match_oracle(spark, tmp_path):
@@ -146,42 +147,6 @@ def test_stream_join_cells_cover_band_once(spark):
     )
     assert covered.filter(F.col("n_match") != 1).count() == 0
     assert covered.count() > 0
-
-
-def test_shard_layout_never_empty():
-    """r10 ADVICE: an empty shard's argv makes check_queries run the
-    FULL registry; shard_layout must drop empty shards instead."""
-    from tools.run_sharded_gate import shard_layout
-
-    # no ELIGIBLE names → the H shard would be empty
-    shards = shard_layout(["not_eligible_a", "not_eligible_b"], 3)
-    assert all(shards)
-    assert sorted(n for s in shards for n in s) == [
-        "not_eligible_a",
-        "not_eligible_b",
-    ]
-    # more shards than light entries → trailing empties dropped
-    shards = shard_layout(["not_eligible_a"], 5)
-    assert all(shards) and sum(len(s) for s in shards) == 1
-
-
-def test_shard_layout_co_shards_memo_families():
-    """r10 verdict directive #6: shard isolation defeats the in-process
-    memoized substrates, so every memo family must ride in ONE shard —
-    and the simhash family (chained to the jaccard truth build through
-    dedup_simhash_quality_eval) must land on the H shard."""
-    from nzwirelessmap_fetch_spark.plans import registry
-    from tools.run_sharded_gate import MEMO_FAMILIES, shard_layout
-
-    names = list(registry.queries())
-    shards = shard_layout(names, 3)
-    assert sorted(n for s in shards for n in s) == sorted(names)
-    shard_of = {n: i for i, s in enumerate(shards) for n in s}
-    for fam in MEMO_FAMILIES:
-        present = [n for n in fam if n in shard_of]
-        assert len({shard_of[n] for n in present}) <= 1, fam
-    assert shard_of["dedup_simhash_hamming"] == 0
-    assert shard_of["dedup_simhash_quality_eval"] == 0
 
 
 def test_simhash_pairs_ordered_and_bounded(spark):

@@ -90,7 +90,7 @@ def test_winnow_adaptive_capped_subset_of_exact(spark):
     }
     assert capped <= exact
     assert [k[1] for k in memo.entries("winnow_fingerprints")] == [SF_SMOKE]
-    assert [k[1] for k in memo.entries("winnow_pairs")] == [SF_SMOKE, SF_SMOKE]
+    assert [k[1] for k in memo.entries("winnow")] == [SF_SMOKE, SF_SMOKE]
 
 
 def test_winnow_exact_measure_budget_guard(spark, monkeypatch):
@@ -107,13 +107,13 @@ def test_winnow_exact_measure_budget_guard(spark, monkeypatch):
         corpus_winnowing,
     )
 
-    memo.reset("winnow_pairs")
+    memo.reset("winnow")
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", "1")
     with _pytest.raises(ExactMeasureBoundError, match="corpus_winnowing_capped"):
         corpus_winnowing(spark, SF_SMOKE)
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
     assert corpus_winnowing(spark, SF_SMOKE).count() >= 0
-    memo.reset("winnow_pairs")
+    memo.reset("winnow")
 
 
 def test_lsh_eval_sequenced_oracle_equals_oneshot(spark, ddb):

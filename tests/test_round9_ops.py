@@ -117,12 +117,12 @@ def test_jaccard_exact_measure_budget_guard(spark, monkeypatch):
     from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import ExactMeasureBoundError
 
-    memo.reset("jaccard_pairs")
+    memo.reset("jaccard_pair")
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", "1")
     with pytest.raises(ExactMeasureBoundError, match="dedup_ngram_jaccard_capped"):
         dd.dedup_ngram_jaccard(spark, SF_CORRECT)
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
-    memo.reset("jaccard_pairs")
+    memo.reset("jaccard_pair")
     assert dd.dedup_ngram_jaccard(spark, SF_CORRECT).count() > 0
 
 
@@ -134,14 +134,14 @@ def test_containment_exact_measure_budget_guard(spark, monkeypatch):
     from nzwirelessmap_fetch_spark.functions import memo
     from nzwirelessmap_fetch_spark.operators.text import ExactMeasureBoundError
 
-    memo.reset("containment_pairs")
+    memo.reset("containment")
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIR_BUDGET", "1")
     with pytest.raises(ExactMeasureBoundError, match="corpus_containment_capped"):
         dd.corpus_containment(spark, SF_CORRECT)
     # the capped twin is NOT bounded by the guard
     assert dd.corpus_containment_capped(spark, SF_CORRECT).count() >= 0
     monkeypatch.delenv("SPARK_GRAFT_EXACT_PAIR_BUDGET")
-    memo.reset("containment_pairs")
+    memo.reset("containment")
     assert dd.corpus_containment(spark, SF_CORRECT).count() > 0
 
 

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from nzwirelessmap_fetch_spark.catalog import TABLES
+from nzwirelessmap_fetch_spark.functions import memo
 from nzwirelessmap_fetch_spark.session import get_spark
 from tests.oracle import frame_fingerprint
 
@@ -40,6 +41,20 @@ def _unowned_cache(spark, row: dict) -> bool:
     return True
 
 
+def attribute(name: str, row: dict, before: dict, shared_builds: dict) -> None:
+    """Shared-build attribution for entry ``name``, which ran under the
+    job group ``name``: the memo keys it built or hit go to
+    ``row["memo_keys"]`` (the sharded gate co-shards entries that share
+    one), and the seconds of every top-level memo build recorded since
+    the snapshot ``before`` go to ``shared_builds``, keyed like bench.py's
+    ``shared_*`` lines."""
+    keys = memo.touched(name)
+    if keys:
+        row["memo_keys"] = keys
+    for line, secs in memo.build_lines(before).items():
+        shared_builds[line] = round(shared_builds.get(line, 0.0) + secs, 2)
+
+
 def main(names: list[str]) -> int:
     import __spark_entry__ as entrymod
 
@@ -54,27 +69,6 @@ def main(names: list[str]) -> int:
     seq_oracles = registry.oracle_gate_steps() if seq_mode else {}
     profiles = registry.scale_profiles()
 
-    # Heavy-spill serialization across shard processes: with a lock path
-    # set, oracle execution holds an exclusive flock so two shards never
-    # spill their quadratic joins into the same disk concurrently (the
-    # r8 sf1 gate lost 4 entries to exactly that).
-    lock_path = os.environ.get("SPARK_GRAFT_ORACLE_LOCK")
-
-    from contextlib import contextmanager
-
-    @contextmanager
-    def oracle_lock():
-        if not lock_path:
-            yield
-            return
-        import fcntl
-
-        with open(lock_path, "a") as lf:
-            fcntl.flock(lf, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(lf, fcntl.LOCK_UN)
     if not names:
         names = list(qs)
 
@@ -98,52 +92,7 @@ def main(names: list[str]) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')"
         )
 
-    # Shared-build attribution (r10 verdict directive #4): the memoized
-    # substrates (jaccard/containment/winnow pair frames, PCA
-    # components, simhash pair stream, banded-LSH kNN, IVF cells) build
-    # inside whichever consumer the shard order runs FIRST, which forces
-    # family-sum diffs when comparing bars across rounds. With
-    # SPARK_GRAFT_ATTR_SHARED=1 the
-    # memo builders are wrapped with a timer that records every
-    # cache-MISS build (calls ≥0.1 s; hits return in µs) into a
-    # "_shared_builds" sidecar keyed by build name — no behavior
-    # change, no extra builds, exact attribution of where the cost
-    # landed. merge_sf1_artifacts and extract_bench_sf1 surface the
-    # sidecar; adjudication ignores it.
     shared_builds: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_ATTR_SHARED") == "1":
-        from nzwirelessmap_fetch_spark.operators import dedup as _dd
-        from nzwirelessmap_fetch_spark.operators import similarity as _sim
-        from nzwirelessmap_fetch_spark.operators import sketches as _sk
-        from nzwirelessmap_fetch_spark.operators import text as _tx
-
-        def _attr_wrap(mod, fname, label):
-            orig = getattr(mod, fname)
-
-            def timed(*a, **kw):
-                t0 = time.monotonic()
-                try:
-                    return orig(*a, **kw)
-                finally:
-                    dt = time.monotonic() - t0
-                    if dt >= 0.1:
-                        key = label
-                        if kw.get("max_df") is not None:
-                            key += "_capped"
-                        shared_builds[key] = round(
-                            shared_builds.get(key, 0.0) + dt, 2
-                        )
-
-            setattr(mod, fname, timed)
-
-        _attr_wrap(_dd, "_verified_jaccard_pairs", "shared_jaccard_pair_build")
-        _attr_wrap(_dd, "_containment_pairs", "shared_containment_build")
-        _attr_wrap(_dd, "_verified_simhash_pairs", "shared_simhash_pair_build")
-        _attr_wrap(_tx, "_winnow_pairs", "shared_winnow_build")
-        _attr_wrap(_sk, "_top2_components", "shared_pc_build")
-        # the miss-only builder: the registry holds the unwrapped entry
-        _attr_wrap(_sim, "_build_lsh_banded", "shared_lsh_banded_build")
-        _attr_wrap(_sim, "_ivf_cells", "shared_ivf_cells_build")
 
     # admission-budget header (r10 ADVICE): snapshot at run START —
     # the budget derives from free disk, which mid-run spill churn
@@ -156,6 +105,8 @@ def main(names: list[str]) -> int:
     results: dict[str, dict] = {}
     failures = 0
     for name in names:
+        spark.sparkContext.setJobGroup(name, name)
+        before = memo.records()
         t0 = time.monotonic()
         row: dict = {}
         try:
@@ -197,56 +148,53 @@ def main(names: list[str]) -> int:
 
                     stmts = sequenced(name, stmts) or stmts
                 if stmts:
-                    with oracle_lock():
-                        for step in stmts[:-1]:
-                            con.execute(step)
-                        ofp = None
-                        if sfp is not None:
-                            desc = con.execute(
-                                f"DESCRIBE {stmts[-1]}"
-                            ).fetchall()
-                            try:
-                                osql = content_fingerprint_sql(
-                                    stmts[-1], [(d[0], d[1]) for d in desc]
-                                )
-                                ofp = con.execute(osql).fetchone()
-                            except ContentHashUnsupported:
-                                ofp = None
-                        if ofp is not None:
-                            n_oracle = int(ofp[0])
-                            row = {
-                                "output_bounded": True,
-                                "rows_match": n_spark == n_oracle,
-                                "schema_match": sorted(sdf.columns)
-                                == sorted(d[0] for d in desc),
-                                "content_hash_match": (
-                                    str(sfp["hash_sum"]),
-                                    int(sfp["hash_xor"]),
-                                )
-                                == (str(ofp[1]), int(ofp[2])),
-                                "spark_rows": n_spark,
-                                "oracle_rows": n_oracle,
-                                "note": "result exceeds the driver collect "
-                                "budget; adjudicated by in-engine content "
-                                "hash (order-insensitive row-hash sum/xor "
-                                "computed distributively on both sides)",
-                                "total_sec": round(time.monotonic() - t0, 2),
-                            }
-                        else:
-                            n_oracle = con.execute(
-                                f"SELECT COUNT(*) FROM ({stmts[-1]})"
-                            ).fetchone()[0]
-                            row = {
-                                "output_bounded": True,
-                                "rows_match": n_spark == n_oracle,
-                                "spark_rows": n_spark,
-                                "oracle_rows": int(n_oracle),
-                                "note": "result exceeds the driver collect "
-                                "budget; adjudicated as count parity (a "
-                                "column type lacks an engine-portable "
-                                "canonical form for the content hash)",
-                                "total_sec": round(time.monotonic() - t0, 2),
-                            }
+                    for step in stmts[:-1]:
+                        con.execute(step)
+                    ofp = None
+                    if sfp is not None:
+                        desc = con.execute(f"DESCRIBE {stmts[-1]}").fetchall()
+                        try:
+                            osql = content_fingerprint_sql(
+                                stmts[-1], [(d[0], d[1]) for d in desc]
+                            )
+                            ofp = con.execute(osql).fetchone()
+                        except ContentHashUnsupported:
+                            ofp = None
+                    if ofp is not None:
+                        n_oracle = int(ofp[0])
+                        row = {
+                            "output_bounded": True,
+                            "rows_match": n_spark == n_oracle,
+                            "schema_match": sorted(sdf.columns)
+                            == sorted(d[0] for d in desc),
+                            "content_hash_match": (
+                                str(sfp["hash_sum"]),
+                                int(sfp["hash_xor"]),
+                            )
+                            == (str(ofp[1]), int(ofp[2])),
+                            "spark_rows": n_spark,
+                            "oracle_rows": n_oracle,
+                            "note": "result exceeds the driver collect "
+                            "budget; adjudicated by in-engine content "
+                            "hash (order-insensitive row-hash sum/xor "
+                            "computed distributively on both sides)",
+                            "total_sec": round(time.monotonic() - t0, 2),
+                        }
+                    else:
+                        n_oracle = con.execute(
+                            f"SELECT COUNT(*) FROM ({stmts[-1]})"
+                        ).fetchone()[0]
+                        row = {
+                            "output_bounded": True,
+                            "rows_match": n_spark == n_oracle,
+                            "spark_rows": n_spark,
+                            "oracle_rows": int(n_oracle),
+                            "note": "result exceeds the driver collect "
+                            "budget; adjudicated as count parity (a "
+                            "column type lacks an engine-portable "
+                            "canonical form for the content hash)",
+                            "total_sec": round(time.monotonic() - t0, 2),
+                        }
                 else:
                     row = {
                         "output_bounded": True,
@@ -256,6 +204,7 @@ def main(names: list[str]) -> int:
                     }
                 row["spark_sec"] = round(t_spark_bounded, 2)
                 results[name] = row
+                attribute(name, row, before, shared_builds)
                 # schema_match participates in the verdict wherever it
                 # was computed (r9 ADVICE: a column-rename-only
                 # divergence that keeps sorted-name positions must not
@@ -286,10 +235,9 @@ def main(names: list[str]) -> int:
                 if cached is not None:
                     statements = cached
             if statements is not None:
-                with oracle_lock():
-                    for step in statements[:-1]:
-                        con.execute(step)
-                    right = con.execute(statements[-1]).df()
+                for step in statements[:-1]:
+                    con.execute(step)
+                right = con.execute(statements[-1]).df()
             else:
                 right = None
             if right is not None:
@@ -324,6 +272,7 @@ def main(names: list[str]) -> int:
             else:
                 row = {"err": f"{type(e).__name__}: {e}"[:300],
                        "total_sec": round(time.monotonic() - t0, 2)}
+        attribute(name, row, before, shared_builds)
         leaked = _unowned_cache(spark, row)
         ok = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
         if leaked or (not ok and not row.get("rows_only") and not row.get("bounded")):

@@ -12,15 +12,13 @@ BENCH_FULL on future plan changes.
     python tools/extract_bench_sf1.py BENCH_SF1.json \
         uniform=CORRECTNESS_SF1_FULL.json zipf=CORRECTNESS_SF1_SKEW_FULL.json
 
-Shared-build attribution (r10 verdict directive #4): gates run with
-SPARK_GRAFT_ATTR_SHARED=1 record a "_shared_builds" sidecar — the
-measured cache-miss build time of each memoized substrate (jaccard/
-containment/winnow pair frames, PC power iteration, simhash pair
-stream), per shard process. This tool surfaces it as explicit
-shared_* lines per shape, so cross-round comparison can subtract the
-build from whichever consumer line absorbed it instead of diffing
-opaque family sums. bench.py's dedicated shared_* lines remain the
-pre-built per-build attribution of record at sf0.1.
+Shared-build attribution: every check_queries artifact carries a
+"_shared_builds" sidecar — the build seconds of each memoized substrate
+that the memo recorded (functions/memo.py), per shard process, keyed
+``shared_<family>_build[_capped]`` like bench.py's lines. This tool
+surfaces it as explicit shared_* lines per shape, so cross-round
+comparison can subtract the build from whichever consumer line absorbed
+it instead of diffing opaque family sums.
 """
 
 from __future__ import annotations

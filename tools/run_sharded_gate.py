@@ -1,26 +1,26 @@
-"""Sharded full-registry oracle gate for large fixtures (r7 verdict
-directive #2: the sf1 gate must also run on the REALISTIC Zipf corpus).
+"""Sharded full-registry oracle gate for large fixtures.
 
-Runs tools/check_queries.py as N shards (memory notes: one process's
-DuckDB side of a quadratic oracle peaks ~50 GB unbounded, and N
-concurrent 48 g Spark drivers oversubscribe the box — both knobs are
-set per shard below), then merges with tools/merge_sf1_artifacts.py.
+Runs tools/check_queries.py as N shards (one process's DuckDB side of a
+quadratic oracle peaks ~50 GB unbounded, and N concurrent 48 g Spark
+drivers oversubscribe the box — both knobs are set per shard below),
+then merges with tools/merge_sf1_artifacts.py.
 
-Two gate-operations lessons from the r9 sf1 runs are ENCODED here
-rather than left as operator knowledge (r9 verdict directive #7):
-
-- **H/L shard layout by default**: shard 0 (the H shard) owns every
-  entry whose oracle carries the full-postings quadratic shingle join
-  (``tools.oracle_cache.ELIGIBLE``) — it builds the per-connection
-  ``inter`` cache ONCE and never contends with another copy of the
-  Σdf² spill; the remaining entries round-robin across the L shards.
-  No ``SPARK_GRAFT_ORACLE_LOCK`` anywhere: with the heavy oracles
-  isolated on one process the lock only serializes (measured r9: a
-  lock on round-robin shards collapsed throughput to ~zero behind one
-  20-minute quadratic build).
+- **Memo co-sharding**: an in-process memoized substrate
+  (functions/memo.py) is rebuilt by every shard that holds one of its
+  readers, so entries that share one must ride in ONE shard. Which
+  entries share which substrate is recorded, not kept by hand: the gate
+  first runs check_queries over the names at the smoke fixture, whose
+  rows list the memo keys each entry built or hit, and union-finds the
+  entries that touched the same key.
+- **H/L shard layout**: shard 0 (the H shard) owns every entry whose
+  oracle carries the full-postings quadratic shingle join
+  (``tools.oracle_cache.ELIGIBLE``), plus every memo group chained to
+  one — it builds the per-connection ``inter`` cache ONCE and never
+  contends with another copy of the Σdf² spill; the remaining units
+  balance across the L shards.
 - **Orphan spill reaping on start**: check_queries points DuckDB's
   temp_directory at /tmp/duckdb_spill_<pid>; a killed gate process
-  leaves the dir behind (a 47 GB orphan cost one r9 entry a
+  leaves the dir behind (a 47 GB orphan once cost an entry a
   no-space-left death). Any spill dir whose owning pid is dead is
   removed before shards launch.
 
@@ -30,6 +30,7 @@ rather than left as operator knowledge (r9 verdict directive #7):
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import subprocess
@@ -63,90 +64,29 @@ def reap_orphan_spill_dirs() -> list[str]:
     return reaped
 
 
-# Entries that consume the same heavy per-PROCESS memoized substrate
-# (functions/memo.py families: eager-checkpoint pair frames /
-# power-iteration trajectories). Kept by hand; each comment names the
-# memo family. Shard
-# isolation defeats an in-process memo — each shard that holds any
-# member rebuilds the whole substrate (r10 verdict directive #6) — so
-# members of a family must ride in ONE shard. dedup_simhash_quality_eval
-# consumes BOTH the simhash and jaccard substrates, chaining those two
-# families into one group that lands on the H shard with the
-# oracle-cache-eligible truth entries.
-MEMO_FAMILIES: list[set[str]] = [
-    {  # memo family "simhash_pairs" (operators/dedup.py)
-        "dedup_simhash_hamming",
-        "dedup_simhash_content_hash",
-        "dedup_simhash_quality_eval",
-    },
-    {  # memo families "winnow_fingerprints" + "winnow_pairs" (operators/text.py)
-        "corpus_winnowing",
-        "corpus_winnowing_capped",
-        "corpus_winnowing_cap_eval",
-    },
-    {  # memo family "containment_pairs" (operators/dedup.py)
-        "corpus_containment",
-        "corpus_containment_capped",
-        "corpus_containment_cap_eval",
-    },
-    {  # memo family "pca" (operators/sketches.py)
-        "embedding_principal_component",
-        "embedding_abtt_residual",
-        "embedding_pca_top2",
-        "embedding_whitening",
-    },
-    {  # memo family "jaccard_pairs" (operators/dedup.py) — including the
-        # 11 graph entries that reach it through _jaccard_edges
-        # (operators/graph.py). Today every one of those is also
-        # oracle-cache ELIGIBLE (so they ride the H shard regardless);
-        # listing them here keeps the one-shard-per-memo invariant true
-        # even if the ELIGIBLE set changes.
-        "dedup_ngram_jaccard",
-        "dedup_ngram_jaccard_capped",
-        "dedup_lsh_quality_eval",
-        "dedup_simhash_quality_eval",
-        "dedup_snm_quality_eval",
-        "dedup_snm_multipass_eval",
-        "dedup_connected_components",
-        "dedup_cc_star",
-        "corpus_canonical_picks",
-        "graph_pagerank",
-        "graph_bfs_levels",
-        "graph_triangle_count",
-        "graph_assortativity",
-        "graph_kcore",
-        "graph_modularity",
-        "graph_louvain_one_level",
-        "graph_louvain_two_level",
-        "graph_louvain_converged",
-        "graph_community_label_prop",
-        "graph_random_walks",
-    },
-    {  # memo family "lsh_banded" (operators/similarity.py): the verified
-        # pair stream and the ranked kNN adjacency built over it
-        "sim_lsh_banded",
-        "sim_knn_graph",
-        "embedding_knn_outliers",
-        "sim_graph_greedy_search",
-        "sim_graph_beam_search",
-        "corpus_submodular_select",
-        "sim_maxsim_pruned",
-        "ml_knn_classifier_eval",
-    },
-    {  # memo family "ivf_cells" (operators/similarity.py): the seed-
-        # centroid cell assignment; the last two read it through sim_ivf
-        "sim_ivf",
-        "sim_ivf_pq",
-        "corpus_semdedup",
-        "sim_ivf_recall_eval",
-        "sim_rrf_fusion",
-    },
-]
+def record_memo_keys(names: list[str]) -> dict[str, list[str]]:
+    """Run check_queries over ``names`` at the smoke fixture and return
+    the memo keys each entry built or hit (its rows' ``memo_keys``)."""
+    from tests.conftest import SF_SMOKE
+
+    out = os.path.join(REPO, ".gate_memo_keys.json")
+    env = dict(os.environ, SPARK_GRAFT_CHECK_SF=SF_SMOKE, SPARK_GRAFT_CHECK_OUT=out)
+    with open(os.path.join(REPO, ".gate_memo_keys.log"), "w") as log:
+        subprocess.run(
+            [sys.executable, os.path.join(REPO, "tools/check_queries.py")] + names,
+            env=env, stdout=log, stderr=subprocess.STDOUT, cwd=REPO,
+        )
+    with open(out) as f:
+        rows = json.load(f)
+    return {n: rows[n].get("memo_keys", []) for n in names if n in rows}
 
 
-def _memo_groups(names: list[str]) -> dict[str, int]:
-    """Union-find over MEMO_FAMILIES restricted to `names`: map each
-    member to a group id (families sharing a member merge)."""
+def _memo_groups(
+    names: list[str], memo_keys: dict[str, list[str]]
+) -> dict[str, int]:
+    """Union-find over the recorded memo keys restricted to `names`: map
+    each entry that touched a key to a group id (entries that touched
+    the same key share a group)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -155,13 +95,14 @@ def _memo_groups(names: list[str]) -> dict[str, int]:
             x = parent[x]
         return x
 
-    present = set(names)
-    for fam in MEMO_FAMILIES:
-        members = [n for n in fam if n in present]
-        for n in members:
+    first: dict[str, str] = {}  # memo key -> first entry that touched it
+    for n in names:
+        for key in memo_keys.get(n, ()):
             parent.setdefault(n, n)
-        for a, b in zip(members, members[1:]):
-            parent[find(a)] = find(b)
+            if key in first:
+                parent[find(n)] = find(first[key])
+            else:
+                first[key] = n
     roots: dict[str, int] = {}
     out: dict[str, int] = {}
     for n in parent:
@@ -170,17 +111,21 @@ def _memo_groups(names: list[str]) -> dict[str, int]:
     return out
 
 
-def shard_layout(names: list[str], n_shards: int) -> list[list[str]]:
-    """H/L layout with memo-family co-sharding: shard 0 gets every
-    inter-cache-eligible (quadratic shingle-join oracle) entry PLUS any
-    memo family chained to one; remaining memo families ride whole on
-    the least-loaded L shard; loose light entries balance round-robin.
-    With n_shards == 1 everything runs in one process."""
+def shard_layout(
+    names: list[str], n_shards: int, memo_keys: dict[str, list[str]] | None = None
+) -> list[list[str]]:
+    """H/L layout with memo co-sharding over ``memo_keys`` (entry → the
+    memo keys it touched, from :func:`record_memo_keys`; an entry with
+    none rides alone): shard 0 gets every inter-cache-eligible
+    (quadratic shingle-join oracle) entry PLUS any memo group chained to
+    one; remaining memo groups ride whole on the least-loaded L shard;
+    loose light entries balance round-robin. With n_shards == 1
+    everything runs in one process."""
     from tools.oracle_cache import ELIGIBLE
 
     if n_shards <= 1:
         return [list(names)]
-    group_of = _memo_groups(names)
+    group_of = _memo_groups(names, memo_keys or {})
     n_groups = max(group_of.values(), default=-1) + 1
     group_members: list[list[str]] = [[] for _ in range(n_groups)]
     for n in names:
@@ -226,7 +171,7 @@ def main(argv: list[str]) -> int:
     import __spark_entry__ as entrymod
 
     names = list(entrymod.queries())
-    shards = shard_layout(names, n_shards)
+    shards = shard_layout(names, n_shards, record_memo_keys(names))
     procs = []
     shard_files = []
     for i, shard in enumerate(shards):
@@ -238,9 +183,7 @@ def main(argv: list[str]) -> int:
             SPARK_GRAFT_DRIVER_MEM="20g",
             SPARK_GRAFT_CPUS="10",
             SPARK_GRAFT_ORACLE_SEQ="1",
-            SPARK_GRAFT_ATTR_SHARED="1",
         )
-        env.pop("SPARK_GRAFT_ORACLE_LOCK", None)  # see module docstring
         shard_files.append(env["SPARK_GRAFT_CHECK_OUT"])
         log = open(os.path.join(REPO, f".gate_shard{i}.log"), "w")
         procs.append(

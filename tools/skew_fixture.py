@@ -332,8 +332,8 @@ def variants() -> None:
     )
     app = spark.sparkContext.applicationId
     builds = {
-        "containment": ("containment_pairs", _containment_pairs),
-        "jaccard": ("jaccard_pairs", _verified_jaccard_pairs),
+        "containment": ("containment", _containment_pairs),
+        "jaccard": ("jaccard_pair", _verified_jaccard_pairs),
     }
     print("| build | fixture | order | resolved | best-of-2 s | rows |")
     print("|---|---|---|---|---|---|")
