@@ -471,66 +471,80 @@ def _build_jaccard_pairs(
     )
 
 
-DEDUP_NGRAM_JACCARD_SQL = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(w)-1),
-                                 i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard
-FROM inter
-JOIN sz sa ON sa.doc_id = doc_a
-JOIN sz sb ON sb.doc_id = doc_b
-WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-"""
+# ─── Exact-Jaccard oracle prelude ──────────────────────────────────────────
+#
+# The DuckDB twin of ``_shingles`` → ``_verified_jaccard_pairs`` →
+# ``_jaccard_edges``, one text per CTE. Every oracle that re-derives the
+# exact pairs composes these, and tools/oracle_cache.py finds the
+# full-postings block ``_INTER_CTES`` in an oracle by identity. ``sh``
+# is MATERIALIZED: DuckDB inlines a plain CTE at every reference, and
+# the pair join reads it twice.
+_SHINGLE_SQL = """SELECT DISTINCT doc_id, shingle FROM (
+    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
+                          i -> w[i] || ' ' || w[i+1])) AS shingle
+    FROM w WHERE len(w) >= 2)"""
+_W_CTE = "w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)"
 
+# (doc_id, shingle): the distinct word bigrams of every doc with ≥ 2 words
+_SHINGLE_CTES = f"""{_W_CTE},
+sh AS MATERIALIZED (
+  {_SHINGLE_SQL}
+)"""
 
-# Replays the df-cap exactly: shingles in > JACCARD_MAX_DF docs are
-# dropped before pair generation and Jaccard runs over the capped sets —
-# the oracle checks the scale-safe plan, not the unfiltered measure.
-DEDUP_NGRAM_JACCARD_CAPPED_SQL = f"""
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-sh0 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(w)-1),
-                                 i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
+# ``_shingles(max_df=JACCARD_MAX_DF)``: shingles in more than
+# JACCARD_MAX_DF docs drop out before sizes and the pair join
+_SHINGLE_CTES_CAPPED = f"""{_W_CTE},
+sh0 AS MATERIALIZED (
+  {_SHINGLE_SQL}
 ),
 keep AS (
   SELECT shingle FROM sh0 GROUP BY shingle
   HAVING COUNT(*) <= {JACCARD_MAX_DF}
 ),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
+sh AS MATERIALIZED (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle))"""
+
+# set sizes, and the shared-shingle count of every co-occurring pair
+# doc_a < doc_b: the Σdf² join
+_SZ_CTE = "sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)"
+_INTER_CTE = """inter AS MATERIALIZED (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard
-FROM inter
-JOIN sz sa ON sa.doc_id = doc_a
-JOIN sz sb ON sb.doc_id = doc_b
-WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
+  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
+)"""
+_INTER_CTES = f"{_SHINGLE_CTES},\n{_SZ_CTE},\n{_INTER_CTE}"
+_INTER_CTES_CAPPED = f"{_SHINGLE_CTES_CAPPED},\n{_SZ_CTE},\n{_INTER_CTE}"
+
+# the verified pairs (J ≥ JACCARD_THRESHOLD, doc_a < doc_b) and the
+# symmetric edge set ``_jaccard_edges`` builds from them
+_PAIRS_CTE = f"""pairs AS MATERIALIZED (
+  SELECT doc_a, doc_b, CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard
+  FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
+  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= {JACCARD_THRESHOLD}
+)"""
+_JACCARD_EDGES_CTES = f"""{_INTER_CTES},
+{_PAIRS_CTE},
+edges AS MATERIALIZED (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION SELECT doc_b, doc_a FROM pairs
+)"""
+
+# the ground truth of the estimator-quality evals: the exact pairs
+_JACCARD_TRUTH_CTES = f"""{_INTER_CTES},
+{_PAIRS_CTE},
+truth AS MATERIALIZED (SELECT doc_a, doc_b FROM pairs)"""
+
+
+def _jaccard_pairs_sql(inter_ctes: str) -> str:
+    return f"""
+WITH {inter_ctes},
+{_PAIRS_CTE}
+SELECT doc_a, doc_b, jaccard FROM pairs
 """
+
+
+DEDUP_NGRAM_JACCARD_SQL = _jaccard_pairs_sql(_INTER_CTES)
+# Replays the df-cap exactly: Jaccard runs over the capped sets — the
+# oracle checks the scale-safe plan, not the unfiltered measure.
+DEDUP_NGRAM_JACCARD_CAPPED_SQL = _jaccard_pairs_sql(_INTER_CTES_CAPPED)
 
 
 def _minhash_bands(d: DataFrame) -> DataFrame:
@@ -588,17 +602,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_MINHASH_LSH_SQL = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(w)-1),
-                                 i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
+DEDUP_MINHASH_LSH_SQL = f"""
+WITH {_SHINGLE_CTES},
 h AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh
 ),
@@ -934,33 +939,13 @@ def _label_propagation(spark: SparkSession, edges: DataFrame) -> DataFrame:
     )
 
 
-DEDUP_CONNECTED_COMPONENTS_SQL = """
+DEDUP_CONNECTED_COMPONENTS_SQL = f"""
 WITH RECURSIVE
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_CTES},
 reach(doc, r) AS (
-  SELECT s, s FROM edges
+  SELECT src, src FROM edges
   UNION
-  SELECT e.s, reach.r FROM edges e JOIN reach ON reach.doc = e.t
+  SELECT e.src, reach.r FROM edges e JOIN reach ON reach.doc = e.dst
 )
 SELECT doc AS doc_id, MIN(r) AS component_id, CAST(COUNT(*) AS INT) AS n_reachable
 FROM reach GROUP BY doc
@@ -1177,16 +1162,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_INCREMENTAL_SQL = f"""
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(w)-1),
-                                 i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
+WITH {_SHINGLE_CTES},
 h AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh
 ),
@@ -1451,17 +1427,6 @@ def dedup_lsh_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # host disk, while each half alone fits the budget (dedup_ngram_jaccard
 # green at sf1 in 383 s; dedup_minhash_lsh green). The steps run the
 # halves sequentially into temp tables — peak spill is one pipeline's.
-_LSH_EVAL_SH_CTES = """w AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(w)-1),
-                                 i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-)"""
-
 _LSH_EVAL_CAND_CTES = """h AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh
 ),
@@ -1485,20 +1450,6 @@ cand AS MATERIALIZED (
   JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
 )"""
 
-_LSH_EVAL_TRUTH_CTES = """sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-truth AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a
-  JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-)"""
-
 _LSH_EVAL_SELECT = """SELECT (SELECT COUNT(*) FROM cand)  AS n_candidates,
        (SELECT COUNT(*) FROM truth) AS n_true_pairs,
        (SELECT COUNT(*) FROM hit)   AS n_hits,
@@ -1510,9 +1461,8 @@ _LSH_EVAL_SELECT = """SELECT (SELECT COUNT(*) FROM cand)  AS n_candidates,
          AS recall"""
 
 DEDUP_LSH_QUALITY_EVAL_SQL = f"""
-WITH {_LSH_EVAL_SH_CTES},
+WITH {_JACCARD_TRUTH_CTES},
 {_LSH_EVAL_CAND_CTES},
-{_LSH_EVAL_TRUTH_CTES},
 hit AS MATERIALIZED (SELECT doc_a, doc_b FROM cand INTERSECT SELECT doc_a, doc_b FROM truth)
 {_LSH_EVAL_SELECT}
 """
@@ -1525,14 +1475,12 @@ hit AS MATERIALIZED (SELECT doc_a, doc_b FROM cand INTERSECT SELECT doc_a, doc_b
 # tests/test_round8_ops.py::test_lsh_eval_sequenced_oracle_equals_oneshot.
 DEDUP_LSH_QUALITY_EVAL_SQL_STEPS = [
     "CREATE OR REPLACE TEMP TABLE _gate_lsh_cand AS WITH "
-    + _LSH_EVAL_SH_CTES
+    + _SHINGLE_CTES
     + ",\n"
     + _LSH_EVAL_CAND_CTES
     + "\nSELECT doc_a, doc_b FROM cand",
     "CREATE OR REPLACE TEMP TABLE _gate_lsh_truth AS WITH "
-    + _LSH_EVAL_SH_CTES
-    + ",\n"
-    + _LSH_EVAL_TRUTH_CTES
+    + _JACCARD_TRUTH_CTES
     + "\nSELECT doc_a, doc_b FROM truth",
     """WITH cand AS (SELECT * FROM _gate_lsh_cand),
 truth AS (SELECT * FROM _gate_lsh_truth),
@@ -1723,64 +1671,31 @@ def _build_containment_pairs(
     )
 
 
-CORPUS_CONTAINMENT_SQL = f"""
-WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id <> b.doc_id
-  GROUP BY 1, 2
+def _containment_sql(inter_ctes: str) -> str:
+    """Ordered containment pairs over ``inter_ctes``: both orientations
+    of each unordered ``inter`` pair, exact because n_inter is
+    symmetric."""
+    return f"""
+WITH {inter_ctes},
+ordered AS (
+  SELECT doc_a, doc_b, n_inter FROM inter
+  UNION ALL SELECT doc_b, doc_a, n_inter FROM inter
 )
 SELECT doc_a, doc_b, n_inter, sa.n AS n_a, sb.n AS n_b,
        CAST(CAST(n_inter / sa.n AS DECIMAL(18,6)) AS DOUBLE) AS containment,
        n_inter = sa.n AS is_subset
-FROM inter
+FROM ordered
 JOIN sz sa ON sa.doc_id = doc_a
 JOIN sz sb ON sb.doc_id = doc_b
 WHERE n_inter * {CONTAIN_DEN} >= sa.n * {CONTAIN_NUM}
 """
 
 
-# Oracle for the df-capped twin: identical shape, with the stop-shingle
-# drop (df ≤ JACCARD_MAX_DF) replayed BEFORE sizes and the index join —
-# the same place the engine applies it (_shingles(max_df=…)).
-CORPUS_CONTAINMENT_CAPPED_SQL = f"""
-WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh0 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-keep AS (
-  SELECT shingle FROM sh0 GROUP BY shingle
-  HAVING COUNT(*) <= {JACCARD_MAX_DF}
-),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id <> b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_inter, sa.n AS n_a, sb.n AS n_b,
-       CAST(CAST(n_inter / sa.n AS DECIMAL(18,6)) AS DOUBLE) AS containment,
-       n_inter = sa.n AS is_subset
-FROM inter
-JOIN sz sa ON sa.doc_id = doc_a
-JOIN sz sb ON sb.doc_id = doc_b
-WHERE n_inter * {CONTAIN_DEN} >= sa.n * {CONTAIN_NUM}
-"""
+CORPUS_CONTAINMENT_SQL = _containment_sql(_INTER_CTES)
+# The df-capped twin: the stop-shingle drop replayed BEFORE sizes and
+# the index join — the same place the engine applies it
+# (_shingles(max_df=…)).
+CORPUS_CONTAINMENT_CAPPED_SQL = _containment_sql(_INTER_CTES_CAPPED)
 
 
 SOURCE_OVERLAP_TOP_K = 25
@@ -1925,23 +1840,7 @@ def dedup_simhash_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_SIMHASH_QUALITY_EVAL_SQL = f"""
 WITH cand0 AS ({DEDUP_SIMHASH_HAMMING_SQL}),
 cand AS (SELECT DISTINCT doc_a, doc_b FROM cand0),
-w2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh2 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w2 WHERE len(w) >= 2)
-),
-sz2 AS (SELECT doc_id, COUNT(*) AS n FROM sh2 GROUP BY doc_id),
-inter2 AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh2 a JOIN sh2 b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-truth AS (
-  SELECT DISTINCT doc_a, doc_b FROM inter2
-  JOIN sz2 sa ON sa.doc_id = doc_a JOIN sz2 sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
+{_JACCARD_TRUTH_CTES},
 hit AS (SELECT doc_a, doc_b FROM cand INTERSECT SELECT doc_a, doc_b FROM truth),
 counts AS (
   SELECT (SELECT COUNT(*) FROM cand) AS n_candidates,
@@ -2197,23 +2096,7 @@ cand AS (
   FROM ranked a JOIN ranked b
     ON b.r > a.r AND b.r - a.r < {SNM_WINDOW}
 ),
-w2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh2 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w2 WHERE len(w) >= 2)
-),
-sz2 AS (SELECT doc_id, COUNT(*) AS n FROM sh2 GROUP BY doc_id),
-inter2 AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh2 a JOIN sh2 b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-truth AS (
-  SELECT DISTINCT doc_a, doc_b FROM inter2
-  JOIN sz2 sa ON sa.doc_id = doc_a JOIN sz2 sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
+{_JACCARD_TRUTH_CTES},
 hit AS (SELECT doc_a, doc_b FROM cand INTERSECT SELECT doc_a, doc_b FROM truth),
 counts AS (
   SELECT (SELECT COUNT(*) FROM cand)  AS n_candidates,
@@ -2420,23 +2303,7 @@ all_cand AS (
   UNION ALL
   SELECT pass_name, doc_a, doc_b FROM cand
 ),
-w2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh2 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w2 WHERE len(w) >= 2)
-),
-sz2 AS (SELECT doc_id, COUNT(*) AS n FROM sh2 GROUP BY doc_id),
-inter2 AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh2 a JOIN sh2 b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-truth AS (
-  SELECT DISTINCT doc_a, doc_b FROM inter2
-  JOIN sz2 sa ON sa.doc_id = doc_a JOIN sz2 sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
+{_JACCARD_TRUTH_CTES},
 stats AS (
   SELECT c.pass_name,
          COUNT(*) AS n_candidates,
@@ -2538,44 +2405,8 @@ def corpus_containment_cap_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CORPUS_CONTAINMENT_CAP_EVAL_SQL = f"""
-WITH
-w AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh0 AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz0 AS (SELECT doc_id, COUNT(*) AS n FROM sh0 GROUP BY doc_id),
-inter0 AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh0 a JOIN sh0 b USING (shingle)
-  WHERE a.doc_id <> b.doc_id
-  GROUP BY 1, 2
-),
-truth AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter0
-  JOIN sz0 sa ON sa.doc_id = doc_a JOIN sz0 sb ON sb.doc_id = doc_b
-  WHERE n_inter * {CONTAIN_DEN} >= sa.n * {CONTAIN_NUM}
-),
-keep AS (
-  SELECT shingle FROM sh0 GROUP BY shingle
-  HAVING COUNT(*) <= {JACCARD_MAX_DF}
-),
-sh1 AS MATERIALIZED (
-  SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
-sz1 AS (SELECT doc_id, COUNT(*) AS n FROM sh1 GROUP BY doc_id),
-inter1 AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh1 a JOIN sh1 b USING (shingle)
-  WHERE a.doc_id <> b.doc_id
-  GROUP BY 1, 2
-),
-capped AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter1
-  JOIN sz1 sa ON sa.doc_id = doc_a JOIN sz1 sb ON sb.doc_id = doc_b
-  WHERE n_inter * {CONTAIN_DEN} >= sa.n * {CONTAIN_NUM}
-),
+WITH truth AS MATERIALIZED (SELECT doc_a, doc_b FROM ({CORPUS_CONTAINMENT_SQL})),
+capped AS MATERIALIZED (SELECT doc_a, doc_b FROM ({CORPUS_CONTAINMENT_CAPPED_SQL})),
 hit AS (SELECT doc_a, doc_b FROM truth INTERSECT SELECT doc_a, doc_b FROM capped)
 SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT)  AS n_truth,
        CAST((SELECT COUNT(*) FROM capped) AS BIGINT) AS n_capped,

@@ -753,7 +753,13 @@ def _ddb_markov_step(prev: str, out: str) -> str:
 )"""
 
 
-EVENTS_MARKOV_STATIONARY_SQL = f"""
+def _events_markov_stationary_sql(iters: int) -> str:
+    """The oracle for ``events_markov_stationary`` at ``iters`` power
+    steps: one generated step per step, so it follows ``MARKOV_ITERS``."""
+    steps = ",\n".join(
+        _ddb_markov_step(f"pi{k - 1}", f"pi{k}") for k in range(1, iters + 1)
+    )
+    return f"""
 WITH pairs AS (
   SELECT from_type, to_type, COUNT(*) AS n_transitions FROM (
     SELECT event_type AS from_type,
@@ -775,11 +781,12 @@ pi0 AS (
          1.0::DOUBLE / (SELECT COUNT(DISTINCT from_type) FROM pmat) AS pi
   FROM pmat
 ),
-{_ddb_markov_step('pi0', 'pi1')},
-{_ddb_markov_step('pi1', 'pi2')},
-{_ddb_markov_step('pi2', 'pi3')}
-SELECT t AS state, CAST(CAST(pi AS DECIMAL(18,6)) AS DOUBLE) AS pi FROM pi3
+{steps}
+SELECT t AS state, CAST(CAST(pi AS DECIMAL(18,6)) AS DOUBLE) AS pi FROM pi{iters}
 """
+
+
+EVENTS_MARKOV_STATIONARY_SQL = _events_markov_stationary_sql(MARKOV_ITERS)
 
 
 def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..session import session_conf
-from .dedup import _jaccard_edges
+from .dedup import _JACCARD_EDGES_CTES, _jaccard_edges
 
 N_ITERATIONS = 2
 DAMPING_PCT = 85            # d = 0.85, held as an integer percentage
@@ -36,7 +36,7 @@ BASE_RANK_MICRO = 150_000    # (1 - d) in micro-units
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank (2 unrolled iterations, integer micro-unit arithmetic)
+    """PageRank (``N_ITERATIONS`` iterations, integer micro-unit arithmetic)
     over the symmetric Jaccard≥0.5 edge graph.
 
     Every node in the edge set has out-degree ≥ 1 (edges are symmetric),
@@ -81,57 +81,39 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle: identical edge derivation to DEDUP_CONNECTED_COMPONENTS_SQL
-# (dedup.py), then the two iterations unrolled with the same integer
-# floor divisions.
-GRAPH_PAGERANK_SQL = f"""
+def _ddb_pagerank_step(k: int) -> str:
+    """DuckDB CTEs ``c{k}``/``r{k}``: iteration ``k`` from ``r{k-1}``, with
+    ``graph_pagerank``'s integer floor divisions."""
+    return f"""c{k} AS (
+  SELECT e.dst AS node, SUM((r.r * {DAMPING_PCT}) // (100 * d.deg)) AS c
+  FROM edges e JOIN r{k - 1} r ON r.node = e.src JOIN deg d ON d.src = e.src
+  GROUP BY e.dst
+),
+r{k} AS (
+  SELECT d.src AS node,
+         CAST({BASE_RANK_MICRO} + COALESCE(c{k}.c, 0) AS BIGINT) AS r
+  FROM deg d LEFT JOIN c{k} ON c{k}.node = d.src
+)"""
+
+
+def _graph_pagerank_sql(iterations: int) -> str:
+    """The oracle for ``graph_pagerank`` at ``iterations`` steps over the
+    shared Jaccard edge prelude: one generated step per iteration, so it
+    follows ``N_ITERATIONS``."""
+    steps = ",\n".join(_ddb_pagerank_step(k) for k in range(1, iterations + 1))
+    last = f"r{iterations}"
+    return f"""
 WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_CTES},
 deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
 r0 AS (SELECT src AS node, CAST({INIT_RANK_MICRO} AS BIGINT) AS r FROM deg),
-c1 AS (
-  SELECT e.dst AS node, SUM((r.r * {DAMPING_PCT}) // (100 * d.deg)) AS c
-  FROM edges e JOIN r0 r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY e.dst
-),
-r1 AS (
-  SELECT d.src AS node,
-         CAST({BASE_RANK_MICRO} + COALESCE(c1.c, 0) AS BIGINT) AS r
-  FROM deg d LEFT JOIN c1 ON c1.node = d.src
-),
-c2 AS (
-  SELECT e.dst AS node, SUM((r.r * {DAMPING_PCT}) // (100 * d.deg)) AS c
-  FROM edges e JOIN r1 r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY e.dst
-),
-r2 AS (
-  SELECT d.src AS node,
-         CAST({BASE_RANK_MICRO} + COALESCE(c2.c, 0) AS BIGINT) AS r
-  FROM deg d LEFT JOIN c2 ON c2.node = d.src
-)
-SELECT r2.node AS doc_id, r2.r AS rank_micro, CAST(deg.deg AS INT) AS degree
-FROM r2 JOIN deg ON deg.src = r2.node
+{steps}
+SELECT {last}.node AS doc_id, {last}.r AS rank_micro, CAST(deg.deg AS INT) AS degree
+FROM {last} JOIN deg ON deg.src = {last}.node
 """
+
+
+GRAPH_PAGERANK_SQL = _graph_pagerank_sql(N_ITERATIONS)
 
 
 BFS_SEED_MOD = 10   # seeds = edge-graph nodes with doc_id % 10 == 0
@@ -176,32 +158,12 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return visited.select(F.col("node").alias("doc_id"), "level")
 
 
-# Oracle: same edge derivation as GRAPH_PAGERANK_SQL, then a hop-capped
+# Oracle: the shared Jaccard edge prelude, then a hop-capped
 # recursive CTE; UNION (not UNION ALL) dedups (node, lvl) states so the
 # recursion is bounded even inside cliques.
 GRAPH_BFS_LEVELS_SQL = f"""
 WITH RECURSIVE
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_CTES},
 bfs(node, lvl) AS (
   SELECT DISTINCT src, 0 FROM edges WHERE src % {BFS_SEED_MOD} = 0
   UNION
@@ -271,31 +233,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle: same edge CTE as GRAPH_PAGERANK_SQL; triangles via the ordered
+# Oracle: the shared Jaccard edge prelude; triangles via the ordered
 # a<b<c double join; wedges from symmetric degrees.
-GRAPH_TRIANGLE_COUNT_SQL = """
+GRAPH_TRIANGLE_COUNT_SQL = f"""
 WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_CTES},
 e AS (SELECT src, dst FROM edges WHERE src < dst),
 tri AS (
   SELECT COUNT(*) AS n_triangles
@@ -368,33 +310,13 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GRAPH_ASSORTATIVITY_SQL = """
+GRAPH_ASSORTATIVITY_SQL = f"""
 WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-deg AS (SELECT doc_a AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
+{_JACCARD_EDGES_CTES},
+deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
 joined AS (
   SELECT da.deg AS dx, db.deg AS dy
-  FROM edges e JOIN deg da ON da.node = e.doc_a JOIN deg db ON db.node = e.doc_b
+  FROM edges e JOIN deg da ON da.node = e.src JOIN deg db ON db.node = e.dst
 ),
 sums AS (
   SELECT COUNT(*) AS m,
@@ -418,33 +340,6 @@ SELECT m AS n_directed_edges,
        CAST(CAST(sxd / nd AS DECIMAL(18,6)) AS DOUBLE) AS mean_edge_degree
 FROM d
 """
-
-
-# Shared oracle prelude: the Jaccard ≥ 0.5 symmetric edge set (same CTE
-# chain as GRAPH_PAGERANK_SQL — exact word-bigram Jaccard, both
-# directions). New graph oracles compose on top of this text.
-_EDGE_SQL_CTE = """
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-)"""
 
 
 K_CORE_K = 2        # keep nodes with degree ≥ 2 (cycles, not pendant pairs)
@@ -502,7 +397,7 @@ e{r} AS (
 
 GRAPH_KCORE_SQL = f"""
 WITH
-{_EDGE_SQL_CTE},
+{_JACCARD_EDGES_CTES},
 e0 AS (SELECT src, dst FROM edges),
 {",".join(_kcore_round_sql(r) for r in range(1, K_CORE_ROUNDS + 1))}
 SELECT src AS node, COUNT(*) AS core_deg
@@ -748,7 +643,7 @@ def _modularity_tail_sql(method: str, labels_cte: str) -> str:
 
 GRAPH_MODULARITY_SQL = f"""
 WITH RECURSIVE
-{_EDGE_SQL_CTE},
+{_JACCARD_EDGES_CTES},
 star AS (
   SELECT src AS node, LEAST(src, MIN(dst)) AS c FROM edges GROUP BY src
 ),
@@ -834,7 +729,7 @@ def _louvain_tail_sql(method: str, labels_cte: str, moved_sql: str) -> str:
 
 GRAPH_LOUVAIN_ONE_LEVEL_SQL = f"""
 WITH
-{_EDGE_SQL_CTE},
+{_JACCARD_EDGES_CTES},
 deg AS (SELECT src AS node, COUNT(*) AS k FROM edges GROUP BY src),
 tot AS (SELECT COUNT(*) AS m FROM edges),
 gains AS (
@@ -1018,102 +913,6 @@ def graph_louvain_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _louvain_levels(spark, sf_dir, 2, converge=False)
 
 
-GRAPH_LOUVAIN_TWO_LEVEL_SQL = f"""
-WITH
-{_EDGE_SQL_CTE},
-deg AS (SELECT src AS node, COUNT(*) AS k FROM edges GROUP BY src),
-tot AS (SELECT COUNT(*) AS m FROM edges),
-gains AS (
-  SELECT e.src AS node,
-         2 * 1 * t.m - 2 * ks.k * kt.k AS gain, e.dst AS t,
-         ROW_NUMBER() OVER (PARTITION BY e.src
-                            ORDER BY 2 * 1 * t.m - 2 * ks.k * kt.k DESC,
-                                     e.dst) AS rn
-  FROM edges e
-  JOIN deg ks ON ks.node = e.src
-  JOIN deg kt ON kt.node = e.dst
-  CROSS JOIN tot t
-),
-singleton AS (SELECT node, node AS c, FALSE AS moved FROM deg),
-prop AS (
-  SELECT node, CASE WHEN gain > 0 THEN t ELSE node END AS c
-  FROM gains WHERE rn = 1
-),
-louv AS (
-  SELECT p1.node,
-         CASE WHEN EXISTS (SELECT 1 FROM prop p2
-                           WHERE p2.node = p1.c AND p2.c = p1.node)
-                   AND p1.node < p1.c
-              THEN p1.node ELSE p1.c END AS c,
-         CASE WHEN EXISTS (SELECT 1 FROM prop p2
-                           WHERE p2.node = p1.c AND p2.c = p1.node)
-                   AND p1.node < p1.c
-              THEN FALSE ELSE p1.c <> p1.node END AS moved
-  FROM prop p1
-),
-cedges AS MATERIALIZED (
-  SELECT ls.c AS s, lt.c AS t, COUNT(*) AS w
-  FROM edges JOIN louv ls ON ls.node = edges.src
-             JOIN louv lt ON lt.node = edges.dst
-  GROUP BY 1, 2
-),
-cdeg AS (SELECT s AS node, CAST(SUM(w) AS BIGINT) AS k FROM cedges GROUP BY s),
-gains2 AS (
-  SELECT e.s AS node,
-         2 * e.w * t.m - 2 * ks.k * kt.k AS gain, e.t,
-         ROW_NUMBER() OVER (PARTITION BY e.s
-                            ORDER BY 2 * e.w * t.m - 2 * ks.k * kt.k DESC,
-                                     e.t) AS rn
-  FROM cedges e
-  JOIN cdeg ks ON ks.node = e.s
-  JOIN cdeg kt ON kt.node = e.t
-  CROSS JOIN tot t
-  WHERE e.s <> e.t
-),
-prop2 AS (
-  SELECT node, CASE WHEN gain > 0 THEN t ELSE node END AS c
-  FROM gains2 WHERE rn = 1
-),
-louv2 AS (
-  SELECT p1.node,
-         CASE WHEN EXISTS (SELECT 1 FROM prop2 p2
-                           WHERE p2.node = p1.c AND p2.c = p1.node)
-                   AND p1.node < p1.c
-              THEN p1.node ELSE p1.c END AS c,
-         CASE WHEN EXISTS (SELECT 1 FROM prop2 p2
-                           WHERE p2.node = p1.c AND p2.c = p1.node)
-                   AND p1.node < p1.c
-              THEN FALSE ELSE p1.c <> p1.node END AS moved
-  FROM prop2 p1
-),
-composed AS (
-  SELECT l1.node, COALESCE(l2.c, l1.c) AS c
-  FROM louv l1 LEFT JOIN louv2 l2 ON l2.node = l1.c
-),
-q AS (
-{_louvain_tail_sql("singleton", "singleton", "CAST(0 AS BIGINT)")}
-  UNION ALL
-{_louvain_tail_sql(
-    "louvain1",
-    "louv",
-    "(SELECT CAST(COUNT(*) FILTER (WHERE moved) AS BIGINT) FROM louv)",
-)}
-  UNION ALL
-{_louvain_tail_sql(
-    "louvain2",
-    "composed",
-    "(SELECT CAST(COALESCE(COUNT(*) FILTER (WHERE moved), 0) AS BIGINT) FROM louv2)",
-)}
-)
-SELECT method, n_communities, n_moved, n_directed_edges, q_num,
-       CAST(CAST(CAST(q_num AS DOUBLE)
-                 / (CAST(n_directed_edges AS DOUBLE)
-                    * CAST(n_directed_edges AS DOUBLE))
-            AS DECIMAL(18,6)) AS DOUBLE) AS modularity
-FROM q
-"""
-
-
 # Bounded level cap for the converged Louvain loop. The fixtures
 # converge in 2–3 levels; the cap bounds the driver loop AND the
 # oracle's unrolled CTE chain (each level is one sweep + contraction —
@@ -1150,7 +949,7 @@ def graph_louvain_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _louvain_level_sql(level: int) -> str:
-    """One unrolled Louvain level for the converged oracle: weighted
+    """One unrolled Louvain level for ``_louvain_sql``: weighted
     sweep over ``cedges{level}`` (self-loops excluded from gains,
     included in degrees), mutual-swap resolution, label composition,
     and the next level's contracted graph. Every per-level CTE is
@@ -1203,39 +1002,40 @@ cedges{lv + 1} AS MATERIALIZED (
 )"""
 
 
-def _louvain_converged_sql() -> str:
-    """Generated {LOUVAIN_MAX_LEVELS}-level unrolled twin of the Spark
-    driver loop. Emission matches the early stop exactly: level l's row
-    appears iff every earlier level moved at least one node (when a
+def _louvain_sql(levels: int, converge: bool) -> str:
+    """The unrolled twin of ``_louvain_levels(levels, converge)``: the
+    singleton row, then one generated level per level. With
+    ``converge`` the emission matches the early stop exactly: level l's
+    row appears iff every earlier level moved at least one node (when a
     sweep proposes nothing, all later sweeps are identical no-ops, so
     unrolling past convergence is safe — and filtered out here)."""
-    levels = "".join("," + _louvain_level_sql(lv) for lv in range(1, LOUVAIN_MAX_LEVELS + 1))
+    body = "".join("," + _louvain_level_sql(lv) for lv in range(1, levels + 1))
     tails = [_louvain_tail_sql("singleton", "comp0", "CAST(0 AS BIGINT)")]
-    for lv in range(1, LOUVAIN_MAX_LEVELS + 1):
-        gate = " AND ".join(
-            f"(SELECT COUNT(*) FILTER (WHERE moved) FROM louv{j}) > 0"
-            for j in range(1, lv)
-        )
+    for lv in range(1, levels + 1):
         tail = _louvain_tail_sql(
             f"louvain{lv}",
             f"comp{lv}",
             f"(SELECT CAST(COUNT(*) FILTER (WHERE moved) AS BIGINT) FROM louv{lv})",
         )
-        if gate:
+        if converge and lv > 1:
+            gate = " AND ".join(
+                f"(SELECT COUNT(*) FILTER (WHERE moved) FROM louv{j}) > 0"
+                for j in range(1, lv)
+            )
             tail = f"  SELECT * FROM (\n{tail}\n  ) WHERE {gate}"
         tails.append(tail)
-    body = "\n  UNION ALL\n".join(tails)
+    ladder = "\n  UNION ALL\n".join(tails)
     return f"""
 WITH
-{_EDGE_SQL_CTE},
+{_JACCARD_EDGES_CTES},
 deg AS (SELECT src AS node, COUNT(*) AS k FROM edges GROUP BY src),
 tot AS (SELECT COUNT(*) AS m FROM edges),
 comp0 AS MATERIALIZED (SELECT node, node AS c FROM deg),
 cedges1 AS MATERIALIZED (
   SELECT src AS s, dst AS t, CAST(1 AS BIGINT) AS w FROM edges
-){levels},
+){body},
 q AS (
-{body}
+{ladder}
 )
 SELECT method, n_communities, n_moved, n_directed_edges, q_num,
        CAST(CAST(CAST(q_num AS DOUBLE)
@@ -1246,7 +1046,8 @@ FROM q
 """
 
 
-GRAPH_LOUVAIN_CONVERGED_SQL = _louvain_converged_sql()
+GRAPH_LOUVAIN_TWO_LEVEL_SQL = _louvain_sql(2, converge=False)
+GRAPH_LOUVAIN_CONVERGED_SQL = _louvain_sql(LOUVAIN_MAX_LEVELS, converge=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1392,54 +1193,38 @@ def graph_community_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GRAPH_COMMUNITY_LABEL_PROP_SQL = """
+def _ddb_lpa_round(k: int) -> str:
+    """DuckDB CTEs ``c{k}``/``l{k}``: round ``k`` of mode-label
+    propagation from ``l{k-1}``, ties to the smallest label."""
+    return f"""c{k} AS (
+  SELECT e.src, l.label, COUNT(*) AS c
+  FROM edges e JOIN l{k - 1} l ON l.node = e.dst GROUP BY 1, 2
+),
+l{k} AS (
+  SELECT src AS node, label FROM (
+    SELECT src, label,
+           ROW_NUMBER() OVER (PARTITION BY src ORDER BY c DESC, label ASC) AS rn
+    FROM c{k}) WHERE rn = 1
+)"""
+
+
+def _graph_community_label_prop_sql(rounds: int) -> str:
+    """The oracle for ``graph_community_label_prop`` at ``rounds``
+    rounds: one generated round per round, so it follows ``LPA_ROUNDS``."""
+    steps = ",\n".join(_ddb_lpa_round(k) for k in range(1, rounds + 1))
+    last = f"l{rounds}"
+    return f"""
 WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_CTES},
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-c1 AS (
-  SELECT e.src, l.label, COUNT(*) AS c
-  FROM edges e JOIN l0 l ON l.node = e.dst GROUP BY 1, 2
-),
-l1 AS (
-  SELECT src AS node, label FROM (
-    SELECT src, label,
-           ROW_NUMBER() OVER (PARTITION BY src ORDER BY c DESC, label ASC) AS rn
-    FROM c1) WHERE rn = 1
-),
-c2 AS (
-  SELECT e.src, l.label, COUNT(*) AS c
-  FROM edges e JOIN l1 l ON l.node = e.dst GROUP BY 1, 2
-),
-l2 AS (
-  SELECT src AS node, label FROM (
-    SELECT src, label,
-           ROW_NUMBER() OVER (PARTITION BY src ORDER BY c DESC, label ASC) AS rn
-    FROM c2) WHERE rn = 1
-),
-sizes AS (SELECT label, COUNT(*) AS n FROM l2 GROUP BY label)
-SELECT node AS doc_id, l2.label AS community, CAST(n AS INT) AS community_size
-FROM l2 JOIN sizes ON l2.label = sizes.label
+{steps},
+sizes AS (SELECT label, COUNT(*) AS n FROM {last} GROUP BY label)
+SELECT node AS doc_id, {last}.label AS community, CAST(n AS INT) AS community_size
+FROM {last} JOIN sizes ON {last}.label = sizes.label
 """
+
+
+GRAPH_COMMUNITY_LABEL_PROP_SQL = _graph_community_label_prop_sql(LPA_ROUNDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1522,27 +1307,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``adj`` and the walk start rows ``w0``; ``_ddb_walk_step`` extends it.
 _DDB_WALK_START = f"""
 WITH
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-1),
-                          i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS MATERIALIZED (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-),
-pairs AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_CTES},
 adj AS (SELECT src, list_sort(list(dst)) AS nbrs FROM edges GROUP BY src),
 w0 AS (
   SELECT a.src AS start, t.w, a.src AS cur, [a.src] AS path

@@ -3320,17 +3320,20 @@ def format_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     heart (Access → SQLite → CSV/JSON, fetch.go:180-246); ORC is the
     columnar member of that conversion family.
     """
-    root = memo("orc_stage", spark, sf_dir, (), lambda: temp_dir("orc-stage-"))
-    li = Catalog(spark, sf_dir).table("lineitem").select(
-        "l_orderkey",
-        "l_returnflag",
-        "l_linestatus",
-        F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
-        F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
-    )
-    path = f"{root}/lineitem_orc"
-    li.write.mode("overwrite").orc(path)
-    back = spark.read.orc(path)
+
+    def build() -> str:
+        root = temp_dir("orc-stage-")
+        Catalog(spark, sf_dir).table("lineitem").select(
+            "l_orderkey",
+            "l_returnflag",
+            "l_linestatus",
+            F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
+            F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
+        ).write.orc(f"{root}/lineitem_orc")
+        return root
+
+    root = memo("orc_stage", spark, sf_dir, (), build)
+    back = spark.read.orc(f"{root}/lineitem_orc")
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_rows"),
         F.floor(F.sum("qty") * 100).cast("long").alias("sum_qty_cents"),
@@ -3371,16 +3374,19 @@ def format_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     version directory scheme; this operator is that idea as a queryable
     table layout.
     """
-    root = memo("parted_stage", spark, sf_dir, (), lambda: temp_dir("parted-stage-"))
-    o = Catalog(spark, sf_dir).table("orders").select(
-        "o_orderkey",
-        "o_orderdate",
-        F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-        "o_orderpriority",
-    )
-    path = f"{root}/orders_parted"
-    o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
-    back = spark.read.parquet(path).filter(
+
+    def build() -> str:
+        root = temp_dir("parted-stage-")
+        Catalog(spark, sf_dir).table("orders").select(
+            "o_orderkey",
+            "o_orderdate",
+            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+            "o_orderpriority",
+        ).write.partitionBy("o_orderpriority").parquet(f"{root}/orders_parted")
+        return root
+
+    root = memo("parted_stage", spark, sf_dir, (), build)
+    back = spark.read.parquet(f"{root}/orders_parted").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     return back.groupBy(
@@ -3464,17 +3470,21 @@ def format_schema_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     allowed to drift per version; this operator is that contract on a
     columnar lake layout.
     """
-    root = memo("merge_stage", spark, sf_dir, (), lambda: temp_dir("schemamerge-stage-"))
-    o = Catalog(spark, sf_dir).table("orders").select(
-        "o_orderkey",
-        "o_orderdate",
-        F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-        "o_orderpriority",
-    )
-    early = o.filter(F.year("o_orderdate") <= 1997).drop("o_orderpriority")
-    late = o.filter(F.year("o_orderdate") > 1997)
-    early.write.mode("overwrite").parquet(f"{root}/batch1")
-    late.write.mode("overwrite").parquet(f"{root}/batch2")
+
+    def build() -> str:
+        root = temp_dir("schemamerge-stage-")
+        o = Catalog(spark, sf_dir).table("orders").select(
+            "o_orderkey",
+            "o_orderdate",
+            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+            "o_orderpriority",
+        )
+        early = o.filter(F.year("o_orderdate") <= 1997).drop("o_orderpriority")
+        early.write.parquet(f"{root}/batch1")
+        o.filter(F.year("o_orderdate") > 1997).write.parquet(f"{root}/batch2")
+        return root
+
+    root = memo("merge_stage", spark, sf_dir, (), build)
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{root}/batch1", f"{root}/batch2"
     )

@@ -1,7 +1,8 @@
 """The gate and bench tools: the sharded gate's layout and spill
-reaping, the sf1 artifact merge and bench extraction, and the shared
-memo builds that bench.py and check_queries.py attribute from the memo's
-record (functions/memo.py)."""
+reaping, the exact-Jaccard oracle prelude its inter cache matches, the
+sf1 artifact merge and bench extraction, and the shared memo builds
+that bench.py and check_queries.py attribute from the memo's record
+(functions/memo.py)."""
 
 from __future__ import annotations
 
@@ -27,10 +28,10 @@ def test_shard_layout_heavy_light_partition():
     """Shard 0 gets exactly the inter-cache-eligible (quadratic oracle)
     entries; the rest round-robin; the layout is a partition of the
     input; n_shards=1 degenerates to one shard."""
-    from tools.oracle_cache import ELIGIBLE
+    from tools.oracle_cache import eligible
     from tools.run_sharded_gate import shard_layout
 
-    heavy = sorted(ELIGIBLE)[:3]
+    heavy = sorted(eligible())[:3]
     assert heavy, "fixture assumption: some eligible entries exist"
     names = heavy + [f"light_{i}" for i in range(10)]
 
@@ -48,7 +49,7 @@ def test_shard_layout_never_empty():
     FULL registry; shard_layout must drop empty shards instead."""
     from tools.run_sharded_gate import shard_layout
 
-    # no ELIGIBLE names → the H shard would be empty
+    # no eligible names → the H shard would be empty
     shards = shard_layout(["not_eligible_a", "not_eligible_b"], 3)
     assert all(shards)
     assert sorted(n for s in shards for n in s) == [
@@ -60,36 +61,18 @@ def test_shard_layout_never_empty():
     assert all(shards) and sum(len(s) for s in shards) == 1
 
 
-def _recorded_memo_keys(spark, queries: dict) -> dict[str, list[str]]:
-    """Run each query into the no-op sink under its own job group, the
-    way check_queries runs an entry, and return its recorded memo keys."""
-    from tools.check_queries import attribute
-
-    keys = {}
-    try:
-        for name, fn in queries.items():
-            spark.sparkContext.setJobGroup(name, name)
-            row: dict = {}
-            before = memo.records()
-            fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-            attribute(name, row, before, {})
-            keys[name] = row.get("memo_keys", [])
-    finally:
-        _without_job_group(spark)
-    return keys
-
-
 def test_shard_layout_co_shards_memo_families(spark):
     """Shard isolation defeats the in-process memoized substrates, so the
     entries that touched one memo key ride in ONE shard, on a map
-    recorded in this session. The links run through nested calls
-    (``sim_rrf_fusion`` reads the IVF cells through ``sim_ivf``) and
-    through a shared helper substrate (capped Jaccard and capped
-    containment resolve one ``prefix_order``); the simhash family,
-    chained to an oracle-cache-eligible entry, lands on the H shard."""
+    recorded in this session the way the gate records it
+    (``touched_keys``: each registry call alone under its job group).
+    The links run through nested calls (``sim_rrf_fusion`` reads the IVF
+    cells through ``sim_ivf``) and through a shared helper substrate
+    (capped Jaccard and capped containment resolve one
+    ``prefix_order``); the simhash family, chained to an
+    oracle-cache-eligible entry, lands on the H shard."""
     from nzwirelessmap_fetch_spark.operators.dedup import JACCARD_MAX_DF
-    from nzwirelessmap_fetch_spark.plans import registry
-    from tools.run_sharded_gate import shard_layout
+    from tools.run_sharded_gate import shard_layout, touched_keys
 
     names = [
         "dedup_simhash_hamming",
@@ -100,9 +83,8 @@ def test_shard_layout_co_shards_memo_families(spark):
         "sim_ivf",
         "sim_rrf_fusion",
     ]
-    entries = registry.queries()
     memo.reset()
-    keys = _recorded_memo_keys(spark, {n: entries[n] for n in names})
+    keys = touched_keys(spark, names)
     shards = shard_layout(names, 3, keys)
     assert sorted(n for s in shards for n in s) == sorted(names)
     shard_of = {n: i for i, s in enumerate(shards) for n in s}
@@ -119,6 +101,60 @@ def test_shard_layout_co_shards_memo_families(spark):
     assert shard_of["corpus_containment_capped"] == shard_of["dedup_ngram_jaccard_capped"]
     assert {shard_of[n] for n in names[:3]} == {0}
     memo.reset()
+
+
+# ---------------------------------------------- oracle prelude and cache
+
+# the entries whose oracle carries the full-postings Σdf² join
+_FULL_POSTINGS = {
+    "corpus_canonical_picks", "corpus_containment", "corpus_containment_cap_eval",
+    "dedup_cc_star", "dedup_connected_components", "dedup_lsh_quality_eval",
+    "dedup_ngram_jaccard", "dedup_simhash_quality_eval", "dedup_snm_multipass_eval",
+    "dedup_snm_quality_eval", "graph_assortativity", "graph_bfs_levels",
+    "graph_community_label_prop", "graph_kcore", "graph_louvain_converged",
+    "graph_louvain_one_level", "graph_louvain_two_level", "graph_modularity",
+    "graph_pagerank", "graph_random_walks", "graph_triangle_count",
+}
+
+
+def test_jaccard_oracles_share_one_prelude():
+    """Every oracle text (one-shot or gate step) that carries a shingle
+    pair join carries it inside the shared exact-Jaccard prelude,
+    verbatim; the package spells the shingle CTE and the pair join once
+    and no Jaccard threshold literal; and the inter cache's eligible
+    set, derived from the prelude, is the full-postings entries, with
+    the df-capped twins left out."""
+    import glob
+    import re
+
+    from nzwirelessmap_fetch_spark.operators.dedup import _INTER_CTES, _INTER_CTES_CAPPED
+    from nzwirelessmap_fetch_spark.plans import registry
+    from tools.oracle_cache import eligible
+
+    pair_join = re.compile(r"FROM (\w+) a JOIN \1 b USING \(shingle\)")
+    texts = {n: [sql] for n, sql in registry.oracle_sql().items()}
+    for n, steps in registry.oracle_gate_steps().items():
+        texts.setdefault(n, []).extend(steps)
+    carriers = set()
+    for n, ts in texts.items():
+        for t in ts:
+            joins = len(pair_join.findall(t))
+            assert joins == t.count(_INTER_CTES) + t.count(_INTER_CTES_CAPPED), n
+            if joins:
+                carriers.add(n)
+    capped = {"dedup_ngram_jaccard_capped", "corpus_containment_capped"}
+    assert carriers == _FULL_POSTINGS | capped
+
+    source = "".join(
+        open(p).read()
+        for p in glob.glob(f"{REPO}/nzwirelessmap_fetch_spark/**/*.py", recursive=True)
+    )
+    assert source.count("i -> w[i] || ' ' || w[i+1])) AS shingle") == 1
+    assert len(pair_join.findall(source)) == 1
+    assert "n_inter) >= 0.5" not in source
+
+    assert eligible() == _FULL_POSTINGS
+    assert not capped & eligible()
 
 
 # ------------------------------------------------------ gate processes

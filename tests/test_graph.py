@@ -122,6 +122,65 @@ def test_random_walks_oracle_follows_walk_length(spark, monkeypatch):
     con.close()
 
 
+def _follows_steps(spark, monkeypatch, knob, counts, run, oracle_sql) -> int:
+    """At each step count the engine hash-matches the oracle generated
+    for it; returns how many distinct answers the counts gave."""
+    import duckdb
+
+    from nzwirelessmap_fetch_spark.operators import graph
+    from tests.oracle import frame_fingerprint
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    prints = set()
+    for n in counts:
+        if knob:
+            monkeypatch.setattr(graph, knob, n)
+        sql = oracle_sql(n)
+        compare(run(n), con, sql)
+        prints.add(frame_fingerprint(con.execute(sql).df()))
+    con.close()
+    return len(prints)
+
+
+def test_pagerank_oracle_follows_iterations(spark, monkeypatch):
+    """One generated step per iteration. The fixtures' edge graphs are
+    unions of cliques, whose ranks are fixed points of every step, so
+    the step count shows in the text, not in the answer."""
+    from nzwirelessmap_fetch_spark.operators import graph
+
+    _follows_steps(
+        spark, monkeypatch, "N_ITERATIONS", (1, 3),
+        lambda n: graph.graph_pagerank(spark, SF_SMOKE), graph._graph_pagerank_sql,
+    )
+    sql = graph._graph_pagerank_sql(3)
+    assert "r3 AS (" in sql and "r4 AS (" not in sql
+
+
+def test_label_prop_oracle_follows_rounds(spark, monkeypatch):
+    from nzwirelessmap_fetch_spark.operators import graph
+
+    assert _follows_steps(
+        spark, monkeypatch, "LPA_ROUNDS", (1, 2),
+        lambda n: graph.graph_community_label_prop(spark, SF_SMOKE),
+        graph._graph_community_label_prop_sql,
+    ) == 2
+
+
+def test_louvain_oracle_follows_levels(spark, monkeypatch):
+    """``_louvain_sql(levels, converge)`` is the twin of
+    ``_louvain_levels(levels, converge)`` at any level count."""
+    from nzwirelessmap_fetch_spark.operators import graph
+
+    assert _follows_steps(
+        spark, monkeypatch, None, (1, 3),
+        lambda n: graph._louvain_levels(spark, SF_SMOKE, n, converge=False),
+        lambda n: graph._louvain_sql(n, converge=False),
+    ) == 2
+
+
 def test_jaccard_edges_symmetric_distinct_loop_free(spark):
     """The edge contract every graph consumer relies on, and the reason
     ``_jaccard_edges`` needs no distinct: the set is symmetric, has no

@@ -349,3 +349,37 @@ def test_evicting_snapshot_root_removes_its_temp_dir(spark, tmp_path):
     assert not os.path.exists(root1) and os.path.isdir(root2)
     memo.reset("snapshot")
     assert not os.path.exists(root2)
+
+
+def _staged_files(root: str) -> dict[str, int]:
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_stage_memos_hold_what_they_stage(spark):
+    """The ORC, partitioned and schema-merge round trips write their
+    staged files inside the memo build, so the build line holds the
+    write and a second call in the session reads the same files back
+    without rewriting them."""
+    from nzwirelessmap_fetch_spark.plans import relational
+
+    calls = {
+        "orc_stage": relational.format_orc_roundtrip,
+        "parted_stage": relational.format_partitioned_roundtrip,
+        "merge_stage": relational.format_schema_merge_roundtrip,
+    }
+    for family, fn in calls.items():
+        memo.reset(family)
+        before = memo.records()
+        first = set(fn(spark, SF_SMOKE).collect())
+        assert memo.build_lines(before)[f"shared_{family}_build"] > 0
+        (root,) = memo.entries(family).values()
+        staged = _staged_files(root)
+        assert staged, family
+        assert set(fn(spark, SF_SMOKE).collect()) == first
+        assert _staged_files(root) == staged, family
+        memo.reset(family)
+        assert not os.path.exists(root)

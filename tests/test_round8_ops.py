@@ -141,36 +141,27 @@ def test_lsh_eval_sequenced_oracle_equals_oneshot(spark, ddb):
 
 
 def test_inter_cache_transform_parity(ddb):
-    """The gate's inter-CTE cache rewrite (tools/oracle_cache.py) must
-    be result-identical to the committed one-shot oracles for every
-    ELIGIBLE entry — the full-allowlist pin behind the sf1 gate's
-    shared quadratic substrate."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
+    """The gate's inter-CTE cache swap (tools/oracle_cache.py) must be
+    result-identical to the one-shot oracle for every eligible entry,
+    and must leave the df-capped twins alone."""
     from nzwirelessmap_fetch_spark.plans import registry
-    from tools.oracle_cache import ELIGIBLE, sequenced
+    from tools.oracle_cache import eligible, sequenced
     from tests.oracle import frame_fingerprint
 
-    oracles = entrymod.oracle_sql()
+    oracles = registry.oracle_sql()
     steps = registry.oracle_gate_steps()
-    assert ELIGIBLE <= set(oracles)
     ddb.execute("DROP TABLE IF EXISTS _gate_inter_lt")
-    for name in sorted(ELIGIBLE):
+    for name in sorted(eligible()):
         statements = list(steps.get(name) or [oracles[name]])
-        cached = sequenced(name, statements)
+        cached = sequenced(statements)
         assert cached is not None and len(cached) == len(statements) + 1
         oneshot = ddb.execute(oracles[name]).df()
         for stmt in cached[:-1]:
             ddb.execute(stmt)
         got = ddb.execute(cached[-1]).df()
         assert frame_fingerprint(oneshot) == frame_fingerprint(got), name
-    # the capped variants must be refused by the ALLOWLIST (their
-    # keep-filtered postings keep the canonical CTE names, so only the
-    # explicit name check keeps the cache out of them)
-    assert sequenced("dedup_ngram_jaccard_capped", [oracles["dedup_ngram_jaccard_capped"]]) is None
-    assert sequenced("corpus_containment_capped", [oracles["corpus_containment_capped"]]) is None
+    for capped in ("dedup_ngram_jaccard_capped", "corpus_containment_capped"):
+        assert sequenced([oracles[capped]]) is None
 
 
 def test_pattern_match_gate_oracle_parity(ddb):

@@ -155,6 +155,29 @@ def test_markov_stationary_is_distribution(spark):
     assert all(r.pi >= 0 for r in rows)
 
 
+def test_markov_oracle_follows_iterations(spark, monkeypatch):
+    """The oracle generates one power step per ``MARKOV_ITERS``: at 1
+    and at 4 steps the engine hash-matches the oracle built for that
+    count, and the two answers differ."""
+    import duckdb
+
+    from nzwirelessmap_fetch_spark.operators import events_analytics as ea
+    from tests.oracle import compare, frame_fingerprint
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_SMOKE}/events.parquet')"
+    )
+    answers = set()
+    for iters in (1, 4):
+        monkeypatch.setattr(ea, "MARKOV_ITERS", iters)
+        sql = ea._events_markov_stationary_sql(iters)
+        compare(ea.events_markov_stationary(spark, SF_SMOKE), con, sql)
+        answers.add(frame_fingerprint(con.execute(sql).df()))
+    con.close()
+    assert len(answers) == 2
+
+
 def test_ks_test_bounds(spark):
     from nzwirelessmap_fetch_spark.plans.stats import events_ks_test
 

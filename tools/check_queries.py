@@ -146,7 +146,7 @@ def main(names: list[str]) -> int:
                 if seq_mode and stmts:
                     from tools.oracle_cache import sequenced
 
-                    stmts = sequenced(name, stmts) or stmts
+                    stmts = sequenced(stmts) or stmts
                 if stmts:
                     for step in stmts[:-1]:
                         con.execute(step)
@@ -231,9 +231,7 @@ def main(names: list[str]) -> int:
                 # non-eligible entries run their statements unchanged.
                 from tools.oracle_cache import sequenced
 
-                cached = sequenced(name, statements)
-                if cached is not None:
-                    statements = cached
+                statements = sequenced(statements) or statements
             if statements is not None:
                 for step in statements[:-1]:
                     con.execute(step)

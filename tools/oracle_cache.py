@@ -1,183 +1,64 @@
-"""Gate-level cache of the quadratic oracle substrate (r7 verdict
-directive #2 enablement).
+"""Gate-level cache of the quadratic oracle substrate.
 
-Sixteen registry oracles recompute the identical expensive artifact —
-``inter``, the distinct co-occurring document pairs with shared-shingle
-counts over the FULL word-bigram postings of ``documents`` (the Σdf²
-join). At sf1 that is a 0.7–2.5 BILLION-row join per oracle; the r8
-sf1-Zipf gate measured 1253 s for ONE such oracle and lost four entries
-to concurrent-spill disk exhaustion when three shards each ran their
-own copy.
+Every registry oracle that re-derives the exact word-bigram Jaccard
+pairs composes one prelude from ``operators/dedup.py``; its
+full-postings block ``_INTER_CTES`` (``w``, ``sh``, ``sz`` and
+``inter``, the distinct co-occurring document pairs with their
+shared-shingle counts: the Σdf² join) is the one expensive artifact
+those oracles share. At sf1 it is a 0.7–2.5 billion-row join per
+oracle; one such oracle took 1253 s in the sf1-Zipf gate, and three
+shards each spilling their own copy ran the disk out.
 
-This module rewrites an eligible oracle to read ``inter`` from a
-per-connection temp table built once (``CREATE TEMP TABLE IF NOT
-EXISTS``), leaving every other byte of the committed oracle string
-untouched. Eligibility is an explicit allowlist plus two mechanical
-assertions (the canonical full-``sh`` build is present, and exactly one
-known ``inter`` body was replaced) — the df-capped variants define
-``sh`` through a ``keep`` semi-join, so their text never matches and
-they keep their one-shot oracles.
+This module swaps that block, by string identity, for the same CTEs
+with ``inter`` read from a per-connection temp table built once
+(``CREATE TEMP TABLE IF NOT EXISTS``), leaving every other byte of the
+oracle untouched. An entry is eligible when its oracle contains the
+block, so the eligible set is derived from the registry. The df-capped
+prelude builds ``sh`` through a ``keep`` semi-join, a different text,
+so the capped twins never match and keep their one-shot oracles. The
+containment oracles read ordered pairs as both orientations of the
+``<`` ``inter``, so they are served by the same table.
 
-Used ONLY by tools/check_queries.py under SPARK_GRAFT_ORACLE_SEQ=1
-(the sharded large-SF gate). The driver's sf0.01 gate always runs the
-one-shot strings. Equality of transformed vs one-shot results is pinned
-by tests/test_round8_ops.py::test_inter_cache_transform_parity.
+Used only by tools/check_queries.py under SPARK_GRAFT_ORACLE_SEQ=1 (the
+sharded large-SF gate). The sf0.01 gate always runs the one-shot
+strings. Equality of swapped and one-shot results is pinned by
+tests/test_round8_ops.py::test_inter_cache_transform_parity.
 """
 
 from __future__ import annotations
 
-# Entries whose oracle carries a full-postings quadratic shingle join.
-ELIGIBLE = frozenset(
-    {
-        "dedup_ngram_jaccard",
-        "dedup_lsh_quality_eval",
-        "dedup_connected_components",
-        "dedup_cc_star",
-        "graph_pagerank",
-        "graph_louvain_converged",
-        "graph_louvain_one_level",
-        "graph_louvain_two_level",
-        "graph_bfs_levels",
-        "graph_assortativity",
-        "graph_triangle_count",
-        "graph_kcore",
-        "graph_modularity",
-        "graph_community_label_prop",
-        "graph_random_walks",
-        "corpus_canonical_picks",
-        # sh2-named truth sides of the estimator-quality evals
-        "dedup_simhash_quality_eval",
-        "dedup_snm_quality_eval",
-        "dedup_snm_multipass_eval",
-        # <> (ordered-pair) variants: served by a symmetric union of the
-        # cached < table — n_inter is symmetric, so the ordered set is
-        # exactly both orientations of each unordered pair
-        "corpus_containment",
-        "corpus_containment_cap_eval",
-    }
-)
-
-# The committed spellings of the quadratic bodies (dedup.py multi-line,
-# graph.py single-line predicate; sh2/sh0 CTE-name families). Byte-exact.
-_LT_READ = "SELECT doc_a, doc_b, n_inter FROM {t}"
-_NE_READ = (
-    "SELECT doc_a, doc_b, n_inter FROM {t} "
-    "UNION ALL SELECT doc_b AS doc_a, doc_a AS doc_b, n_inter FROM {t}"
-)
-
-
-def _body(sh: str, pred: str, oneline: bool) -> str:
-    if oneline:
-        return (
-            "  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter\n"
-            f"  FROM {sh} a JOIN {sh} b USING (shingle) WHERE a.doc_id "
-            f"{pred} b.doc_id GROUP BY 1, 2"
-        )
-    return (
-        "  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter\n"
-        f"  FROM {sh} a JOIN {sh} b USING (shingle)\n"
-        f"  WHERE a.doc_id {pred} b.doc_id\n"
-        "  GROUP BY 1, 2"
-    )
-
-
-# (cte_name, body, read_template) — each a known quadratic over the FULL
-# bigram postings of documents (the keep-filtered capped variants name
-# their postings sh1/differently and never match).
-_SUBSTITUTIONS = (
-    ("inter", _body("sh", "<", oneline=False), _LT_READ),
-    ("inter", _body("sh", "<", oneline=True), _LT_READ),
-    ("inter2", _body("sh2", "<", oneline=True), _LT_READ),
-    ("inter", _body("sh", "<>", oneline=False), _NE_READ),
-    ("inter0", _body("sh0", "<>", oneline=False), _NE_READ),
-)
-
-# Canonical full-postings sh build markers (r8 ADVICE: the one-line
-# distinct marker alone would let a future oracle with a DIFFERENT
-# shingling but an identical inter body silently read the wrong cache).
-# An eligible statement must carry ALL of _SH_REQUIRED plus ONE of the
-# two committed unnest spellings — together these pin the full
-# word-bigram build over `documents` that CACHE_BUILD materializes; the
-# capped variants build their postings through a keep semi-join and
-# fail the required-fragments check.
-_SH_REQUIRED = (
-    "SELECT DISTINCT doc_id, shingle FROM (",
-    "string_split(text, ' ') AS w FROM documents",
-    "WHERE len(w) >= 2)",
-)
-_SH_UNNEST_SPELLINGS = (
-    # dedup.py multi-line spelling
-    "unnest(list_transform(generate_series(1, len(w)-1),\n"
-    "                                 i -> w[i] || ' ' || w[i+1])) AS shingle",
-    # graph.py / eval compact spelling
-    "unnest(list_transform(generate_series(1, len(w)-1),\n"
-    "                          i -> w[i] || ' ' || w[i+1])) AS shingle",
-)
+from nzwirelessmap_fetch_spark.operators.dedup import _INTER_CTE, _INTER_CTES
 
 CACHE_TABLE = "_gate_inter_lt"
 
-# Built once per DuckDB connection; the ONLY quadratic statement left in
-# an eligible gate run. Same text as the dedup.py inter derivation.
-CACHE_BUILD = f"""CREATE TEMP TABLE IF NOT EXISTS {CACHE_TABLE} AS
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(w)-1),
-                                 i -> w[i] || ' ' || w[i+1])) AS shingle
-    FROM w WHERE len(w) >= 2)
+# Built once per DuckDB connection; the only quadratic statement left in
+# an eligible gate run.
+CACHE_BUILD = (
+    f"CREATE TEMP TABLE IF NOT EXISTS {CACHE_TABLE} AS\n"
+    f"WITH {_INTER_CTES}\nSELECT doc_a, doc_b, n_inter FROM inter"
 )
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-FROM sh a JOIN sh b USING (shingle)
-WHERE a.doc_id < b.doc_id
-GROUP BY 1, 2"""
+_CACHED_INTER_CTES = _INTER_CTES.replace(
+    _INTER_CTE, f"inter AS (SELECT doc_a, doc_b, n_inter FROM {CACHE_TABLE})"
+)
 
-def transform_statement(sql: str) -> str | None:
-    """Swap the quadratic inter CTE for a cache read, or None if the
-    statement carries no known inter body (e.g. the cand step of a
-    sequenced oracle)."""
-    hits = 0
-    out = sql
-    for cte, body, read in _SUBSTITUTIONS:
-        for mat in ("MATERIALIZED ", ""):
-            needle = f"{cte} AS {mat}(\n{body}\n)"
-            n = out.count(needle)
-            if n:
-                out = out.replace(
-                    needle, f"{cte} AS ({read.format(t=CACHE_TABLE)})"
-                )
-                hits += n
+
+def eligible() -> frozenset[str]:
+    """The registry entries whose one-shot oracle carries the
+    full-postings block."""
+    from nzwirelessmap_fetch_spark.plans import registry
+
+    oracles = registry.oracle_sql()
+    return frozenset(n for n, sql in oracles.items() if _INTER_CTES in sql)
+
+
+def sequenced(statements: list[str]) -> list[str] | None:
+    """[cache build, *statements with the block's ``inter`` read from the
+    cache], or None when no statement carries the block (run those
+    unchanged)."""
+    hits = sum(s.count(_INTER_CTES) for s in statements)
     if hits == 0:
         return None
     if hits != 1:
-        raise AssertionError(f"expected exactly 1 inter body, replaced {hits}")
-    missing = [frag for frag in _SH_REQUIRED if frag not in sql]
-    if missing or not any(sp in sql for sp in _SH_UNNEST_SPELLINGS):
-        raise AssertionError(
-            "eligible oracle lacks the canonical full-bigram sh build "
-            f"(missing fragments: {missing or ['unnest spelling']})"
-        )
-    return out
-
-
-def sequenced(name: str, statements: list[str]) -> list[str] | None:
-    """For an ELIGIBLE entry, return [cache build, *statements with the
-    inter body swapped for the cache read]; None for other entries (run
-    them unchanged)."""
-    if name not in ELIGIBLE:
-        return None
-    out: list[str] = []
-    swapped = 0
-    for stmt in statements:
-        t = transform_statement(stmt)
-        if t is not None:
-            swapped += 1
-        out.append(t if t is not None else stmt)
-    if swapped != 1:
-        raise AssertionError(
-            f"{name}: expected exactly 1 statement with the inter body, "
-            f"found {swapped}"
-        )
-    return [CACHE_BUILD, *out]
+        raise AssertionError(f"expected the block once, found it {hits} times")
+    swapped = (s.replace(_INTER_CTES, _CACHED_INTER_CTES) for s in statements)
+    return [CACHE_BUILD, *swapped]

@@ -9,12 +9,13 @@ then merges with tools/merge_sf1_artifacts.py.
   (functions/memo.py) is rebuilt by every shard that holds one of its
   readers, so entries that share one must ride in ONE shard. Which
   entries share which substrate is recorded, not kept by hand: the gate
-  first runs check_queries over the names at the smoke fixture, whose
-  rows list the memo keys each entry built or hit, and union-finds the
-  entries that touched the same key.
+  first runs each entry's registry call at the smoke fixture under its
+  own job group, in a child process, reads the memo keys it built or
+  hit (``memo.touched``) and union-finds the entries that touched the
+  same key. No oracle runs and no result is collected.
 - **H/L shard layout**: shard 0 (the H shard) owns every entry whose
   oracle carries the full-postings quadratic shingle join
-  (``tools.oracle_cache.ELIGIBLE``), plus every memo group chained to
+  (``tools.oracle_cache.eligible()``), plus every memo group chained to
   one — it builds the per-connection ``inter`` cache ONCE and never
   contends with another copy of the Σdf² spill; the remaining units
   balance across the L shards.
@@ -30,7 +31,7 @@ then merges with tools/merge_sf1_artifacts.py.
 from __future__ import annotations
 
 import glob
-import json
+import multiprocessing
 import os
 import shutil
 import subprocess
@@ -64,21 +65,48 @@ def reap_orphan_spill_dirs() -> list[str]:
     return reaped
 
 
-def record_memo_keys(names: list[str]) -> dict[str, list[str]]:
-    """Run check_queries over ``names`` at the smoke fixture and return
-    the memo keys each entry built or hit (its rows' ``memo_keys``)."""
+def touched_keys(spark, names: list[str]) -> dict[str, list[str]]:
+    """Run each entry's registry call at the smoke fixture under a job
+    group named after it and return the memo keys the call built or
+    hit. The calls build their plans and memoized substrates; nothing
+    is collected. A call that raises is reported and keeps the keys it
+    touched first."""
+    from nzwirelessmap_fetch_spark.functions import memo
+    from nzwirelessmap_fetch_spark.plans import registry
     from tests.conftest import SF_SMOKE
 
-    out = os.path.join(REPO, ".gate_memo_keys.json")
-    env = dict(os.environ, SPARK_GRAFT_CHECK_SF=SF_SMOKE, SPARK_GRAFT_CHECK_OUT=out)
-    with open(os.path.join(REPO, ".gate_memo_keys.log"), "w") as log:
-        subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools/check_queries.py")] + names,
-            env=env, stdout=log, stderr=subprocess.STDOUT, cwd=REPO,
-        )
-    with open(out) as f:
-        rows = json.load(f)
-    return {n: rows[n].get("memo_keys", []) for n in names if n in rows}
+    queries = registry.queries()
+    keys = {}
+    try:
+        for n in names:
+            spark.sparkContext.setJobGroup(n, n)
+            try:
+                queries[n](spark, SF_SMOKE)
+            except Exception as e:  # noqa: BLE001 — the other entries still run
+                print(f"{n}: {type(e).__name__}: {e}"[:300], file=sys.stderr)
+            keys[n] = memo.touched(n)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.sparkContext.setLocalProperty("spark.job.description", None)
+    return keys
+
+
+def _touched_keys_in_session(names: list[str]) -> dict[str, list[str]]:
+    from nzwirelessmap_fetch_spark.session import get_spark
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("gate-memo-keys", cpus=cpus)
+    try:
+        return touched_keys(spark, names)
+    finally:
+        spark.stop()
+
+
+def record_memo_keys(names: list[str]) -> dict[str, list[str]]:
+    """:func:`touched_keys` for ``names`` in a spawned child process, so
+    the gate holds no JVM while its shards run."""
+    with multiprocessing.get_context("spawn").Pool(1) as pool:
+        return pool.apply(_touched_keys_in_session, (names,))
 
 
 def _memo_groups(
@@ -121,10 +149,11 @@ def shard_layout(
     one; remaining memo groups ride whole on the least-loaded L shard;
     loose light entries balance round-robin. With n_shards == 1
     everything runs in one process."""
-    from tools.oracle_cache import ELIGIBLE
+    from tools.oracle_cache import eligible
 
     if n_shards <= 1:
         return [list(names)]
+    heavy_names = eligible()
     group_of = _memo_groups(names, memo_keys or {})
     n_groups = max(group_of.values(), default=-1) + 1
     group_members: list[list[str]] = [[] for _ in range(n_groups)]
@@ -133,13 +162,13 @@ def shard_layout(
             group_members[group_of[n]].append(n)
     heavy_groups = {
         g for g, members in enumerate(group_members)
-        if any(m in ELIGIBLE for m in members)
+        if any(m in heavy_names for m in members)
     }
     heavy, light_units = [], []
     seen_groups: set[int] = set()
     for n in names:
         g = group_of.get(n)
-        if n in ELIGIBLE or (g is not None and g in heavy_groups):
+        if n in heavy_names or (g is not None and g in heavy_groups):
             heavy.append(n)
         elif g is not None:
             if g not in seen_groups:
@@ -152,7 +181,7 @@ def shard_layout(
     for unit in sorted(light_units, key=len, reverse=True):
         min(lshards, key=len).extend(unit)
     shards = [heavy] + lshards
-    # drop empty shards (r10 ADVICE: a names subset with no ELIGIBLE
+    # drop empty shards (r10 ADVICE: a names subset with no eligible
     # entries, or n_shards-1 exceeding the light-entry count, produced
     # an empty argv — and check_queries treats empty argv as "run the
     # FULL registry", silently re-running ~326 entries in contention
@@ -170,8 +199,14 @@ def main(argv: list[str]) -> int:
 
     import __spark_entry__ as entrymod
 
+    from tools.oracle_cache import eligible
+
     names = list(entrymod.queries())
-    shards = shard_layout(names, n_shards, record_memo_keys(names))
+    t0 = time.monotonic()
+    memo_keys = record_memo_keys(names)
+    print(f"memo keys recorded in {time.monotonic() - t0:.0f}s", flush=True)
+    shards = shard_layout(names, n_shards, memo_keys)
+    heavy_names = eligible()
     procs = []
     shard_files = []
     for i, shard in enumerate(shards):
@@ -201,9 +236,7 @@ def main(argv: list[str]) -> int:
         )
         # label by CONTENT, not index: when the heavy shard is empty it
         # is dropped from the layout, so shard 0 may be an L shard
-        from tools.oracle_cache import ELIGIBLE as _EL
-
-        kind = "H" if any(n in _EL for n in shard) else "L"
+        kind = "H" if any(n in heavy_names for n in shard) else "L"
         print(
             f"shard {i} ({kind}): {len(shard)} queries, pid {procs[-1][0].pid}",
             flush=True,
